@@ -19,10 +19,7 @@ from realtime_spark.session import get_spark
 
 
 # headline subset: the heavy/representative op per subsystem, not the
-# whole matrix (CDC match, replay, rate, dedup, ANN, text). Module-level so
-# _timings_from_driver_artifact can intersect recovered names against it —
-# a name parsed out of a truncated stdout tail that is not in this list is
-# never a headline wall and must not enter the retry floor.
+# whole matrix (CDC match, replay, rate, dedup, ANN, text).
 HEADLINE_QUERIES = [
         "cdc_multi_pairs",
         "cdc_subscription_ids",
@@ -154,9 +151,6 @@ def _bench_queries():
     return {k: qs[k] for k in HEADLINE_QUERIES if k in qs}
 
 
-_BASELINE_KEYS_SKIP = {"metric", "value", "n", "rc", "cpus", "sf", "rows"}
-
-
 def _baseline_path(sf, cpus: int = 32) -> str:
     """Floor file for (sf, cpus) — r10 verdict ask #6: floors are only
     comparable at the core count they were measured at (the driver's 8-core
@@ -169,22 +163,27 @@ def _baseline_path(sf, cpus: int = 32) -> str:
     return os.path.join(here, f"BENCH_BASELINE_sf{sf}{suffix}.json")
 
 
+def _sidecar_path() -> str:
+    """Where main() writes the full result (BENCH_LAST_RUN.json, next to
+    this script); tests point it elsewhere, as they do _baseline_path."""
+    return os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LAST_RUN.json")
+
+
+def _time_query(fn, spark, sf_dir: str) -> tuple[float, int]:
+    """(wall seconds, row count) of one materialization of a headline query;
+    the only clock the retry and adoption logic reads, so tests can script
+    the walls."""
+    t0 = time.perf_counter()
+    n = fn(spark, sf_dir).count()
+    return time.perf_counter() - t0, n
+
+
 def _timings_from_driver_artifact(path: str, sf, cpus: int = 32) -> dict:
-    """Recover per-query walls from a driver BENCH_r{N}.json. The driver
-    stores only a 2000-char stdout TAIL, which truncates the queries dict
-    from the front — but the recoverable suffix is exactly the tail of the
-    headline list: the dispatch/push queries and the store-lifecycle
-    queries, i.e. the ones the r8 outliers hit. Parse complete
-    "name": number pairs from the segment before the queries dict closes.
-
-    Recovered names are intersected with HEADLINE_QUERIES (r9 ADVICE): the
-    tail cut usually lands mid-pair, and while the quote-anchored regex
-    cannot match a beheaded name, intersecting against the static headline
-    list makes it structurally impossible for any truncated suffix that
-    happens to spell a shorter real name to smuggle a wrong wall into the
-    retry floor."""
-    import re
-
+    """Per-query walls from a recorded round artifact BENCH_r{N}.json: the
+    `queries` dict of its `parsed` result. Empty when the artifact was
+    recorded at another sf or core count, or records no core count (the
+    same (sf, cpus) keying as the floor file), or carries no parsed
+    result."""
     try:
         with open(path) as f:
             d = json.load(f)
@@ -192,32 +191,18 @@ def _timings_from_driver_artifact(path: str, sf, cpus: int = 32) -> dict:
         return {}
     if str(d.get("sf")) != str(sf):
         return {}
-    # same (sf, cpus) keying as the floor file: a driver artifact recorded
-    # at a different core count is not a wall floor for this run
-    if d.get("cpus") is not None and int(d["cpus"]) != int(cpus):
+    if d.get("cpus") is None or int(d["cpus"]) != int(cpus):
         return {}
-    q = d.get("queries") or (d.get("parsed") or {}).get("queries")
-    if isinstance(q, dict):
-        return {k: v for k, v in q.items() if isinstance(v, (int, float))}
-    tail = d.get("tail")
-    if not isinstance(tail, str) or '}, "sf":' not in tail:
+    q = (d.get("parsed") or {}).get("queries")
+    if not isinstance(q, dict):
         return {}
-    seg = tail.split('}, "sf":', 1)[0]
-    if '"queries": {' in seg:
-        seg = seg.split('"queries": {', 1)[1]
-    known = set(HEADLINE_QUERIES) - _BASELINE_KEYS_SKIP
-    out = {}
-    for m in re.finditer(r'"([A-Za-z0-9_]+)": ([0-9]+(?:\.[0-9]+)?)(?=[,}]|$)', seg):
-        if m.group(1) in known:
-            out[m.group(1)] = float(m.group(2))
-    return out
+    return {k: v for k, v in q.items() if isinstance(v, (int, float))}
 
 
 def _prior_round_timings(sf, cpus: int = 32) -> tuple[dict, str | None]:
     """Baseline for the 3x outlier retry (r8 verdict ask #2): per-query
     walls from the most recent same-SF measurement. Two sources, merged —
-    the latest driver-recorded BENCH_r{N}.json (partial: only its stored
-    stdout tail is recoverable) overlaid by this script's own full
+    the latest round artifact BENCH_r{N}.json overlaid by this script's own
     BENCH_BASELINE_sf{sf}.json written at the end of every run. Empty when
     no same-SF prior exists (first round, or a local run at a new SF)."""
     import glob
@@ -468,8 +453,8 @@ def bench_streaming_presence(spark, sf_dir: str, micro_batches: int | None = Non
         ev.repartitionByRange(micro_batches, "ts", "seq").write.parquet(src)
 
         # sharded state keying: per-(topic,key) keying costs one Python state-
-        # fn invocation per row (~10x the rest of the pipeline at user-keyed
-        # cardinality); sharding bounds invocations at |topics| x 32 per batch
+        # fn invocation per key per batch (~7x slower on this stage at sf0.1,
+        # 4-core host; SCALE.md); sharding bounds invocations at |topics| x 32
         from realtime_spark.streaming.presence import presence_diffs_sharded
 
         stream = (
@@ -792,9 +777,7 @@ def main() -> None:
         try:
             reps_q = 1 if name in single_run else 3
             for _ in range(reps_q):  # min-of-3: drops plan-compile/GC/host noise
-                t0 = time.perf_counter()
-                n = fn(spark, sf_dir).count()
-                dt = time.perf_counter() - t0
+                dt, n = _time_query(fn, spark, sf_dir)
                 samples.append(round(dt, 3))
                 best = dt if best is None else min(best, dt)
         except Exception as e:  # one broken query must not void the run
@@ -818,9 +801,7 @@ def main() -> None:
             retry_error = None
             try:
                 for _ in range(2):
-                    t0 = time.perf_counter()
-                    fn(spark, sf_dir).count()
-                    dt = time.perf_counter() - t0
+                    dt, _ = _time_query(fn, spark, sf_dir)
                     samples.append(round(dt, 3))
                     best = min(best, dt)
                     spark.catalog.clearCache()
@@ -927,7 +908,7 @@ def main() -> None:
         with open(_baseline_path(sf_val, cpus), "w") as f:
             json.dump(payload, f, sort_keys=True)
     except OSError:
-        pass  # read-only checkout: the driver-tail source still works
+        pass  # read-only checkout: the BENCH_r{N}.json source still works
 
     result = {
         "metric": "headline_queries_wall_clock",
@@ -960,8 +941,7 @@ def main() -> None:
     # one-line JSON past recovery and cost that round its entire
     # round-over-round table — the sidecar file cannot be truncated
     try:
-        here = os.path.dirname(os.path.abspath(__file__))
-        with open(os.path.join(here, "BENCH_LAST_RUN.json"), "w") as f:
+        with open(_sidecar_path(), "w") as f:
             json.dump(result, f)
     except OSError:
         pass  # read-only checkout: stdout still carries the line

@@ -1,5 +1,5 @@
 """Scalar helpers (SURVEY §2.6): timestamp formatting, payload sizing, topic
-namespacing, payload id autogen."""
+namespacing."""
 
 from __future__ import annotations
 
@@ -30,14 +30,6 @@ def tenant_topic(tenant: Column, topic: Column, public: bool = True) -> Column:
     if public:
         return F.concat(tenant, F.lit(":"), topic)
     return F.concat(tenant, F.lit("-private:"), topic)
-
-
-def ensure_payload_id(payload: Column) -> Column:
-    """F11: add a generated uuid under 'id' when the payload map lacks one
-    (reference: migrations/20251103001201_broadcast_send_include_payload_id.ex:16-24)."""
-    return F.when(
-        F.map_contains_key(payload, F.lit("id")), payload
-    ).otherwise(F.map_concat(payload, F.create_map(F.lit("id"), F.uuid())))
 
 
 # pg epoch: 2000-01-01T00:00:00Z, in microseconds since the unix epoch

@@ -328,22 +328,3 @@ def with_bpe_token_count(
             yield out.assign(**{out_col: counts})
 
     return df.mapInPandas(run, schema=out_schema)
-
-
-def bpe_vocab(df: DataFrame, merges, text_col: str = "text") -> DataFrame:
-    """Final learned vocabulary: (symbol, freq) after applying every merge
-    to the word-type table — the tokenizer's unit inventory."""
-    cur = symbolize(word_freqs(df, text_col))
-    for i, (_, left, right, _) in enumerate(merges, start=1):
-        cur = cur.withColumn("syms", merge_pair_expr(F.col("syms"), left, right))
-        if i % 4 == 0:
-            # same lineage truncation as train_bpe: each merge nests its
-            # aggregate-lambda inside the previous round's column, and a
-            # realistic merge table would otherwise blow up Catalyst
-            # analysis (or the driver stack)
-            cur = cur.localCheckpoint(eager=False)
-    return (
-        cur.select("freq", F.explode("syms").alias("symbol"))
-        .groupBy("symbol")
-        .agg(F.sum("freq").alias("freq"))
-    )

@@ -225,34 +225,11 @@ def shingle_shared_frac(
 # ---------------------------------------------------------------------------
 
 
+# One md5 per shingle, then a universal hash family (exactly reproducible in
+# SQL with md5 + modular arithmetic):
+#   x      = int(md5(shingle)[0:15 hex]) mod p
+#   sig[i] = min over shingles of ((2i+1)*x + 7919*i + 1) mod p,  p = 2^31-1
 _MH_PRIME = 2147483647  # 2^31 - 1; universal-hash modulus
-
-
-def minhash_signature(text: Column, num_hashes: int = 12, k: int = 3) -> Column:
-    """MinHash signature via a universal hash family over one md5 per shingle:
-
-        x      = int(md5(shingle)[0:15 hex]) mod p
-        sig[i] = min over shingles of ((2i+1)*x + 7919*i + 1) mod p,  p = 2^31-1
-
-    One md5 per shingle (not per shingle x hash function) keeps the dominant
-    cost linear in shingle count; the per-function permutations are integer
-    arithmetic. Exactly reproducible in SQL (md5 + modular arithmetic)."""
-    sh = shingles_expr(text, k)
-    xs = F.transform(
-        sh,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint")
-        % F.lit(_MH_PRIME),
-    )
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(
-            F.transform(
-                xs,
-                lambda x: ((2 * i + 1).cast("bigint") * x + 7919 * i + 1)
-                % F.lit(_MH_PRIME),
-            )
-        ),
-    )
 
 
 def minhash_bands(
@@ -478,38 +455,17 @@ def contaminated_docs(
 # ---------------------------------------------------------------------------
 
 
-def simhash_expr(text: Column, bits: int = 16) -> Column:
-    """SimHash over word tokens: per-bit majority vote of token hashes.
-
-    Token hash = first 15 hex chars of md5 -> bigint (conv); bit b of the
-    simhash is 1 when more tokens have bit b set than unset. 16 bits keeps the
-    SQL mirror simple; the Spark path supports up to ~60.
-    """
-    toks = tokens_expr(text)
-    hashes = F.transform(
-        toks, lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("bigint")
-    )
-    def bit_vote(b: int) -> Column:
-        ones = F.size(
-            F.filter(hashes, lambda h: h.bitwiseAND(F.lit(1 << b)) != 0)
-        )
-        return F.when(ones * 2 > F.size(hashes), F.lit(1 << b)).otherwise(F.lit(0))
-
-    out = F.lit(0).cast("bigint")
-    for b in range(bits):
-        out = out + bit_vote(b)
-    return out
-
-
 def simhash_buckets(
     df: DataFrame, id_col: str, text_col: str, bits: int = 16
 ) -> DataFrame:
     """(id, simhash) — hamming-close docs collide on equal simhash for the
     dedup use; banded hamming search would split the hash into chunks.
+    Token hash = first 15 hex chars of md5 -> bigint; bit b of the simhash
+    is 1 when more tokens have bit b set than unset.
 
     Shape: explode tokens -> one codegen'd md5 per token -> groupBy(doc) with
-    per-bit vote sums (map-side combine). The expression-level simhash_expr
-    re-derives the token hash array per bit (interpreted HOFs have no CSE);
+    per-bit vote sums (map-side combine). An array-lambda form would
+    re-derive the token hash array per bit (interpreted HOFs have no CSE);
     this aggregation form hashes each token exactly once. Docs with zero
     tokens produce no row (dedup semantics: nothing to compare).
     """

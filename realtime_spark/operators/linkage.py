@@ -54,7 +54,7 @@ def score_pairs(
     (integer milli-bans: 1000 * log-likelihood-ratio, pre-scaled by the
     caller). NULL-involved comparisons contribute 0 (the standard
     'missing is uninformative' convention). NOTE the deliberate asymmetry
-    with agreement_patterns, whose binary bit vector cannot express
+    with blocked_agreement_patterns, whose binary bit vector cannot express
     'missing' and records a NULL comparison as disagreement: EM weights
     should be estimated on fields that are populated in the candidate
     population (or imputed) — on heavily-null fields the m/u estimates
@@ -188,23 +188,6 @@ def blocked_resolve_best(
 MICRO = 1_000_000
 
 
-def agreement_patterns(
-    cands: DataFrame, agree_preds: list[Column]
-) -> DataFrame:
-    """Collapse candidate pairs to agreement-pattern counts: pattern id =
-    bit f set iff field f agrees. The EM input is this tiny frame (≤ 2^F
-    rows) — the whole corpus of pairs reduces map-side to pattern counts,
-    which is what makes EM-at-scale tractable (Splink does exactly this)."""
-    pid = F.lit(0)
-    for f, pred in enumerate(agree_preds):
-        pid = pid + F.when(pred, F.lit(1 << f)).otherwise(F.lit(0))
-    return (
-        cands.select(pid.alias("pattern"))
-        .groupBy("pattern")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 def blocked_agreement_patterns(
     left: DataFrame,
     right: DataFrame,
@@ -214,8 +197,8 @@ def blocked_agreement_patterns(
     """Agreement-pattern counts over the DISTINCT union of blocking passes
     WITHOUT materializing or deduplicating the pair set.
 
-    blocked_candidates + agreement_patterns shuffles every candidate pair
-    once for the dropDuplicates and again for the pattern agg — at sf0.1
+    blocked_candidates plus a pattern agg over its output shuffles every
+    candidate pair once for the dropDuplicates and again for the pattern agg — at sf0.1
     that is 1.5M wide rows through two shuffles for a 16-row result. Here
     each join-key SUBSET gets its own equi-join whose pattern counts
     aggregate map-side in the same stage (nothing but ≤2^F partial rows

@@ -24,26 +24,11 @@ from datetime import datetime, timedelta
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from realtime_spark.functions.scalar import ensure_payload_id, payload_size_ok
-
 MESSAGE_SCHEMA_DDL = (
     "id string, topic string, extension string, payload map<string,string>, "
     "event string, private boolean, inserted_at timestamp, updated_at timestamp"
 )
 RETENTION_HOURS = 72  # reference: lib/realtime/messages.ex:72-78
-
-
-def shape_messages(raw: DataFrame, max_payload_kb: int = 3000) -> DataFrame:
-    """Ingest shaping shared by the send/batch paths: id autogen (F11),
-    payload-size gate (F8), day partition column."""
-    with_id = raw.withColumn("payload", ensure_payload_id(F.col("payload"))).withColumn(
-        "id",
-        F.coalesce(F.col("id"), F.try_element_at(F.col("payload"), F.lit("id")), F.uuid()),
-    )
-    sized = with_id.filter(
-        payload_size_ok(F.to_json(F.col("payload")), max_payload_kb)
-    )
-    return sized.withColumn("day", F.to_date("inserted_at"))
 
 
 def uuid_from_hash(col) -> "F.Column":

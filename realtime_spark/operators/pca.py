@@ -32,33 +32,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def embedding_moments(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Per-batch partial moments: one row (n, s[d], xtx[d*d] row-major)
-    per Arrow batch. float64 accumulation regardless of input float32."""
-    schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("s", T.ArrayType(T.DoubleType())),
-            T.StructField("xtx", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            yield pd.DataFrame(
-                {
-                    "n": [x.shape[0]],
-                    "s": [x.sum(axis=0).tolist()],
-                    "xtx": [(x.T @ x).ravel().tolist()],
-                }
-            )
-
-    return emb.select(vec_col).mapInPandas(partials, schema=schema)
-
-
 def covariance(emb: DataFrame, vec_col: str = "embedding") -> tuple[np.ndarray, np.ndarray, int]:
     """(mean[d], cov[d,d], n) — biased (population, 1/n) covariance.
 

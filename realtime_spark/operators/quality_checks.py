@@ -58,16 +58,6 @@ def matches(col: str, pattern: str) -> Check:
     )
 
 
-def non_negative(col: str) -> Check:
-    return in_range_open_top(col, 0)
-
-
-def in_range_open_top(col: str, lo) -> Check:
-    return Check(
-        f"min({col},{lo})", "validity", F.col(col).isNull() | (F.col(col) < lo)
-    )
-
-
 def unique(col: str) -> Check:
     # evaluated via a dedicated agg (needs a distinct), flagged by kind
     return Check(f"unique({col})", "uniqueness", column=col)

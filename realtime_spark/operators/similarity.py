@@ -762,24 +762,14 @@ def pq_codebook(
     ]
 
 
-def _l2sq_micro(a: np.ndarray, b: np.ndarray) -> int:
-    """Squared L2 distance, dims accumulated LEFT-TO-RIGHT in float64, then
-    fixed to integer micro-units (x 1e6, HALF_UP). Integer distances make
-    every downstream SUM exact and order-independent — float ADC sums would
-    differ between engines in the last ulp depending on add order."""
-    acc = 0.0
-    for i in range(a.shape[0]):
-        t = a[i] - b[i]
-        acc += t * t
-    return int(np.floor(acc * 1e6 + 0.5))
-
-
 def _l2sq_micro_rows(sub: np.ndarray, mat: np.ndarray) -> np.ndarray:
-    """Row-wise `_l2sq_micro(sub, mat[i])` for a whole (k x dsub) matrix:
-    vectorized ACROSS rows, sequential ACROSS dims, so each row's float64
-    accumulation order is identical to the scalar loop (same trick as
-    ivf_assign's _seq_dot) — bit-identical results, ~dsub*k fewer Python
-    ops per call."""
+    """Squared L2 distance of `sub` to each row of a (k x dsub) matrix, dims
+    accumulated LEFT-TO-RIGHT in float64, then fixed to integer micro-units
+    (x 1e6, HALF_UP). Integer distances make every downstream SUM exact and
+    order-independent — float ADC sums would differ between engines in the
+    last ulp depending on add order. Vectorized ACROSS rows, sequential
+    ACROSS dims, so each row keeps the scalar left-to-right order (same
+    trick as ivf_assign's _seq_dot)."""
     acc = np.zeros(mat.shape[0], dtype=np.float64)
     for i in range(sub.shape[0]):
         t = sub[i] - mat[:, i]

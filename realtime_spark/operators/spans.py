@@ -62,34 +62,6 @@ def span_digests(
     )
 
 
-def duplicated_spans(
-    df: DataFrame, id_col: str, text_col: str, w: int = 10
-) -> DataFrame:
-    """Every span occurrence that is NOT the corpus-wide first occurrence of
-    its digest: (doc, pos, sx, first_doc, first_pos). First = min by
-    (doc, pos) lexicographically — deterministic, order-insensitive."""
-    # persist: the stride-1 window explode + md5 is the dominant cost and
-    # feeds both the firsts aggregation and the probe side of the join
-    sp = span_digests(df, id_col, text_col, w).persist()
-    firsts = sp.groupBy("sx").agg(
-        F.min(F.struct("doc", "pos")).alias("first"),
-    )
-    return (
-        sp.join(firsts, "sx")
-        .filter(
-            (F.col("doc") != F.col("first.doc"))
-            | (F.col("pos") != F.col("first.pos"))
-        )
-        .select(
-            "doc",
-            "pos",
-            "sx",
-            F.col("first.doc").alias("first_doc"),
-            F.col("first.pos").alias("first_pos"),
-        )
-    )
-
-
 def span_dedup_stats(
     df: DataFrame, id_col: str, text_col: str, w: int = 10, round_digits: int = 4
 ) -> DataFrame:

@@ -67,23 +67,6 @@ def _contains_fn(arr: Column):
     return lambda t: F.array_contains(arr, t)
 
 
-def lang_scores(text: Column) -> Column:
-    """Per-language stopword hit ratio as a map<lang,double>."""
-    toks = words_expr(text)
-    n = F.size(toks)
-    entries = []
-    for lang, stops in STOPWORDS.items():
-        arr = F.array(*[F.lit(s) for s in stops])
-        hits = F.size(F.filter(toks, _contains_fn(arr)))
-        entries.append(
-            F.struct(
-                F.lit(lang).alias("lang"),
-                F.when(n > 0, hits / n).otherwise(F.lit(0.0)).alias("score"),
-            )
-        )
-    return F.map_from_entries(F.array(*entries))
-
-
 def detect_lang(text: Column, round_digits: int = 6) -> Column:
     """argmax language by stopword ratio; ties break lexicographically;
     all-zero scores -> 'und' (undetermined), like real lang-ID fallbacks."""
@@ -442,40 +425,6 @@ def fingerprints(
         F.md5(F.col("norm")).alias("fp"),
         F.array_min(grams).alias("rfp"),
     )
-
-
-def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-pass per-document stats projection (no shuffle). Values are
-    bit-identical to the individual column forms, but the word tokens are
-    STAGED once per row: the naive composition re-evaluates words_expr
-    15-20x per row because interpreted higher-order lambdas get no CSE
-    (the exact hazard lang_quality_cols documents)."""
-    t = F.col(text_col)
-    out = lang_quality_cols(df, text_col)  # staged detected_lang + quality
-    toks = F.col("__rs_ts_toks")
-    out = out.withColumn("__rs_ts_toks", words_expr(t))
-    n = F.size(toks)
-    stops_en = F.array(*[F.lit(s) for s in STOPWORDS["en"]])
-    en_hits = F.size(F.filter(toks, _contains_fn(stops_en)))
-    total_len = F.aggregate(
-        F.transform(toks, lambda x: F.length(x).cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return out.withColumns(
-        {
-            "n_words": whitespace_token_count(t),
-            "n_bpe_tokens": bpe_token_count(t),
-            "punct_ratio": F.round(punct_ratio(t), 4),
-            "stopword_ratio_en": F.round(
-                F.when(n > 0, en_hits / n).otherwise(F.lit(0.0)), 4
-            ),
-            "mean_word_len": F.round(
-                F.when(n > 0, total_len / n).otherwise(F.lit(0.0)), 4
-            ),
-            "fingerprint": content_fingerprint(t),
-        }
-    ).drop("__rs_ts_toks")
 
 
 def pack_by_token_budget(

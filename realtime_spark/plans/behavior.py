@@ -2196,34 +2196,6 @@ _EM_ITERS = 4
 _EM_FIELDS = ("name", "nation", "segment", "balance")
 
 
-def _linkage_cands(spark: SparkSession, sf_dir: str):
-    from realtime_spark.operators.linkage import blocked_candidates
-
-    clean = load_table(spark, sf_dir, "customer")
-    dirty = _dirty_customers(spark, sf_dir)
-    return blocked_candidates(
-        dirty,
-        clean,
-        [
-            (F.col("l_d_name"), F.col("r_c_name")),
-            (
-                F.concat_ws(
-                    "#",
-                    F.col("l_d_nationkey").cast("string"),
-                    F.col("l_d_mktsegment"),
-                ),
-                F.concat_ws(
-                    "#",
-                    F.col("r_c_nationkey").cast("string"),
-                    F.col("r_c_mktsegment"),
-                ),
-            ),
-        ],
-        left_id="l_d_id",
-        right_id="r_c_custkey",
-    )
-
-
 def q_linkage_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learn the linkage m/u probabilities from the candidate pairs by
     exact-integer EM over agreement-pattern counts: after _EM_ITERS

@@ -46,16 +46,6 @@ def label_centroids(emb: DataFrame) -> DataFrame:
     return _triples(emb).groupBy("label", "i").agg(F.avg("e").alias("m"))
 
 
-def centroid_arrays(emb: DataFrame) -> DataFrame:
-    """Centroids reassembled to (label, centroid array<double>, norm)."""
-    flat = label_centroids(emb)
-    return flat.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("i", "m"))), lambda s: s["m"]
-        ).alias("centroid")
-    )
-
-
 def q_emb_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return label_centroids(emb).select(

@@ -811,7 +811,7 @@ _MH_PRIME = 2147483647
 
 
 def _sql_minhash_sig() -> str:
-    # mirrors dedup.minhash_signature: one md5 per shingle, universal-hash
+    # mirrors dedup.minhash_bands: one md5 per shingle, universal-hash
     # permutations ((2i+1)*x + 7919*i + 1) mod (2^31-1)
     return (
         f"list_transform(range(0, {_MH_HASHES}), "

@@ -14,6 +14,18 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 
+def physical_memory_bytes() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def default_driver_memory() -> str:
+    """A third of physical memory, 1-48 GiB: the local-mode JVM shares the
+    host with the Python workers and the DuckDB oracle, and a heap allowed
+    past physical memory gets the JVM OOM-killed mid-run."""
+    gib = physical_memory_bytes() // 3 // 2**30
+    return f"{max(1, min(48, gib))}g"
+
+
 def get_spark(app_name: str = "realtime_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
@@ -32,7 +44,10 @@ def get_spark(app_name: str = "realtime_spark", cpus: int | None = None) -> Spar
         # pipeline onto one core; scale-neutral (no-op when files >> cores)
         .config("spark.sql.files.minPartitionNum", str(cpus))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -62,10 +62,3 @@ def streaming_rate(
             (F.col("window_sum") / F.lit(win_seconds)).alias("avg_per_sec"),
         )
     )
-
-
-def rate_gate(rates: DataFrame, limit_per_sec: float) -> DataFrame:
-    """Limit-trigger flag per (key, window) — the gate feeding P16 shedding."""
-    return rates.withColumn(
-        "limit_triggered", F.col("avg_per_sec") > F.lit(limit_per_sec)
-    )

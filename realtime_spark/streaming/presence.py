@@ -8,11 +8,14 @@ Reference semantics (ST4/A8):
   - full-state sync groups current state per topic
     (reference: presence_handler.ex:193-200, channels/presence.ex:1-12)
 
-The reference replicates state via an ORSWOT CRDT (Phoenix.Tracker). In
-Spark, Structured Streaming's state store *is* the replicated state: keyed
-`applyInPandasWithState` over (topic, presence_key) holds the latest meta and
-emits a diff row on every effective change. Partitioning by the group key
-gives the same per-key linearization the tracker's per-topic shard does.
+The reference replicates state via an ORSWOT CRDT (Phoenix.Tracker), which
+hashes keys over a bounded pool of shards (channels/presence.ex:8-11). In
+Spark, Structured Streaming's state store *is* the replicated state:
+`presence_diffs_sharded` keys `applyInPandasWithState` by (topic, shard),
+where shard = hash(presence_key) % N_SHARDS, holds each shard's
+presence_key -> meta map and emits a diff row on every effective change.
+All events of a key hash to one shard and are replayed there in (ts, seq)
+order, which gives the per-key linearization the tracker's shard does.
 
 Batch analogs (oracle-checkable) live beside the stateful operator:
 `presence_diffs_batch` computes the same diffs from an ordered event log with
@@ -21,6 +24,7 @@ window functions; `presence_state_batch` is the A8 grouping.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Iterable
 from typing import Any
 
@@ -35,95 +39,26 @@ PRESENCE_EVENT_DDL = (
 DIFF_SCHEMA_DDL = (
     "topic string, presence_key string, kind string, meta string, ts timestamp"
 )
-_STATE_SCHEMA = "meta string"
+# state groups per topic; a bounded pool, like the tracker's shard pool
+N_SHARDS = 32
 
 
-def presence_diffs_stateful(events: DataFrame) -> DataFrame:
-    """Streaming operator: (topic, presence_key)-keyed state emitting
-    join/leave diffs. Input may be a streaming or batch DataFrame with
-    PRESENCE_EVENT_DDL columns; action in ('track', 'untrack').
+def presence_diffs_sharded(events: DataFrame) -> DataFrame:
+    """Streaming operator: join/update/leave diffs from PRESENCE_EVENT_DDL
+    events (action in 'track', 'untrack'; an optional `seq` column breaks ts
+    ties). Input may be a streaming or batch DataFrame.
 
-    Emits kind='join' on first track or meta change (the reference treats a
-    changed re-track as an update: leave+join collapsed to one update event;
-    we emit 'update'), kind='leave' on untrack of a present key. No-op
-    re-tracks emit nothing (presence_handler.ex:190).
+    Emits kind='join' on the first track of an absent key, kind='update' on
+    a re-track with a changed meta (the reference's leave+join collapsed to
+    one event), kind='leave' with the last meta on untrack of a present key.
+    Unchanged re-tracks and untracks of absent keys emit nothing
+    (presence_handler.ex:190).
+
+    State is keyed by (topic, shard), one JSON presence_key -> meta map per
+    state row, so the Python state function runs at most
+    |topics| x N_SHARDS times per micro-batch instead of once per key, and
+    each state row stays O(keys / N_SHARDS).
     """
-
-    # the state function runs once per ACTIVE GROUP per micro-batch — with
-    # user-keyed presence that is ~one invocation per row, so the body is
-    # written for the 1-row case: column arrays instead of iterrows (a
-    # ~10x-per-row pandas tax), tuple rows instead of dict-of-lists, and no
-    # output frame at all when a group produced no diffs
-    def fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        (topic, presence_key) = key
-        # presence is STATE EXISTENCE, not meta non-nullness: a track with
-        # a null/empty meta still makes the key present (Phoenix tracks
-        # empty metas); conflating the two would re-join on every track
-        # and drop the final leave
-        present: bool = state.exists
-        current: str | None = state.get[0] if present else None
-        rows: list[tuple[Any, ...]] = []
-
-        # concatenate the micro-batch's chunks before sorting: Arrow delivers
-        # a group's rows split across frames with no global order guarantee
-        frames = [p for p in pdfs if len(p)]
-        if frames:
-            merged = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-            sort_keys = ["ts", "seq"] if "seq" in merged.columns else ["ts"]
-            if len(merged) > 1:
-                merged = merged.sort_values(sort_keys, kind="mergesort")
-            actions = merged["action"].to_numpy()
-            metas = merged["meta"].to_numpy()
-            tss = merged["ts"].to_numpy()
-            for action, meta, ts in zip(actions, metas, tss):
-                if action == "track":
-                    if not present:
-                        present, current = True, meta
-                        rows.append((topic, presence_key, "join", current, ts))
-                    elif current != meta:
-                        current = meta
-                        rows.append((topic, presence_key, "update", current, ts))
-                    # unchanged re-track: no-op
-                elif action == "untrack" and present:
-                    rows.append((topic, presence_key, "leave", current, ts))
-                    present, current = False, None
-        if present:
-            state.update((current,))
-        else:
-            state.remove()
-        if rows:
-            yield pd.DataFrame(
-                rows, columns=["topic", "presence_key", "kind", "meta", "ts"]
-            )
-
-    return events.groupBy("topic", "presence_key").applyInPandasWithState(
-        fn,
-        outputStructType=DIFF_SCHEMA_DDL,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def presence_diffs_sharded(events: DataFrame, n_shards: int = 32) -> DataFrame:
-    """Scale-shaped variant of `presence_diffs_stateful`: state is keyed by
-    (topic, shard) where shard = hash(presence_key) % n_shards, and each state
-    row holds the shard's presence_key -> meta map (JSON).
-
-    Rationale: with per-user presence keys, (topic, presence_key) keying makes
-    applyInPandasWithState invoke the Python state fn ~once per ROW per
-    micro-batch — pure per-group overhead dominates (measured ~10x the whole
-    pipeline). Sharding caps invocations at |topics| x n_shards per batch
-    while preserving per-key linearization (all events of a key hash to the
-    same shard, processed in (ts, seq) order). This mirrors the reference's
-    Phoenix.Tracker design of hashing topics across a bounded shard pool
-    (deps phoenix_pubsub; lib/realtime_web/channels/presence.ex:8-11) rather
-    than one process per key. Hot topics with millions of keys spread over
-    n_shards, and each state row stays O(keys/shard).
-    """
-    import json
 
     def fn(
         key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
@@ -133,6 +68,8 @@ def presence_diffs_sharded(events: DataFrame, n_shards: int = 32) -> DataFrame:
             json.loads(state.get[0]) if state.exists else {}
         )
         rows: list[tuple[Any, ...]] = []
+        # concatenate the micro-batch's chunks before sorting: Arrow delivers
+        # a group's rows split across frames with no global order guarantee
         frames = [p for p in pdfs if len(p)]
         if frames:
             merged = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
@@ -169,7 +106,7 @@ def presence_diffs_sharded(events: DataFrame, n_shards: int = 32) -> DataFrame:
             )
 
     sharded = events.withColumn(
-        "_shard", F.pmod(F.xxhash64("presence_key"), F.lit(n_shards))
+        "_shard", F.pmod(F.xxhash64("presence_key"), F.lit(N_SHARDS))
     )
     return sharded.groupBy("topic", "_shard").applyInPandasWithState(
         fn,
@@ -221,82 +158,4 @@ def presence_state_batch(events: DataFrame) -> DataFrame:
     )
     return last.filter(F.col("action") == "track").select(
         "topic", "presence_key", "meta", F.col("ts").alias("tracked_at")
-    )
-
-
-def presence_diffs_tws(events: DataFrame, n_shards: int = 32) -> DataFrame:
-    """Presence diffs on the transformWithStateInPandas API (Spark 4):
-    state keyed by (topic, shard) with a MapState of presence_key -> meta.
-
-    Requires google.protobuf at runtime (the TWS state-server protocol);
-    deployments without it use `presence_diffs_sharded`, which is
-    semantically identical (tests pin both against the same batch analog).
-
-    Versus the sharded applyInPandasWithState form, MapState is the better
-    100 TB shape: each present member is an individual RocksDB entry, so a
-    micro-batch reads/writes ONLY the keys it touches — the JSON-blob state
-    row of `presence_diffs_sharded` rewrites the whole shard map every
-    batch (O(members/shard) I/O per batch regardless of activity). Same
-    linearization guarantee: a key's events all hash to one shard and are
-    processed in (ts, seq) order.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class Proc(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._members = handle.getMapState(
-                "members", "presence_key string", "meta string"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            (topic, _shard) = key
-            out: list[tuple] = []
-            frames = [p for p in rows if len(p)]
-            if frames:
-                merged = (
-                    pd.concat(frames, ignore_index=True)
-                    if len(frames) > 1
-                    else frames[0]
-                )
-                sort_keys = ["ts", "seq"] if "seq" in merged.columns else ["ts"]
-                if len(merged) > 1:
-                    merged = merged.sort_values(sort_keys, kind="mergesort")
-                for pkey, action, meta, ts in zip(
-                    merged["presence_key"].to_numpy(),
-                    merged["action"].to_numpy(),
-                    merged["meta"].to_numpy(),
-                    merged["ts"].to_numpy(),
-                ):
-                    kt = (pkey,)
-                    in_map = self._members.containsKey(kt)
-                    cur = self._members.getValue(kt)[0] if in_map else None
-                    if action == "track":
-                        if not in_map:
-                            self._members.updateValue(kt, (meta,))
-                            out.append((topic, pkey, "join", meta, ts))
-                        elif cur != meta:
-                            self._members.updateValue(kt, (meta,))
-                            out.append((topic, pkey, "update", meta, ts))
-                    elif action == "untrack" and in_map:
-                        out.append((topic, pkey, "leave", cur, ts))
-                        self._members.removeKey(kt)
-            if out:
-                yield pd.DataFrame(
-                    out, columns=["topic", "presence_key", "kind", "meta", "ts"]
-                )
-
-        def close(self) -> None:
-            pass
-
-    sharded = events.withColumn(
-        "_shard", F.pmod(F.xxhash64("presence_key"), F.lit(n_shards))
-    )
-    return sharded.groupBy("topic", "_shard").transformWithStateInPandas(
-        Proc(),
-        outputStructType=DIFF_SCHEMA_DDL,
-        outputMode="append",
-        timeMode="none",
     )

@@ -5,9 +5,11 @@ sorted, row-order-insensitive value comparison."""
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 
+from realtime_spark.session import physical_memory_bytes
 from realtime_spark.sources.testdata import TABLES
 
 
@@ -39,6 +41,15 @@ def _norm(v):
     return v
 
 
+def default_oracle_workers() -> int:
+    """Concurrent oracle comparisons for this host: up to 6, one per two
+    cores of SPARK_GRAFT_CPUS and one per 4 GiB of physical memory (every
+    worker adds Spark jobs in the shared JVM plus a DuckDB connection)."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or 0) or os.cpu_count() or 4
+    mem_gib = physical_memory_bytes() // 2**30
+    return max(1, min(6, cpus // 2, mem_gib // 4))
+
+
 def run_oracle_matrix(
     spark,
     sf_dir: str,
@@ -59,13 +70,15 @@ def run_oracle_matrix(
     query's Spark stages. Results are unaffected: queries share the session
     but own disjoint scratch roots / view names, partition-count races from
     scoped confs change file counts only, and each worker uses its own
-    DuckDB connection. SPARK_GRAFT_ORACLE_WORKERS=1 restores serial
-    execution for debugging."""
-    import os
+    DuckDB connection. The default worker count is fitted to the host
+    (`default_oracle_workers`); SPARK_GRAFT_ORACLE_WORKERS overrides it,
+    and =1 restores serial execution for debugging."""
     from concurrent.futures import ThreadPoolExecutor
 
     if workers is None:
-        workers = int(os.environ.get("SPARK_GRAFT_ORACLE_WORKERS", "6"))
+        workers = int(
+            os.environ.get("SPARK_GRAFT_ORACLE_WORKERS") or default_oracle_workers()
+        )
 
     def one(name: str):
         con = duckdb_con(sf_dir)

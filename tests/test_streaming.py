@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from realtime_spark.streaming.presence import (
     presence_diffs_batch,
     presence_diffs_sharded,
-    presence_diffs_stateful,
 )
 
 _EVENTS = [
@@ -52,7 +51,7 @@ def test_presence_diffs_batch(spark):
     assert _as_set(out) == EXPECTED
 
 
-def test_presence_diffs_stateful_streaming(spark):
+def test_presence_diffs_sharded_streaming(spark):
     """Run the stateful operator as a real streaming query over a file source
     (one micro-batch) and compare against the relational batch analog."""
     import os
@@ -64,33 +63,7 @@ def test_presence_diffs_stateful_streaming(spark):
         stream = spark.readStream.schema(
             "topic string, presence_key string, action string, meta string, ts timestamp"
         ).parquet(src)
-        out = presence_diffs_stateful(stream)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("presence_diffs_test")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = _as_set(spark.sql("SELECT * FROM presence_diffs_test"))
-        assert got == EXPECTED
-
-
-def test_presence_diffs_sharded_streaming(spark):
-    """The shard-keyed variant must emit exactly the per-key-keyed diffs, on
-    both the toy fixture and a cross-micro-batch state-carryover sequence."""
-    import os
-
-    with tempfile.TemporaryDirectory() as d:
-        src = os.path.join(d, "src")
-        ckpt = os.path.join(d, "ckpt")
-        _events_df(spark).coalesce(1).write.parquet(src)
-        stream = spark.readStream.schema(
-            "topic string, presence_key string, action string, meta string, ts timestamp"
-        ).parquet(src)
-        out = presence_diffs_sharded(stream, n_shards=4)
+        out = presence_diffs_sharded(stream)
         q = (
             out.writeStream.format("memory")
             .queryName("presence_sharded_test")
@@ -108,13 +81,15 @@ def test_presence_diffs_sharded_multi_batch(spark):
     """State carries across micro-batches: a key tracked in batch 1 and
     re-tracked unchanged in batch 2 must NOT re-join; untrack in batch 2 must
     emit leave with the batch-1 meta. Output equals the batch analog on the
-    full ordered log."""
+    full ordered log. 97 keys per topic over the 32 shards put several keys
+    in one shard map (pigeonhole), and each (topic, key) recurs about seven
+    times, on both sides of the batch split."""
     import os
 
     rows = [
-        (f"room{i % 3}", f"u{i % 17}", "track" if i % 5 else "untrack",
+        (f"room{i % 3}", f"u{i % 97}", "track" if i % 5 else "untrack",
          f"m{i % 7}", float(i))
-        for i in range(200)
+        for i in range(2000)
     ]
     df = spark.createDataFrame(
         rows,
@@ -126,10 +101,10 @@ def test_presence_diffs_sharded_multi_batch(spark):
         src = os.path.join(d, "src")
         ckpt = os.path.join(d, "ckpt")
         # two files, maxFilesPerTrigger=1 -> two micro-batches split on time
-        df.filter(F.col("ts").cast("double") < 100).coalesce(1).write.parquet(
+        df.filter(F.col("ts").cast("double") < 1000).coalesce(1).write.parquet(
             os.path.join(src, "a")
         )
-        df.filter(F.col("ts").cast("double") >= 100).coalesce(1).write.parquet(
+        df.filter(F.col("ts").cast("double") >= 1000).coalesce(1).write.parquet(
             os.path.join(src, "b")
         )
         stream = (
@@ -139,7 +114,7 @@ def test_presence_diffs_sharded_multi_batch(spark):
             .option("maxFilesPerTrigger", "1")
             .parquet(src + "/*")
         )
-        out = presence_diffs_sharded(stream, n_shards=4)
+        out = presence_diffs_sharded(stream)
         q = (
             out.writeStream.format("memory")
             .queryName("presence_sharded_mb")
@@ -586,59 +561,6 @@ def test_interval_join_streaming(spark, sf_dir):
     assert got == expected
 
 
-def test_presence_diffs_tws_multi_batch(spark):
-    """transformWithStateInPandas presence (MapState per member) must match
-    the batch analog across micro-batches, including state carryover."""
-    import os
-
-    import pytest
-
-    # the TWS state server speaks protobuf; absent in this container
-    pytest.importorskip("google.protobuf.descriptor")
-
-    from realtime_spark.streaming.presence import presence_diffs_tws
-
-    rows = [
-        (f"room{i % 3}", f"u{i % 17}", "track" if i % 5 else "untrack",
-         f"m{i % 7}", float(i))
-        for i in range(200)
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "topic string, presence_key string, action string, meta string, sec double",
-    ).withColumn("ts", F.col("sec").cast("timestamp")).drop("sec")
-    expected = _as_set(presence_diffs_batch(df))
-
-    with tempfile.TemporaryDirectory() as d:
-        src = os.path.join(d, "src")
-        ckpt = os.path.join(d, "ckpt")
-        df.filter(F.col("ts").cast("double") < 100).coalesce(1).write.parquet(
-            os.path.join(src, "a")
-        )
-        df.filter(F.col("ts").cast("double") >= 100).coalesce(1).write.parquet(
-            os.path.join(src, "b")
-        )
-        stream = (
-            spark.readStream.schema(
-                "topic string, presence_key string, action string, meta string, ts timestamp"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src + "/*")
-        )
-        out = presence_diffs_tws(stream, n_shards=4)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("presence_tws_mb")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        got = _as_set(spark.sql("SELECT * FROM presence_tws_mb"))
-        assert got == expected
-
-
 def test_cdc_stream_observes_slot_backlog(spark, sf_dir):
     """A10: the raw per-batch change count surfaces as a streaming
     observation (the slot_changes_count sentinel analog) — the observed
@@ -890,7 +812,7 @@ def test_adaptive_jitter_never_degenerate():
 def test_presence_null_meta_is_still_present(spark, tmp_path):
     """Presence is state existence, not meta non-nullness: a track with a
     null meta joins ONCE (re-tracks are no-ops), and untrack still emits
-    the leave — for both the per-key and the sharded state operators."""
+    the leave — on the stateful operator as on the batch analog."""
     import os
 
     rows = [
@@ -915,18 +837,16 @@ def test_presence_null_meta_is_still_present(spark, tmp_path):
 
     src = str(tmp_path / "src")
     ev.repartition(1).write.parquet(src)
-    for i, op in enumerate((presence_diffs_stateful, presence_diffs_sharded)):
-        stream = spark.readStream.schema(
-            "topic string, presence_key string, action string, meta string, ts timestamp"
-        ).parquet(src)
-        out_dir = str(tmp_path / f"out{i}")
-        q = (
-            op(stream).writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(out_dir, "_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = _as_set(spark.read.parquet(out_dir))
-        assert got == expected, f"{op.__name__}: {got}"
+    stream = spark.readStream.schema(
+        "topic string, presence_key string, action string, meta string, ts timestamp"
+    ).parquet(src)
+    out_dir = str(tmp_path / "out")
+    q = (
+        presence_diffs_sharded(stream).writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", os.path.join(out_dir, "_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert _as_set(spark.read.parquet(out_dir)) == expected
