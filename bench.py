@@ -248,7 +248,7 @@ def bench_streaming_cdc(spark, sf_dir: str, micro_batches: int | None = None) ->
     import tempfile
 
     import __spark_entry__ as em
-    from realtime_spark.operators.cdc import CompiledMatcher, match_changes
+    from realtime_spark.operators.cdc import match_changes
     from realtime_spark.sources.testdata import changes_from_orders
     from realtime_spark.streaming.cdc_stream import encode_once_fanout
 
@@ -264,13 +264,11 @@ def bench_streaming_cdc(spark, sf_dir: str, micro_batches: int | None = None) ->
         ckpt = os.path.join(d, "ckpt")
         changes.repartition(micro_batches).write.parquet(src)
 
-        # compile the match ONCE (name-bound expressions reused by every
-        # micro-batch) — the deployment shape run_cdc_stream uses; rebuilding
-        # the tree per batch was 38% of batch wall (py4j roundtrips)
-        matcher = CompiledMatcher(subs, changes.columns)
-
+        # match_changes memoizes the compiled match on the dim, so only the
+        # first micro-batch builds the expression tree (rebuilding it per
+        # batch was 38% of batch wall: py4j round trips)
         def on_batch(batch_df, epoch_id):
-            out = encode_once_fanout(matcher(batch_df))
+            out = encode_once_fanout(match_changes(batch_df, subs))
             delivered["rows"] += out.count()
 
         stream = (

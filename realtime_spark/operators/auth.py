@@ -13,7 +13,7 @@ Reference behavior reproduced (Spark-first, no probe transactions):
     columns — correct for the test corpus, declared limitation for arbitrary
     SQL (see SURVEY.md §7 watch-list).
 
-Scale notes: policy evaluation is a broadcast join (policies are tiny);
+Scale notes: RLS evaluation is one CASE over the (tiny) policy registry;
 JWT verification is an Arrow-batched pandas UDF (hmac is CPU-bound Python,
 but it runs once per connection/token, not per event — the hot event path
 joins against already-verified claims).
@@ -32,6 +32,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+
+from realtime_spark.functions.pg_policy import _spark_str
+from realtime_spark.session import local_frame
 
 POLICY_SCHEMA_DDL = (
     "topic string, claims_role string, extension string, "
@@ -729,10 +732,12 @@ def gate_messages(
 def rls_policies_df(spark: SparkSession, specs: Iterable[Mapping]) -> DataFrame:
     """RLS policy registry: one Spark SQL expression per (schema, table, role).
 
-    The expression sees the change's `record` map and the subscriber's
-    claims via `claims_role` / `claims_sub` columns — the compiled analog of
-    the reference's per-role prepared statement + set_config claims
-    (reference: migrations/20211116212300:36-68, 20260626120000:491-536).
+    The expression sees the change as `c` (`c.record`, `c.old_record`, ...)
+    and the subscriber as `s` (`s.claims_role`, the claims map `s.claims`)
+    — the compiled analog of the reference's per-role prepared statement +
+    set_config claims (reference: migrations/20211116212300:36-68,
+    20260626120000:491-536). Several rows for one (schema, table, role) are
+    permissive policies and OR together, as in Postgres.
     """
     rows = [
         {
@@ -743,10 +748,13 @@ def rls_policies_df(spark: SparkSession, specs: Iterable[Mapping]) -> DataFrame:
         }
         for s in specs
     ]
-    return spark.createDataFrame(
+    df = local_frame(
+        spark,
         rows,
-        schema="schema_name string, table_name string, claims_role string, policy_expr string",
+        "schema_name string, table_name string, claims_role string, policy_expr string",
     )
+    df._rs_policy_rows = rows  # read by apply_rls_policies without a job
+    return df
 
 
 def apply_rls_exists_policy(
@@ -799,35 +807,63 @@ def apply_rls_exists_policy(
     return pairs.filter(~protected).unionByName(passed)
 
 
+def _rls_case_sql(rls_policies: DataFrame) -> str | None:
+    """The policy registry as one SQL CASE over a change `c` and a
+    subscription `s`: per (schema, table, role) the OR of its policies, each
+    NULL-as-false (fail-closed); no policy for the key -> true (RLS not
+    enabled there). None when the registry is empty.
+
+    The rows are read once per registry frame (rls_policies_df carries them,
+    any other frame is collected once) and the CASE is kept on the frame."""
+    memo = getattr(rls_policies, "_rs_rls_case", None)
+    if memo is None:
+        rows = getattr(rls_policies, "_rs_policy_rows", None)
+        if rows is None:
+            rows = [r.asDict() for r in rls_policies.collect()]
+        groups: dict[tuple[str, str, str], set[str | None]] = {}
+        for r in rows:
+            key = (r["schema_name"], r["table_name"], r["claims_role"])
+            if None not in key:  # a NULL key never equals a change's key
+                groups.setdefault(key, set()).add(r["policy_expr"])
+        whens = [
+            f"WHEN c.schema_name = {_spark_str(schema)} AND c.table_name = "
+            f"{_spark_str(table)} AND s.claims_role = {_spark_str(role)} THEN "
+            + " OR ".join(
+                "true" if e is None else f"coalesce(({e}), false)"
+                for e in sorted(exprs, key=str)
+            )
+            for (schema, table, role), exprs in sorted(groups.items())
+        ]
+        memo = (f"CASE {' '.join(whens)} ELSE true END" if whens else None,)
+        rls_policies._rs_rls_case = memo
+    return memo[0]
+
+
 def apply_rls_policies(pairs: DataFrame, rls_policies: DataFrame) -> DataFrame:
-    """Filter matched (change, subscription) pairs by the RLS policy for the
-    pair's (schema, table, role).
+    """Filter matched (change, subscription) pairs by the RLS policies for
+    the pair's (schema, table, role).
 
     The distinct policy expressions of a deployment are enumerable, so the
-    filter compiles to one CASE over the (small, broadcast) policy registry —
-    rows with no policy row pass (RLS not enabled for that table), rows whose
-    policy evaluates false/NULL are dropped (fail-closed), matching
-    `is_rls_enabled` semantics.
+    filter compiles to one CASE over the (small) policy registry: pairs with
+    no policy pass (RLS not enabled for that table); pairs pass when any of
+    their key's policies is true and are dropped when all are false or NULL
+    (fail-closed), matching `is_rls_enabled` semantics and Postgres's OR of
+    permissive policies.
+
+    On the compiled match (`_rs_match_sets`, one row per change with its
+    array of matched subscriptions) the CASE runs inside the row as a
+    lambda named `s` over that array, so the RLS step adds no join, no
+    broadcast and no shuffle, and the result keeps `_rs_match_sets` for
+    project_output's zero-shuffle grouping. Other pairs frames (the join
+    path) are filtered row by row with the same CASE.
     """
-    pol_rows = rls_policies.collect()  # tiny dimension: policy registry
-    p = F.broadcast(
-        rls_policies.withColumnRenamed("schema_name", "r_schema")
-        .withColumnRenamed("table_name", "r_table")
-        .withColumnRenamed("claims_role", "r_role")
-    )
-    joined = pairs.join(
-        p,
-        (F.col("c.schema_name") == F.col("r_schema"))
-        & (F.col("c.table_name") == F.col("r_table"))
-        & (F.col("s.claims_role") == F.col("r_role")),
-        "left",
-    )
-    # build CASE policy_expr WHEN <expr-string> THEN eval(<expr>) chain
-    cond = F.when(F.col("policy_expr").isNull(), F.lit(True))
-    for expr_str in sorted({r["policy_expr"] for r in pol_rows}):
-        cond = cond.when(
-            F.col("policy_expr") == expr_str,
-            F.coalesce(F.expr(expr_str), F.lit(False)),
-        )
-    cond = cond.otherwise(F.lit(False))
-    return joined.filter(cond).drop("r_schema", "r_table", "r_role", "policy_expr")
+    case = _rls_case_sql(rls_policies)
+    if case is None:
+        return pairs
+    sets = getattr(pairs, "_rs_match_sets", None)
+    if sets is None:
+        return pairs.filter(F.expr(case))
+    kept = sets.select("c", F.expr(f"filter(subs, s -> {case})").alias("subs"))
+    out = kept.select("c", F.explode("subs").alias("s"))
+    out._rs_match_sets = kept
+    return out

@@ -25,6 +25,7 @@ DELETE changes evaluate filters against old_record (wal2json carries only
 
 from __future__ import annotations
 
+from functools import cached_property
 from typing import Iterable, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -38,6 +39,7 @@ from realtime_spark.functions.filters import (
     filters_to_rows,
     parse_filter_string,
 )
+from realtime_spark.session import local_frame
 
 SUBSCRIPTION_SCHEMA_DDL = (
     "id bigint, subscription_id string, schema_name string, table_name string, "
@@ -115,7 +117,7 @@ def subscriptions_df(
                 },
             }
         )
-    df = spark.createDataFrame(rows, schema=SUBSCRIPTION_SCHEMA_DDL)
+    df = local_frame(spark, rows, SUBSCRIPTION_SCHEMA_DDL)
     # stash the local rows so the compile strategy (matched_pairs) reads the
     # dim without a Spark job; any DataFrame surgery drops the attribute and
     # the strategy falls back to a real collect
@@ -181,11 +183,13 @@ def expand_wildcards(
             for ps, pt in publication_tables
             if r["schema_name"] in ("*", ps) and r["table_name"] in ("*", pt)
         ]
-        df = spark.createDataFrame(expanded, schema=subs.schema)
+        df = local_frame(spark, expanded, subs.schema)
         df._rs_spec_rows = expanded
         return df
-    pub = spark.createDataFrame(
-        list(publication_tables), schema="pub_schema string, pub_table string"
+    pub = local_frame(
+        spark,
+        [{"pub_schema": ps, "pub_table": pt} for ps, pt in publication_tables],
+        "pub_schema string, pub_table string",
     )
     matched = subs.join(
         F.broadcast(pub),
@@ -218,27 +222,6 @@ def _collect_small_dim(subs: DataFrame):
     if len(rows) > COMPILE_MAX_SUBS:
         return None
     return rows
-
-
-def _compile_frame(changes: DataFrame):
-    """Resolve the frame the compiled predicates run on.
-
-    A change frame carrying the typed-source contract (`_rs_typed_source`,
-    set by relational derivations like testdata.changes_from_orders) yields
-    (base_df, change_exprs, typed_record_cols): predicates read typed scan
-    columns (parquet pushdown) and the record maps are only built for rows
-    that matched. Any other frame evaluates on its own columns via the
-    record map."""
-    typed = getattr(changes, "_rs_typed_source", None)
-    if typed is not None:
-        base, change_exprs, typed_cols = typed
-        # dtype of each typed expression (schema analysis only, no job):
-        # native-typed columns compile to cast-free, scan-pushable predicates
-        typed_dtypes = dict(
-            base.select([c.alias(n) for n, c in typed_cols.items()]).dtypes
-        )
-        return base, dict(change_exprs), dict(typed_cols), typed_dtypes
-    return changes, {n: F.col(n) for n in changes.columns}, None, None
 
 
 def _named_struct(cols: Mapping[str, Column]) -> Column:
@@ -350,6 +333,86 @@ def _joined_pairs(changes: DataFrame, subs: DataFrame) -> DataFrame:
     return c.join(s, cond, "inner")
 
 
+class _CompiledMatch:
+    """One subscription set compiled against one change-frame shape: a
+    plan-time predicate per subscription (entity, action, filters), their
+    disjunction, and the per-change expressions built from them. Each of
+    those is built on first use, so matched_pairs and match_changes pay
+    only for their own."""
+
+    def __init__(self, rows, cols: Mapping[str, Column], typed_cols=None, typed_dtypes=None):
+        self._rows = rows
+        self._cols = cols
+        self._preds = [_sub_pred(r, cols, typed_cols, typed_dtypes) for r in rows]
+        self.any = _any_pred(self._preds)
+
+    @cached_property
+    def sets_cols(self) -> list[Column]:
+        """The change as struct `c` plus the array `subs` of the structs of
+        the subscriptions it matches."""
+        matches = F.array_compact(
+            F.array(*[F.when(p, _sub_struct_lit(r)) for p, r in zip(self._preds, self._rows)])
+        )
+        return [_named_struct(self._cols).alias("c"), matches.alias("subs")]
+
+    @cached_property
+    def ids_cols(self) -> list[Column]:
+        """The change's own columns plus the sorted distinct array of the
+        matched subscription ids (A5)."""
+        ids = F.sort_array(
+            F.array_distinct(
+                F.array_compact(
+                    F.array(
+                        *[
+                            F.when(p, F.lit(r["subscription_id"]))
+                            for p, r in zip(self._preds, self._rows)
+                        ]
+                    )
+                )
+            )
+        )
+        return [c.alias(n) for n, c in self._cols.items()] + [ids.alias("subscription_ids")]
+
+
+def _compiled(changes: DataFrame, subs: DataFrame, rows) -> tuple[DataFrame, _CompiledMatch]:
+    """(frame to scan, compiled match) for `rows`, the collected dim `subs`.
+
+    Over a plain change frame every compiled expression is a name-bound
+    column reference, so it depends only on the frame's column names and is
+    memoized on the dim, keyed by the subscription rows and the column
+    names: a foreachBatch body calling matched_pairs / match_changes on
+    every micro-batch builds the tree (one py4j round trip per Column node,
+    ~15k for 32 subscriptions) once per subscription set, like the
+    reference's poller preparing its statement once per subscription epoch
+    (replication_poller.ex:240-292). The memo holds only for the
+    SparkContext it was built under, and never once that context stopped.
+    A typed source is compiled afresh: its predicates read typed scan
+    columns of its own base frame.
+
+    The typed-source contract (`_rs_typed_source`, set by relational
+    derivations like testdata.changes_from_orders) is (base_df,
+    change_exprs, typed_record_cols): predicates read typed scan columns
+    (parquet pushdown) and the record maps are only built for rows that
+    matched."""
+    typed = getattr(changes, "_rs_typed_source", None)
+    if typed is not None:
+        base, change_exprs, typed_cols = typed
+        # dtype of each typed expression (schema analysis only, no job):
+        # native-typed columns compile to cast-free, scan-pushable predicates
+        typed_dtypes = dict(base.select([c.alias(n) for n, c in typed_cols.items()]).dtypes)
+        return base, _CompiledMatch(rows, dict(change_exprs), dict(typed_cols), typed_dtypes)
+    # keyed on the context, not the session: foreachBatch wraps every
+    # micro-batch in a new SparkSession over the same context
+    sc = changes.sparkSession.sparkContext
+    key = (repr(rows), tuple(changes.columns))
+    memo = getattr(subs, "_rs_compiled", None)
+    if memo is None or memo[0] is not sc or sc._jsc is None or memo[1] != key:
+        compiled = _CompiledMatch(rows, {n: F.col(n) for n in changes.columns})
+        memo = (sc, key, compiled)
+        subs._rs_compiled = memo
+    return changes, memo[2]
+
+
 def matched_pairs(changes: DataFrame, subs: DataFrame, strategy: str = "auto") -> DataFrame:
     """One row per (change, visible subscription): the pre-aggregation form.
 
@@ -357,7 +420,8 @@ def matched_pairs(changes: DataFrame, subs: DataFrame, strategy: str = "auto") -
     **compiled into the plan** — one codegen'd predicate per subscription, the
     matching subs collected per change with `array_compact` and exploded. The
     change stream is scanned exactly once with ZERO shuffle and no join at
-    all; Catalyst constant-folds the entity equality per subscription.
+    all; Catalyst constant-folds the entity equality per subscription. The
+    compiled expressions are memoized on the dim (see `_compiled`).
 
     Fallback plan (`strategy="join"` or dim > COMPILE_MAX_SUBS): broadcast
     hash join on (schema_name, table_name) with the runtime filter
@@ -380,78 +444,16 @@ def matched_pairs(changes: DataFrame, subs: DataFrame, strategy: str = "auto") -
             )
         return _joined_pairs(changes, subs)
     if not rows:
-        empty = changes.sparkSession.createDataFrame([], subs.schema)
+        empty = local_frame(changes.sparkSession, [], subs.schema)
         return _joined_pairs(changes.limit(0), empty)
-    src, cols, typed_cols, typed_dtypes = _compile_frame(changes)
-    preds = [_sub_pred(r, cols, typed_cols, typed_dtypes) for r in rows]
-    matches = F.array_compact(
-        F.array(*[F.when(p, _sub_struct_lit(r)) for p, r in zip(preds, rows)])
-    )
-    or_pred = _any_pred(preds)
-    c_struct = _named_struct(cols).alias("c")
-    filtered = src.filter(or_pred)
-    pairs = filtered.select(c_struct, F.explode(matches).alias("s"))
+    src, compiled = _compiled(changes, subs, rows)
     # pre-explode form: each change with its full visible-subscription array in
     # ONE row. projection.project_output groups per (role, selected_columns)
     # within the row from this frame — zero shuffle instead of explode+groupBy.
-    pairs._rs_match_sets = filtered.select(c_struct, matches.alias("subs"))
+    sets = src.filter(compiled.any).select(*compiled.sets_cols)
+    pairs = sets.select("c", F.explode("subs").alias("s"))
+    pairs._rs_match_sets = sets
     return pairs
-
-
-def _match_ids_expr(preds, rows) -> Column:
-    """A5 id-set assembly shared by the per-frame and compile-once paths:
-    sorted distinct array of the subscription ids whose predicate holds."""
-    return F.sort_array(
-        F.array_distinct(
-            F.array_compact(
-                F.array(
-                    *[
-                        F.when(p, F.lit(r["subscription_id"]))
-                        for p, r in zip(preds, rows)
-                    ]
-                )
-            )
-        )
-    )
-
-
-class CompiledMatcher:
-    """match_changes compiled ONCE into name-bound Column expressions and
-    re-applied to any DataFrame with the same columns — the foreachBatch
-    fast path.
-
-    Rationale: inside foreachBatch every micro-batch used to rebuild the
-    whole compiled match tree through py4j (one roundtrip per Column node —
-    hundreds per batch, ~38% of batch wall at bench scale). All of those
-    expressions are unresolved name references when the frame is not a
-    typed source, so they are batch-agnostic: build them once, and each
-    batch costs a single filter+select call. Mirrors the reference's poller
-    preparing its statement once per subscription epoch, not per poll
-    (replication_poller.ex:240-292).
-
-    Falls back to the per-frame `match_changes` when the dim exceeds
-    COMPILE_MAX_SUBS (join plan) or is empty.
-    """
-
-    def __init__(self, subs: DataFrame, column_names):
-        self._subs = subs
-        self._columns = list(column_names)
-        rows = _collect_small_dim(subs)
-        if rows:
-            cols = {n: F.col(n) for n in self._columns}
-            preds = [_sub_pred(r, cols) for r in rows]
-            self._pred = _any_pred(preds)
-            self._select = [cols[n].alias(n) for n in self._columns] + [
-                _match_ids_expr(preds, rows).alias("subscription_ids")
-            ]
-        else:
-            self._pred = None
-            self._select = None
-
-    def __call__(self, batch_df: DataFrame) -> DataFrame:
-        if self._pred is None:
-            return match_changes(batch_df, self._subs)
-        return batch_df.filter(self._pred).select(*self._select)
 
 
 def match_changes(changes: DataFrame, subs: DataFrame, strategy: str = "auto") -> DataFrame:
@@ -462,17 +464,15 @@ def match_changes(changes: DataFrame, subs: DataFrame, strategy: str = "auto") -
     stage (`array_compact` of per-subscription conditional ids) — no join, no
     groupBy, no shuffle anywhere. This mirrors the reference's single pass
     over each WAL record accumulating visible_role_sub_ids
-    (migrations/20260626120000:500-536)."""
+    (migrations/20260626120000:500-536). The compiled expressions are
+    memoized on the dim (see `_compiled`), so a foreachBatch body can call
+    this on every micro-batch."""
     rows = _collect_small_dim(subs) if strategy in ("auto", "compile") else None
-    if rows is not None and rows:
-        src, cols, typed_cols, typed_dtypes = _compile_frame(changes)
-        preds = [_sub_pred(r, cols, typed_cols, typed_dtypes) for r in rows]
-        ids = _match_ids_expr(preds, rows)
-        # or_pred true <=> the id set is non-empty, so a single scan-pushable
-        # filter replaces the post-projection size() check
-        return src.filter(_any_pred(preds)).select(
-            *[c.alias(n) for n, c in cols.items()], ids.alias("subscription_ids")
-        )
+    if rows:
+        src, compiled = _compiled(changes, subs, rows)
+        # the disjunction holds <=> the id set is non-empty, so a single
+        # scan-pushable filter replaces the post-projection size() check
+        return src.filter(compiled.any).select(*compiled.ids_cols)
     if rows is not None:  # empty dim -> no matches
         return changes.limit(0).withColumn(
             "subscription_ids", F.lit(None).cast("array<string>")

@@ -21,8 +21,10 @@ Reference behaviors (SURVEY §2.2 P8-P13, §2.4 A2/A4/A5, §4 O5):
   - O5/A2: expensive work is grouped per (claims_role, selected_columns) and
     subscription ids are collected per group (A5).
 
-All pure map/array expressions — no UDFs, stays in codegen, no extra shuffle
-beyond the one per-(change, role, selection-group) aggregation.
+All pure map/array expressions — no UDFs, stays in codegen. On the compiled
+match (`_rs_match_sets`, kept through apply_rls_policies) the groups form
+within each change's row with no shuffle at all; any other pairs frame pays
+one groupBy shuffle per (change, role, selection group).
 """
 
 from __future__ import annotations
@@ -33,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from realtime_spark.functions.scalar import iso_ms
+from realtime_spark.session import local_frame
 
 MAX_RECORD_BYTES = 1_048_576  # reference: db_settings.ex:10
 ERR_413 = "Error 413: Payload Too Large"
@@ -74,14 +77,16 @@ def record_text(m: Column, null_token: str = "<null>") -> Column:
 
 
 def privileges_df(spark, grants: Mapping[tuple[str, str, str], Sequence[str]]) -> DataFrame:
-    """(role, schema, table) -> allowed column names, as a broadcastable dim."""
+    """(role, schema, table) -> allowed column names, as a broadcastable dim
+    held in the JVM (its broadcast starts no Python worker)."""
     rows = [
         {"claims_role": r, "schema_name": s, "table_name": t, "allowed_columns": list(cols)}
         for (r, s, t), cols in grants.items()
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
-        schema="claims_role string, schema_name string, table_name string, "
+        "claims_role string, schema_name string, table_name string, "
         "allowed_columns array<string>",
     )
 
@@ -162,7 +167,7 @@ def project_output(
 
     One output row per (change, claims_role, selected_columns) group with the
     group's visible subscription ids — the reference's per-role/per-selection
-    loop hoisting (O5) expressed as a groupBy.
+    loop hoisting (O5), within the row on `_rs_match_sets`, else a groupBy.
 
     Expects the column naming produced by cdc.matched_pairs (c.* / s.*).
     """

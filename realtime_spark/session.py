@@ -7,11 +7,14 @@ UTC session timezone so results hash-match the duckdb oracle).
 
 from __future__ import annotations
 
+import json
 import math
 import os
 from contextlib import contextmanager
+from typing import Mapping, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def physical_memory_bytes() -> int:
@@ -90,6 +93,28 @@ def plan_input_size_bytes(df) -> int:
         return -1
     # Catalyst reports Long.MaxValue-ish sentinels when it has no estimate
     return size if 0 <= size < (1 << 62) else -1
+
+
+def local_frame(spark: SparkSession, rows: Sequence[Mapping], schema) -> DataFrame:
+    """A small dimension held in the JVM: plain-dict `rows` (JSON-able
+    values) -> a DataFrame over a `LocalRelation` of `schema` (DDL string or
+    StructType). `createDataFrame(list)` plans a Python RDD instead, so
+    every scan of the dim (a broadcast, a join) starts Python workers.
+
+    The rows cross py4j as JSON strings, are parsed once by `from_json`
+    (FAILFAST: a row that does not fit the schema raises instead of turning
+    into NULLs) and are collected inside the JVM into the LocalRelation."""
+    jss = spark._jsparkSession
+    lines = spark._jvm.java.util.ArrayList()
+    for r in rows:
+        lines.add(json.dumps(r))
+    encoder = spark._jvm.org.apache.spark.sql.Encoders.STRING()
+    parsed = DataFrame(jss.createDataset(lines, encoder).toDF(), spark).select(
+        F.from_json("value", schema, {"mode": "FAILFAST"}).alias("r")
+    ).select("r.*")
+    return DataFrame(
+        jss.createDataFrame(parsed._jdf.collectAsList(), parsed._jdf.schema()), spark
+    )
 
 
 @contextmanager

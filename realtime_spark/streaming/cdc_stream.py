@@ -15,10 +15,12 @@ semantics:
   - at-least-once sink delivery + id dedup replaces the reference's
     at-most-once socket push (ST2; documented deviation)
 
-Scale notes: foreachBatch reuses the batch plan per micro-batch — broadcast
-subscription join, no stream-side shuffle before the sink grouping. The
-encode-once sink (O4) groups by (topic/destination) before serialization, so
-fan-out to N subscribers serializes each payload once, not N times.
+Scale notes: every micro-batch runs the batch plan — the compiled
+subscription match, no stream-side shuffle before the sink grouping. The
+match's expression tree is built once per subscription set (memoized on the
+dim, cdc._compiled), not per batch. The encode-once sink (O4) groups by
+(topic/destination) before serialization, so fan-out to N subscribers
+serializes each payload once, not N times.
 """
 
 from __future__ import annotations
@@ -29,11 +31,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from realtime_spark.operators.cdc import (
-    CompiledMatcher,
-    _collect_small_dim,
-    match_changes,
-)
+from realtime_spark.operators.cdc import match_changes
 
 
 def run_cdc_stream(
@@ -56,23 +54,10 @@ def run_cdc_stream(
     `realtime.subscription` / re-checking publication tables on each poll
     cycle (S3/S4: subscriptions.ex:208-244, replication_poller.ex:240-292),
     so subscribes/unsubscribes take effect on the next batch without
-    restarting the query. The compiled match re-plans per batch either way;
-    a dim refresh costs nothing extra.
+    restarting the query. The compiled match is memoized on the dim: a
+    static dim compiles once for the life of the query, a callable compiles
+    once per dim it returns.
     """
-
-    # compile-once match cache: the expression tree is rebuilt only when the
-    # subscription set actually changes (keyed by the collected dim rows),
-    # not on every micro-batch — see CompiledMatcher. For a static dim this
-    # compiles exactly once for the life of the query.
-    cache: dict[str, Any] = {"key": None, "matcher": None}
-
-    def _matcher_for(dim: DataFrame, batch_df: DataFrame) -> CompiledMatcher:
-        rows = _collect_small_dim(dim)
-        key = None if rows is None else repr(rows)
-        if key is None or cache["key"] != key:
-            cache["matcher"] = CompiledMatcher(dim, batch_df.columns)
-            cache["key"] = key
-        return cache["matcher"]
 
     def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
         # pin the batch once so the shed gate, the A10 observation, and the
@@ -87,8 +72,7 @@ def run_cdc_stream(
             batch_df.count()
             return
         dim = subs(epoch_id) if callable(subs) else subs
-        out = _matcher_for(dim, batch_df)(batch_df)
-        sink(out, epoch_id)
+        sink(match_changes(batch_df, dim), epoch_id)
 
     # A10 slot-backlog observability: the raw per-batch change count BEFORE
     # matching/shedding, as a real streaming observation — surfaces in

@@ -325,7 +325,7 @@ def spark():
 SF = "/root/testdata/sf0.001"
 
 
-def _pairs(spark, claims=None):
+def _pairs(spark, claims=None, strategy="auto"):
     import __spark_entry__ as em
     from realtime_spark.operators.cdc import matched_pairs
     from realtime_spark.sources.testdata import changes_from_orders
@@ -335,7 +335,7 @@ def _pairs(spark, claims=None):
     if claims:
         spec["claims"] = claims
     subs = em.subscriptions_df(spark, [spec])
-    return changes, matched_pairs(changes, subs)
+    return changes, matched_pairs(changes, subs, strategy=strategy)
 
 
 def _expected_rows(changes, pred):
@@ -496,3 +496,39 @@ def test_eval_exists_policy(spark):
     }
     want = _expected_rows(changes, lambda rec: rec.get("o_custkey") in building)
     assert got == want and want
+
+
+@pytest.mark.parametrize("strategy", ["auto", "join"])
+def test_overlapping_permissive_policies_or_together(spark, strategy):
+    """Two policies on one (schema, table, role) are permissive policies:
+    Postgres ORs them, so a pair passes once when either holds — never
+    twice when both do, and still fail-closed when neither does. Checked on
+    the compiled match (RLS inside the match-set row) and on the join path."""
+    from realtime_spark.operators.auth import apply_rls_policies, rls_policies_df
+
+    changes, pairs = _pairs(spark, strategy=strategy)
+    tm = {"o_orderstatus": "text", "o_totalprice": "numeric"}
+    pols = rls_policies_df(
+        spark,
+        [
+            {"table": "orders", "policy_expr": translate_pg_policy(pg, tm)}
+            for pg in ("o_orderstatus = 'O'", "o_totalprice > 150000")
+        ],
+    )
+    got = [
+        r["change_id"]
+        for r in apply_rls_policies(pairs, pols).select("c.change_id").collect()
+    ]
+    assert len(got) == len(set(got)), "a pair passing both policies was emitted twice"
+    want = _expected_rows(
+        changes,
+        lambda rec: rec.get("o_orderstatus") == "O"
+        or float(rec.get("o_totalprice") or 0) > 150000,
+    )
+    both = _expected_rows(
+        changes,
+        lambda rec: rec.get("o_orderstatus") == "O"
+        and float(rec.get("o_totalprice") or 0) > 150000,
+    )
+    assert both, "fixture must have rows passing both policies"
+    assert set(got) == want

@@ -159,12 +159,11 @@ def test_behavior_batch_plan_shapes(plans):
 def test_rls_pg_policy_dialect_shape(plans):
     """The translated pg-dialect policy must ride the compiled match plan:
     subscriptions explode inline from a literal array (zero-shuffle
-    fanout), the policy dim joins as a broadcast, and the fact side never
-    hash-partitions."""
+    fanout), the policy is evaluated inside each change's match-set row
+    (no policy-dim join at all), and the fact side never hash-partitions."""
     p = plans("rls_pg_policy_dialect")
-    assert "SortMergeJoin" not in p, f"policy dim fell to SMJ\n{p}"
+    assert "Join" not in p, f"policy dim joined instead of evaluated in-row\n{p}"
     assert "Exchange hashpartitioning" not in p, f"fact side shuffled\n{p}"
-    assert "BroadcastHashJoin" in p
 
 
 def test_rls_exists_policy_is_broadcast_semi_join(spark, sf_dir):
