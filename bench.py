@@ -641,14 +641,14 @@ def bench_streaming_ingest(spark, sf_dir: str, micro_batches: int = 5) -> dict:
         # post-drain epoch compaction: the store-lifecycle maintenance cost
         # (fold all epoch dirs into one base behind the atomic manifest) —
         # measured here so every round records it alongside ingest itself
-        from realtime_spark.streaming.compaction import compact_ingest_state
+        from realtime_spark.streaming.ingest import INGEST_STORE
 
         def _nfiles() -> int:
             return sum(len(fs) for _, _, fs in os.walk(root))
 
         files_before = _nfiles()
         t1 = time.perf_counter()
-        compact_ingest_state(spark, root)
+        INGEST_STORE.compact(spark, root)
         compact_wall = time.perf_counter() - t1
         files_after = _nfiles()
         accepted_after = spark.read.parquet(f"{root}/accepted").count()
@@ -658,15 +658,13 @@ def bench_streaming_ingest(spark, sf_dir: str, micro_batches: int = 5) -> dict:
         # corpus trio's was measured). Built via the batch bodies — fold ==
         # stream is pytest-proven, and stream startup overhead would only
         # blur the maintenance cost being measured here.
-        from realtime_spark.streaming.compaction import (
-            compact_search_state,
-            compact_vector_state,
-        )
         from realtime_spark.streaming.search_ingest import (
+            SEARCH_STORE,
             process_search_batch,
             seed_search_state,
         )
         from realtime_spark.streaming.vector_ingest import (
+            VECTOR_STORE,
             process_vector_batch,
             seed_vector_state,
         )
@@ -681,7 +679,7 @@ def bench_streaming_ingest(spark, sf_dir: str, micro_batches: int = 5) -> dict:
         for i in (1, 2, 3):
             process_vector_batch(e.filter(F.col("vec_id") % 4 == i), i - 1, vroot)
         t2 = time.perf_counter()
-        compact_vector_state(spark, vroot)
+        VECTOR_STORE.compact(spark, vroot)
         vector_compact_wall = time.perf_counter() - t2
 
         sroot = os.path.join(tmp, "search")
@@ -689,7 +687,7 @@ def bench_streaming_ingest(spark, sf_dir: str, micro_batches: int = 5) -> dict:
         for i in (1, 2, 3):
             process_search_batch(d.filter(F.col("doc_id") % 4 == i), i - 1, sroot)
         t3 = time.perf_counter()
-        compact_search_state(spark, sroot)
+        SEARCH_STORE.compact(spark, sroot)
         search_compact_wall = time.perf_counter() - t3
     return {
         "ingest_docs_per_sec": round(n_docs / wall, 1),

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from realtime_spark.sources.testdata import load_table
+from realtime_spark.streaming.compaction import StoreSpec, run_ingest_cycles
 from realtime_spark.plans.training import (
     NEAR_DUP_TAIL,
     ORACLE_ANN_IVF_TOPK,
@@ -59,62 +60,106 @@ def _fresh_root(sf_dir: str, name: str) -> str:
     return root
 
 
+def _drain_loop(
+    spark: SparkSession,
+    root: str,
+    name: str,
+    schema: str,
+    arrivals: list[DataFrame],
+    run_stream: Callable,
+    spec: StoreSpec,
+    want: list[bool],
+) -> None:
+    """Drive a seeded store through ``run_ingest_cycles``: before each
+    availableNow drain cycle one arrival lands in a file source, and
+    compaction is the threshold janitor BETWEEN cycles (max_epochs=2: the
+    trigger fires after every second drain). Raises unless the trigger
+    fired exactly on the cycles ``want`` marks."""
+    import tempfile
+
+    src = tempfile.mkdtemp(prefix=f"rs_{name}_src_")
+    ckpt = f"{root}/_ckpt"
+    batches = iter(arrivals)
+
+    def start_stream():
+        # parallel write (r10): one drain cycle = ALL new files in one
+        # availableNow batch, so multi-file epochs batch identically while
+        # the scan map side keeps cluster parallelism (a coalesce(1)
+        # source serialized every epoch's tokenize/probe onto one core)
+        next(batches).write.parquet(f"{src}/f{len(os.listdir(src))}")
+        stream = (
+            spark.readStream.schema(schema)
+            .option("recursiveFileLookup", "true")
+            .parquet(src)
+        )
+        return run_stream(stream, root, ckpt)
+
+    try:
+        telemetry = run_ingest_cycles(
+            spark, root, start_stream, spec, cycles=len(arrivals), max_epochs=2
+        )
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+    if [t["compacted"] for t in telemetry] != want:
+        raise AssertionError(f"compaction trigger misfired: {telemetry}")
+
+
 # ---------------------------------------------------------------------------
 # corpus ingest: epoch-ordered dedup fold
 # ---------------------------------------------------------------------------
 
 
-def q_stream_ingest_accepted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus ingest over three epochs with engineered fates: exact dups of
-    the corpus and of earlier-epoch docs (digest store must grow), near-dup
-    tails of corpus and earlier-epoch docs (LSH index must grow), natural
+def _ingest_arrivals(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, list[DataFrame]]:
+    """The standing corpus and the three ingest epochs (_STREAM_SRC_CTE
+    is their oracle twin) with engineered fates: exact dups of the corpus
+    and of earlier-epoch docs (digest store must grow), near-dup tails of
+    corpus and earlier-epoch docs (LSH index must grow), natural
     cross-slice text duplicates from the warehouse itself, and genuinely
-    fresh reversed-token docs. Epochs 0-1 land pre-compaction, epoch 2 lands
-    in the COMPACTED store."""
+    fresh reversed-token docs."""
     from realtime_spark.operators.dedup import tokens_expr
-    from realtime_spark.streaming.compaction import compact_ingest_state
+
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+
+    def shifted(cond: str, by: int, text=F.col("text")) -> DataFrame:
+        return d.filter(cond).select(
+            (F.col("doc_id") + by).alias("doc_id"), text.alias("text")
+        )
+
+    tail = F.concat("text", F.lit(NEAR_DUP_TAIL))
+    e0 = d.filter("doc_id % 3 = 1").unionByName(shifted("doc_id % 9 = 0", 1000000))
+    e1 = (
+        d.filter("doc_id % 3 = 2")
+        .unionByName(shifted("doc_id % 3 = 1 AND doc_id % 7 = 0", 2000000))
+        .unionByName(shifted("doc_id % 9 = 3", 3000000, tail))
+    )
+    e2 = shifted("doc_id % 3 = 1 AND doc_id % 5 = 0", 4000000, tail).unionByName(
+        shifted(
+            "doc_id % 9 = 6",
+            5000000,
+            F.array_join(F.reverse(tokens_expr(F.col("text"))), " "),
+        )
+    )
+    return d.filter("doc_id % 3 = 0"), [e0, e1, e2]
+
+
+def q_stream_ingest_accepted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus ingest over the three epochs of ``_ingest_arrivals``. Epochs
+    0-1 land pre-compaction, epoch 2 lands in the COMPACTED store."""
     from realtime_spark.streaming.ingest import (
+        INGEST_STORE,
         accepted_docs,
         process_ingest_batch,
         seed_ingest_state,
     )
 
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = d.filter("doc_id % 3 = 0")
-    e0 = d.filter("doc_id % 3 = 1").unionByName(
-        d.filter("doc_id % 9 = 0").select(
-            (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-        )
-    )
-    e1 = (
-        d.filter("doc_id % 3 = 2")
-        .unionByName(
-            d.filter("doc_id % 3 = 1 AND doc_id % 7 = 0").select(
-                (F.col("doc_id") + 2000000).alias("doc_id"), "text"
-            )
-        )
-        .unionByName(
-            d.filter("doc_id % 9 = 3").select(
-                (F.col("doc_id") + 3000000).alias("doc_id"),
-                F.concat("text", F.lit(NEAR_DUP_TAIL)).alias("text"),
-            )
-        )
-    )
-    e2 = d.filter("doc_id % 3 = 1 AND doc_id % 5 = 0").select(
-        (F.col("doc_id") + 4000000).alias("doc_id"),
-        F.concat("text", F.lit(NEAR_DUP_TAIL)).alias("text"),
-    ).unionByName(
-        d.filter("doc_id % 9 = 6").select(
-            (F.col("doc_id") + 5000000).alias("doc_id"),
-            F.array_join(F.reverse(tokens_expr(F.col("text"))), " ").alias("text"),
-        )
-    )
-
+    corpus, (e0, e1, e2) = _ingest_arrivals(spark, sf_dir)
     root = _fresh_root(sf_dir, "ingest")
     seed_ingest_state(corpus, root)
     process_ingest_batch(e0, 0, root)
     process_ingest_batch(e1, 1, root)
-    compact_ingest_state(spark, root)
+    INGEST_STORE.compact(spark, root)
     process_ingest_batch(e2, 2, root)
     return accepted_docs(spark, root).select(
         "doc_id", F.md5("text").alias("digest")
@@ -196,80 +241,20 @@ def q_stream_compaction_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     cycles (max_epochs=2: the trigger fires after the second drain, so
     epoch 2 lands in the auto-compacted store). The accepted set must
     equal the manually-sequenced twin's, i.e. the identical oracle."""
-    import tempfile
-
-    from realtime_spark.operators.dedup import tokens_expr
-    from realtime_spark.streaming.compaction import (
-        INGEST_SUBSTORES,
-        compact_ingest_state,
-        run_ingest_cycles,
-    )
     from realtime_spark.streaming.ingest import (
+        INGEST_STORE,
         accepted_docs,
         run_ingest_stream,
         seed_ingest_state,
     )
 
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = d.filter("doc_id % 3 = 0")
-    e0 = d.filter("doc_id % 3 = 1").unionByName(
-        d.filter("doc_id % 9 = 0").select(
-            (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-        )
-    )
-    e1 = (
-        d.filter("doc_id % 3 = 2")
-        .unionByName(
-            d.filter("doc_id % 3 = 1 AND doc_id % 7 = 0").select(
-                (F.col("doc_id") + 2000000).alias("doc_id"), "text"
-            )
-        )
-        .unionByName(
-            d.filter("doc_id % 9 = 3").select(
-                (F.col("doc_id") + 3000000).alias("doc_id"),
-                F.concat("text", F.lit(NEAR_DUP_TAIL)).alias("text"),
-            )
-        )
-    )
-    e2 = d.filter("doc_id % 3 = 1 AND doc_id % 5 = 0").select(
-        (F.col("doc_id") + 4000000).alias("doc_id"),
-        F.concat("text", F.lit(NEAR_DUP_TAIL)).alias("text"),
-    ).unionByName(
-        d.filter("doc_id % 9 = 6").select(
-            (F.col("doc_id") + 5000000).alias("doc_id"),
-            F.array_join(F.reverse(tokens_expr(F.col("text"))), " ").alias("text"),
-        )
-    )
-
+    corpus, arrivals = _ingest_arrivals(spark, sf_dir)
     root = _fresh_root(sf_dir, "loop")
     seed_ingest_state(corpus, root)
-    src = tempfile.mkdtemp(prefix="rs_loop_src_")
-    ckpt = f"{root}/_ckpt"
-    arrivals = iter([e0, e1, e2])
-
-    def start_stream():
-        batch = next(arrivals)
-        # parallel write (r10): one drain cycle = ALL new files in one
-        # availableNow batch, so multi-file epochs batch identically while
-        # the scan map side keeps cluster parallelism (a coalesce(1)
-        # source serialized every epoch's tokenize/probe onto one core)
-        batch.write.parquet(f"{src}/f{len(os.listdir(src))}")
-        stream = (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-        )
-        return run_ingest_stream(stream, root, ckpt)
-
-    try:
-        telemetry = run_ingest_cycles(
-            spark, root, start_stream, compact_ingest_state,
-            INGEST_SUBSTORES, cycles=3, max_epochs=2,
-        )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    if [t["compacted"] for t in telemetry] != [False, True, False]:
-        raise AssertionError(f"compaction trigger misfired: {telemetry}")
+    _drain_loop(
+        spark, root, "loop", "doc_id bigint, text string", arrivals,
+        run_ingest_stream, INGEST_STORE, want=[False, True, False],
+    )
     return accepted_docs(spark, root).select(
         "doc_id", F.md5("text").alias("digest")
     )
@@ -280,39 +265,50 @@ def q_stream_compaction_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def q_stream_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vector ingest across four epochs that jointly cover the whole
-    embeddings table, then a FULL RE-DELIVERY epoch whose every id the
-    seen-id anti-join must reject; compaction lands mid-sequence. The
-    final top-k off the live store must equal the batch IVF answer over
-    all embeddings (ORACLE_ANN_IVF_TOPK verbatim)."""
-    from realtime_spark.operators.similarity import ivf_topk_from_index
-    from realtime_spark.streaming.compaction import compact_vector_state
-    from realtime_spark.streaming.vector_ingest import (
-        process_vector_batch,
-        searchable_index,
-        seed_vector_state,
+def _vector_arrivals(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame, list[DataFrame]]:
+    """(embeddings, centroids, standing corpus, the four epochs): three
+    quarters that jointly cover the table, then a FULL RE-DELIVERY of the
+    first under its ORIGINAL ids, every row of which the id anti-join must
+    reject against the (compacted) index."""
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    parts = [e.filter(f"vec_id % 4 = {i}") for i in (1, 2, 3)]
+    return (
+        e, e.filter(F.expr(_IVF_CENT_PRED)), e.filter("vec_id % 4 = 0"),
+        parts + parts[:1],
     )
 
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents = e.filter(F.expr(_IVF_CENT_PRED))
-    corpus = e.filter("vec_id % 4 = 0")
-    parts = [e.filter(f"vec_id % 4 = {i}") for i in (1, 2, 3)]
 
-    root = _fresh_root(sf_dir, "ivf")
-    seed_vector_state(corpus, cents, root)
-    process_vector_batch(parts[0], 0, root)
-    process_vector_batch(parts[1], 1, root)
-    compact_vector_state(spark, root)
-    process_vector_batch(parts[2], 2, root)
-    # re-deliver epoch 0's vectors under their ORIGINAL ids: every row must
-    # be rejected by the id anti-join against the (compacted) index
-    process_vector_batch(parts[0], 3, root)
+def _ivf_answer(spark: SparkSession, e: DataFrame, cents: DataFrame, root: str):
+    from realtime_spark.operators.similarity import ivf_topk_from_index
+    from realtime_spark.streaming.vector_ingest import searchable_index
 
     queries = e.filter(F.expr(_ANN_QUERY_PRED))
     return ivf_topk_from_index(
         searchable_index(spark, root), queries, cents, k=_ANN_K, nprobe=_IVF_NPROBE
     )
+
+
+def q_stream_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Vector ingest across the ``_vector_arrivals`` epochs; compaction
+    lands mid-sequence. The final top-k off the live store must equal the
+    batch IVF answer over all embeddings (ORACLE_ANN_IVF_TOPK verbatim)."""
+    from realtime_spark.streaming.vector_ingest import (
+        VECTOR_STORE,
+        process_vector_batch,
+        seed_vector_state,
+    )
+
+    e, cents, corpus, arrivals = _vector_arrivals(spark, sf_dir)
+    root = _fresh_root(sf_dir, "ivf")
+    seed_vector_state(corpus, cents, root)
+    process_vector_batch(arrivals[0], 0, root)
+    process_vector_batch(arrivals[1], 1, root)
+    VECTOR_STORE.compact(spark, root)
+    process_vector_batch(arrivals[2], 2, root)
+    process_vector_batch(arrivals[3], 3, root)  # the full re-delivery
+    return _ivf_answer(spark, e, cents, root)
 
 
 def q_stream_vector_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -320,60 +316,25 @@ def q_stream_vector_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the driver gate — the q_stream_ivf_topk arrival sequence (three
     covering epochs plus a full re-delivery every id of which the
     anti-join must reject) as real availableNow drain cycles off a file
-    source, with compact_vector_state as the threshold janitor
+    source, with vector-store compaction as the threshold janitor
     (max_epochs=2: fires after the second drain, epochs 2-3 land in the
     auto-compacted store). Search off the live store must equal the batch
     IVF answer over all embeddings — the identical oracle."""
-    import tempfile
-
-    from realtime_spark.operators.similarity import ivf_topk_from_index
-    from realtime_spark.streaming.compaction import (
-        VECTOR_SUBSTORES,
-        compact_vector_state,
-        run_ingest_cycles,
-    )
     from realtime_spark.streaming.vector_ingest import (
+        VECTOR_STORE,
         run_vector_ingest_stream,
-        searchable_index,
         seed_vector_state,
     )
 
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents = e.filter(F.expr(_IVF_CENT_PRED))
-    corpus = e.filter("vec_id % 4 = 0")
-    parts = [e.filter(f"vec_id % 4 = {i}") for i in (1, 2, 3)]
-
+    e, cents, corpus, arrivals = _vector_arrivals(spark, sf_dir)
     root = _fresh_root(sf_dir, "vecloop")
     seed_vector_state(corpus, cents, root)
-    src = tempfile.mkdtemp(prefix="rs_vecloop_src_")
-    ckpt = f"{root}/_ckpt"
-    arrivals = iter([parts[0], parts[1], parts[2], parts[0]])
-
-    def start_stream():
-        batch = next(arrivals)
-        # parallel write (r10): see the ingest loop note above
-        batch.write.parquet(f"{src}/f{len(os.listdir(src))}")
-        stream = (
-            spark.readStream.schema("vec_id bigint, embedding array<float>")
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-        )
-        return run_vector_ingest_stream(stream, root, ckpt)
-
-    try:
-        telemetry = run_ingest_cycles(
-            spark, root, start_stream, compact_vector_state,
-            VECTOR_SUBSTORES, cycles=4, max_epochs=2,
-        )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    if [t["compacted"] for t in telemetry] != [False, True, False, True]:
-        raise AssertionError(f"compaction trigger misfired: {telemetry}")
-
-    queries = e.filter(F.expr(_ANN_QUERY_PRED))
-    return ivf_topk_from_index(
-        searchable_index(spark, root), queries, cents, k=_ANN_K, nprobe=_IVF_NPROBE
+    _drain_loop(
+        spark, root, "vecloop", "vec_id bigint, embedding array<float>",
+        arrivals, run_vector_ingest_stream, VECTOR_STORE,
+        want=[False, True, False, True],
     )
+    return _ivf_answer(spark, e, cents, root)
 
 
 # ---------------------------------------------------------------------------
@@ -381,33 +342,38 @@ def q_stream_vector_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _search_quarters(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return [d.filter(f"doc_id % 4 = {i}") for i in range(4)]
+
+
 def q_stream_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Search ingest across epochs that jointly index the whole documents
     table, compaction mid-sequence (stat partials summed into one base
     row), one epoch landing after it. BM25 served off the live store must
     hash-match the batch ORACLE_SEARCH_BM25 over all documents."""
-    from realtime_spark.streaming.compaction import compact_search_state
     from realtime_spark.streaming.search_ingest import (
+        SEARCH_STORE,
         bm25_topk_from_live_index,
         process_search_batch,
         seed_search_state,
     )
 
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    q = _search_quarters(spark, sf_dir)
     root = _fresh_root(sf_dir, "bm25")
-    seed_search_state(d.filter("doc_id % 4 = 0"), root)
-    process_search_batch(d.filter("doc_id % 4 = 1"), 0, root)
-    process_search_batch(d.filter("doc_id % 4 = 2"), 1, root)
-    compact_search_state(spark, root)
-    process_search_batch(d.filter("doc_id % 4 = 3"), 2, root)
+    seed_search_state(q[0], root)
+    process_search_batch(q[1], 0, root)
+    process_search_batch(q[2], 1, root)
+    SEARCH_STORE.compact(spark, root)
+    process_search_batch(q[3], 2, root)
     return bm25_topk_from_live_index(spark, root, list(_BM25_TERMS), k=_BM25_K)
 
 
 def q_stream_search_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r9: the scheduled-compaction poll loop driving the SEARCH store —
     the last store whose loop was pytest-only, and the one with the
-    documented torn-epoch window (streaming/search_ingest.py:17-26: the
-    three per-epoch writes — postings, doclen, stats — are not mutually
+    documented torn-epoch window (streaming/search_ingest.py: the three
+    per-epoch writes — postings, doclen, stats — are not mutually
     atomic), so the janitor firing BETWEEN drain cycles against those
     tri-part epochs is its most interesting window (r8 verdict ask #6).
 
@@ -416,56 +382,27 @@ def q_stream_search_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     quarter — every id of which the doclen anti-join must reject, or the
     duplicated doclen rows fan out the score join and the summed stat
     partials skew every BM25 score — as real availableNow drain cycles off
-    a file source, with compact_search_state as the threshold janitor
+    a file source, with search-store compaction as the threshold janitor
     (max_epochs=2: fires after the second and fourth drains, so epochs 2-3
     land in a compacted store whose stat partials were already folded into
     one base row). BM25 off the live store must hash-match the batch
     ORACLE_SEARCH_BM25 over all documents — the identical oracle."""
-    import tempfile
-
-    from realtime_spark.streaming.compaction import (
-        SEARCH_SUBSTORES,
-        compact_search_state,
-        run_ingest_cycles,
-    )
     from realtime_spark.streaming.search_ingest import (
+        SEARCH_STORE,
         bm25_topk_from_live_index,
         run_search_ingest_stream,
         seed_search_state,
     )
 
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    q = _search_quarters(spark, sf_dir)
     root = _fresh_root(sf_dir, "searchloop")
-    seed_search_state(d.filter("doc_id % 4 = 0"), root)
-    src = tempfile.mkdtemp(prefix="rs_searchloop_src_")
-    ckpt = f"{root}/_ckpt"
-    arrivals = iter([
-        d.filter("doc_id % 4 = 1"),
-        d.filter("doc_id % 4 = 2"),
-        d.filter("doc_id % 4 = 3"),
-        d.filter("doc_id % 4 = 1"),  # full re-delivery under original ids
-    ])
-
-    def start_stream():
-        batch = next(arrivals)
-        # parallel write (r10): see the ingest loop note above
-        batch.write.parquet(f"{src}/f{len(os.listdir(src))}")
-        stream = (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-        )
-        return run_search_ingest_stream(stream, root, ckpt)
-
-    try:
-        telemetry = run_ingest_cycles(
-            spark, root, start_stream, compact_search_state,
-            SEARCH_SUBSTORES, cycles=4, max_epochs=2,
-        )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    if [t["compacted"] for t in telemetry] != [False, True, False, True]:
-        raise AssertionError(f"compaction trigger misfired: {telemetry}")
+    seed_search_state(q[0], root)
+    _drain_loop(
+        spark, root, "searchloop", "doc_id bigint, text string",
+        [q[1], q[2], q[3], q[1]],  # the last: full re-delivery, original ids
+        run_search_ingest_stream, SEARCH_STORE,
+        want=[False, True, False, True],
+    )
     return bm25_topk_from_live_index(spark, root, list(_BM25_TERMS), k=_BM25_K)
 
 

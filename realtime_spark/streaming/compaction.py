@@ -1,17 +1,58 @@
-"""Epoch compaction for the streaming ingest stores.
+"""The store-lifecycle engine of the streaming ingest stores, and their
+epoch compaction.
 
 The three streaming ingest jobs (ingest.py, vector_ingest.py,
-search_ingest.py) append one ``ingest_epoch=e{N}`` partition directory per
+search_ingest.py) each declare their store once, as a ``StoreSpec``: the
+list of its epochal outputs, each with its one on-disk layout (partition
+and sort columns) and, where compaction is not a plain rewrite, its fold.
+The store modules keep only their own logic — the dedup/LSH, IVF and BM25
+epoch bodies and the live-store readers; this module runs the rest.
+
+The epoch protocol
+------------------
+
+Each store writes under one root, ``<root>/<output>/ingest_epoch=<tag>/``:
+the seed writes tag ``seed`` in every output (an empty partition where it
+has no rows), micro-batch N writes tag ``e{N}``. ``StoreSpec.epoch`` runs
+one write:
+
+    1. the rewind guard (``assert_epoch_admissible``) over every output;
+    2. shuffles scoped to the batch size;
+    3. reads of the stores WITHOUT the epoch's own partition
+       (``Epoch.read``);
+    4. epoch-owned overwrites in each output's layout (``Epoch.write``),
+       read back with an explicit schema where a later write folds from
+       them (``Epoch.write_back``); independent writes run concurrently
+       (``in_parallel``).
+
+Exactly-once without markers: every epoch writes its outputs by
+OVERWRITING its own ``ingest_epoch=e{N}`` directories. The file-source
+checkpoint replays a failed epoch with the same epoch id and the same
+input files, the pipeline is deterministic, so a replay rewrites
+byte-identical content instead of appending duplicates — the same
+stage-then-swap idempotency the version stores use, expressed through
+partition-directory overwrite. The writes of one epoch are not mutually
+atomic: a crash between them leaves a torn epoch (any subset of its
+directories) until the replay rewrites them all, and own-epoch exclusion
+keeps the replay from reading its own partial output. This is the
+``foreachBatch`` contract of the Structured Streaming paper: exactly-once
+delivery through deterministic replay into idempotent sinks.
+``run_store_stream`` is the one ``foreachBatch`` wiring;
+``drop_redelivered`` is the re-delivery guard of the two id-keyed stores.
+
+Compaction
+----------
+
+Each store appends one ``ingest_epoch=e{N}`` partition directory per
 micro-batch, forever. That is the correct exactly-once write protocol, but
 at thousands of epochs file-listing cost, per-epoch stat-fold cost, and
 small-file counts all grow linearly — the same run-forever hazard the
 reference solves for its message store with partition GC
 (/root/reference/lib/realtime/messages.ex:72-102 drops whole day
 partitions). This module is the ingest-store analog: fold every committed
-epoch into one compacted base partition, without ever corrupting a reader.
-
-Layout and protocol
--------------------
+epoch into one compacted base partition, without ever corrupting a reader
+(``StoreSpec.compact`` folds every output of a store, each through its own
+layout).
 
 Each store keeps its flat hive layout (``<store>/ingest_epoch=<tag>/``);
 compaction adds one small JSON *manifest* (``<store>/_compaction.json`` —
@@ -59,11 +100,21 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
+from dataclasses import dataclass
+from functools import partial
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from realtime_spark.session import (
+    plan_input_size_bytes,
+    scaled_shuffle_partitions,
+    scoped_shuffle_partitions,
+)
 
 _MANIFEST = "_compaction.json"
 
@@ -257,48 +308,199 @@ def compact_store(
 
 
 # ---------------------------------------------------------------------------
-# per-pipeline fold shapes (mirror each store's seed/epoch write layout)
+# the store-lifecycle engine: one spec per store, one engine for all three
 # ---------------------------------------------------------------------------
 
 
-def _fold_plain(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").parquet(path)
+def in_parallel(*work: Callable[[], object]) -> list:
+    """Run independent store writes concurrently; returns their results in
+    order and re-raises the first failure (r11, guide section 2.6): at
+    increment scale each write is a tiny multi-stage job that leaves the
+    cluster mostly idle, so the others back-fill its tail."""
+    with ThreadPoolExecutor(max_workers=len(work)) as pool:
+        futs = [pool.submit(w) for w in work]
+        return [f.result() for f in futs]
 
 
-def _fold_lsh(df: DataFrame, path: str) -> None:
-    df.repartition("band").sortWithinPartitions("key").write.mode(
-        "overwrite"
-    ).partitionBy("band").parquet(path)
+@dataclass(frozen=True)
+class Output:
+    """One epochal output of a store, ``<root>/<name>/ingest_epoch=<tag>/``,
+    and its ONE on-disk layout: the seed, every epoch and the compaction
+    fold all write through ``write``. ``partition`` sub-partitions each
+    epoch directory (the probes prune on it), ``sort`` orders the rows in
+    each file, and ``fold`` reshapes the visible rows before the compacted
+    rewrite — set only where the fold is not a plain rewrite."""
+
+    name: str
+    partition: str | None = None
+    sort: tuple[str, ...] = ()
+    fold: Callable[[DataFrame], DataFrame] | None = None
+
+    def write(self, df: DataFrame, path: str) -> None:
+        if self.partition is None:
+            df.write.mode("overwrite").parquet(path)
+            return
+        # cluster by the partition column before the partitioned write (guide
+        # section 6): without it every scan task opens a file in every
+        # partition directory — ~tasks x |values| tiny files per epoch, paid
+        # again by every later store read; one hash exchange buys one file
+        # per value
+        df = df.repartition(self.partition)
+        if self.sort:
+            df = df.sortWithinPartitions(*self.sort)
+        df.write.mode("overwrite").partitionBy(self.partition).parquet(path)
+
+    def compact(self, spark: SparkSession, root: str) -> dict:
+        fold = self.fold or (lambda df: df)
+        return compact_store(
+            spark, f"{root}/{self.name}", lambda df, path: self.write(fold(df), path)
+        )
 
 
-def _fold_ivf(df: DataFrame, path: str) -> None:
-    df.repartition("centroid_id").write.mode("overwrite").partitionBy(
-        "centroid_id"
-    ).parquet(path)
+@dataclass(frozen=True)
+class StoreSpec:
+    """One streaming ingest store: its epochal outputs, declared once. The
+    rewind guard, the seed and epoch writes, compaction and the scheduled
+    loop all run off this list."""
+
+    outputs: tuple[Output, ...]
+
+    @property
+    def names(self) -> list[str]:
+        return [o.name for o in self.outputs]
+
+    def __getitem__(self, name: str) -> Output:
+        return {o.name: o for o in self.outputs}[name]
+
+    @contextmanager
+    def epoch(
+        self, batch: DataFrame, epoch_id: int | None, root: str
+    ) -> Iterator[Epoch]:
+        """One write of the store under the epoch protocol (module
+        docstring): the seed (``epoch_id=None``, tag ``seed``) or micro-batch
+        ``epoch_id`` (tag ``e{N}``). ``batch`` sizes the shuffles. The
+        write must leave a partition for the tag in EVERY output — the seed
+        writes an empty one where it has no rows, so a fresh root reads and
+        compacts like any other."""
+        if epoch_id is not None:
+            # fresh-checkpoint rewind against a compacted store: fail loudly
+            # before writing a partition the manifest would silently hide
+            assert_epoch_admissible(epoch_id, *(f"{root}/{n}" for n in self.names))
+        spark = batch.sparkSession
+        ep = Epoch(self, spark, root, "seed" if epoch_id is None else f"e{epoch_id}")
+        # size the epoch's shuffles to the BATCH, not the cluster (r11, guide
+        # section 2.6): every exchange carries increment-sized data, and
+        # cpus-many 100-row tasks + shuffle files per job were the dominant
+        # fixed cost at bench SF (measured -26% per epoch at 4 vs 32
+        # partitions). Deterministic in batch content, so replays re-write
+        # identical file layouts; a cluster-scale batch (or the seed's
+        # corpus) crosses the clamp and keeps full parallelism.
+        with scoped_shuffle_partitions(
+            spark, scaled_shuffle_partitions(spark, plan_input_size_bytes(batch))
+        ):
+            yield ep
+        missing = [n for n in self.names if not os.path.isdir(ep.path(n))]
+        if missing:
+            raise RuntimeError(f"{root!r} epoch {ep.tag} wrote no {missing}")
+
+    def compact(self, spark: SparkSession, root: str) -> dict:
+        """Compact every output CONCURRENTLY (r11, guide section 2.6): each
+        fold is an independent stage-then-swap on its own directory, and at
+        increment scale each is a tiny job that leaves the cluster idle —
+        overlapping them back-fills the tails. Shuffles inside the folds are
+        sized to the visible store bytes (scale-neutral: a corpus-sized
+        store crosses the clamp and keeps every core). Returns the new
+        manifest of each output by name."""
+        n = scaled_shuffle_partitions(spark, _store_bytes(root, self.names))
+        with scoped_shuffle_partitions(spark, n):
+            manifests = in_parallel(
+                *(partial(o.compact, spark, root) for o in self.outputs)
+            )
+        return dict(zip(self.names, manifests))
 
 
-def _fold_postings(df: DataFrame, path: str) -> None:
-    df.repartition("bucket").sortWithinPartitions("bucket", "term").write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(path)
+@dataclass(frozen=True)
+class Epoch:
+    """The handle a store's seed or epoch body reads and writes through."""
+
+    spec: StoreSpec
+    spark: SparkSession
+    root: str
+    tag: str
+
+    def path(self, name: str) -> str:
+        return f"{self.root}/{name}/ingest_epoch={self.tag}"
+
+    def read(self, name: str) -> DataFrame:
+        """One store as this epoch must see it: every visible partition
+        EXCEPT the epoch's own. A crash between an epoch's writes leaves a
+        partial ``ingest_epoch=e{N}`` behind, and a replay that read it
+        would dedup the batch against its own half-written output (kept
+        would collapse toward empty). Later epochs cannot exist at replay
+        time, so own-epoch exclusion restores exactly the pre-crash read
+        set; the filter is on the partition column and prunes, never
+        scans."""
+        return read_store(self.spark, f"{self.root}/{name}").filter(
+            F.col("ingest_epoch") != self.tag
+        )
+
+    def write(self, name: str, df: DataFrame) -> None:
+        """Overwrite this epoch's partition of one output, in the output's
+        layout — a replay rewrites identical bytes."""
+        self.spec[name].write(df, self.path(name))
+
+    def write_back(self, name: str, df: DataFrame) -> DataFrame:
+        """``write``, then the just-written rows read back — byte-identical
+        input on replay for the writes that fold from them. The schema is
+        explicit: a fully-deduped batch writes an EMPTY directory, which
+        schema inference cannot read (the micro-batch would throw and
+        every checkpoint replay re-throw)."""
+        self.write(name, df)
+        return self.spark.read.schema(df.schema).parquet(self.path(name))
 
 
-def _fold_stats(df: DataFrame, path: str) -> None:
-    # per-epoch exact-bigint partials sum into ONE base partial — the
-    # query-time fold is unchanged and stays bit-identical
-    df.agg(
-        F.sum("n_docs").cast("bigint").alias("n_docs"),
-        F.sum("sum_dl").cast("bigint").alias("sum_dl"),
-    ).write.mode("overwrite").parquet(path)
+def drop_redelivered(
+    batch: DataFrame, seen_ids: DataFrame, id_col: str, content_col: str
+) -> DataFrame:
+    """The re-delivery guard of the id-keyed stores (vector, search). A
+    re-delivered id (seeding overlap, re-seeded source) must not be stored
+    twice: reject ids a *prior* epoch stored (``seen_ids`` comes through
+    ``Epoch.read``, so own-epoch rows are excluded and a crash-replay stays
+    idempotent). WITHIN-batch re-delivery (two rows sharing an id in one
+    micro-batch) passes that anti-join with every copy — the same hazard
+    class. Keep one per id, picked by smallest content hash: a pure
+    function of content, so a crash-replay rewrites byte-identical output
+    (which dropDuplicates' arbitrary pick would not guarantee)."""
+    fresh = batch.join(seen_ids, id_col, "left_anti")
+    w = Window.partitionBy(id_col).orderBy(F.xxhash64(content_col))
+    return (
+        fresh.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
 
 
-def _maybe_compact(spark, store, fold) -> dict | None:
-    """Skip a store that has no directory yet (e.g. `accepted` before the
-    first epoch lands on a freshly-seeded root) instead of crashing halfway
-    through the trio and leaving the stores at mixed generations."""
-    if not os.path.isdir(store):
-        return None
-    return compact_store(spark, store, fold)
+def run_store_stream(
+    stream: DataFrame,
+    checkpoint: str,
+    process: Callable[..., None],
+    root: str,
+    **opts,
+):
+    """Wire a store's micro-batch body onto a streaming source as one
+    availableNow drain; returns the started StreamingQuery. foreachBatch
+    calls ``process(batch_df, epoch_id, root, **opts)`` with the
+    checkpoint's epoch id — the unit a replay re-executes. The store must
+    be seeded: its outputs are the pipeline's inputs as well."""
+    return (
+        stream.writeStream.foreachBatch(
+            lambda batch_df, epoch_id: process(batch_df, epoch_id, root, **opts)
+        )
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def _store_bytes(root: str, subs: Sequence[str]) -> int:
@@ -312,75 +514,9 @@ def _store_bytes(root: str, subs: Sequence[str]) -> int:
                     pass
     return total
 
-
-def _compact_trio(spark, root: str, items) -> dict:
-    """Run one pipeline's substore compactions CONCURRENTLY (r11, guide
-    section 2.6): each fold is an independent stage-then-swap on its own
-    directory, and at increment scale each is a tiny job that leaves the
-    cluster idle — overlapping them back-fills the tails. Shuffles inside
-    the folds are sized to the visible store bytes (scale-neutral: a
-    corpus-sized store crosses the clamp and keeps every core)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from realtime_spark.session import (
-        scaled_shuffle_partitions,
-        scoped_shuffle_partitions,
-    )
-
-    n = scaled_shuffle_partitions(
-        spark, _store_bytes(root, [sub for _, sub, _ in items])
-    )
-    with scoped_shuffle_partitions(spark, n):
-        with ThreadPoolExecutor(max_workers=len(items)) as pool:
-            futs = [
-                (name, pool.submit(_maybe_compact, spark, f"{root}/{sub}", fold))
-                for name, sub, fold in items
-            ]
-            return {name: f.result() for name, f in futs}
-
-
-def compact_ingest_state(spark: SparkSession, root: str) -> dict:
-    """Compact the corpus-ingest trio of stores (streaming/ingest.py):
-    digests and accepted fold by plain union (rows are disjoint across
-    epochs by construction — each epoch anti-joined against all priors),
-    the LSH index refolds band-partitioned and key-sorted."""
-    return _compact_trio(spark, root, [
-        ("digests", "digests", _fold_plain),
-        ("lsh", "lsh", _fold_lsh),
-        ("accepted", "accepted", _fold_plain),
-    ])
-
-
-def compact_vector_state(spark: SparkSession, root: str) -> dict:
-    """Compact the vector-ingest stores (streaming/vector_ingest.py): the
-    IVF index refolds centroid-partitioned (probe pruning unchanged);
-    accepted ids fold plain. Centroids are not epochal — untouched."""
-    return _compact_trio(spark, root, [
-        ("ivf", "ivf", _fold_ivf),
-        ("accepted", "accepted", _fold_plain),
-    ])
-
-
-def compact_search_state(spark: SparkSession, root: str) -> dict:
-    """Compact the search-ingest stores (streaming/search_ingest.py):
-    postings refold bucket-partitioned and term-sorted, doc lengths fold
-    plain, and the per-epoch stat partials SUM into one base partial —
-    exact bigint arithmetic, so folded BM25 scores stay bit-identical."""
-    return _compact_trio(spark, root, [
-        ("postings", "postings", _fold_postings),
-        ("doclen", "doclen", _fold_plain),
-        ("stats", "stats", _fold_stats),
-    ])
-
-
 # ---------------------------------------------------------------------------
 # scheduled compaction: the run-forever policy
 # ---------------------------------------------------------------------------
-
-# substores each pipeline's compactor folds — the trigger scans the same set
-INGEST_SUBSTORES = ("digests", "lsh", "accepted")
-VECTOR_SUBSTORES = ("ivf", "accepted")
-SEARCH_SUBSTORES = ("postings", "doclen", "stats")
 
 
 def store_epoch_count(store: str) -> int:
@@ -432,16 +568,17 @@ def should_compact(
     return False
 
 
+_DRAIN_TIMEOUT_SEC = 600
+
+
 def run_ingest_cycles(
     spark: SparkSession,
     root: str,
     start_stream: Callable[[], object],
-    compact_fn: Callable[[SparkSession, str], dict],
-    substores: Sequence[str],
+    spec: StoreSpec,
     cycles: int,
     max_epochs: int = 32,
     max_files: int | None = None,
-    await_timeout_sec: int = 600,
 ) -> list[dict]:
     """The run-forever ingest loop with compaction as a scheduled janitor,
     mirroring how the reference schedules its message-partition GC as a
@@ -450,27 +587,29 @@ def run_ingest_cycles(
     availableNow drain of the ingest stream (``start_stream`` re-opens the
     source and returns the started StreamingQuery — an availableNow query
     terminates, and the checkpoint carries the offsets), then, with the
-    stream provably stopped (the compaction contract), fires
-    ``compact_fn`` when the threshold trips. Returns per-cycle telemetry:
-    [{cycle, compacted, epochs_before, files_before, files_after}]."""
+    stream provably stopped (the compaction contract), compacts every
+    output of ``spec`` when the threshold trips. Returns per-cycle
+    telemetry: [{cycle, compacted, epochs_before, files_before,
+    files_after}]."""
+    substores = spec.names
     out: list[dict] = []
     for cycle in range(cycles):
         q = start_stream()
         # the compaction contract requires the stream STOPPED: a timed-out
         # drain must abort the cycle, not compact under a live writer
         # (a concurrently-written epoch would be half-captured by the fold)
-        if not q.awaitTermination(await_timeout_sec):
+        if not q.awaitTermination(_DRAIN_TIMEOUT_SEC):
             q.stop()
             raise TimeoutError(
                 f"ingest cycle {cycle} did not drain within "
-                f"{await_timeout_sec}s — compaction skipped (stream-stopped "
+                f"{_DRAIN_TIMEOUT_SEC}s — compaction skipped (stream-stopped "
                 "contract)"
             )
         epochs = max((store_epoch_count(os.path.join(root, s)) for s in substores), default=0)
         files = sum(store_file_count(os.path.join(root, s)) for s in substores)
         fire = should_compact(root, substores, max_epochs, max_files)
         if fire:
-            compact_fn(spark, root)
+            spec.compact(spark, root)
         out.append(
             {
                 "cycle": cycle,

@@ -16,14 +16,13 @@ State layout (all parquet, under one root):
     <root>/digests/ingest_epoch=e{N}/   digests accepted in micro-batch N
     <root>/lsh/ingest_epoch=seed/band=*/  banded MinHash index of the corpus
     <root>/lsh/ingest_epoch=e{N}/band=*/  index rows of batch N's survivors
+    <root>/accepted/ingest_epoch=seed/  empty (the corpus schema, zero rows)
     <root>/accepted/ingest_epoch=e{N}/  the surviving documents themselves
 
-Exactly-once without markers: every epoch writes its outputs by OVERWRITING
-its own `ingest_epoch=e{N}` directories. The file-source checkpoint replays
-a failed epoch with the same epoch id and the same input files, the
-pipeline is deterministic, so a replay rewrites byte-identical content
-instead of appending duplicates — the same stage-then-swap idempotency the
-version stores use, expressed through partition-directory overwrite.
+Exactly-once follows the store-lifecycle engine's epoch protocol
+(streaming/compaction.py): each epoch overwrites its own
+``ingest_epoch=e{N}`` directories and excludes them from its reads, so a
+crash-replay rewrites identical bytes.
 
 Ordering semantics are arrival-order (exactly the daily-ingest contract):
 earlier batches win ties; within a batch the smallest id per digest wins
@@ -57,217 +56,120 @@ from realtime_spark.operators.dedup import (
     minhash_bands,
     _digest,
 )
-from realtime_spark.session import (
-    plan_input_size_bytes,
-    scaled_shuffle_partitions,
-    scoped_shuffle_partitions,
+from realtime_spark.streaming.compaction import (
+    Output,
+    StoreSpec,
+    in_parallel,
+    read_store,
+    run_store_stream,
 )
-from realtime_spark.streaming.compaction import assert_epoch_admissible, read_store
+
+ID, TEXT = "doc_id", "text"
+# the MinHash/LSH shape of the band index, fixed for the store's life: a
+# store seeded with one shape and probed with another would silently miss
+# every near-duplicate
+NUM_HASHES, BANDS, K = 12, 4, 3
+
+INGEST_STORE = StoreSpec((
+    Output("digests"),
+    Output("lsh", partition="band", sort=("key",)),
+    Output("accepted"),
+))
 
 
-def seed_ingest_state(
-    corpus: DataFrame,
-    root: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 12,
-    bands: int = 4,
-    k: int = 3,
-) -> None:
+def _bands(df: DataFrame) -> DataFrame:
+    return minhash_bands(df, ID, TEXT, NUM_HASHES, BANDS, K)
+
+
+def _digests(df: DataFrame) -> DataFrame:
+    return df.select(_digest(F.col(TEXT)).alias("digest")).distinct()
+
+
+def seed_ingest_state(corpus: DataFrame, root: str) -> None:
     """Initialize the stores from the standing corpus (run once). The two
     seed writes are independent — overlapped like the per-epoch pair; the
-    shuffles are sized to the corpus (full parallelism past the clamp)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    spark = corpus.sparkSession
-
-    def _write_digests() -> None:
-        corpus.select(
-            _digest(F.col(text_col)).alias("digest")
-        ).distinct().write.mode("overwrite").parquet(
-            f"{root}/digests/ingest_epoch=seed"
+    shuffles are sized to the corpus (full parallelism past the clamp).
+    ``accepted`` starts as an empty partition carrying the corpus schema,
+    so it reads as zero rows until the first epoch lands."""
+    with INGEST_STORE.epoch(corpus, None, root) as ep:
+        ep.write("accepted", corpus.limit(0))
+        in_parallel(
+            lambda: ep.write("digests", _digests(corpus)),
+            lambda: ep.write("lsh", _bands(corpus)),
         )
-
-    def _write_lsh() -> None:
-        banded = minhash_bands(corpus, id_col, text_col, num_hashes, bands, k)
-        banded.repartition("band").sortWithinPartitions("key").write.mode(
-            "overwrite"
-        ).partitionBy("band").parquet(f"{root}/lsh/ingest_epoch=seed")
-
-    with scoped_shuffle_partitions(
-        spark, scaled_shuffle_partitions(spark, plan_input_size_bytes(corpus))
-    ):
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            for f in [pool.submit(_write_digests), pool.submit(_write_lsh)]:
-                f.result()
 
 
 def process_ingest_batch(
     batch_df: DataFrame,
     epoch_id: int,
     root: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     gate: Callable[[DataFrame], DataFrame] | None = None,
-    num_hashes: int = 12,
-    bands: int = 4,
-    k: int = 3,
 ) -> None:
     """One micro-batch of the ingest pipeline (foreachBatch body; also the
     unit a replay re-executes — everything below is deterministic in
     (batch content, epoch_id) and writes only epoch-owned directories)."""
-    spark = batch_df.sparkSession
-    # fresh-checkpoint rewind against a compacted store: fail loudly before
-    # writing a partition the manifest would silently hide
-    assert_epoch_admissible(
-        epoch_id, f"{root}/digests", f"{root}/lsh", f"{root}/accepted"
-    )
-    # size the epoch's shuffles to the BATCH, not the cluster (r11, guide
-    # section 2.6): every exchange below carries increment-sized data, and
-    # cpus-many 100-row tasks + shuffle files per job were the dominant
-    # fixed cost at bench SF (measured -26% per epoch at 4 vs 32
-    # partitions). Deterministic in batch content, so replays re-write
-    # identical file layouts; a cluster-scale batch crosses the clamp and
-    # keeps full parallelism.
-    with scoped_shuffle_partitions(
-        spark, scaled_shuffle_partitions(spark, plan_input_size_bytes(batch_df))
-    ):
-        _process_ingest_batch_inner(
-            batch_df, epoch_id, root, id_col, text_col, gate,
-            num_hashes, bands, k,
+    with INGEST_STORE.epoch(batch_df, epoch_id, root) as ep:
+        if gate is not None:
+            # admission log boundary (and the measured plan-explosion cut:
+            # pushdown would otherwise re-inline gate expressions into every
+            # downstream predicate — see q_daily_ingest_keep). Gate-free
+            # pipelines skip it (r10): with no staged gate expressions there
+            # is nothing for pushdown to explode, and the materialization
+            # was one full extra job per epoch
+            batch_df = gate(batch_df).localCheckpoint()
+        fresh = dedup_incremental(batch_df, ep.read("digests"), ID, TEXT)
+        fresh = fresh.localCheckpoint()
+
+        # band the batch ONCE (r10, guide section 1.2): the banded rows feed
+        # the index probe below AND the survivors' index write — re-deriving
+        # them from text for the write doubled the heaviest per-epoch
+        # computation (shingle md5 + 12 min-aggregations) at every scale.
+        # The checkpointed rows are 4 per doc of (doc, band, key) —
+        # increment-sized, never corpus.
+        banded_fresh = _bands(fresh).localCheckpoint()
+        near = (
+            lsh_candidates_against_index(
+                fresh, ep.read("lsh"), ID, TEXT, NUM_HASHES, BANDS, K,
+                banded=banded_fresh,
+            )
+            .select(F.col("new_doc").alias(ID))
+            .distinct()
         )
+        kept = fresh.join(F.broadcast(near), ID, "left_anti")
 
+        # The accepted write IS kept's one materialization (r10): the digest
+        # and index writes below fold from the just-written parquet —
+        # byte-identical input on replay — instead of a second
+        # localCheckpoint of the same rows (the search store's stats write
+        # uses the same read-back shape).
+        kept_back = ep.write_back("accepted", kept)
 
-def _process_ingest_batch_inner(
-    batch_df: DataFrame,
-    epoch_id: int,
-    root: str,
-    id_col: str,
-    text_col: str,
-    gate: Callable[[DataFrame], DataFrame] | None,
-    num_hashes: int,
-    bands: int,
-    k: int,
-) -> None:
-    spark = batch_df.sparkSession
-    if gate is not None:
-        batch_df = gate(batch_df)
-        # admission log boundary (and the measured plan-explosion cut:
-        # pushdown would otherwise re-inline gate expressions into every
-        # downstream predicate — see q_daily_ingest_keep). Gate-free
-        # pipelines skip it (r10): with no staged gate expressions there is
-        # nothing for pushdown to explode, and the materialization was one
-        # full extra job per epoch
-        batch_df = batch_df.localCheckpoint()
-
-    # exclude this epoch's OWN partitions from the store reads: a crash
-    # between the three writes below leaves a partial `ingest_epoch=e{N}`
-    # behind, and a replay that read it would dedup the batch against its
-    # own half-written output (kept would collapse toward empty). Later
-    # epochs cannot exist at replay time, so own-epoch exclusion restores
-    # exactly the pre-crash read set; the filter is on the partition column
-    # and prunes, never scans.
-    own = f"e{epoch_id}"
-    digests = read_store(spark, f"{root}/digests").filter(
-        F.col("ingest_epoch") != own
-    )
-    fresh = dedup_incremental(batch_df, digests, id_col, text_col)
-    fresh = fresh.localCheckpoint()
-
-    # band the batch ONCE (r10, guide section 1.2): the banded rows feed the
-    # index probe below AND the survivors' index write — re-deriving them
-    # from text for the write doubled the heaviest per-epoch computation
-    # (shingle md5 + 12 min-aggregations) at every scale. The checkpointed
-    # rows are 4 per doc of (doc, band, key) — increment-sized, never corpus.
-    banded_fresh = minhash_bands(
-        fresh, id_col, text_col, num_hashes, bands, k
-    ).localCheckpoint()
-    index = read_store(spark, f"{root}/lsh").filter(F.col("ingest_epoch") != own)
-    near = (
-        lsh_candidates_against_index(
-            fresh, index, id_col, text_col, num_hashes, bands, k,
-            banded=banded_fresh,
+        # the digest and index writes are independent of each other:
+        # overlap them (r11, see in_parallel). Crash states are unchanged: any subset of the three
+        # epoch dirs may exist mid-epoch, and the replay overwrites them all.
+        in_parallel(
+            lambda: ep.write("digests", _digests(kept_back)),
+            lambda: ep.write(
+                "lsh",
+                banded_fresh.join(
+                    F.broadcast(kept_back.select(F.col(ID).alias("doc"))),
+                    "doc",
+                    "left_semi",
+                ),
+            ),
         )
-        .select(F.col("new_doc").alias(id_col))
-        .distinct()
-    )
-    kept = fresh.join(F.broadcast(near), id_col, "left_anti")
-
-    # epoch-owned overwrites: replaying this epoch rewrites identical bytes.
-    # The accepted write IS kept's one materialization (r10): the digest and
-    # index writes below fold from the just-written parquet — byte-identical
-    # input on replay — instead of a second localCheckpoint of the same rows
-    # (the search store's stats write uses the same read-back shape).
-    kept.write.mode("overwrite").parquet(
-        f"{root}/accepted/ingest_epoch=e{epoch_id}"
-    )
-    # explicit schema: a fully-deduped batch writes an EMPTY directory,
-    # which schema inference cannot read
-    kept_back = spark.read.schema(kept.schema).parquet(
-        f"{root}/accepted/ingest_epoch=e{epoch_id}"
-    )
-
-    # the digest and index writes both fold from the just-written accepted
-    # files and are independent of each other: overlap them (r11, guide
-    # section 2.6 — each is a tiny multi-stage job that leaves the cluster
-    # mostly idle, so the second back-fills the first's tail). Crash
-    # states are unchanged: any subset of the three epoch dirs may exist
-    # mid-epoch, and the replay overwrites them all.
-    def _write_digests() -> None:
-        kept_back.select(
-            _digest(F.col(text_col)).alias("digest")
-        ).distinct().write.mode("overwrite").parquet(
-            f"{root}/digests/ingest_epoch=e{epoch_id}"
-        )
-
-    def _write_lsh() -> None:
-        banded = banded_fresh.join(
-            F.broadcast(kept_back.select(F.col(id_col).alias("doc"))),
-            "doc",
-            "left_semi",
-        )
-        banded.repartition("band").sortWithinPartitions("key").write.mode(
-            "overwrite"
-        ).partitionBy("band").parquet(f"{root}/lsh/ingest_epoch=e{epoch_id}")
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for f in [pool.submit(_write_digests), pool.submit(_write_lsh)]:
-            f.result()  # re-raise either write's failure
 
 
 def run_ingest_stream(
     stream: DataFrame,
     root: str,
     checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     gate: Callable[[DataFrame], DataFrame] | None = None,
-    num_hashes: int = 12,
-    bands: int = 4,
-    k: int = 3,
-    available_now: bool = True,
 ):
     """Wire the ingest pipeline onto a streaming document source. Returns
     the started StreamingQuery. `seed_ingest_state` must have run (the
     stores are the pipeline's inputs as well as its outputs)."""
-
-    def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        process_ingest_batch(
-            batch_df, epoch_id, root,
-            id_col=id_col, text_col=text_col, gate=gate,
-            num_hashes=num_hashes, bands=bands, k=k,
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(on_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_store_stream(stream, checkpoint, process_ingest_batch, root, gate=gate)
 
 
 def accepted_docs(spark: SparkSession, root: str) -> DataFrame:

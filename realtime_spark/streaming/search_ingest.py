@@ -12,7 +12,8 @@ the growing store are BIT-IDENTICAL to a batch rebuild over the same
 documents (asserted by the tests; the batch pair itself is DuckDB-oracled
 via search_bm25 / search_bm25_index).
 
-Exactly-once follows the ingest.py protocol — each epoch overwrites its own
+Exactly-once follows the store-lifecycle engine's epoch protocol
+(streaming/compaction.py) — each epoch overwrites its own
 ``ingest_epoch=e{N}`` directories and a replay rewrites identical bytes.
 The three per-epoch writes (postings, doclen, stats) are not mutually
 atomic: a crash between them leaves a TORN epoch (e.g. doclen written but
@@ -40,7 +41,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from realtime_spark.streaming.compaction import assert_epoch_admissible, read_store
 from realtime_spark.operators.search import (
     _bm25_rank,
     _term_bucket_col,
@@ -48,34 +48,50 @@ from realtime_spark.operators.search import (
     doc_lengths,
     postings,
 )
+from realtime_spark.streaming.compaction import (
+    Epoch,
+    Output,
+    StoreSpec,
+    drop_redelivered,
+    in_parallel,
+    read_store,
+    run_store_stream,
+)
+
+ID, TEXT = "doc_id", "text"
 
 
-def _write_epoch(
-    df: DataFrame, root: str, tag: str, id_col: str, text_col: str
-) -> None:
-    spark = df.sparkSession
+def _sum_stats(df: DataFrame) -> DataFrame:
+    # per-epoch exact-bigint partials sum into ONE base partial — the
+    # query-time fold is unchanged and stays bit-identical
+    return df.agg(
+        F.sum("n_docs").cast("bigint").alias("n_docs"),
+        F.sum("sum_dl").cast("bigint").alias("sum_dl"),
+    )
 
+
+SEARCH_STORE = StoreSpec((
+    Output("postings", partition="bucket", sort=("bucket", "term")),
+    Output("doclen"),
+    Output("stats", fold=_sum_stats),
+))
+
+
+def _write_epoch(ep: Epoch, df: DataFrame) -> None:
     # the postings and doclen writes each tokenize the batch and are
-    # independent of each other: overlap them (r11, guide section 2.6 —
-    # two small multi-stage jobs back-fill each other's idle tails); the
+    # independent of each other: overlap them (r11, see in_parallel); the
     # stats partial chains after doclen inside its thread. Crash states
     # are unchanged — the torn-epoch window (module docstring) already
     # admits any subset of the three dirs existing mid-epoch.
     def _write_postings() -> None:
-        post = postings(df, id_col, text_col).withColumn(
-            "bucket", _term_bucket_col(F.col("term"))
-        )
-        post.repartition("bucket").sortWithinPartitions(
-            "bucket", "term"
-        ).write.mode("overwrite").partitionBy("bucket").parquet(
-            f"{root}/postings/ingest_epoch={tag}"
+        ep.write(
+            "postings",
+            postings(df, ID, TEXT).withColumn(
+                "bucket", _term_bucket_col(F.col("term"))
+            ),
         )
 
     def _write_doclen_and_stats() -> None:
-        lengths = doc_lengths(df, id_col, text_col)
-        lengths.write.mode("overwrite").parquet(
-            f"{root}/doclen/ingest_epoch={tag}"
-        )
         # exact-integer stat partials: the query-time fold sums bigints, so
         # the recombined avgdl is bit-identical to a batch avg over the
         # union. Folded from the epoch's OWN just-written doclen files
@@ -83,112 +99,45 @@ def _write_epoch(
         # batch — a third scan of the text per epoch for a 1-row aggregate;
         # reading back the (doc, dl) parquet it just wrote costs a
         # doc-count-sized scan instead and is byte-identical input, so
-        # replays stay deterministic. Explicit schema (r10 ADVICE): a fully
-        # re-delivered batch leaves `df` empty after the anti-join, and the
-        # empty doclen dir it writes cannot be read by schema inference —
-        # the micro-batch would throw and every checkpoint replay re-throw.
-        spark.read.schema(lengths.schema).parquet(
-            f"{root}/doclen/ingest_epoch={tag}"
-        ).agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("dl").cast("bigint").alias("sum_dl"),
-        ).write.mode("overwrite").parquet(f"{root}/stats/ingest_epoch={tag}")
+        # replays stay deterministic. The read-back schema is explicit (r10
+        # ADVICE): a fully re-delivered batch leaves `df` empty after the
+        # guard.
+        lengths = ep.write_back("doclen", doc_lengths(df, ID, TEXT))
+        ep.write(
+            "stats",
+            lengths.agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum("dl").cast("bigint").alias("sum_dl"),
+            ),
+        )
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    from realtime_spark.session import (
-        plan_input_size_bytes,
-        scaled_shuffle_partitions,
-        scoped_shuffle_partitions,
-    )
-
-    # size the epoch's shuffles to the batch, not the cluster (r11, guide
-    # section 2.6) — see streaming/ingest.py for the measured rationale
-    with scoped_shuffle_partitions(
-        spark, scaled_shuffle_partitions(spark, plan_input_size_bytes(df))
-    ):
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            for f in [
-                pool.submit(_write_postings),
-                pool.submit(_write_doclen_and_stats),
-            ]:
-                f.result()  # re-raise either thread's failure
+    in_parallel(_write_postings, _write_doclen_and_stats)
 
 
-def seed_search_state(
-    corpus: DataFrame, root: str, id_col: str = "doc_id", text_col: str = "text"
-) -> None:
+def seed_search_state(corpus: DataFrame, root: str) -> None:
     """Initialize the index from the standing corpus (run once)."""
-    _write_epoch(corpus, root, "seed", id_col, text_col)
+    with SEARCH_STORE.epoch(corpus, None, root) as ep:
+        _write_epoch(ep, corpus)
 
 
-def process_search_batch(
-    batch_df: DataFrame,
-    epoch_id: int,
-    root: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
+def process_search_batch(batch_df: DataFrame, epoch_id: int, root: str) -> None:
     """One micro-batch: tokenize, write epoch-owned postings/doclen/stats.
 
     A re-delivered doc id (seeding overlap, re-seeded source) must not be
     indexed twice — duplicate doclen rows would FAN OUT the score join and
     the summed stat partials would silently skew every document's BM25
-    (the r6 review's twin of the vector-ingest re-delivery finding).
-    Reject ids already indexed in a prior epoch up front; own-epoch rows
-    are excluded so a crash-replay stays byte-identical."""
-    spark = batch_df.sparkSession
-    # fresh-checkpoint rewind against a compacted store: fail loudly before
-    # writing a partition the manifest would silently hide
-    assert_epoch_admissible(
-        epoch_id, f"{root}/postings", f"{root}/doclen", f"{root}/stats"
-    )
-    own = f"e{epoch_id}"
-    seen = (
-        read_store(spark, f"{root}/doclen")
-        .filter(F.col("ingest_epoch") != own)
-        .select(F.col("doc").alias(id_col))
-    )
-    fresh = batch_df.join(seen, id_col, "left_anti")
-    # WITHIN-batch re-delivery: duplicate ids inside one micro-batch pass
-    # the prior-epoch anti-join with every copy — doubled doclen rows fan
-    # out the score join and the summed stat partials skew every BM25
-    # score (the same class as the cross-epoch guard above). Keep one per
-    # id by smallest content hash — a pure function of content, so a
-    # crash-replay rewrites byte-identical output.
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(id_col).orderBy(F.xxhash64(text_col))
-    fresh = (
-        fresh.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    _write_epoch(fresh, root, own, id_col, text_col)
+    (the r6 review's twin of the vector-ingest re-delivery finding; within
+    one batch as well as across epochs). ``drop_redelivered`` rejects ids
+    a prior epoch indexed and keeps one row per id of the batch."""
+    with SEARCH_STORE.epoch(batch_df, epoch_id, root) as ep:
+        seen = ep.read("doclen").select(F.col("doc").alias(ID))
+        _write_epoch(ep, drop_redelivered(batch_df, seen, ID, TEXT))
 
 
-def run_search_ingest_stream(
-    stream: DataFrame,
-    root: str,
-    checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    available_now: bool = True,
-):
+def run_search_ingest_stream(stream: DataFrame, root: str, checkpoint: str):
     """Wire the index-maintenance pipeline onto a streaming document source.
     Returns the started StreamingQuery; `seed_search_state` must have run."""
-
-    def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        process_search_batch(batch_df, epoch_id, root, id_col, text_col)
-
-    writer = (
-        stream.writeStream.foreachBatch(on_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_store_stream(stream, checkpoint, process_search_batch, root)
 
 
 def bm25_topk_from_live_index(

@@ -14,12 +14,14 @@ State layout (all parquet, under one root):
     <root>/centroids/                       the (static) centroid set
     <root>/ivf/ingest_epoch=seed/centroid_id=*/   the standing corpus index
     <root>/ivf/ingest_epoch=e{N}/centroid_id=*/   batch N's survivors
+    <root>/accepted/ingest_epoch=seed/            empty (the id schema)
     <root>/accepted/ingest_epoch=e{N}/            survivor ids per epoch
 
-Exactly-once follows the ingest.py protocol: each epoch overwrites its own
-``ingest_epoch=e{N}`` directories and excludes them from its reads, so a
-crash-replay rewrites identical bytes instead of self-deduping or
-duplicating (see streaming/ingest.py for the full argument).
+Exactly-once follows the store-lifecycle engine's epoch protocol: each
+epoch overwrites its own ``ingest_epoch=e{N}`` directories and excludes
+them from its reads, so a crash-replay rewrites identical bytes instead of
+self-deduping or duplicating (see streaming/compaction.py for the full
+argument).
 
 Search serves straight off the store: ``spark.read.parquet(<root>/ivf)``
 is a valid index frame for ``ivf_topk_from_index`` — results are identical
@@ -48,179 +50,110 @@ from realtime_spark.operators.similarity import (
     ivf_assign,
     kmeans_refine,
 )
-from realtime_spark.session import (
-    plan_input_size_bytes,
-    scaled_shuffle_partitions,
-    scoped_shuffle_partitions,
+from realtime_spark.streaming.compaction import (
+    Output,
+    StoreSpec,
+    drop_redelivered,
+    read_manifest,
+    read_store,
+    run_store_stream,
 )
-from realtime_spark.streaming.compaction import assert_epoch_admissible, read_store
+
+ID, VEC = "vec_id", "embedding"
+
+# `centroids` is not epochal: the seed writes it once, a rebuild publishes
+# a new version through the ivf manifest
+VECTOR_STORE = StoreSpec((
+    Output("ivf", partition="centroid_id"),
+    Output("accepted"),
+))
 
 
-def seed_vector_state(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    root: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Initialize the stores from the standing corpus (run once)."""
+def seed_vector_state(corpus: DataFrame, centroids: DataFrame, root: str) -> None:
+    """Initialize the stores from the standing corpus (run once).
+    ``accepted`` starts as an empty partition carrying the id schema, so it
+    reads as zero rows until the first epoch lands."""
     centroids.select(
-        F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cent_vec")
+        F.col(ID).alias("centroid_id"), F.col(VEC).alias("cent_vec")
     ).write.mode("overwrite").parquet(f"{root}/centroids")
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col)
-    # cluster by the partition column before the partitioned write (guide
-    # section 6): without it every scan task opens a file in every centroid
-    # directory — ~tasks x |centroids| tiny files per epoch, paid again by
-    # every later store read; one hash exchange of (id, vec) rows buys one
-    # file per centroid
-    assigned.repartition("centroid_id").write.mode("overwrite").partitionBy(
-        "centroid_id"
-    ).parquet(f"{root}/ivf/ingest_epoch=seed")
+    with VECTOR_STORE.epoch(corpus, None, root) as ep:
+        ep.write("ivf", ivf_assign(corpus, centroids, ID, VEC))
+        ep.write("accepted", corpus.select(ID).limit(0))
+
+
+def _as_id_vec(cents: DataFrame) -> DataFrame:
+    """A (centroid_id, cent_vec) set in the store's (id, vector) columns,
+    the shape ivf_assign and kmeans_refine take."""
+    return cents.select(F.col("centroid_id").alias(ID), F.col("cent_vec").alias(VEC))
 
 
 def process_vector_batch(
     batch_df: DataFrame,
     epoch_id: int,
     root: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dedup_threshold: float | None = None,
 ) -> None:
     """One micro-batch: assign, (optionally) bucket-confined semantic dedup
     against everything already indexed, append survivors. Deterministic in
     (batch content, epoch_id); writes only epoch-owned directories."""
-    spark = batch_df.sparkSession
-    # fresh-checkpoint rewind against a compacted store: fail loudly before
-    # writing a partition the manifest would silently hide
-    assert_epoch_admissible(epoch_id, f"{root}/ivf", f"{root}/accepted")
-    # size the epoch's shuffles (the within-batch dedup window, the
-    # centroid-clustering repartition) to the BATCH, not the cluster (r11,
-    # guide section 2.6) — see streaming/ingest.py for the measured
-    # rationale; a cluster-scale batch crosses the clamp unchanged
-    with scoped_shuffle_partitions(
-        spark, scaled_shuffle_partitions(spark, plan_input_size_bytes(batch_df))
-    ):
-        _process_vector_batch_inner(
-            batch_df, epoch_id, root, id_col, vec_col, dedup_threshold
-        )
+    with VECTOR_STORE.epoch(batch_df, epoch_id, root) as ep:
+        # the PUBLISHED centroid set — the seed layout, or the version a
+        # drift-triggered rebuild committed (named by the ivf manifest)
+        cents = _as_id_vec(stored_centroids(ep.spark, root))
+        # A re-delivered id would otherwise be appended twice: its
+        # cosine-1.0 self-match is discarded by an id-inequality guard and
+        # the row silently duplicated in the ivf/accepted stores. After the
+        # guard the batch and the index are disjoint on id. Column-pruned id
+        # scan; no broadcast hint — AQE broadcasts whichever side is small
+        # (the batch, for increments against a year of index)
+        fresh = drop_redelivered(batch_df, ep.read("ivf").select(ID), ID, VEC)
+        assigned = ivf_assign(fresh, cents, ID, VEC)
 
-
-def _process_vector_batch_inner(
-    batch_df: DataFrame,
-    epoch_id: int,
-    root: str,
-    id_col: str,
-    vec_col: str,
-    dedup_threshold: float | None,
-) -> None:
-    spark = batch_df.sparkSession
-    own = f"e{epoch_id}"
-    # the PUBLISHED centroid set — the seed layout, or the version a
-    # drift-triggered rebuild committed (named by the ivf manifest)
-    cents = stored_centroids(spark, root).select(
-        F.col("centroid_id").alias(id_col), F.col("cent_vec").alias(vec_col)
-    )
-    # A re-delivered id (seeding overlap, re-seeded source) must not be
-    # appended twice: its cosine-1.0 self-match would otherwise be discarded
-    # by an id-inequality guard and the row silently duplicated in the
-    # ivf/accepted stores. Reject ids already accepted in a *prior* epoch up
-    # front (own-epoch rows excluded so a crash-replay stays idempotent);
-    # after this anti-join the batch and the index are disjoint on id.
-    seen_ids = (
-        read_store(spark, f"{root}/ivf")
-        .filter(F.col("ingest_epoch") != own)
-        .select(id_col)
-    )
-    # column-pruned id scan; no broadcast hint — AQE broadcasts whichever
-    # side is small (the batch, for increments against a year of index)
-    fresh = batch_df.join(seen_ids, id_col, "left_anti")
-    # WITHIN-batch re-delivery (two rows sharing an id in one micro-batch)
-    # passes the prior-epoch anti-join with both copies and would
-    # double-index — same hazard class as the cross-epoch guard above.
-    # Keep one per id, picked by smallest content hash: a pure function of
-    # content, so a crash-replay rewrites byte-identical output (which
-    # dropDuplicates' arbitrary pick would not guarantee).
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(id_col).orderBy(F.xxhash64(vec_col))
-    fresh = (
-        fresh.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    assigned = ivf_assign(fresh, cents, id_col, vec_col)
-
-    if dedup_threshold is not None:
-        # two consumers below (the broadcast probe and the keep anti-join):
-        # materialize once; the no-dedup path has a single consumer — the
-        # ivf epoch write — so it needs no materialization at all
-        assigned = assigned.localCheckpoint()
-        index = read_store(spark, f"{root}/ivf").filter(
-            F.col("ingest_epoch") != own
-        )
-        member = index.select(
-            "centroid_id",
-            F.col(id_col).alias("_m_id"),
-            F.col(vec_col).alias("_m_vec"),
-        )
-        # batch side broadcasts; only buckets the batch touches are compared
-        dup_ids = (
-            F.broadcast(assigned)
-            .join(member, "centroid_id")
-            .filter(
-                F.round(cosine_expr(F.col(vec_col), F.col("_m_vec")), 6)
-                >= dedup_threshold
+        if dedup_threshold is not None:
+            # two consumers below (the broadcast probe and the keep
+            # anti-join): materialize once; the no-dedup path has a single
+            # consumer — the ivf epoch write — so it needs no
+            # materialization at all
+            assigned = assigned.localCheckpoint()
+            member = ep.read("ivf").select(
+                "centroid_id",
+                F.col(ID).alias("_m_id"),
+                F.col(VEC).alias("_m_vec"),
             )
-            .select(id_col)
-            .distinct()
-        )
-        kept = assigned.join(F.broadcast(dup_ids), id_col, "left_anti")
-    else:
-        kept = assigned
+            # batch side broadcasts; only buckets the batch touches are compared
+            dup_ids = (
+                F.broadcast(assigned)
+                .join(member, "centroid_id")
+                .filter(
+                    F.round(cosine_expr(F.col(VEC), F.col("_m_vec")), 6)
+                    >= dedup_threshold
+                )
+                .select(ID)
+                .distinct()
+            )
+            kept = assigned.join(F.broadcast(dup_ids), ID, "left_anti")
+        else:
+            kept = assigned
 
-    # same small-files guard as the seed write: cluster by centroid first.
-    # The ivf write IS kept's one materialization (r10): the accepted-id
-    # write folds from the just-written epoch directory — byte-identical
-    # input on replay — instead of a localCheckpoint that materialized the
-    # same rows a second time (one full extra job per epoch).
-    kept.repartition("centroid_id").write.mode("overwrite").partitionBy(
-        "centroid_id"
-    ).parquet(f"{root}/ivf/ingest_epoch=e{epoch_id}")
-    # explicit schema: a fully-rejected batch (e.g. a re-delivery epoch)
-    # writes an EMPTY directory, which schema inference cannot read
-    spark.read.schema(kept.schema).parquet(
-        f"{root}/ivf/ingest_epoch=e{epoch_id}"
-    ).select(id_col).write.mode("overwrite").parquet(
-        f"{root}/accepted/ingest_epoch=e{epoch_id}"
-    )
+        # The ivf write IS kept's one materialization (r10): the accepted-id
+        # write folds from the just-written epoch directory — byte-identical
+        # input on replay — instead of a localCheckpoint that materialized
+        # the same rows a second time (one full extra job per epoch).
+        ep.write("accepted", ep.write_back("ivf", kept).select(ID))
 
 
 def run_vector_ingest_stream(
     stream: DataFrame,
     root: str,
     checkpoint: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dedup_threshold: float | None = None,
-    available_now: bool = True,
 ):
     """Wire the vector-ingest pipeline onto a streaming embedding source.
     Returns the started StreamingQuery; `seed_vector_state` must have run."""
-
-    def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        process_vector_batch(
-            batch_df, epoch_id, root,
-            id_col=id_col, vec_col=vec_col, dedup_threshold=dedup_threshold,
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(on_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
+    return run_store_stream(
+        stream, checkpoint, process_vector_batch, root,
+        dedup_threshold=dedup_threshold,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def searchable_index(spark: SparkSession, root: str) -> DataFrame:
@@ -239,18 +172,11 @@ def stored_centroids(spark: SparkSession, root: str) -> DataFrame:
     layout, or the rebuild version the ivf manifest points at. Searches off
     the live store must probe with THESE centroids — the set the index's
     partitions were assigned under."""
-    from realtime_spark.streaming.compaction import read_manifest
-
     sub = (read_manifest(f"{root}/ivf") or {}).get("centroids", "centroids")
     return spark.read.parquet(f"{root}/{sub}")
 
 
-def vector_drift(
-    spark: SparkSession,
-    root: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict:
+def vector_drift(spark: SparkSession, root: str) -> dict:
     """Assignment-distance drift metric, one index scan via ``observe``:
     mean cosine distance (1 - cos) to the assigned centroid, split between
     the compacted/seed BASE rows (the distribution the centroids were
@@ -262,7 +188,7 @@ def vector_drift(
     cents = stored_centroids(spark, root)
     idx = searchable_index(spark, root)
     recent = F.col("ingest_epoch").startswith("e")
-    dist = 1.0 - cosine_expr(F.col(vec_col), F.col("cent_vec"))
+    dist = 1.0 - cosine_expr(F.col(VEC), F.col("cent_vec"))
     obs = Observation("vector_drift")
     (
         idx.join(F.broadcast(cents), "centroid_id")
@@ -300,13 +226,7 @@ def _gc_centroid_versions(root: str, keep: set[str]) -> None:
             shutil.rmtree(os.path.join(root, name), ignore_errors=True)
 
 
-def rebuild_vector_index(
-    spark: SparkSession,
-    root: str,
-    iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict:
+def rebuild_vector_index(spark: SparkSession, root: str, iters: int = 1) -> dict:
     """Centroid-drift rebuild: k-means-refine the centroids over the LIVE
     store, reassign every indexed vector, and publish (new centroids, new
     index) with ONE atomic commit — the ivf store's compaction manifest,
@@ -317,32 +237,24 @@ def rebuild_vector_index(
     next rebuild overwrites them. Requires the ingest stream stopped, the
     same contract as compaction. Reference analog: this is the vector
     store's 'partition GC + reindex' maintenance job."""
-    from realtime_spark.streaming.compaction import compact_store, read_manifest
+    # through the module attribute: the crash test swaps compact_store out
+    from realtime_spark.streaming.compaction import compact_store
 
     prev_cdir = (read_manifest(f"{root}/ivf") or {}).get("centroids")
-    cents_old = stored_centroids(spark, root).select(
-        F.col("centroid_id").alias(id_col), F.col("cent_vec").alias(vec_col)
-    )
-    live = (
-        searchable_index(spark, root).select(id_col, vec_col).localCheckpoint()
-    )
+    cents_old = _as_id_vec(stored_centroids(spark, root))
+    live = searchable_index(spark, root).select(ID, VEC).localCheckpoint()
     gen = (read_manifest(f"{root}/ivf") or {"generation": -1})["generation"] + 1
-    new_cents = kmeans_refine(live, cents_old, id_col, vec_col, iters=iters)
+    new_cents = kmeans_refine(live, cents_old, ID, VEC, iters=iters)
     cdir = f"centroids_v{gen}"
     new_cents.select("centroid_id", "cent_vec").write.mode("overwrite").parquet(
         f"{root}/{cdir}"
     )
-    cents_new = spark.read.parquet(f"{root}/{cdir}").select(
-        F.col("centroid_id").alias(id_col), F.col("cent_vec").alias(vec_col)
-    )
+    cents_new = _as_id_vec(spark.read.parquet(f"{root}/{cdir}"))
 
     def fold(df: DataFrame, path: str) -> None:
-        reassigned = ivf_assign(
-            df.drop("centroid_id", "c_cos"), cents_new, id_col, vec_col
+        VECTOR_STORE["ivf"].write(
+            ivf_assign(df.drop("centroid_id", "c_cos"), cents_new, ID, VEC), path
         )
-        reassigned.repartition("centroid_id").write.mode("overwrite").partitionBy(
-            "centroid_id"
-        ).parquet(path)
 
     manifest = compact_store(
         spark, f"{root}/ivf", fold, extra_manifest={"centroids": cdir}
@@ -355,22 +267,15 @@ def maintain_vector_index(
     spark: SparkSession,
     root: str,
     drift_ratio_threshold: float = 2.0,
-    min_recent_rows: int = 1,
     iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> dict:
     """The periodic maintenance entry point: measure assignment-distance
     drift; when recent arrivals sit ``drift_ratio_threshold`` times further
     from their centroids than the base distribution does, rebuild and swap
     atomically. Returns the drift report plus what was done."""
-    d = vector_drift(spark, root, id_col, vec_col)
-    trigger = (
-        d["ratio"] is not None
-        and d["recent_rows"] >= min_recent_rows
-        and d["ratio"] >= drift_ratio_threshold
-    )
-    if not trigger:
+    d = vector_drift(spark, root)
+    # no recent rows -> no recent distance -> a None ratio: never rebuilds
+    if d["ratio"] is None or d["ratio"] < drift_ratio_threshold:
         return {**d, "rebuilt": False}
-    manifest = rebuild_vector_index(spark, root, iters, id_col, vec_col)
+    manifest = rebuild_vector_index(spark, root, iters)
     return {**d, "rebuilt": True, "manifest": manifest}

@@ -24,14 +24,14 @@ from pyspark.sql import functions as F
 
 from realtime_spark.sources.testdata import load_table
 from realtime_spark.streaming.compaction import (
-    compact_ingest_state,
-    compact_search_state,
     compact_store,
-    compact_vector_state,
     gc_store,
     read_manifest,
     read_store,
 )
+from realtime_spark.streaming.ingest import INGEST_STORE
+from realtime_spark.streaming.search_ingest import SEARCH_STORE
+from realtime_spark.streaming.vector_ingest import VECTOR_STORE
 
 SF = "/root/testdata/sf0.001"
 
@@ -105,7 +105,7 @@ def test_corpus_ingest_compaction_equivalence(spark, tmp_path):
         process_ingest_batch(b1, 1, root)
 
     # compact root A mid-sequence; B stays epoch-per-directory forever
-    m = compact_ingest_state(spark, roots[0])
+    m = INGEST_STORE.compact(spark, roots[0])
     assert m["digests"]["base"] == "c0" and m["digests"]["min_epoch"] == 2
     # the folded stores are down to ONE data directory each
     assert _data_dirs(f"{roots[0]}/digests") == ["ingest_epoch=c0"]
@@ -143,7 +143,7 @@ def test_corpus_ingest_compaction_equivalence(spark, tmp_path):
     assert snap(roots[0]) == b_snap
 
     # second generation: fold c0 + e2 into c1
-    m2 = compact_ingest_state(spark, roots[0])
+    m2 = INGEST_STORE.compact(spark, roots[0])
     assert m2["digests"]["base"] == "c1" and m2["digests"]["min_epoch"] == 3
     assert _data_dirs(f"{roots[0]}/digests") == ["ingest_epoch=c1"]
     assert snap(roots[0]) == b_snap
@@ -183,7 +183,7 @@ def test_vector_ingest_compaction_equivalence(spark, tmp_path):
         process_vector_batch(b0, 0, root, dedup_threshold=0.999999)
         process_vector_batch(b1, 1, root, dedup_threshold=0.999999)
 
-    compact_vector_state(spark, roots[0])
+    VECTOR_STORE.compact(spark, roots[0])
     assert _data_dirs(f"{roots[0]}/accepted") == ["ingest_epoch=c0"]
 
     for root in roots:
@@ -237,7 +237,7 @@ def test_search_ingest_compaction_equivalence(spark, tmp_path):
         process_search_batch(b0, 0, root)
         process_search_batch(b1, 1, root)
 
-    compact_search_state(spark, roots[0])
+    SEARCH_STORE.compact(spark, roots[0])
     assert _data_dirs(f"{roots[0]}/stats") == ["ingest_epoch=c0"]
     # stat partials summed into exactly one base row
     assert spark.read.parquet(f"{roots[0]}/stats/ingest_epoch=c0").count() == 1
@@ -255,6 +255,94 @@ def test_search_ingest_compaction_equivalence(spark, tmp_path):
 
     a_snap, b_snap = snap(roots[0]), snap(roots[1])
     assert a_snap == b_snap and a_snap, "BM25 off compacted store must be bit-identical"
+
+
+# ---------------------------------------------------------------------------
+# every store: the seed writes every output, folds keep the probe layout
+# ---------------------------------------------------------------------------
+
+
+def _docs(spark, lo, hi):
+    return (
+        load_table(spark, SF, "documents")
+        .select("doc_id", "text")
+        .filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+    )
+
+
+def _vectors(spark):
+    e = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
+    return e, e.filter(F.col("vec_id") % 50 == 0)
+
+
+def test_fresh_seed_reads_and_compacts(spark, tmp_path):
+    """A freshly seeded root has every output of its store: `accepted`
+    reads as zero rows before the first epoch (a drain over an empty
+    source ends here), and the store compacts straight after its seed."""
+    from realtime_spark.streaming.ingest import accepted_docs, seed_ingest_state
+    from realtime_spark.streaming.search_ingest import seed_search_state
+    from realtime_spark.streaming.vector_ingest import seed_vector_state
+
+    e, cents = _vectors(spark)
+    roots = {n: str(tmp_path / n) for n in ("corpus", "vec", "search")}
+    seed_ingest_state(_docs(spark, 0, 40), roots["corpus"])
+    seed_vector_state(e.filter(F.col("vec_id") % 2 == 0), cents, roots["vec"])
+    seed_search_state(_docs(spark, 0, 40), roots["search"])
+
+    assert accepted_docs(spark, roots["corpus"]).count() == 0
+    assert read_store(spark, f"{roots['vec']}/accepted").count() == 0
+    for spec, name in [
+        (INGEST_STORE, "corpus"),
+        (VECTOR_STORE, "vec"),
+        (SEARCH_STORE, "search"),
+    ]:
+        m = spec.compact(spark, roots[name])
+        assert sorted(m) == sorted(spec.names)
+        for out in spec.names:
+            assert _data_dirs(f"{roots[name]}/{out}") == ["ingest_epoch=c0"]
+    assert accepted_docs(spark, roots["corpus"]).count() == 0
+
+
+def test_fold_keeps_probe_layout(spark, tmp_path):
+    """Probe pruning reads only the sub-partitions a probe touches: `band`
+    of lsh, `centroid_id` of ivf, `bucket` of postings. The seed, an epoch
+    and the compacted base all keep that `<col>=*` layout, and the base
+    holds exactly the sub-partitions of the partitions it folded."""
+    from realtime_spark.streaming.ingest import process_ingest_batch, seed_ingest_state
+    from realtime_spark.streaming.search_ingest import (
+        process_search_batch,
+        seed_search_state,
+    )
+    from realtime_spark.streaming.vector_ingest import (
+        process_vector_batch,
+        seed_vector_state,
+    )
+
+    e, cents = _vectors(spark)
+    roots = {n: str(tmp_path / n) for n in ("corpus", "vec", "search")}
+    seed_ingest_state(_corpus(spark), roots["corpus"])
+    process_ingest_batch(_doc_batches(spark)[0], 0, roots["corpus"])
+    seed_vector_state(e.filter(F.col("vec_id") % 2 == 0), cents, roots["vec"])
+    process_vector_batch(e.filter(F.col("vec_id") % 2 == 1), 0, roots["vec"])
+    seed_search_state(_docs(spark, 0, 40), roots["search"])
+    process_search_batch(_docs(spark, 40, 80), 0, roots["search"])
+
+    def subparts(path, col):
+        return {n for n in os.listdir(path) if n.startswith(f"{col}=")}
+
+    for spec, name, out, col in [
+        (INGEST_STORE, "corpus", "lsh", "band"),
+        (VECTOR_STORE, "vec", "ivf", "centroid_id"),
+        (SEARCH_STORE, "search", "postings", "bucket"),
+    ]:
+        store = f"{roots[name]}/{out}"
+        folded = set()
+        for tag in ("seed", "e0"):
+            got = subparts(f"{store}/ingest_epoch={tag}", col)
+            assert got, f"{out} {tag} has no {col}=* subdirectories"
+            folded |= got
+        spec.compact(spark, roots[name])
+        assert subparts(f"{store}/ingest_epoch=c0", col) == folded, out
 
 
 # ---------------------------------------------------------------------------
@@ -346,8 +434,6 @@ def test_scheduled_compaction_poll_loop(spark, tmp_path):
     keep absorbing epochs afterwards, and every read surface must stay
     bit-identical to the never-compacted twin."""
     from realtime_spark.streaming.compaction import (
-        INGEST_SUBSTORES,
-        compact_ingest_state,
         run_ingest_cycles,
         should_compact,
         store_epoch_count,
@@ -388,8 +474,7 @@ def test_scheduled_compaction_poll_loop(spark, tmp_path):
         spark,
         loop_root,
         start_stream,
-        compact_ingest_state,
-        INGEST_SUBSTORES,
+        INGEST_STORE,
         cycles=3,
         max_epochs=2,
     )
@@ -398,7 +483,7 @@ def test_scheduled_compaction_poll_loop(spark, tmp_path):
     assert [t["compacted"] for t in telemetry] == [False, True, False]
     assert telemetry[1]["files_after"] < telemetry[1]["files_before"]
     assert store_epoch_count(f"{loop_root}/accepted") == 1  # only e2
-    assert not should_compact(loop_root, INGEST_SUBSTORES, max_epochs=2)
+    assert not should_compact(loop_root, INGEST_STORE.names, max_epochs=2)
 
     def snap(root):
         acc = sorted(
@@ -421,8 +506,6 @@ def test_file_count_trigger_gated_on_new_epochs(spark, tmp_path):
     The file-count trigger must fire only while there is at least one
     uncompacted epoch to fold — exactly ONE compaction across the loop."""
     from realtime_spark.streaming.compaction import (
-        INGEST_SUBSTORES,
-        compact_ingest_state,
         run_ingest_cycles,
         should_compact,
         store_epoch_count,
@@ -466,8 +549,7 @@ def test_file_count_trigger_gated_on_new_epochs(spark, tmp_path):
         spark,
         loop_root,
         start_stream,
-        compact_ingest_state,
-        INGEST_SUBSTORES,
+        INGEST_STORE,
         cycles=3,
         max_epochs=99,
         max_files=1,
@@ -476,16 +558,12 @@ def test_file_count_trigger_gated_on_new_epochs(spark, tmp_path):
 
 
 def test_scheduled_loop_vector_store_with_drift_rebuild(spark, tmp_path):
-    """r8 ask: drive the scheduled loop with compact_vector_state, with a
+    """r8 ask: drive the scheduled loop over the vector store, with a
     centroid rebuild BETWEEN loop calls (the interesting window — the
     rebuild advances min_epoch through compact_store, and the resumed loop
     must keep its checkpointed epoch ids admissible). Accepted set and
     index membership must match a never-compacted never-rebuilt twin."""
-    from realtime_spark.streaming.compaction import (
-        VECTOR_SUBSTORES,
-        compact_vector_state,
-        run_ingest_cycles,
-    )
+    from realtime_spark.streaming.compaction import run_ingest_cycles
     from realtime_spark.streaming.vector_ingest import (
         process_vector_batch,
         rebuild_vector_index,
@@ -533,8 +611,7 @@ def test_scheduled_loop_vector_store_with_drift_rebuild(spark, tmp_path):
         )
 
     t1 = run_ingest_cycles(
-        spark, loop_root, start_stream, compact_vector_state,
-        VECTOR_SUBSTORES, cycles=2, max_epochs=2,
+        spark, loop_root, start_stream, VECTOR_STORE, cycles=2, max_epochs=2
     )
     assert [t["compacted"] for t in t1] == [False, True]
 
@@ -546,8 +623,7 @@ def test_scheduled_loop_vector_store_with_drift_rebuild(spark, tmp_path):
     # the resumed loop's checkpoint continues at epoch 2; the rebuild's
     # compact_store left min_epoch at 2, so the write must be admissible
     t2 = run_ingest_cycles(
-        spark, loop_root, start_stream, compact_vector_state,
-        VECTOR_SUBSTORES, cycles=1, max_epochs=2,
+        spark, loop_root, start_stream, VECTOR_STORE, cycles=1, max_epochs=2
     )
     assert [t["compacted"] for t in t2] == [False]
 
@@ -573,14 +649,10 @@ def test_scheduled_loop_vector_store_with_drift_rebuild(spark, tmp_path):
 
 
 def test_scheduled_loop_search_store(spark, tmp_path):
-    """r8 ask: drive the scheduled loop with compact_search_state — the
+    """r8 ask: drive the scheduled loop over the search store — the
     stat-partial SUM fold runs under the janitor and BM25 off the looped
     store must stay bit-identical to the never-compacted twin."""
-    from realtime_spark.streaming.compaction import (
-        SEARCH_SUBSTORES,
-        compact_search_state,
-        run_ingest_cycles,
-    )
+    from realtime_spark.streaming.compaction import run_ingest_cycles
     from realtime_spark.streaming.search_ingest import (
         bm25_topk_from_live_index,
         process_search_batch,
@@ -618,8 +690,7 @@ def test_scheduled_loop_search_store(spark, tmp_path):
         return run_search_ingest_stream(stream, loop_root, ckpt)
 
     telemetry = run_ingest_cycles(
-        spark, loop_root, start_stream, compact_search_state,
-        SEARCH_SUBSTORES, cycles=3, max_epochs=2,
+        spark, loop_root, start_stream, SEARCH_STORE, cycles=3, max_epochs=2
     )
     assert [t["compacted"] for t in telemetry] == [False, True, False]
     # stat partials: one folded base row plus the post-compaction epoch row

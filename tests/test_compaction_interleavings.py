@@ -31,12 +31,12 @@ from pyspark.sql import functions as F
 
 from realtime_spark.sources.testdata import load_table
 from realtime_spark.streaming.compaction import (
-    compact_search_state,
-    compact_vector_state,
     gc_store,
     read_manifest,
     read_store,
 )
+from realtime_spark.streaming.search_ingest import SEARCH_STORE
+from realtime_spark.streaming.vector_ingest import VECTOR_STORE
 
 SF = "/root/testdata/sf0.001"
 
@@ -134,7 +134,7 @@ def test_vector_store_random_interleavings(spark, tmp_path):
             next_epoch += 1
 
         def compact():
-            compact_vector_state(spark, root)
+            VECTOR_STORE.compact(spark, root)
 
         def rebuild():
             rebuild_vector_index(spark, root)
@@ -249,7 +249,7 @@ def test_search_store_random_interleavings(spark, tmp_path):
             next_epoch += 1
 
         def compact():
-            compact_search_state(spark, root)
+            SEARCH_STORE.compact(spark, root)
 
         def crash_stage():
             _crash_stage(f"{root}/{rng.choice(['postings', 'doclen', 'stats'])}")

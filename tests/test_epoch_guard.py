@@ -21,12 +21,12 @@ from realtime_spark.sources.testdata import load_table
 from realtime_spark.streaming.compaction import (
     EpochRewindError,
     assert_epoch_admissible,
-    compact_ingest_state,
-    compact_search_state,
     compact_store,
-    compact_vector_state,
     read_store,
 )
+from realtime_spark.streaming.ingest import INGEST_STORE
+from realtime_spark.streaming.search_ingest import SEARCH_STORE
+from realtime_spark.streaming.vector_ingest import VECTOR_STORE
 
 SF = "/root/testdata/sf0.001"
 
@@ -84,6 +84,13 @@ def _docs(spark, lo, hi):
     )
 
 
+def _assert_no_partition(spec, root, tag):
+    """The guard ran before any write: no output of the store holds a
+    partition for the rewound tag."""
+    for out in spec.names:
+        assert not os.path.exists(f"{root}/{out}/ingest_epoch={tag}"), out
+
+
 def test_corpus_ingest_rejects_rewound_epoch(spark, tmp_path):
     from realtime_spark.streaming.ingest import (
         accepted_docs,
@@ -95,7 +102,7 @@ def test_corpus_ingest_rejects_rewound_epoch(spark, tmp_path):
     seed_ingest_state(_docs(spark, 0, 20), root)
     process_ingest_batch(_docs(spark, 20, 40), 0, root)
     process_ingest_batch(_docs(spark, 40, 60), 1, root)
-    compact_ingest_state(spark, root)
+    INGEST_STORE.compact(spark, root)
 
     before = sorted(
         r["doc_id"] for r in accepted_docs(spark, root).collect()
@@ -106,7 +113,7 @@ def test_corpus_ingest_rejects_rewound_epoch(spark, tmp_path):
     assert sorted(
         r["doc_id"] for r in accepted_docs(spark, root).collect()
     ) == before
-    assert not os.path.exists(f"{root}/accepted/ingest_epoch=e0")
+    _assert_no_partition(INGEST_STORE, root, "e0")
     # the stream resumed with its ORIGINAL checkpoint continues fine
     process_ingest_batch(_docs(spark, 60, 80), 2, root)
     after = sorted(r["doc_id"] for r in accepted_docs(spark, root).collect())
@@ -129,7 +136,7 @@ def test_vector_ingest_rejects_rewound_epoch(spark, tmp_path):
     process_vector_batch(
         e.filter((F.col("vec_id") % 2 == 1) & (F.col("vec_id") < 100)), 0, root
     )
-    compact_vector_state(spark, root)
+    VECTOR_STORE.compact(spark, root)
 
     with pytest.raises(EpochRewindError):
         process_vector_batch(
@@ -137,7 +144,7 @@ def test_vector_ingest_rejects_rewound_epoch(spark, tmp_path):
             0,
             root,
         )
-    assert not os.path.exists(f"{root}/ivf/ingest_epoch=e0")
+    _assert_no_partition(VECTOR_STORE, root, "e0")
 
 
 def test_search_ingest_rejects_rewound_epoch(spark, tmp_path):
@@ -149,12 +156,12 @@ def test_search_ingest_rejects_rewound_epoch(spark, tmp_path):
     root = str(tmp_path / "search")
     seed_search_state(_docs(spark, 0, 40), root)
     process_search_batch(_docs(spark, 40, 80), 0, root)
-    compact_search_state(spark, root)
+    SEARCH_STORE.compact(spark, root)
 
     stats_before = read_store(spark, f"{root}/stats").collect()
     with pytest.raises(EpochRewindError):
         process_search_batch(_docs(spark, 80, 120), 0, root)
-    assert not os.path.exists(f"{root}/postings/ingest_epoch=e0")
+    _assert_no_partition(SEARCH_STORE, root, "e0")
     assert read_store(spark, f"{root}/stats").collect() == stats_before
 
 
@@ -190,7 +197,7 @@ def test_fresh_checkpoint_restart_fails_loudly(spark, tmp_path):
 
     q = run_ingest_stream(source(), root, str(tmp_path / "ckpt0"))
     q.awaitTermination(300)
-    compact_ingest_state(spark, root)
+    INGEST_STORE.compact(spark, root)
     before = sorted(r["doc_id"] for r in accepted_docs(spark, root).collect())
 
     # the routine operator mistake: same source, FRESH checkpoint — batch

@@ -148,9 +148,9 @@ def test_drift_detect_rebuild_swap_and_equivalence(spark, tmp_path):
     assert _topk_sets(spark, root, queries, cents_new) == want2
 
     # a later plain compaction must CARRY the centroids pointer forward
-    from realtime_spark.streaming.compaction import compact_vector_state
+    from realtime_spark.streaming.vector_ingest import VECTOR_STORE
 
-    compact_vector_state(spark, root)
+    VECTOR_STORE.compact(spark, root)
     m2 = read_manifest(f"{root}/ivf")
     assert m2["base"] == "c1" and m2["centroids"] == "centroids_v0"
     assert _topk_sets(spark, root, queries, cents_new) == want2
