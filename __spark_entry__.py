@@ -148,7 +148,7 @@ def _is_bool_query(filter_str: str) -> Callable[[SparkSession, str], DataFrame]:
             }],
             type_maps={("public", "orders"): _URGENT_TYPES},
         )
-        return matched_pairs(changes, subs).select(
+        return matched_pairs(changes, subs).select("c", F.explode("subs").alias("s")).select(
             F.col("c.change_id").alias("change_id"),
             F.col("s.subscription_id").alias("subscription_id"),
         )
@@ -177,7 +177,7 @@ def _pairs_query(filter_str: str, action: str) -> Callable[[SparkSession, str], 
                 "action": action,
             }],
         )
-        return matched_pairs(changes, subs).select(
+        return matched_pairs(changes, subs).select("c", F.explode("subs").alias("s")).select(
             F.col("c.change_id").alias("change_id"),
             F.col("s.subscription_id").alias("subscription_id"),
         )
@@ -219,7 +219,7 @@ _MULTI_ORACLE_PREDS = {
 def q_cdc_multi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes = changes_from_orders(spark, sf_dir)
     subs = subscriptions_df(spark, _MULTI_SPECS)
-    return matched_pairs(changes, subs).select(
+    return matched_pairs(changes, subs).select("c", F.explode("subs").alias("s")).select(
         F.col("c.change_id").alias("change_id"),
         F.col("s.subscription_id").alias("subscription_id"),
     )
@@ -273,7 +273,7 @@ def q_cdc_wildcard(spark: SparkSession, sf_dir: str) -> DataFrame:
           "filters": "o_orderstatus=eq.P"}],
     )
     subs = expand_wildcards(subs, [("public", "orders"), ("public", "nation")])
-    return matched_pairs(changes, subs).select(
+    return matched_pairs(changes, subs).select("c", F.explode("subs").alias("s")).select(
         F.col("c.change_id").alias("change_id"),
         F.col("s.subscription_id").alias("subscription_id"),
     )
@@ -326,7 +326,7 @@ def q_cdc_multi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("public", "nation"): {"n_nationkey": "int8", "n_name": "text"},
         },
     )
-    return matched_pairs(changes, subs).select(
+    return matched_pairs(changes, subs).select("c", F.explode("subs").alias("s")).select(
         F.col("c.change_id").alias("change_id"),
         F.col("s.subscription_id").alias("subscription_id"),
     )
@@ -848,7 +848,7 @@ def q_billable_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7: billable event counting = pairs delivered per action type."""
     changes = changes_from_orders(spark, sf_dir)
     subs = subscriptions_df(spark, _MULTI_SPECS)
-    pairs = matched_pairs(changes, subs)
+    pairs = matched_pairs(changes, subs).select("c", F.explode("subs").alias("s"))
     return pairs.groupBy(F.col("c.action").alias("action")).agg(
         F.count(F.lit(1)).alias("n_billable")
     )

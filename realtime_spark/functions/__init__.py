@@ -1,9 +1,7 @@
 from realtime_spark.functions.filters import (  # noqa: F401
     FILTER_OPS,
     Filter,
-    compile_filter,
-    compile_filters,
     filters_match_expr,
     parse_filter_string,
 )
-from realtime_spark.functions.casts import pg_type_to_spark, typed_column  # noqa: F401
+from realtime_spark.functions.casts import pg_type_to_spark  # noqa: F401

@@ -12,9 +12,6 @@ whole-stage codegen (no UDF on the hot path).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 # pg typename -> (spark cast target, comparison family)
 # family drives which comparison semantics apply in the generic interpreter.
 _PG_TO_SPARK: dict[str, tuple[str, str]] = {
@@ -103,7 +100,3 @@ def pg_type_family(pg_type: str) -> str:
         return "string"
     return _FAMILY_OF.get(t, "string")
 
-
-def typed_column(col: Column, pg_type: str) -> Column:
-    """Cast a text-carried WAL value to its comparison type (realtime.cast)."""
-    return col.cast(pg_type_to_spark(pg_type))

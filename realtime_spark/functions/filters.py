@@ -15,9 +15,11 @@ Reference semantics reproduced here:
     comparison must be true; NULL comparison results fail closed
     (reference: migrations/20260626120000:158-185)
 
-Two compilation layers:
-  * :func:`compile_filter` / :func:`compile_filters` — plan-time compilation for
-    typed DataFrames (column pg type known when building the plan).
+Two evaluation layers:
+  * :func:`compile_filter_on_record` / :func:`compile_filters_on_record` —
+    plan-time compilation of one subscription's filters against the change
+    record (or typed scan columns), used by the compiled CDC match: the
+    filter set is plan, one codegen'd predicate per subscription.
   * :func:`filters_match_expr` — a generic JVM-side interpreter over a
     `filters` array column + a `record` map column, used when subscriptions
     live in a broadcast dim table (the filter set is data, not plan). Pure
@@ -32,7 +34,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from realtime_spark.functions.casts import pg_type_family, pg_type_to_spark
+from realtime_spark.functions.casts import pg_type_family
 
 FILTER_OPS: tuple[str, ...] = (
     "eq", "neq", "lt", "lte", "gt", "gte",
@@ -160,85 +162,6 @@ def parse_filter_string(s: str | None) -> list[Filter]:
     filters = [parse_filter(p) for p in _split_top_level(s) if p != ""]
     filters.sort(key=Filter.sort_key)
     return filters
-
-
-# ---------------------------------------------------------------------------
-# plan-time compilation against a typed column
-# ---------------------------------------------------------------------------
-
-def _typed_lit(value: str, pg_type: str) -> Column:
-    return F.lit(value).try_cast(pg_type_to_spark(pg_type))
-
-
-def _op_predicate(col: Column, f: Filter, pg_type: str) -> Column:
-    """Three-valued comparison result (may be NULL) for one filter, matching
-    Postgres `%L::type op %L::type` evaluation. Negation preserves SQL
-    three-valued logic (NOT NULL -> NULL -> fail closed)."""
-    op = f.op
-    if op == "is":
-        kw = f.value
-        if kw in ("null", "unknown"):
-            res = col.isNull()
-        else:  # true/false: IS TRUE / IS FALSE are never-null in Postgres
-            res = col.try_cast("boolean").eqNullSafe(F.lit(kw == "true"))
-    elif op == "isdistinct":
-        res = ~col.eqNullSafe(_typed_lit(f.value, pg_type))
-    elif op == "in":
-        arr = F.array(*[_typed_lit(v, pg_type) for v in f.values])
-        res = F.array_contains(arr, col) if f.values else F.lit(False)
-    elif op in ("like", "ilike", "match", "imatch"):
-        s = col.cast("string")
-        if op == "like":
-            res = s.like(f.value)
-        elif op == "ilike":
-            res = F.ilike(s, F.lit(f.value))
-        elif op == "match":
-            res = s.rlike(f.value)
-        else:
-            res = s.rlike("(?i)" + f.value)
-    else:
-        lit = _typed_lit(f.value, pg_type)
-        if op == "eq":
-            res = col == lit
-        elif op == "neq":
-            res = col != lit
-        elif op == "lt":
-            res = col < lit
-        elif op == "lte":
-            res = col <= lit
-        elif op == "gt":
-            res = col > lit
-        elif op == "gte":
-            res = col >= lit
-        else:  # pragma: no cover
-            raise FilterValidationError(f"unknown op {op!r}")
-    if f.negate:
-        res = ~res
-    return res
-
-
-def compile_filter(f: Filter, col: Column, pg_type: str) -> Column:
-    """One filter -> non-null boolean Column (NULL comparison fails closed)."""
-    return F.coalesce(_op_predicate(col, f, pg_type), F.lit(False))
-
-
-def compile_filters(
-    filters: list[Filter],
-    columns: dict[str, tuple[Column, str]],
-) -> Column:
-    """Conjunctive visibility (P3) over typed columns.
-
-    `columns` maps column name -> (Column, pg_type). A filter naming a column
-    not present fails closed (reference: migrations/20260626120000:158-185).
-    Empty filter list -> always visible.
-    """
-    pred = F.lit(True)
-    for f in filters:
-        if f.column_name not in columns:
-            return F.lit(False)
-        col, pg_type = columns[f.column_name]
-        pred = pred & compile_filter(f, col, pg_type)
-    return pred
 
 
 # ---------------------------------------------------------------------------

@@ -13,7 +13,9 @@ Reference behavior reproduced (Spark-first, no probe transactions):
     columns — correct for the test corpus, declared limitation for arbitrary
     SQL (see SURVEY.md §7 watch-list).
 
-Scale notes: RLS evaluation is one CASE over the (tiny) policy registry;
+Scale notes: RLS evaluation is one CASE over the (tiny) policy registry,
+run inside each matched change's row over its array of subscriptions (the
+cdc.matched_pairs frame) with no join and no shuffle;
 JWT verification is an Arrow-batched pandas UDF (hmac is CPU-bound Python,
 but it runs once per connection/token, not per event — the hot event path
 joins against already-verified claims).
@@ -758,7 +760,7 @@ def rls_policies_df(spark: SparkSession, specs: Iterable[Mapping]) -> DataFrame:
 
 
 def apply_rls_exists_policy(
-    pairs: DataFrame,
+    sets: DataFrame,
     lookup: DataFrame,
     keys: Sequence[tuple[str, str]],
     schema_name: str = "public",
@@ -772,11 +774,13 @@ def apply_rls_exists_policy(
     (migrations/20211116212300:52-61) evaluated set-at-a-time instead of
     row-at-a-time.
 
-    `keys`: [(record_key, lookup_col)] equality pairs; the caller filters
-    `lookup` to the policy's residual predicate first (it is just a
-    DataFrame). Pairs for other entities/roles pass through untouched
-    (RLS not enabled there); protected pairs survive only on a lookup hit —
-    fail-closed like apply_rls_policies.
+    `sets` is the cdc.matched_pairs frame; it is exploded once here and the
+    result is (change `c`, subscription `s`) pairs. `keys`:
+    [(record_key, lookup_col)] equality pairs; the caller filters `lookup`
+    to the policy's residual predicate first (it is just a DataFrame).
+    Pairs for other entities/roles pass through untouched (RLS not enabled
+    there); protected pairs survive only on a lookup hit — fail-closed like
+    apply_rls_policies.
 
     Scale shape: one semi-join keyed on the record values; Catalyst
     broadcasts the lookup when small (the common policy-table case) and
@@ -801,6 +805,7 @@ def apply_rls_exists_policy(
     for rec_key, lk_col in keys:
         eq = target[rec_key] == F.col(f"_lk.{lk_col}").cast("string")
         cond = eq if cond is None else cond & eq
+    pairs = sets.select("c", F.explode("subs").alias("s"))
     passed = pairs.filter(protected).join(
         lookup.alias("_lk"), cond, "left_semi"
     )
@@ -839,31 +844,23 @@ def _rls_case_sql(rls_policies: DataFrame) -> str | None:
     return memo[0]
 
 
-def apply_rls_policies(pairs: DataFrame, rls_policies: DataFrame) -> DataFrame:
-    """Filter matched (change, subscription) pairs by the RLS policies for
-    the pair's (schema, table, role).
+def apply_rls_policies(sets: DataFrame, rls_policies: DataFrame) -> DataFrame:
+    """Filter each matched change's subscriptions (`subs` of the
+    cdc.matched_pairs frame) by the RLS policies for the (schema, table,
+    role) of the change and the subscription.
 
     The distinct policy expressions of a deployment are enumerable, so the
-    filter compiles to one CASE over the (small) policy registry: pairs with
-    no policy pass (RLS not enabled for that table); pairs pass when any of
-    their key's policies is true and are dropped when all are false or NULL
+    filter compiles to one CASE over the (small) policy registry, run inside
+    the row as a lambda named `s` over the `subs` array: a subscription with
+    no policy passes (RLS not enabled for that table); it passes when any of
+    its key's policies is true and is dropped when all are false or NULL
     (fail-closed), matching `is_rls_enabled` semantics and Postgres's OR of
-    permissive policies.
-
-    On the compiled match (`_rs_match_sets`, one row per change with its
-    array of matched subscriptions) the CASE runs inside the row as a
-    lambda named `s` over that array, so the RLS step adds no join, no
-    broadcast and no shuffle, and the result keeps `_rs_match_sets` for
-    project_output's zero-shuffle grouping. Other pairs frames (the join
-    path) are filtered row by row with the same CASE.
+    permissive policies. The step adds no join, no broadcast and no shuffle,
+    and its output is again a match-set frame; a change none of whose
+    subscriptions pass keeps its row with an empty `subs`, which exploding
+    or project_output's grouping turns into no rows.
     """
     case = _rls_case_sql(rls_policies)
     if case is None:
-        return pairs
-    sets = getattr(pairs, "_rs_match_sets", None)
-    if sets is None:
-        return pairs.filter(F.expr(case))
-    kept = sets.select("c", F.expr(f"filter(subs, s -> {case})").alias("subs"))
-    out = kept.select("c", F.explode("subs").alias("s"))
-    out._rs_match_sets = kept
-    return out
+        return sets
+    return sets.withColumn("subs", F.expr(f"filter(subs, s -> {case})"))

@@ -12,12 +12,16 @@ Reference behavior reproduced:
   - A5 visible subscription_ids collected per change
     (reference: migrations/20260626120000:500-536,639-648)
 
-Spark-first design for 100 TB: subscriptions are a small dimension, so the
-match is a **broadcast hash join** on the equi keys (schema_name, table_name)
-with the action predicate and the filter interpreter as residual join filters
-— no shuffle of the change stream at all. Filters are evaluated by a pure
-higher-order-function expression (filters.py), so the whole pipeline is one
-WholeStageCodegen span over the scan.
+Spark-first design for 100 TB: subscriptions are a small dimension with few
+distinct (entity, action, filters) signatures, so by default the match is
+**compiled into the plan** — one codegen'd predicate per subscription over the
+change scan, no join and no shuffle. `matched_pairs` returns one row per
+matched change with the array of its matched subscriptions, the shape every
+later stage (RLS, projection, the id set) consumes within the row. Above
+COMPILE_MAX_SUBS subscriptions the fallback is a **broadcast hash join** on
+(schema_name, table_name) with the filter interpreter (filters.py, a pure
+higher-order-function expression) as residual join filter, grouped back to
+the same per-change shape.
 
 DELETE changes evaluate filters against old_record (wal2json carries only
 `identity` for deletes — reference decoder.ex + migrations/20260626120000:586-634).
@@ -25,7 +29,6 @@ DELETE changes evaluate filters against old_record (wal2json carries only
 
 from __future__ import annotations
 
-from functools import cached_property
 from typing import Iterable, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -118,9 +121,9 @@ def subscriptions_df(
             }
         )
     df = local_frame(spark, rows, SUBSCRIPTION_SCHEMA_DDL)
-    # stash the local rows so the compile strategy (matched_pairs) reads the
+    # stash the local rows so the compiled match (matched_pairs) reads the
     # dim without a Spark job; any DataFrame surgery drops the attribute and
-    # the strategy falls back to a real collect
+    # the dim is collected instead
     df._rs_spec_rows = rows
     return df
 
@@ -307,18 +310,25 @@ def _sub_struct_lit(r) -> Column:
             else F.lit(None).cast("array<string>")
         ).alias("selected_columns"),
         (
-            F.create_map(
-                *[F.lit(x) for kv in sorted(r["claims"].items()) for x in kv]
-            )
-            if r["claims"]
-            else F.lit(None).cast("map<string,string>")
-        ).alias("claims"),
+            F.create_map(*[F.lit(x) for kv in sorted(r["claims"].items()) for x in kv])
+            if r["claims"] is not None
+            else F.lit(None)
+        ).cast("map<string,string>").alias("claims"),
     )
 
 
-def _joined_pairs(changes: DataFrame, subs: DataFrame) -> DataFrame:
-    """Interpreter plan: broadcast join with the generic JVM filter interpreter
-    as residual condition (used when the dim exceeds COMPILE_MAX_SUBS)."""
+# field order of SUBSCRIPTION_SCHEMA_DDL: the `subs` element struct of both
+# match plans
+_SUB_FIELDS = (
+    "id", "subscription_id", "schema_name", "table_name", "filters",
+    "claims_role", "action_filter", "selected_columns", "claims",
+)
+
+
+def _joined_sets(changes: DataFrame, subs: DataFrame) -> DataFrame:
+    """Interpreter plan (the dim exceeds COMPILE_MAX_SUBS): broadcast join
+    with the generic JVM filter interpreter as residual condition, grouped
+    back to one row per change_id — the plan's one shuffle."""
     s = F.broadcast(subs).alias("s")
     c = changes.alias("c")
     filter_target = F.when(
@@ -330,52 +340,38 @@ def _joined_pairs(changes: DataFrame, subs: DataFrame) -> DataFrame:
         & ((F.col("s.action_filter") == "*") | (F.col("s.action_filter") == F.col("c.action")))
         & filters_match_expr(F.col("s.filters"), filter_target)
     )
-    return c.join(s, cond, "inner")
-
-
-class _CompiledMatch:
-    """One subscription set compiled against one change-frame shape: a
-    plan-time predicate per subscription (entity, action, filters), their
-    disjunction, and the per-change expressions built from them. Each of
-    those is built on first use, so matched_pairs and match_changes pay
-    only for their own."""
-
-    def __init__(self, rows, cols: Mapping[str, Column], typed_cols=None, typed_dtypes=None):
-        self._rows = rows
-        self._cols = cols
-        self._preds = [_sub_pred(r, cols, typed_cols, typed_dtypes) for r in rows]
-        self.any = _any_pred(self._preds)
-
-    @cached_property
-    def sets_cols(self) -> list[Column]:
-        """The change as struct `c` plus the array `subs` of the structs of
-        the subscriptions it matches."""
-        matches = F.array_compact(
-            F.array(*[F.when(p, _sub_struct_lit(r)) for p, r in zip(self._preds, self._rows)])
+    sub = F.struct(*[
+        # filters are consumed by the match; like the compiled plan's
+        # struct literals, the matched struct carries them as NULL
+        (F.lit(None).cast(FILTER_STRUCT_DDL) if n == "filters" else F.col(f"s.{n}")).alias(n)
+        for n in _SUB_FIELDS
+    ])
+    return (
+        c.join(s, cond, "inner")
+        .groupBy(F.col("c.change_id"))
+        .agg(
+            F.first(F.struct(*[F.col(f"c.{n}") for n in changes.columns])).alias("c"),
+            F.collect_list(sub).alias("subs"),
         )
-        return [_named_struct(self._cols).alias("c"), matches.alias("subs")]
-
-    @cached_property
-    def ids_cols(self) -> list[Column]:
-        """The change's own columns plus the sorted distinct array of the
-        matched subscription ids (A5)."""
-        ids = F.sort_array(
-            F.array_distinct(
-                F.array_compact(
-                    F.array(
-                        *[
-                            F.when(p, F.lit(r["subscription_id"]))
-                            for p, r in zip(self._preds, self._rows)
-                        ]
-                    )
-                )
-            )
-        )
-        return [c.alias(n) for n, c in self._cols.items()] + [ids.alias("subscription_ids")]
+        .select("c", "subs")
+    )
 
 
-def _compiled(changes: DataFrame, subs: DataFrame, rows) -> tuple[DataFrame, _CompiledMatch]:
-    """(frame to scan, compiled match) for `rows`, the collected dim `subs`.
+def _compile(rows, cols: Mapping[str, Column], typed_cols=None, typed_dtypes=None):
+    """One subscription set compiled against one change-frame shape: (the
+    disjunction of the per-subscription plan-time predicates, the select
+    list of the match-set frame — the change as struct `c` plus the array
+    `subs` of the structs of the subscriptions it matches)."""
+    preds = [_sub_pred(r, cols, typed_cols, typed_dtypes) for r in rows]
+    matches = F.array_compact(
+        F.array(*[F.when(p, _sub_struct_lit(r)) for p, r in zip(preds, rows)])
+    )
+    return _any_pred(preds), [_named_struct(cols).alias("c"), matches.alias("subs")]
+
+
+def _compiled_sets(changes: DataFrame, subs: DataFrame, rows) -> DataFrame:
+    """The compiled match of `changes` against `rows`, the collected dim
+    `subs`.
 
     Over a plain change frame every compiled expression is a name-bound
     column reference, so it depends only on the frame's column names and is
@@ -400,86 +396,55 @@ def _compiled(changes: DataFrame, subs: DataFrame, rows) -> tuple[DataFrame, _Co
         # dtype of each typed expression (schema analysis only, no job):
         # native-typed columns compile to cast-free, scan-pushable predicates
         typed_dtypes = dict(base.select([c.alias(n) for n, c in typed_cols.items()]).dtypes)
-        return base, _CompiledMatch(rows, dict(change_exprs), dict(typed_cols), typed_dtypes)
+        match, cols = _compile(rows, dict(change_exprs), dict(typed_cols), typed_dtypes)
+        return base.filter(match).select(*cols)
     # keyed on the context, not the session: foreachBatch wraps every
     # micro-batch in a new SparkSession over the same context
     sc = changes.sparkSession.sparkContext
     key = (repr(rows), tuple(changes.columns))
     memo = getattr(subs, "_rs_compiled", None)
     if memo is None or memo[0] is not sc or sc._jsc is None or memo[1] != key:
-        compiled = _CompiledMatch(rows, {n: F.col(n) for n in changes.columns})
-        memo = (sc, key, compiled)
+        memo = (sc, key, _compile(rows, {n: F.col(n) for n in changes.columns}))
         subs._rs_compiled = memo
-    return changes, memo[2]
+    match, cols = memo[2]
+    return changes.filter(match).select(*cols)
 
 
-def matched_pairs(changes: DataFrame, subs: DataFrame, strategy: str = "auto") -> DataFrame:
-    """One row per (change, visible subscription): the pre-aggregation form.
+def matched_pairs(changes: DataFrame, subs: DataFrame) -> DataFrame:
+    """The match-set frame: one row per matched change, the change as struct
+    `c` and the array `subs` of the subscriptions that see it (J1), each a
+    struct with the dim's fields (`filters` NULL). It is the one contract
+    between the CDC stages: auth.apply_rls_policies filters `subs` and
+    projection.project_output groups it, both within the row; a consumer
+    of (change, subscription) pairs explodes it,
+    `.select("c", F.explode("subs").alias("s"))`.
 
-    Default plan (small dim, the realistic case): the subscriptions are
-    **compiled into the plan** — one codegen'd predicate per subscription, the
-    matching subs collected per change with `array_compact` and exploded. The
-    change stream is scanned exactly once with ZERO shuffle and no join at
-    all; Catalyst constant-folds the entity equality per subscription. The
-    compiled expressions are memoized on the dim (see `_compiled`).
+    Default plan (dim of at most COMPILE_MAX_SUBS rows, the realistic case):
+    the subscriptions are **compiled into the plan** — one codegen'd
+    predicate per subscription, the matching ones collected per change with
+    `array_compact`, the reference's single pass over each WAL record
+    (migrations/20260626120000:500-536). The change stream is scanned once
+    with no join and no shuffle; Catalyst constant-folds the entity
+    equality per subscription. The compiled expressions are memoized on the
+    dim (see `_compiled_sets`).
 
-    Fallback plan (`strategy="join"` or dim > COMPILE_MAX_SUBS): broadcast
-    hash join on (schema_name, table_name) with the runtime filter
-    interpreter as residual condition.
-
-    Both plans expose change fields as `c.*` and subscription fields as
-    `s.*` (struct columns in the compiled plan, alias qualifiers in the
-    joined plan) so downstream operators are agnostic to the strategy.
+    Fallback plan (a larger dim): broadcast hash join on (schema_name,
+    table_name) with the runtime filter interpreter as residual condition,
+    grouped by change_id into the same frame (one shuffle).
     """
-    rows = _collect_small_dim(subs) if strategy in ("auto", "compile") else None
+    rows = _collect_small_dim(subs)
     if rows is None:
-        if strategy == "compile":
-            # the caller explicitly asked for the compiled plan (scan
-            # pushdown, _rs_match_sets for the zero-shuffle projection);
-            # silently handing back the joined plan would swap semantics
-            # and plan shape without a trace
-            raise ValueError(
-                f"strategy='compile' requires <= {COMPILE_MAX_SUBS} "
-                "subscriptions; use strategy='auto' to allow the join fallback"
-            )
-        return _joined_pairs(changes, subs)
+        return _joined_sets(changes, subs)
     if not rows:
         empty = local_frame(changes.sparkSession, [], subs.schema)
-        return _joined_pairs(changes.limit(0), empty)
-    src, compiled = _compiled(changes, subs, rows)
-    # pre-explode form: each change with its full visible-subscription array in
-    # ONE row. projection.project_output groups per (role, selected_columns)
-    # within the row from this frame — zero shuffle instead of explode+groupBy.
-    sets = src.filter(compiled.any).select(*compiled.sets_cols)
-    pairs = sets.select("c", F.explode("subs").alias("s"))
-    pairs._rs_match_sets = sets
-    return pairs
+        return _joined_sets(changes.limit(0), empty)
+    return _compiled_sets(changes, subs, rows)
 
 
-def match_changes(changes: DataFrame, subs: DataFrame, strategy: str = "auto") -> DataFrame:
+def match_changes(changes: DataFrame, subs: DataFrame) -> DataFrame:
     """Full J1+A5: change rows annotated with the sorted array of visible
-    subscription ids (the reference's `wal_rls.subscription_ids`).
-
-    Compiled plan: the id set is assembled per change row inside one codegen
-    stage (`array_compact` of per-subscription conditional ids) — no join, no
-    groupBy, no shuffle anywhere. This mirrors the reference's single pass
-    over each WAL record accumulating visible_role_sub_ids
-    (migrations/20260626120000:500-536). The compiled expressions are
-    memoized on the dim (see `_compiled`), so a foreachBatch body can call
-    this on every micro-batch."""
-    rows = _collect_small_dim(subs) if strategy in ("auto", "compile") else None
-    if rows:
-        src, compiled = _compiled(changes, subs, rows)
-        # the disjunction holds <=> the id set is non-empty, so a single
-        # scan-pushable filter replaces the post-projection size() check
-        return src.filter(compiled.any).select(*compiled.ids_cols)
-    if rows is not None:  # empty dim -> no matches
-        return changes.limit(0).withColumn(
-            "subscription_ids", F.lit(None).cast("array<string>")
-        )
-    pairs = _joined_pairs(changes, subs)
-    keep = [f for f in changes.columns if f != "change_id"]
-    return pairs.groupBy(F.col("c.change_id").alias("change_id")).agg(
-        *[F.first(F.col(f"c.{f}")).alias(f) for f in keep],
-        F.sort_array(F.collect_set(F.col("s.subscription_id"))).alias("subscription_ids"),
-    )
+    subscription ids (the reference's `wal_rls.subscription_ids`), projected
+    from the match-set frame: on the compiled plan no join, no groupBy and
+    no shuffle anywhere (migrations/20260626120000:500-536)."""
+    ids = F.sort_array(F.array_distinct(F.transform("subs", lambda s: s["subscription_id"])))
+    return matched_pairs(changes, subs).select("c.*", ids.alias("subscription_ids"))

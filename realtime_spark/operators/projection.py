@@ -21,10 +21,10 @@ Reference behaviors (SURVEY §2.2 P8-P13, §2.4 A2/A4/A5, §4 O5):
   - O5/A2: expensive work is grouped per (claims_role, selected_columns) and
     subscription ids are collected per group (A5).
 
-All pure map/array expressions — no UDFs, stays in codegen. On the compiled
-match (`_rs_match_sets`, kept through apply_rls_policies) the groups form
-within each change's row with no shuffle at all; any other pairs frame pays
-one groupBy shuffle per (change, role, selection group).
+All pure map/array expressions — no UDFs, stays in codegen. The input is the
+match-set frame of cdc.matched_pairs (one row per change with its array of
+matched subscriptions, also after apply_rls_policies): the groups form within
+each change's row with no shuffle at all.
 """
 
 from __future__ import annotations
@@ -97,36 +97,12 @@ _CHANGE_FIELDS = (
 )
 
 
-def _grouped_from_pairs(pairs: DataFrame) -> DataFrame:
-    """Exploded (change × sub) pairs -> one row per (change, role, selection)
-    group with collected ids. Requires a shuffle (groupBy)."""
-    sel = F.col("s.selected_columns")
-    p = pairs.select(
-        *[F.col(f"c.{f}").alias(f) for f in _CHANGE_FIELDS],
-        F.col("s.claims_role").alias("claims_role"),
-        F.col("s.subscription_id").alias("subscription_id"),
-        sel.alias("selected_columns"),
-        # deterministic group key (W2). to_json keeps NULL (keep-all) vs []
-        # (pk-only) vs comma-embedded names distinct — array_join would
-        # conflate all three and F.first would then pick an arbitrary
-        # selection for the merged group
-        F.when(sel.isNull(), F.lit("\x00all"))
-        .otherwise(F.to_json(sel))
-        .alias("sel_key"),
-    )
-    return p.groupBy("change_id", "claims_role", "sel_key").agg(
-        *[F.first(f).alias(f) for f in _CHANGE_FIELDS if f != "change_id"],
-        F.first("selected_columns").alias("selected_columns"),
-        F.sort_array(F.collect_set("subscription_id")).alias("subscription_ids"),
-    ).drop("sel_key")
-
-
 def _grouped_from_sets(sets: DataFrame) -> DataFrame:
-    """Pre-exploded match sets (change + array of matched subs, one row per
-    change — cdc.matched_pairs' `_rs_match_sets`) -> the same grouped shape
-    with ZERO shuffle: the distinct (role, selected_columns) groups and their
-    id sets are computed within the row (the reference's per-role /
-    per-selection loop, migrations/20260626120000:413-417,541-545)."""
+    """Match sets (change `c` + array `subs` of matched subscriptions, one
+    row per change) -> one row per (change, role, selection) group with its
+    sorted id set, with ZERO shuffle: the distinct (role, selected_columns)
+    groups and their id sets are computed within the row (the reference's
+    per-role / per-selection loop, migrations/20260626120000:413-417,541-545)."""
     groups = F.array_distinct(
         F.transform(
             F.col("subs"),
@@ -158,28 +134,23 @@ def _grouped_from_sets(sets: DataFrame) -> DataFrame:
 
 
 def project_output(
-    pairs: DataFrame,
+    sets: DataFrame,
     privileges: DataFrame | None = None,
     max_record_bytes: int = MAX_RECORD_BYTES,
     rls_enabled: bool = False,
 ) -> DataFrame:
-    """matched (change × subscription) pairs -> final CDC output rows.
+    """cdc.matched_pairs match sets -> final CDC output rows.
 
     One output row per (change, claims_role, selected_columns) group with the
     group's visible subscription ids — the reference's per-role/per-selection
-    loop hoisting (O5), within the row on `_rs_match_sets`, else a groupBy.
-
-    Expects the column naming produced by cdc.matched_pairs (c.* / s.*).
+    loop hoisting (O5), formed within each change's row.
     """
-    sets = getattr(pairs, "_rs_match_sets", None)
-    if sets is not None:
-        grouped = _grouped_from_sets(sets)
-    else:
-        grouped = _grouped_from_pairs(pairs)
+    grouped = _grouped_from_sets(sets)
 
     if privileges is not None:
         # post-grouping broadcast join: allowed_columns depends only on the
-        # group keys, and the grouped frame is strictly smaller than the pairs
+        # group keys, and there are at most as many groups as (change,
+        # subscription) pairs
         grouped = grouped.join(
             F.broadcast(privileges),
             ["claims_role", "schema_name", "table_name"],

@@ -515,7 +515,7 @@ def q_rls_row_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     pairs = matched_pairs(changes, subs)
-    out = apply_rls_policies(pairs, pols)
+    out = apply_rls_policies(pairs, pols).select("c", F.explode("subs").alias("s"))
     return out.select(
         F.col("c.change_id").alias("change_id"),
         F.col("s.subscription_id").alias("subscription_id"),
@@ -1831,7 +1831,7 @@ def q_rls_claims_param(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     pairs = matched_pairs(changes, subs)
-    out = apply_rls_policies(pairs, pols)
+    out = apply_rls_policies(pairs, pols).select("c", F.explode("subs").alias("s"))
     return out.select(
         F.col("c.change_id").alias("change_id"),
         F.col("s.subscription_id").alias("subscription_id"),
@@ -1886,6 +1886,7 @@ def q_rls_pg_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
         [{"table": "orders", "claims_role": "authenticated", "policy_expr": expr}],
     )
     out = apply_rls_policies(matched_pairs(changes, subs), pols)
+    out = out.select("c", F.explode("subs").alias("s"))
     return out.select(
         F.col("c.change_id").alias("change_id"),
         F.col("s.subscription_id").alias("subscription_id"),
@@ -1993,6 +1994,7 @@ def q_rls_pg_policy_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
         [{"table": "orders", "claims_role": "authenticated", "policy_expr": expr}],
     )
     out = apply_rls_policies(matched_pairs(changes, subs), pols)
+    out = out.select("c", F.explode("subs").alias("s"))
     return out.select(
         F.col("c.change_id").alias("change_id"),
         F.col("s.subscription_id").alias("subscription_id"),

@@ -2,9 +2,11 @@
 
 Plan shape (load-independent): on the compiled match, match -> RLS ->
 projection with column privileges runs with no shuffle and no scan of a
-Python-built frame. Memo: matched_pairs / match_changes reuse the compiled
-expressions for the same dim and the same change columns, and recompile when
-either changes or the frame is a typed source.
+Python-built frame, also with each stage materialized as the benchmark's
+traced mode does. A dim over COMPILE_MAX_SUBS takes the join path, with one
+shuffle and the same output. Memo: matched_pairs / match_changes reuse the
+compiled expressions for the same dim and the same change columns, and
+recompile when either changes or the frame is a typed source.
 """
 
 from __future__ import annotations
@@ -46,8 +48,9 @@ def _plan_nodes(df) -> list[str]:
     return out
 
 
-def _pipeline(spark, changes):
-    subs = em.subscriptions_df(spark, _SPECS)
+def _pipeline(spark, changes, subs=None, between=lambda df: df):
+    """match -> RLS -> projection; `between` runs on each stage's output."""
+    subs = subs if subs is not None else em.subscriptions_df(spark, _SPECS)
     pols = rls_policies_df(
         spark, [{"table": "orders", "claims_role": "authenticated", "policy_expr": _POLICY}]
     )
@@ -58,9 +61,19 @@ def _pipeline(spark, changes):
             ("anon", "public", "orders"): ["o_orderkey", "o_orderstatus"],
         },
     )
+    sets = between(matched_pairs(changes, subs))
     return project_output(
-        apply_rls_policies(matched_pairs(changes, subs), pols), privileges=priv
+        between(apply_rls_policies(sets, pols)), privileges=priv, rls_enabled=True
     )
+
+
+def _rows(df) -> list[str]:
+    return sorted(r[0] for r in df.select(F.to_json(F.struct("*"))).collect())
+
+
+def _pairs(df) -> list[tuple]:
+    pairs = df.select("c", F.explode("subs").alias("s"))
+    return sorted(tuple(r) for r in pairs.select("c.change_id", "s.subscription_id").collect())
 
 
 @pytest.mark.parametrize("typed", [True, False], ids=["typed_source", "plain_frame"])
@@ -77,24 +90,72 @@ def test_compiled_pipeline_has_no_shuffle_and_no_python_scan(spark, typed):
     assert nodes.count("BroadcastExchangeExec") == 1, nodes  # privileges only
 
 
-def test_rls_keeps_match_sets_on_compiled_path(spark):
+def test_checkpointed_stages_plan_as_untraced(spark):
+    """The benchmark's traced mode materializes each stage with
+    localCheckpoint(eager=True): the later stages must still run the
+    untraced plan (no shuffle) and return the same rows."""
+    changes = changes_from_orders(spark, SF_DIR).select("*")
+    traced = _pipeline(spark, changes, between=lambda df: df.localCheckpoint(eager=True))
+    nodes = _plan_nodes(traced)
+    assert "ShuffleExchangeExec" not in nodes, nodes
+    assert nodes.count("BroadcastExchangeExec") == 1, nodes  # privileges only
+    want = _rows(_pipeline(spark, changes))
+    assert want and _rows(traced) == want
+
+
+def test_dim_over_compile_max_subs_takes_the_join_path(spark, monkeypatch):
+    changes = changes_from_orders(spark, SF_DIR).select("*")
+    # the filtered specs plus filterless ones (a small compiled tree)
+    specs = _SPECS + [
+        {"subscription_id": f"sub-{i}", "table": "orders",
+         "action": ("INSERT", "UPDATE", "DELETE")[i % 3],
+         "claims_role": ("authenticated", "anon")[i % 2]}
+        for i in range(cdc.COMPILE_MAX_SUBS + 1 - len(_SPECS))
+    ]
+    joined = _pipeline(spark, changes, em.subscriptions_df(spark, specs))
+    nodes = _plan_nodes(joined)
+    assert "BroadcastHashJoinExec" in nodes, nodes
+    assert nodes.count("ShuffleExchangeExec") == 1, nodes  # the group by change
+
+    monkeypatch.setattr(cdc, "COMPILE_MAX_SUBS", len(specs))
+    compiled = _pipeline(spark, changes, em.subscriptions_df(spark, specs))
+    assert "ShuffleExchangeExec" not in _plan_nodes(compiled)
+    want = _rows(compiled)
+    assert want and _rows(joined) == want
+
+
+def test_both_match_plans_return_the_same_frame(spark, monkeypatch):
+    changes = changes_from_orders(spark, SF_DIR).select("*")
+    subs = em.subscriptions_df(spark, _SPECS)
+    compiled = matched_pairs(changes, subs)
+    monkeypatch.setattr(cdc, "COMPILE_MAX_SUBS", 0)
+    joined = matched_pairs(changes, subs)
+    assert compiled.columns == joined.columns == ["c", "subs"]
+    assert [f.dataType.simpleString() for f in compiled.schema] == [
+        f.dataType.simpleString() for f in joined.schema
+    ]
+
+    def sets(df):  # the order within `subs` is the plan's
+        subs_json = F.sort_array(F.transform("subs", lambda s: F.to_json(s)))
+        return _rows(df.select("c", subs_json.alias("subs")))
+
+    want = sets(compiled)
+    assert want and sets(joined) == want
+
+
+def test_rls_keeps_match_sets_on_compiled_path(spark, monkeypatch):
     changes = changes_from_orders(spark, SF_DIR).select("*")
     subs = em.subscriptions_df(spark, _SPECS)
     pols = rls_policies_df(
         spark, [{"table": "orders", "claims_role": "authenticated", "policy_expr": _POLICY}]
     )
     compiled = apply_rls_policies(matched_pairs(changes, subs), pols)
-    assert getattr(compiled, "_rs_match_sets", None) is not None
-    joined = apply_rls_policies(matched_pairs(changes, subs, strategy="join"), pols)
+    assert "subs" in compiled.columns
+    monkeypatch.setattr(cdc, "COMPILE_MAX_SUBS", 0)
+    joined = apply_rls_policies(matched_pairs(changes, subs), pols)
 
-    def pairs(df):
-        return sorted(
-            (r[0], r[1])
-            for r in df.select("c.change_id", "s.subscription_id").collect()
-        )
-
-    got = pairs(compiled)
-    assert got == pairs(joined)
+    got = _pairs(compiled)
+    assert got == _pairs(joined)
     # authenticated subscribers only see open orders; anon has no policy
     anon = {cid for cid, sid in got if sid == "sub-anon"}
     authed = {cid for cid, sid in got if sid != "sub-anon"}
@@ -137,9 +198,7 @@ def test_memo_reuses_compiled_match_across_batches(spark, monkeypatch):
     fresh = em.subscriptions_df(spark, _SPECS)  # new dim: compiles afresh
     assert reused == _ids(match_changes(batch2, fresh))
     assert len(built) == 2 * len(_SPECS)
-    assert sorted(pairs.select("c.change_id", "s.subscription_id").collect()) == sorted(
-        matched_pairs(batch2, fresh).select("c.change_id", "s.subscription_id").collect()
-    )
+    assert _pairs(pairs) == _pairs(matched_pairs(batch2, fresh))
 
 
 def test_memo_recompiles_on_changed_subscriptions_columns_or_typed_source(

@@ -279,6 +279,7 @@ def test_join_drives_subscription_match(spark):
     )
     got = (
         matched_pairs(changes, subs)
+        .select("c", F.explode("subs").alias("s"))
         .groupBy(F.col("s.subscription_id").alias("sid"))
         .count()
         .collect()

@@ -12,6 +12,7 @@ from datetime import datetime
 from pyspark.sql import functions as F
 
 import __spark_entry__ as em
+from realtime_spark.operators import cdc
 from realtime_spark.operators.cdc import matched_pairs
 from realtime_spark.operators.messages import (
     apply_retention,
@@ -63,26 +64,28 @@ class TestPartitionedStore:
 
 
 class TestMatchStrategyEquivalence:
-    def test_joined_fallback_matches_compiled(self, spark):
+    def test_joined_fallback_matches_compiled(self, spark, monkeypatch):
         changes = changes_from_orders(spark, SF_DIR)
         subs = em.subscriptions_df(spark, em._MULTI_SPECS)
 
-        def pairs(strategy):
-            df = matched_pairs(changes, subs, strategy=strategy).select(
+        def pairs():
+            df = matched_pairs(changes, subs).select("c", F.explode("subs").alias("s")).select(
                 F.col("c.change_id").alias("change_id"),
                 F.col("s.subscription_id").alias("subscription_id"),
             )
             return {(r["change_id"], r["subscription_id"]) for r in df.collect()}
 
-        compiled = pairs("compile")
-        joined = pairs("join")
+        compiled = pairs()
+        monkeypatch.setattr(cdc, "COMPILE_MAX_SUBS", 0)
+        joined = pairs()
         assert compiled == joined
         assert len(compiled) > 0
 
-    def test_joined_plan_is_broadcast(self, spark):
+    def test_joined_plan_is_broadcast(self, spark, monkeypatch):
         changes = changes_from_orders(spark, SF_DIR)
         subs = em.subscriptions_df(spark, em._MULTI_SPECS)
-        p = _plan(matched_pairs(changes, subs, strategy="join"))
+        monkeypatch.setattr(cdc, "COMPILE_MAX_SUBS", 0)
+        p = _plan(matched_pairs(changes, subs))
         assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
         assert "SortMergeJoin" not in p
 

@@ -6,7 +6,7 @@ comment) anywhere in the package, `tests/`, `bench.py` or
 tokens count too: before Python 3.12 an f-string, and the calls inside
 it, is one string token, and a name can be reached through a registry key
 or `getattr`. A docstring or comment that merely mentions a name is not a
-caller.
+caller, and neither is an import in an `__init__.py`: a re-export.
 """
 
 from __future__ import annotations
@@ -39,11 +39,25 @@ def _docstring_lines(tree: ast.Module) -> set[int]:
     }
 
 
-def token_counts(text: str) -> Counter:
-    """Identifier occurrences in code and non-docstring string tokens."""
+def _import_lines(tree: ast.Module) -> set[int]:
+    return {
+        line
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Import, ast.ImportFrom))
+        for line in range(node.lineno, node.end_lineno + 1)
+    }
+
+
+def token_counts(text: str, skip_imports: bool = False) -> Counter:
+    """Identifier occurrences in code and non-docstring string tokens,
+    leaving out import statements when `skip_imports`."""
     counts: Counter = Counter()
-    docs = _docstring_lines(ast.parse(text))
+    tree = ast.parse(text)
+    docs = _docstring_lines(tree)
+    skipped = _import_lines(tree) if skip_imports else set()
     for tok in tokenize.generate_tokens(io.StringIO(text).readline):
+        if tok.start[0] in skipped:
+            continue
         if tok.type == tokenize.NAME:
             counts[tok.string] += 1
         elif tok.type == tokenize.STRING and tok.start[0] not in docs:
@@ -66,7 +80,7 @@ def callerless(texts: dict[str, str], package: set[str]) -> list[str]:
     defs: Counter = Counter()
     where: list[tuple[str, str]] = []
     for path, text in texts.items():
-        counts.update(token_counts(text))
+        counts.update(token_counts(text, skip_imports=path.endswith("__init__.py")))
         if path in package:
             for name in top_level_defs(text):
                 defs[name] += 1
@@ -94,5 +108,19 @@ def test_guard_flags_an_added_callerless_function():
         f"\n\ndef {name}(df):\n"
         f'    """Mentions {name} only in its docstring."""\n'
         f"    return df  # {name}\n"
+    )
+    assert callerless(texts, package) == [f"{path}::{name}"]
+
+
+def test_guard_flags_a_function_that_is_only_re_exported():
+    texts, package = _texts()
+    path = "realtime_spark/operators/dedup.py"
+    name = "_".join(("guard", "probe", "reexported"))
+    texts[path] += f"\n\ndef {name}(df):\n    return df\n"
+    init = "realtime_spark/operators/__init__.py"
+    texts[init] += (
+        "from realtime_spark.operators.dedup import (  # noqa: F401\n"
+        f"    {name},\n"
+        ")\n"
     )
     assert callerless(texts, package) == [f"{path}::{name}"]

@@ -9,6 +9,7 @@ row-by-row Python reimplementation of the policy.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from realtime_spark.functions.pg_policy import (
     CompiledPolicy,
@@ -285,7 +286,10 @@ def test_eval_claims_cast_string_context(spark):
     pols = rls_policies_df(spark, [{"table": "orders", "policy_expr": expr}])
     got = {
         r["change_id"]
-        for r in apply_rls_policies(pairs, pols).select("c.change_id").collect()
+        for r in apply_rls_policies(pairs, pols)
+        .select("c", F.explode("subs").alias("s"))
+        .select("c.change_id")
+        .collect()
     }
     want = _expected_rows(changes, lambda rec: rec.get("o_orderstatus") == "P")
     assert got == want and want
@@ -325,7 +329,7 @@ def spark():
 SF = "/root/testdata/sf0.001"
 
 
-def _pairs(spark, claims=None, strategy="auto"):
+def _pairs(spark, claims=None):
     import __spark_entry__ as em
     from realtime_spark.operators.cdc import matched_pairs
     from realtime_spark.sources.testdata import changes_from_orders
@@ -335,7 +339,7 @@ def _pairs(spark, claims=None, strategy="auto"):
     if claims:
         spec["claims"] = claims
     subs = em.subscriptions_df(spark, [spec])
-    return changes, matched_pairs(changes, subs, strategy=strategy)
+    return changes, matched_pairs(changes, subs)
 
 
 def _expected_rows(changes, pred):
@@ -359,7 +363,10 @@ def test_eval_claims_policy(spark):
     )
     got = {
         r["change_id"]
-        for r in apply_rls_policies(pairs, pols).select("c.change_id").collect()
+        for r in apply_rls_policies(pairs, pols)
+        .select("c", F.explode("subs").alias("s"))
+        .select("c.change_id")
+        .collect()
     }
     want = _expected_rows(
         changes,
@@ -379,7 +386,10 @@ def test_eval_numeric_cast_policy(spark):
     pols = rls_policies_df(spark, [{"table": "orders", "policy_expr": expr}])
     got = {
         r["change_id"]
-        for r in apply_rls_policies(pairs, pols).select("c.change_id").collect()
+        for r in apply_rls_policies(pairs, pols)
+        .select("c", F.explode("subs").alias("s"))
+        .select("c.change_id")
+        .collect()
     }
     want = _expected_rows(
         changes,
@@ -433,7 +443,10 @@ def test_eval_concat_numeric_policy(spark):
     pols = rls_policies_df(spark, [{"table": "orders", "policy_expr": expr}])
     got = {
         r["change_id"]
-        for r in apply_rls_policies(pairs, pols).select("c.change_id").collect()
+        for r in apply_rls_policies(pairs, pols)
+        .select("c", F.explode("subs").alias("s"))
+        .select("c.change_id")
+        .collect()
     }
 
     def _pg_concat(rec):
@@ -458,7 +471,10 @@ def test_eval_numeric_text_policy(spark):
     pols = rls_policies_df(spark, [{"table": "orders", "policy_expr": expr}])
     got = {
         r["change_id"]
-        for r in apply_rls_policies(pairs, pols).select("c.change_id").collect()
+        for r in apply_rls_policies(pairs, pols)
+        .select("c", F.explode("subs").alias("s"))
+        .select("c.change_id")
+        .collect()
     }
     want = _expected_rows(
         changes, lambda rec: (rec.get("o_totalprice") or "").endswith("4")
@@ -499,14 +515,17 @@ def test_eval_exists_policy(spark):
 
 
 @pytest.mark.parametrize("strategy", ["auto", "join"])
-def test_overlapping_permissive_policies_or_together(spark, strategy):
+def test_overlapping_permissive_policies_or_together(spark, monkeypatch, strategy):
     """Two policies on one (schema, table, role) are permissive policies:
     Postgres ORs them, so a pair passes once when either holds — never
     twice when both do, and still fail-closed when neither does. Checked on
-    the compiled match (RLS inside the match-set row) and on the join path."""
+    the compiled match and on the join path (a dim over COMPILE_MAX_SUBS)."""
+    from realtime_spark.operators import cdc
     from realtime_spark.operators.auth import apply_rls_policies, rls_policies_df
 
-    changes, pairs = _pairs(spark, strategy=strategy)
+    if strategy == "join":
+        monkeypatch.setattr(cdc, "COMPILE_MAX_SUBS", 0)
+    changes, pairs = _pairs(spark)
     tm = {"o_orderstatus": "text", "o_totalprice": "numeric"}
     pols = rls_policies_df(
         spark,
@@ -517,7 +536,10 @@ def test_overlapping_permissive_policies_or_together(spark, strategy):
     )
     got = [
         r["change_id"]
-        for r in apply_rls_policies(pairs, pols).select("c.change_id").collect()
+        for r in apply_rls_policies(pairs, pols)
+        .select("c", F.explode("subs").alias("s"))
+        .select("c.change_id")
+        .collect()
     ]
     assert len(got) == len(set(got)), "a pair passing both policies was emitted twice"
     want = _expected_rows(

@@ -580,6 +580,8 @@ L_ROWS = [
 
 @pytest.fixture(scope="module")
 def exists_pairs(spark):
+    from pyspark.sql import functions as F
+
     # record present unless DELETE; old_record present unless INSERT —
     # mirrors the wal2json shape the production pairs carry
     rows = [
@@ -598,10 +600,14 @@ def exists_pairs(spark):
         "change_id int, action string, schema_name string, table_name string, "
         "record map<string,string>, old_record map<string,string>",
     )
+    # the match-set shape of cdc.matched_pairs: each change with its one
+    # matched subscription
     subs = spark.createDataFrame(
-        [(CLAIMS_ROLE, CLAIMS)], "claims_role string, claims map<string,string>"
+        [([(CLAIMS_ROLE, CLAIMS)],)],
+        "subs array<struct<claims_role:string,claims:map<string,string>>>",
     )
-    return changes.alias("c").crossJoin(subs.alias("s")).localCheckpoint()
+    c = F.struct(*changes.columns).alias("c")
+    return changes.select(c).crossJoin(subs).localCheckpoint()
 
 
 @pytest.fixture(scope="module")
