@@ -26,6 +26,8 @@ Spark-first design for 100 TB:
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -114,13 +116,15 @@ def apply_truncates(
     return joined.filter(keep).drop("_trunc_v")
 
 
-def merge_snapshots(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Merge two tombstone-preserving snapshots: per key, the row with the
-    larger (last_ts, last_seq) version wins; n_versions accumulates. Both
-    inputs must come from materialize_latest(keep_tombstones=True). The
-    result still carries tombstones — filter `last_action != 'DELETE'` when
-    serving. Same partial-aggregated max_by shape as the base fold."""
-    u = a.unionByName(b)
+def merge_snapshots(*snapshots: DataFrame) -> DataFrame:
+    """Merge tombstone-preserving snapshots: per key, the row with the
+    larger (last_ts, last_seq) version wins; n_versions accumulates. Every
+    input must come from materialize_latest(keep_tombstones=True); one
+    frame holding several snapshots' rows (the epochs of the streaming
+    view) merges the same way. The result still carries tombstones —
+    filter `last_action != 'DELETE'` when serving. Same partial-aggregated
+    max_by shape as the base fold."""
+    u = reduce(DataFrame.unionByName, snapshots)
     payload = F.struct(
         F.col("record").alias("record"),
         F.col("last_action").alias("action"),

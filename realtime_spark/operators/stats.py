@@ -122,8 +122,8 @@ def cusum_from_hourly(
 ) -> DataFrame:
     """The CUSUM evaluation over an already-aggregated (keys, hour, cnt)
     frame — shared by the batch detector above and the streaming monitor
-    (streaming/monitors.py), which folds counts incrementally and re-runs
-    this on the accumulated store."""
+    (streaming/monitors.py), which writes each micro-batch's delta counts
+    as one store epoch and runs this on their sum (``read_counts``)."""
     per_key = Window.partitionBy(*keys)
     stats = hourly.select(
         "*",

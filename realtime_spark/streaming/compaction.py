@@ -1,19 +1,24 @@
-"""The store-lifecycle engine of the streaming ingest stores, and their
-epoch compaction.
+"""The store-lifecycle engine of the streaming stores, and their epoch
+compaction.
 
-The three streaming ingest jobs (ingest.py, vector_ingest.py,
-search_ingest.py) each declare their store once, as a ``StoreSpec``: the
-list of its epochal outputs, each with its one on-disk layout (partition
-and sort columns) and, where compaction is not a plain rewrite, its fold.
-The store modules keep only their own logic — the dedup/LSH, IVF and BM25
-epoch bodies and the live-store readers; this module runs the rest.
+Five ``foreachBatch`` stores each declare their store once, as a
+``StoreSpec``: the list of its epochal outputs, each with its one on-disk
+layout (partition and sort columns) and, where compaction is not a plain
+rewrite, its fold. They are the three ingest stores (ingest.py,
+vector_ingest.py, search_ingest.py), the two count monitors
+(monitors.py, ``COUNTS``) and the materialized view (materialize_stream.py,
+``SNAPSHOT``). The store modules keep only their own logic — the
+dedup/LSH, IVF, BM25, count and latest-state epoch bodies and the
+live-store readers; this module runs the rest.
 
 The epoch protocol
 ------------------
 
 Each store writes under one root, ``<root>/<output>/ingest_epoch=<tag>/``:
 the seed writes tag ``seed`` in every output (an empty partition where it
-has no rows), micro-batch N writes tag ``e{N}``. ``StoreSpec.epoch`` runs
+has no rows), micro-batch N writes tag ``e{N}``. Only stores whose bodies
+read their outputs (the ingest stores) are seeded; a monitor or the view
+writes its batch's own rows and starts at ``e0``. ``StoreSpec.epoch`` runs
 one write:
 
     1. the rewind guard (``assert_epoch_admissible``) over every output;
@@ -29,16 +34,18 @@ Exactly-once without markers: every epoch writes its outputs by
 OVERWRITING its own ``ingest_epoch=e{N}`` directories. The file-source
 checkpoint replays a failed epoch with the same epoch id and the same
 input files, the pipeline is deterministic, so a replay rewrites
-byte-identical content instead of appending duplicates — the same
-stage-then-swap idempotency the version stores use, expressed through
-partition-directory overwrite. The writes of one epoch are not mutually
-atomic: a crash between them leaves a torn epoch (any subset of its
-directories) until the replay rewrites them all, and own-epoch exclusion
+byte-identical content instead of appending duplicates — for the additive
+stores (counts, ``n_versions``) as much as for the deduping ones. The
+writes of one epoch are not mutually atomic: a crash between them leaves
+a torn epoch (any subset of its directories) until the replay rewrites
+them all, and own-epoch exclusion
 keeps the replay from reading its own partial output. This is the
 ``foreachBatch`` contract of the Structured Streaming paper: exactly-once
 delivery through deterministic replay into idempotent sinks.
-``run_store_stream`` is the one ``foreachBatch`` wiring;
-``drop_redelivered`` is the re-delivery guard of the two id-keyed stores.
+``run_store_stream`` is the one ``foreachBatch`` wiring, and it refuses a
+fresh checkpoint over a store that already holds epochs (its ids would
+restart at 0 and overwrite or hide them); ``drop_redelivered`` is the
+re-delivery guard of the two id-keyed stores.
 
 Compaction
 ----------
@@ -90,9 +97,10 @@ semantics (local/NFS/fuse); an object-store deployment would swap the two
 rename calls for its atomic-commit primitive.
 
 Equivalence guarantee (asserted by tests/test_compaction.py): probe,
-search, and BM25 results off the store are bit-identical before and after
-compaction, and ingest can continue appending epochs afterwards (the
-manifest's min_epoch admits every epoch id above the folded range).
+search, BM25, count and snapshot results off the store are bit-identical
+before and after compaction, and ingest can continue appending epochs
+afterwards (the manifest's min_epoch admits every epoch id above the
+folded range).
 """
 
 from __future__ import annotations
@@ -149,15 +157,17 @@ def read_store(spark: SparkSession, store: str) -> DataFrame:
 
 
 class EpochRewindError(RuntimeError):
-    """A micro-batch arrived with an epoch id below a compacted store's
-    ``min_epoch``. Epoch ids come from the streaming checkpoint; after a
-    compaction folded epochs [0..N] the manifest admits only e{N+1}+, so a
-    restart against a FRESH checkpoint (batch ids restart at 0) would write
-    partitions the manifest silently hides — every read and every dedup
-    anti-join would stop seeing newly accepted rows with no error anywhere.
-    Fail loudly at write time instead. The reference's replication protocol
-    enforces the same monotonicity by acking a monotone ``wal_end`` so a
-    slot can never silently rewind
+    """A micro-batch arrived with an epoch id the store has already used.
+    Epoch ids come from the streaming checkpoint, so a restart against a
+    FRESH checkpoint (batch ids restart at 0) rewinds them. After a
+    compaction folded epochs [0..N] the manifest admits only e{N+1}+, so
+    the rewound writes land in partitions the manifest silently hides —
+    every read and every dedup anti-join would stop seeing newly accepted
+    rows with no error anywhere. Without a compaction they overwrite the
+    earlier lineage's epochs (its accepted rows vanish, its counts are
+    replaced). Fail loudly at write time instead. The reference's
+    replication protocol enforces the same monotonicity by acking a
+    monotone ``wal_end`` so a slot can never silently rewind
     (/root/reference/lib/realtime/tenants/replication_connection.ex:349-356).
     Recovery: resume with the original checkpoint directory, or re-seed the
     store root if the checkpoint is genuinely lost."""
@@ -255,8 +265,8 @@ def compact_store(
         # install an explicit everything-visible manifest BEFORE any
         # directory appears under a c-name: without it, a gen-0 crash
         # between the rename and the commit would leave ingest_epoch=c0
-        # visible to manifest-less readers (doubled rows). The three
-        # pipelines only ever write the tags 'seed' and 'e{N}', so
+        # visible to manifest-less readers (doubled rows). The stores
+        # only ever write the tags 'seed' and 'e{N}', so
         # {base: seed, min_epoch: 0} is byte-equivalent to no manifest.
         manifest = {"base": "seed", "min_epoch": 0, "generation": -1}
         tmp0 = _manifest_path(store) + ".tmp"
@@ -308,7 +318,7 @@ def compact_store(
 
 
 # ---------------------------------------------------------------------------
-# the store-lifecycle engine: one spec per store, one engine for all three
+# the store-lifecycle engine: one spec per store, one engine for all five
 # ---------------------------------------------------------------------------
 
 
@@ -359,7 +369,7 @@ class Output:
 
 @dataclass(frozen=True)
 class StoreSpec:
-    """One streaming ingest store: its epochal outputs, declared once. The
+    """One streaming store: its epochal outputs, declared once. The
     rewind guard, the seed and epoch writes, compaction and the scheduled
     loop all run off this list."""
 
@@ -480,7 +490,15 @@ def drop_redelivered(
     )
 
 
+def _holds_epochs(store: str) -> bool:
+    manifest = read_manifest(store)
+    return store_epoch_count(store) > 0 or (
+        manifest is not None and int(manifest["min_epoch"]) > 0
+    )
+
+
 def run_store_stream(
+    spec: StoreSpec,
     stream: DataFrame,
     checkpoint: str,
     process: Callable[..., None],
@@ -490,12 +508,30 @@ def run_store_stream(
     """Wire a store's micro-batch body onto a streaming source as one
     availableNow drain; returns the started StreamingQuery. foreachBatch
     calls ``process(batch_df, epoch_id, root, **opts)`` with the
-    checkpoint's epoch id — the unit a replay re-executes. The store must
-    be seeded: its outputs are the pipeline's inputs as well."""
+    checkpoint's epoch id — the unit a replay re-executes. Only a store
+    whose body reads its outputs must be seeded first.
+
+    A FRESH checkpoint (no ``{checkpoint}/metadata`` before the start)
+    over a store that already holds ``e*`` epochs, or a manifest with
+    ``min_epoch > 0``, restarts the epoch ids at 0: its batches would
+    overwrite the earlier lineage's epochs or land below the manifest.
+    Its first batch raises ``EpochRewindError`` instead, which surfaces
+    through ``awaitTermination``."""
+    fresh = not os.path.exists(os.path.join(checkpoint, "metadata"))
+    rewound = fresh and any(_holds_epochs(f"{root}/{n}") for n in spec.names)
+
+    def body(batch_df: DataFrame, epoch_id: int) -> None:
+        if rewound:
+            raise EpochRewindError(
+                f"fresh checkpoint {checkpoint!r} over store {root!r}, which "
+                "already holds epochs of another checkpoint: its epoch ids "
+                "restart at 0 and would overwrite or hide them — resume with "
+                "the original checkpoint, or re-seed the store."
+            )
+        process(batch_df, epoch_id, root, **opts)
+
     return (
-        stream.writeStream.foreachBatch(
-            lambda batch_df, epoch_id: process(batch_df, epoch_id, root, **opts)
-        )
+        stream.writeStream.foreachBatch(body)
         .outputMode("append")
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)

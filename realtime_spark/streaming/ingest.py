@@ -169,7 +169,9 @@ def run_ingest_stream(
     """Wire the ingest pipeline onto a streaming document source. Returns
     the started StreamingQuery. `seed_ingest_state` must have run (the
     stores are the pipeline's inputs as well as its outputs)."""
-    return run_store_stream(stream, checkpoint, process_ingest_batch, root, gate=gate)
+    return run_store_stream(
+        INGEST_STORE, stream, checkpoint, process_ingest_batch, root, gate=gate
+    )
 
 
 def accepted_docs(spark: SparkSession, root: str) -> DataFrame:

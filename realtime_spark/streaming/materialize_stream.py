@@ -1,90 +1,61 @@
 """Streaming materialized view: fold a CDC stream into a continuously
 updated latest-state snapshot (streaming lift of operators/materialize.py).
 
-Per micro-batch: fold the batch (tombstones kept), merge with the stored
-snapshot, write the new snapshot version. The store is a directory of
-versioned snapshot subdirs (`v{n}`, n = max existing + 1, NOT the epoch id
-— epochs restart at 0 on a fresh checkpoint and would collide with or
-fall below existing versions) with the latest discovered by max suffix —
-a poor-man's transaction log: the snapshot is staged then renamed into
-place in ONE os.rename, so a crash mid-write leaves the previous
-consistent snapshot live; the predecessor version is retained one fold
-for concurrent readers (same rules as monitors._fold_into_store and the
-WAP store). The checkpointed source offsets replay the batch after a
-crash (idempotent: re-merging the same changes is a no-op because max_by
-picks the same winners).
+Per micro-batch: fold the batch (tombstones kept) and write it as one
+epoch of the ``SNAPSHOT`` store (``<store>/snapshot/ingest_epoch=e{N}/
+table_name=*/``) through the store-lifecycle engine
+(streaming/compaction.py). ``serve_snapshot`` merges the visible epochs
+with ``merge_snapshots`` — per key, the largest (ts, seq) version wins and
+``n_versions`` sums — and compaction folds them into one base with the
+same merge. A replayed micro-batch overwrites its own epoch with the same
+fold, so its changes are counted once.
 
-At 100 TB the versioned-overwrite becomes a Delta/Iceberg MERGE INTO keyed
-on (schema, table, pk) — the fold/merge DataFrame shapes stay identical;
-only the sink changes. Snapshot partitioning by table_name keeps per-table
-reads pruned.
+At 100 TB the epoch store becomes a Delta/Iceberg MERGE INTO keyed on
+(schema, table, pk) — the fold/merge DataFrame shapes stay identical;
+only the sink changes. Partitioning by table_name keeps per-table reads
+pruned.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
 from realtime_spark.operators.materialize import materialize_latest, merge_snapshots
+from realtime_spark.streaming.compaction import (
+    Output,
+    StoreSpec,
+    read_store,
+    run_store_stream,
+)
 
-# one shared version-dir lister across all three versioned stores
-from realtime_spark.operators.publish import _version_dirs as _versions  # noqa: E402
-
-
-def read_snapshot(spark: SparkSession, store_dir: str) -> DataFrame | None:
-    """Latest committed snapshot (tombstones included), or None."""
-    vs = _versions(store_dir)
-    if not vs:
-        return None
-    return spark.read.parquet(os.path.join(store_dir, f"v{vs[-1]}"))
+SNAPSHOT = StoreSpec(
+    (Output("snapshot", partition="table_name", fold=merge_snapshots),)
+)
 
 
 def serve_snapshot(spark: SparkSession, store_dir: str) -> DataFrame | None:
-    """The queryable view: latest snapshot minus tombstones."""
-    snap = read_snapshot(spark, store_dir)
-    return None if snap is None else snap.filter("last_action <> 'DELETE'")
+    """The queryable view: the merged snapshot minus tombstones, or None
+    before the first epoch."""
+    store = f"{store_dir}/snapshot"
+    if not os.path.isdir(store):
+        return None
+    snap = merge_snapshots(read_store(spark, store).drop("ingest_epoch"))
+    return snap.filter("last_action <> 'DELETE'")
 
 
-def run_materialize_stream(
-    stream: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-    seq_col: str = "seq",
-    ts_col: str = "commit_timestamp",
-    available_now: bool = True,
-    trigger_ms: int = 100,
-):
-    """Maintain the latest-state store from a streaming change source."""
-    spark = stream.sparkSession
+def process_materialize_batch(batch_df: DataFrame, epoch_id: int, root: str) -> None:
+    """One micro-batch: overwrite epoch ``epoch_id`` with the batch's
+    latest state per key, tombstones kept."""
+    with SNAPSHOT.epoch(batch_df, epoch_id, root) as ep:
+        ep.write("snapshot", materialize_latest(batch_df, keep_tombstones=True))
 
-    def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        folded = materialize_latest(
-            batch_df, seq_col=seq_col, ts_col=ts_col, keep_tombstones=True
-        )
-        prev = read_snapshot(spark, store_dir)
-        new = folded if prev is None else merge_snapshots(prev, folded)
-        # next version = max existing + 1 (epoch ids restart on a fresh
-        # checkpoint and a replayed epoch would overwrite the very version
-        # it is reading); stage + one rename so a partial write is never
-        # discoverable as latest
-        vs = _versions(store_dir)
-        nxt = (vs[-1] + 1) if vs else 0
-        stage = os.path.join(store_dir, f"_stage_v{nxt}")
-        shutil.rmtree(stage, ignore_errors=True)
-        new.write.mode("overwrite").partitionBy("table_name").parquet(stage)
-        os.rename(stage, os.path.join(store_dir, f"v{nxt}"))
-        # retain the predecessor one fold for concurrent serve_snapshot
-        # readers; drop everything older
-        for v in vs[:-1]:
-            shutil.rmtree(os.path.join(store_dir, f"v{v}"), ignore_errors=True)
 
-    writer = stream.writeStream.foreachBatch(on_batch).option(
-        "checkpointLocation", checkpoint_dir
+def run_materialize_stream(stream: DataFrame, store_dir: str, checkpoint_dir: str):
+    """Maintain the latest-state store from a streaming change source
+    (``seq`` / ``commit_timestamp`` versions). Returns the started
+    StreamingQuery."""
+    return run_store_stream(
+        SNAPSHOT, stream, checkpoint_dir, process_materialize_batch, store_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_ms} milliseconds")
-    return writer.start()

@@ -1,18 +1,17 @@
-"""Streaming telemetry monitors: incremental hourly-count fold + CUSUM /
-median-MAD evaluation over the accumulated counts.
+"""Streaming telemetry monitors: per-batch hourly and value-bin count
+stores + CUSUM / quantile evaluation over their sum.
 
 The batch detectors (operators/stats.py) are pure functions of the per-key
-hourly count frame; the streaming lift therefore only has to maintain that
-frame incrementally — per micro-batch, fold the batch's (key, hour) counts
-into a running count store, then re-evaluate the detector on the
-accumulated frame. The sum-merge fold is NOT naturally idempotent (unlike
-materialize_stream's max/latest fold), so each published version carries
-the (checkpoint query id, epoch_id) it folded and a replayed at-least-once
-micro-batch of the same lineage is skipped rather than double-added, while
-a fresh pipeline whose epochs restart at 0 still folds (_fold_into_store).
-Monitor
-state is |keys x hours| integers — bounded by the time range, never by the
-event count, which is what makes re-evaluation per batch affordable.
+count frame; the streaming lift therefore only has to maintain that frame
+incrementally. Each micro-batch writes ONLY its own delta counts as one
+epoch of a ``COUNTS`` store (``<store>/counts/ingest_epoch=e{N}``) through
+the store-lifecycle engine (streaming/compaction.py), and ``read_counts``
+sums the visible epochs. A replayed micro-batch overwrites its own epoch
+with the same delta, so the additive fold counts each event once;
+compaction folds the epochs with the same sum. Monitor state is
+|keys x hours| (or |keys x bins|) integers per epoch until compaction
+folds them into one base — bounded by the key and time range, never by
+the event count, which is what makes re-evaluation per batch affordable.
 
 At 100 TB the count store becomes a Delta table with MERGE (same shapes);
 re-evaluation stays cheap because the detector input is the aggregated
@@ -23,139 +22,88 @@ from bucket counters, not from raw events (rate_counter.ex:197-224).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.listener import StreamingQueryListener
 
 from realtime_spark.functions.timeutil import epoch_seconds
-from realtime_spark.operators.stats import BASE_EPOCH
+from realtime_spark.operators.stats import BASE_EPOCH, value_bin
+from realtime_spark.streaming.compaction import (
+    Output,
+    StoreSpec,
+    read_store,
+    run_store_stream,
+)
 
 
-_EPOCH_MARKER = "_applied_epoch.txt"
+def sum_counts(counts: DataFrame) -> DataFrame:
+    """The one fold of a count store: sum the count (the last column) over
+    every other column. Shared by ``read_counts`` and compaction."""
+    *group, cnt = counts.columns
+    return counts.groupBy(*group).agg(F.sum(cnt).cast("bigint").alias(cnt))
 
-# one shared version-dir lister with the WAP store (same v{n} scheme);
-# a fix there reaches here
-from realtime_spark.operators.publish import _version_dirs as _versions  # noqa: E402
+
+COUNTS = StoreSpec((Output("counts", fold=sum_counts),))
 
 
 def read_counts(spark: SparkSession, store_dir: str) -> DataFrame | None:
-    vs = _versions(store_dir)
-    if not vs:
+    """The accumulated counts: the sum of every visible epoch, or None
+    before the first epoch."""
+    store = f"{store_dir}/counts"
+    if not os.path.isdir(store):
         return None
-    return spark.read.parquet(os.path.join(store_dir, f"v{vs[-1]}"))
+    return sum_counts(read_store(spark, store).drop("ingest_epoch"))
 
 
-def _checkpoint_query_id(checkpoint_dir: str) -> str | None:
-    """The streaming query id Spark persists in {checkpoint}/metadata —
-    stable across restarts FROM the checkpoint, fresh when the checkpoint
-    is fresh. Scoping the idempotency marker to it distinguishes a genuine
-    at-least-once replay (same lineage, same epoch -> skip) from a new
-    pipeline run against an existing store whose epoch ids restart at 0
-    (different lineage -> fold)."""
-    import json
-
-    try:
-        with open(os.path.join(checkpoint_dir, "metadata")) as fh:
-            return json.load(fh).get("id")
-    except (OSError, ValueError):
-        return None
-
-
-def _applied_marker(store_dir: str) -> str | None:
-    """'{query_id}:{epoch_id}' folded into the latest version, or None."""
-    vs = _versions(store_dir)
-    if not vs:
-        return None
-    marker = os.path.join(store_dir, f"v{vs[-1]}", _EPOCH_MARKER)
-    try:
-        with open(marker) as fh:
-            return fh.read().strip()
-    except OSError:
-        return None
-
-
-def _fold_into_store(
-    merged: DataFrame, store_dir: str, marker_value: str
+def process_hourly_batch(
+    batch_df: DataFrame, epoch_id: int, root: str, keys: list[str]
 ) -> None:
-    """Publish `merged` as the next store version, atomically paired with
-    the (query id, epoch id) it folded. foreachBatch is at-least-once: a
-    crash between publishing v{n+1} and the checkpoint commit replays the
-    micro-batch, and an additive sum-merge would double-count it. The
-    marker makes the fold idempotent — callers skip an epoch the latest
-    version already carries for the same checkpoint lineage. Write order:
-    parquet + marker into a staging dir, then ONE os.rename, so a version
-    is never visible without its marker. The predecessor version is
-    retained one fold (concurrent read_counts evaluators keep their
-    files, same retention rule as the WAP store); older versions drop."""
-    vs = _versions(store_dir)
-    nxt_n = (vs[-1] + 1) if vs else 0
-    stage = os.path.join(store_dir, f"_stage_v{nxt_n}")
-    shutil.rmtree(stage, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(stage)
-    with open(os.path.join(stage, _EPOCH_MARKER), "w") as fh:
-        fh.write(marker_value)
-    os.rename(stage, os.path.join(store_dir, f"v{nxt_n}"))
-    for v in vs[:-1]:
-        shutil.rmtree(os.path.join(store_dir, f"v{v}"), ignore_errors=True)
+    """One micro-batch of the hourly monitor: overwrite epoch ``epoch_id``
+    with the batch's counts per (keys, hour of ``ts``). It never reads the
+    store, so a replay is a rewrite."""
+    hour = F.floor((epoch_seconds("ts") - F.lit(BASE_EPOCH)) / 3600).cast("bigint")
+    with COUNTS.epoch(batch_df, epoch_id, root) as ep:
+        ep.write(
+            "counts",
+            batch_df.select(*keys, hour.alias("hour"))
+            .groupBy(*keys, "hour")
+            .agg(F.count(F.lit(1)).alias("cnt")),
+        )
 
 
 def run_hourly_count_stream(
-    stream: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-    keys: list[str],
-    ts_col: str = "ts",
-    available_now: bool = True,
+    stream: DataFrame, store_dir: str, checkpoint_dir: str, keys: list[str]
 ):
-    """Fold a streaming event source into the per-(keys, hour) count store.
-
-    Each micro-batch: aggregate the batch to hourly counts, sum-merge with
-    the stored frame, write the next version (fully written before the old
-    is dropped — crash-safe like materialize_stream). Returns the started
-    StreamingQuery.
-    """
-    spark = stream.sparkSession
-
-    def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        marker = f"{_checkpoint_query_id(checkpoint_dir)}:{epoch_id}"
-        if _applied_marker(store_dir) == marker:
-            return  # replayed micro-batch (same lineage): already folded
-        hour = F.floor(
-            (epoch_seconds(ts_col) - F.lit(BASE_EPOCH)) / 3600
-        ).cast("bigint")
-        delta = (
-            batch_df.select(*keys, hour.alias("hour"))
-            .groupBy(*keys, "hour")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        prev = read_counts(spark, store_dir)
-        merged = (
-            delta
-            if prev is None
-            else prev.unionByName(delta)
-            .groupBy(*keys, "hour")
-            .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-        )
-        _fold_into_store(merged, store_dir, marker)
-
-    writer = stream.writeStream.foreachBatch(on_batch).option(
-        "checkpointLocation", checkpoint_dir
+    """Count a streaming event source per (keys, hour) into the count
+    store; evaluate with ``stats.cusum_from_hourly(read_counts(...))``.
+    Returns the started StreamingQuery."""
+    return run_store_stream(
+        COUNTS, stream, checkpoint_dir, process_hourly_batch, store_dir, keys=keys
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-def cusum_from_counts(
-    hourly: DataFrame, keys: list[str], threshold_hours: int = 3
-) -> DataFrame:
-    """Evaluate CUSUM over the accumulated monitor store — delegates to the
-    shared stats.cusum_from_hourly so the streaming fold + evaluation is
-    provably the same computation as the batch detector (tested)."""
-    from realtime_spark.operators.stats import cusum_from_hourly
-
-    return cusum_from_hourly(hourly, keys, threshold_hours)
+def process_bin_batch(
+    batch_df: DataFrame,
+    epoch_id: int,
+    root: str,
+    keys: list[str],
+    value_col: str,
+    lo: float,
+    hi: float,
+    nbins: int,
+) -> None:
+    """One micro-batch of the quantile monitor: overwrite epoch
+    ``epoch_id`` with the batch's counts per (keys, value bin)."""
+    width = (hi - lo) / nbins
+    with COUNTS.epoch(batch_df, epoch_id, root) as ep:
+        ep.write(
+            "counts",
+            batch_df.select(*keys, value_bin(value_col, lo, width, nbins).alias("bin"))
+            .filter(F.col("bin").isNotNull())
+            .groupBy(*keys, "bin")
+            .agg(F.count(F.lit(1)).alias("c")),
+        )
 
 
 def run_bin_count_stream(
@@ -167,51 +115,17 @@ def run_bin_count_stream(
     lo: float,
     hi: float,
     nbins: int,
-    available_now: bool = True,
 ):
-    """Streaming quantile monitor state: fold per-batch value-bin counts
-    into the versioned store (same crash-safe scheme as the hourly
-    monitor). Bin counts sum-merge associatively, so
-    stats.quantiles_from_bins over the accumulated store equals the batch
+    """Streaming quantile monitor state: per-batch value-bin counts into
+    the count store. Bin counts sum associatively, so
+    stats.quantiles_from_bins over ``read_counts`` equals the batch
     histogram_quantiles over the full stream — the streaming quantile
     monitor is exactly the batch estimator on incrementally maintained
     state. State size: |keys| x nbins integers."""
-    from realtime_spark.operators.stats import value_bin
-
-    spark = stream.sparkSession
-    width = (hi - lo) / nbins
-
-    def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        marker = f"{_checkpoint_query_id(checkpoint_dir)}:{epoch_id}"
-        if _applied_marker(store_dir) == marker:
-            return  # replayed micro-batch (same lineage): already folded
-        delta = (
-            batch_df.select(
-                *keys, value_bin(value_col, lo, width, nbins).alias("bin")
-            )
-            .filter(F.col("bin").isNotNull())
-            .groupBy(*keys, "bin")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        prev = read_counts(spark, store_dir)
-        merged = (
-            delta
-            if prev is None
-            else prev.unionByName(delta)
-            .groupBy(*keys, "bin")
-            .agg(F.sum("c").cast("bigint").alias("c"))
-        )
-        _fold_into_store(merged, store_dir, marker)
-
-    writer = stream.writeStream.foreachBatch(on_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return run_store_stream(
+        COUNTS, stream, checkpoint_dir, process_bin_batch, store_dir,
+        keys=keys, value_col=value_col, lo=lo, hi=hi, nbins=nbins,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-from pyspark.sql.streaming.listener import StreamingQueryListener
 
 
 class StreamHealthMonitor(StreamingQueryListener):

@@ -137,7 +137,9 @@ def process_search_batch(batch_df: DataFrame, epoch_id: int, root: str) -> None:
 def run_search_ingest_stream(stream: DataFrame, root: str, checkpoint: str):
     """Wire the index-maintenance pipeline onto a streaming document source.
     Returns the started StreamingQuery; `seed_search_state` must have run."""
-    return run_store_stream(stream, checkpoint, process_search_batch, root)
+    return run_store_stream(
+        SEARCH_STORE, stream, checkpoint, process_search_batch, root
+    )
 
 
 def bm25_topk_from_live_index(

@@ -151,7 +151,7 @@ def run_vector_ingest_stream(
     """Wire the vector-ingest pipeline onto a streaming embedding source.
     Returns the started StreamingQuery; `seed_vector_state` must have run."""
     return run_store_stream(
-        stream, checkpoint, process_vector_batch, root,
+        VECTOR_STORE, stream, checkpoint, process_vector_batch, root,
         dedup_threshold=dedup_threshold,
     )
 

@@ -218,10 +218,9 @@ def test_streaming_cusum_monitor_equals_batch(spark, sf_dir, tmp_path):
     """Fold the event stream into the hourly count store micro-batch by
     micro-batch, evaluate CUSUM on the accumulated store, and require
     bit-equality with the batch detector over the full event log."""
-    from realtime_spark.operators.stats import cusum_hours
+    from realtime_spark.operators.stats import cusum_from_hourly, cusum_hours
     from realtime_spark.sources.testdata import load_table
     from realtime_spark.streaming.monitors import (
-        cusum_from_counts,
         read_counts,
         run_hourly_count_stream,
     )
@@ -242,7 +241,7 @@ def test_streaming_cusum_monitor_equals_batch(spark, sf_dir, tmp_path):
     q.awaitTermination(300)
 
     counts = read_counts(spark, str(tmp_path / "store"))
-    streamed = cusum_from_counts(counts, ["event_type"])
+    streamed = cusum_from_hourly(counts, ["event_type"])
     batch = cusum_hours(e, ["event_type"])
     assert sorted(map(tuple, streamed.collect())) == sorted(
         map(tuple, batch.collect())

@@ -1,12 +1,13 @@
-"""Epoch compaction for the streaming ingest stores
-(streaming/compaction.py).
+"""Epoch compaction for the streaming stores (streaming/compaction.py):
+the three ingest stores, the count monitors and the materialized view.
 
 Equivalence is proven with TWIN stores: two roots run the identical batch
 sequence through the real pipeline code; one is compacted mid-sequence
 (and again at the end). Every read surface — accepted docs, digest sets,
-LSH probes, IVF search, BM25 scores — must be indistinguishable between
-the compacted and never-compacted twin, including for batches ingested
-AFTER compaction (the stores keep absorbing epochs).
+LSH probes, IVF search, BM25 scores, counts, snapshots — must be
+indistinguishable between the compacted and never-compacted twin,
+including for batches ingested AFTER compaction (the stores keep
+absorbing epochs).
 
 Crash safety is proven by materializing each mid-protocol state the
 stage-then-swap design can crash in (stale staging, revealed-but-
@@ -255,6 +256,92 @@ def test_search_ingest_compaction_equivalence(spark, tmp_path):
 
     a_snap, b_snap = snap(roots[0]), snap(roots[1])
     assert a_snap == b_snap and a_snap, "BM25 off compacted store must be bit-identical"
+
+
+# ---------------------------------------------------------------------------
+# count monitors and the materialized view (no seed: epochs from e0)
+# ---------------------------------------------------------------------------
+
+
+def _twin_epochs(roots, process, batches, upto):
+    for root in roots:
+        for n, b in enumerate(batches[:upto]):
+            process(b, n, root)
+
+
+def test_count_store_compaction_equivalence(spark, tmp_path):
+    """Both count monitors: the COUNTS fold (the sum read_counts applies)
+    leaves the accumulated counts bit-identical, before and after a later
+    epoch."""
+    from functools import partial
+
+    from realtime_spark.streaming.monitors import (
+        COUNTS,
+        process_bin_batch,
+        process_hourly_batch,
+        read_counts,
+    )
+
+    events = load_table(spark, SF, "events")
+    batches = [events.filter(F.col("event_id") % 3 == i) for i in range(3)]
+    monitors = {
+        "hourly": partial(process_hourly_batch, keys=["event_type"]),
+        "bins": partial(
+            process_bin_batch, keys=["event_type"], value_col="value",
+            lo=0.0, hi=500.0, nbins=50,
+        ),
+    }
+    for name, process in monitors.items():
+        roots = [str(tmp_path / f"{name}_a"), str(tmp_path / f"{name}_b")]
+        _twin_epochs(roots, process, batches, 2)
+        m = COUNTS.compact(spark, roots[0])
+        assert m["counts"]["min_epoch"] == 2
+        assert _data_dirs(f"{roots[0]}/counts") == ["ingest_epoch=c0"]
+        for root in roots:
+            process(batches[2], 2, root)
+
+        def snap(root):
+            df = read_counts(spark, root)
+            return df.schema, sorted(map(tuple, df.collect()))
+
+        b_snap = snap(roots[1])
+        assert snap(roots[0]) == b_snap and b_snap[1], name
+        COUNTS.compact(spark, roots[0])
+        assert snap(roots[0]) == b_snap, name
+
+
+def test_snapshot_store_compaction_equivalence(spark, tmp_path):
+    """The materialized view: the SNAPSHOT fold (merge_snapshots, as in
+    serve_snapshot) leaves the served snapshot bit-identical, n_versions
+    included, and keeps the table_name layout."""
+    from realtime_spark.sources.testdata import versioned_changes_from_orders
+    from realtime_spark.streaming.materialize_stream import (
+        SNAPSHOT,
+        process_materialize_batch,
+        serve_snapshot,
+    )
+
+    changes = versioned_changes_from_orders(spark, SF)
+    batches = [changes.filter(F.col("seq") == s) for s in (1, 2)]
+    batches.append(changes.filter(F.col("seq") >= 3))
+    roots = [str(tmp_path / "a"), str(tmp_path / "b")]
+    _twin_epochs(roots, process_materialize_batch, batches, 2)
+    SNAPSHOT.compact(spark, roots[0])
+    base = f"{roots[0]}/snapshot/ingest_epoch=c0"
+    assert {d.split("=")[0] for d in os.listdir(base) if "=" in d} == {"table_name"}
+    for root in roots:
+        process_materialize_batch(batches[2], 2, root)
+
+    def snap(root):
+        df = serve_snapshot(spark, root)
+        rows = sorted(df.collect(), key=lambda r: (r["table_name"], r["pk_text"]))
+        return df.schema, rows
+
+    b_snap = snap(roots[1])
+    assert snap(roots[0]) == b_snap and b_snap[1]
+    SNAPSHOT.compact(spark, roots[0])
+    assert _data_dirs(f"{roots[0]}/snapshot") == ["ingest_epoch=c1"]
+    assert snap(roots[0]) == b_snap
 
 
 # ---------------------------------------------------------------------------

@@ -1,9 +1,11 @@
-"""Epoch-id monotonicity guard (streaming/compaction.py
-assert_epoch_admissible): after a compaction sets min_epoch, a micro-batch
-whose epoch id rewinds below it must FAIL LOUDLY instead of writing a
-partition the manifest silently hides (the fresh-checkpoint-restart hazard:
-checkpoint batch ids restart at 0, every write lands below min_epoch, and
-every read/dedup anti-join stops seeing new data with no error anywhere).
+"""Epoch-id monotonicity guards (streaming/compaction.py): after a
+compaction sets min_epoch, a micro-batch whose epoch id rewinds below it
+must FAIL LOUDLY instead of writing a partition the manifest silently hides
+(assert_epoch_admissible), and a stream started with a FRESH checkpoint
+over a store that already holds epochs must fail loudly too
+(run_store_stream): its batch ids restart at 0, so its writes would land
+below min_epoch, or overwrite the earlier lineage's epochs of an
+uncompacted store (accepted docs vanish, counts are replaced).
 
 Reference analog: the replication protocol acks a monotone wal_end so a
 slot can never silently rewind
@@ -217,3 +219,74 @@ def test_fresh_checkpoint_restart_fails_loudly(spark, tmp_path):
     q3.awaitTermination(300)
     after = sorted(r["doc_id"] for r in accepted_docs(spark, root).collect())
     assert len(after) > len(before)
+
+
+def test_uncompacted_store_rejects_fresh_checkpoint(spark, tmp_path):
+    """The rewind hazard without a compaction: a fresh checkpoint over new
+    files restarts at e0, and its e0 would overwrite the first lineage's
+    e0 — every doc that epoch accepted would vanish without an error."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from realtime_spark.streaming.ingest import (
+        accepted_docs,
+        run_ingest_stream,
+        seed_ingest_state,
+    )
+
+    root = str(tmp_path / "corpus")
+    seed_ingest_state(_docs(spark, 0, 20), root)
+    schema = "doc_id bigint, text string"
+
+    def stream(src, lo, hi, ckpt):
+        _docs(spark, lo, hi).coalesce(1).write.parquet(f"{src}/f0")
+        source = spark.readStream.schema(schema).option(
+            "recursiveFileLookup", "true"
+        ).parquet(src)
+        return run_ingest_stream(source, root, str(tmp_path / ckpt))
+
+    stream(str(tmp_path / "src0"), 20, 40, "ckpt0").awaitTermination(300)
+    before = sorted(r["doc_id"] for r in accepted_docs(spark, root).collect())
+    assert before == list(range(20, 40))
+
+    q = stream(str(tmp_path / "src1"), 40, 60, "ckpt_fresh")
+    with pytest.raises(StreamingQueryException, match="EpochRewindError"):
+        q.awaitTermination(300)
+        raise AssertionError("fresh-checkpoint restart must fail loudly")
+    assert sorted(
+        r["doc_id"] for r in accepted_docs(spark, root).collect()
+    ) == before
+
+
+def test_count_monitor_rejects_fresh_checkpoint(spark, tmp_path):
+    """A count monitor restarted with a fresh checkpoint over the same
+    source would count every event a second time: it fails loudly, and
+    the store still sums to the event count."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from realtime_spark.streaming.monitors import read_counts, run_hourly_count_stream
+
+    events = load_table(spark, SF, "events")
+    src = str(tmp_path / "src")
+    events.repartition(2).write.parquet(src)
+    store = str(tmp_path / "store")
+
+    def run(ckpt):
+        source = spark.readStream.schema(events.schema).option(
+            "maxFilesPerTrigger", "1"
+        ).parquet(src)
+        return run_hourly_count_stream(
+            source, store, str(tmp_path / ckpt), keys=["event_type"]
+        )
+
+    def total():
+        return read_counts(spark, store).agg(F.sum("cnt")).collect()[0][0]
+
+    run("ckpt0").awaitTermination(300)
+    n = events.count()
+    assert total() == n
+
+    q = run("ckpt_fresh")
+    with pytest.raises(StreamingQueryException, match="EpochRewindError"):
+        q.awaitTermination(300)
+        raise AssertionError("fresh-checkpoint restart must fail loudly")
+    assert total() == n

@@ -7,6 +7,7 @@ from __future__ import annotations
 import io
 from contextlib import redirect_stdout
 
+import pytest
 from pyspark.sql import functions as F
 
 from realtime_spark.operators.materialize import materialize_latest
@@ -326,13 +327,15 @@ class TestReplayAlgebra:
 
 
 class TestSnapshotStoreVersioning:
-    def test_fresh_checkpoint_continues_version_sequence(self, spark, tmp_path):
-        """Versions are max-existing+1, not epoch_id+1: a second pipeline
-        run with a FRESH checkpoint (epochs restart at 0) against the same
-        store must fold on top, not write a lower-numbered version that the
-        GC immediately deletes. The predecessor version survives one fold
-        for concurrent readers."""
+    def test_fresh_checkpoint_fails_loudly_and_keeps_store(self, spark, tmp_path):
+        """Epoch ids belong to the checkpoint: a second pipeline run with a
+        FRESH checkpoint (epochs restart at 0) against the same store would
+        overwrite the first run's e0. The run must fail loudly instead, and
+        the served snapshot must stay exactly the first run's."""
+        import datetime
         import os
+
+        from pyspark.errors.exceptions.captured import StreamingQueryException
 
         from realtime_spark.streaming.materialize_stream import (
             run_materialize_stream,
@@ -342,7 +345,7 @@ class TestSnapshotStoreVersioning:
         def one_change(cid, status):
             return (
                 cid, cid, "INSERT", "public", "t",
-                __import__("datetime").datetime(2026, 1, 1),
+                datetime.datetime(2026, 1, 1),
                 {"id": "1", "s": status}, None, ["id"],
             )
 
@@ -353,18 +356,49 @@ class TestSnapshotStoreVersioning:
             "pk array<string>"
         )
         base = str(tmp_path)
-        for run, status in ((1, "A"), (2, "B")):
-            src = os.path.join(base, f"src{run}")
-            spark.createDataFrame([one_change(run, status)], ddl).write.parquet(src)
+        store = os.path.join(base, "store")
+
+        def run(n, status):
+            src = os.path.join(base, f"src{n}")
+            spark.createDataFrame([one_change(n, status)], ddl).write.parquet(src)
             stream = spark.readStream.schema(ddl).parquet(src)
             # fresh checkpoint per run: epochs restart at 0 both times
-            q = run_materialize_stream(
-                stream, os.path.join(base, "store"), os.path.join(base, f"ckpt{run}")
-            )
-            q.awaitTermination(120)
+            return run_materialize_stream(stream, store, os.path.join(base, f"ckpt{n}"))
 
-        store = os.path.join(base, "store")
-        vs = sorted(d for d in os.listdir(store) if d.startswith("v"))
-        assert vs == ["v0", "v1"], vs  # second run continued the sequence
-        row = serve_snapshot(spark, store).collect()[0]
-        assert row["record"]["s"] == "B"  # and actually folded on top
+        run(1, "A").awaitTermination(120)
+        before = serve_snapshot(spark, store).collect()
+        assert [r["record"]["s"] for r in before] == ["A"]
+
+        q = run(2, "B")
+        with pytest.raises(StreamingQueryException, match="EpochRewindError"):
+            q.awaitTermination(120)
+            raise AssertionError("fresh-checkpoint restart must fail loudly")
+        assert serve_snapshot(spark, store).collect() == before
+
+    def test_replayed_epoch_counts_versions_once(self, spark, tmp_path):
+        """A replayed micro-batch overwrites its own epoch with the same
+        fold, so n_versions counts each change once; a snapshot frame
+        resolved before the next epoch still collects after it."""
+        from realtime_spark.sources.testdata import versioned_changes_from_orders
+        from realtime_spark.streaming.materialize_stream import (
+            process_materialize_batch,
+            serve_snapshot,
+        )
+        from tests.conftest import SF_DIR
+
+        def key(df):
+            return {
+                r["pk_text"]: (r["record"]["o_orderstatus"], r["n_versions"])
+                for r in df.collect()
+            }
+
+        changes = versioned_changes_from_orders(spark, SF_DIR)
+        early, late = changes.filter("seq <= 1"), changes.filter("seq >= 2")
+        store = str(tmp_path / "store")
+        process_materialize_batch(early, 0, store)
+        resolved = serve_snapshot(spark, store)
+        process_materialize_batch(late, 1, store)
+        process_materialize_batch(late, 1, store)  # the replay
+        assert key(resolved) == key(materialize_latest(early))
+        want = key(materialize_latest(changes))
+        assert key(serve_snapshot(spark, store)) == want and want

@@ -10,9 +10,11 @@ the data hostile while keeping every schema/enum/key contract intact, so
 any failure here is a genuine convention divergence, not a contract breach.
 
 The FULL replay (~32 min) stays gated behind SPARK_GRAFT_STRESS_TEST=1;
-the default suite runs a deterministic ROTATING quarter of the matrix
-(~66 queries/run, full coverage every 4 runs keyed on the day ordinal —
-the r5 verdict asked that plain `pytest tests/` stop under-verifying).
+the default suite runs a fixed quarter of the matrix plus a ROTATING
+quarter keyed on the day ordinal (full coverage every 4 days, so plain
+`pytest tests/` does not under-verify). The fixed quarter keeps the
+sample's test ids stable from one day to the next: a suite compared by
+test name would otherwise see a quarter of it vanish at midnight.
 Pin a rotation with SPARK_GRAFT_STRESS_ROT=<int> to reproduce a sample run.
 """
 
@@ -35,10 +37,16 @@ _FULL = os.environ.get("SPARK_GRAFT_STRESS_TEST") == "1"
 STRESS_DIR = "/tmp/spark_graft_stress_sf"
 
 
+# the quarter every default run replays, whatever the day
+_FIXED_ROT = 2
+
+
 def _rotation_sample() -> list[str]:
     names = sorted(QUERIES)
     rot = int(os.environ.get("SPARK_GRAFT_STRESS_ROT", date.today().toordinal()))
-    return [n for i, n in enumerate(names) if (i + rot) % 4 == 0]
+    return [
+        n for i, n in enumerate(names) if (i + rot) % 4 == 0 or (i + _FIXED_ROT) % 4 == 0
+    ]
 
 
 @pytest.fixture(scope="module")
@@ -57,7 +65,7 @@ def stress_results(spark, stress_dir):
 @pytest.mark.skipif(
     not _FULL,
     reason="set SPARK_GRAFT_STRESS_TEST=1 for the full stress replay "
-    "(the default suite runs the rotating sample below)",
+    "(the default suite runs the sample below)",
 )
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle_on_stress(stress_results, name):

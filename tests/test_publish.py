@@ -67,57 +67,53 @@ def test_wap_promote_is_pointer_swap(spark, tmp_path):
 
 
 def test_monitor_fold_replay_idempotent(spark, tmp_path):
-    """At-least-once replay of a micro-batch (same lineage + epoch) must
-    not double-add into the additive count store: the published version
-    carries the (query id, epoch) marker it folded, and the fold guard
-    skips a seen marker — while a fresh checkpoint lineage whose epochs
-    restart at 0 still folds."""
-    from realtime_spark.streaming.monitors import (
-        _applied_marker,
-        _fold_into_store,
-        read_counts,
-    )
+    """At-least-once replay of a micro-batch (same epoch id) must not
+    double-add into the additive count store: each epoch writes only its
+    own delta counts, so the replay overwrites its own partition with the
+    same rows and read_counts sums every epoch once."""
+    import datetime
+
+    from realtime_spark.streaming.monitors import process_hourly_batch, read_counts
 
     store = str(tmp_path / "store")
-    delta = spark.createDataFrame(
-        [("a", 0, 5), ("b", 0, 3)], "k string, hour long, cnt long"
-    )
-    _fold_into_store(delta, store, "q1:0")
-    assert _applied_marker(store) == "q1:0"  # the on_batch guard's signal
-    total0 = {
-        (r["k"], r["hour"]): r["cnt"] for r in read_counts(spark, store).collect()
-    }
-    assert total0 == {("a", 0): 5, ("b", 0): 3}
-    # a NEW epoch of the same lineage folds normally
-    merged = (
-        read_counts(spark, store)
-        .unionByName(delta)
-        .groupBy("k", "hour")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    )
-    _fold_into_store(merged, store, "q1:1")
-    assert _applied_marker(store) == "q1:1"
-    assert read_counts(spark, store).filter("k = 'a'").collect()[0]["cnt"] == 10
-    # a DIFFERENT lineage at epoch 0 must NOT be mistaken for a replay of
-    # the long-gone q1 epoch 0
-    assert _applied_marker(store) != "q2:0"
+    t0 = datetime.datetime(2024, 1, 1, 0, 10)
+    schema = "k string, ts timestamp"
+    b0 = spark.createDataFrame([("a", t0)] * 5 + [("b", t0)] * 3, schema)
+    b1 = spark.createDataFrame([("a", t0)] * 5, schema)
+
+    def counts():
+        return {r["k"]: r["cnt"] for r in read_counts(spark, store).collect()}
+
+    process_hourly_batch(b0, 0, store, keys=["k"])
+    process_hourly_batch(b1, 1, store, keys=["k"])
+    assert counts() == {"a": 10, "b": 3}
+    process_hourly_batch(b1, 1, store, keys=["k"])  # the replay
+    assert counts() == {"a": 10, "b": 3}
 
 
 def test_monitor_fold_retains_predecessor_version(spark, tmp_path):
-    """A concurrent read_counts evaluator that resolved v{n} must keep its
-    files through the NEXT fold (same one-predecessor retention as the WAP
-    store); only versions two folds back drop."""
-    import os
-
-    from realtime_spark.streaming.monitors import _fold_into_store
+    """A read_counts frame an evaluator resolved before the next epoch
+    still collects after it — an epoch adds its own partition and never
+    rewrites the ones a reader listed — and a replay of the newest epoch
+    leaves the bin counts unchanged."""
+    from realtime_spark.streaming.monitors import process_bin_batch, read_counts
 
     store = str(tmp_path / "store")
-    delta = spark.createDataFrame([("a", 0, 1)], "k string, hour long, cnt long")
-    _fold_into_store(delta, store, "q:0")
-    _fold_into_store(delta, store, "q:1")
-    assert sorted(d for d in os.listdir(store) if d.startswith("v")) == ["v0", "v1"]
-    _fold_into_store(delta, store, "q:2")
-    assert sorted(d for d in os.listdir(store) if d.startswith("v")) == ["v1", "v2"]
+    batch = spark.createDataFrame(
+        [("a", 1.0), ("a", 15.0), ("b", 15.0), ("b", None)],
+        "k string, value double",
+    )
+    opts = dict(keys=["k"], value_col="value", lo=0.0, hi=100.0, nbins=10)
+    process_bin_batch(batch, 0, store, **opts)
+    resolved = read_counts(spark, store)
+    process_bin_batch(batch, 1, store, **opts)
+    process_bin_batch(batch, 1, store, **opts)  # the replay
+    assert sorted(map(tuple, resolved.collect())) == [
+        ("a", 0, 1), ("a", 1, 1), ("b", 1, 1)
+    ]
+    assert sorted(map(tuple, read_counts(spark, store).collect())) == [
+        ("a", 0, 2), ("a", 1, 2), ("b", 1, 2)
+    ]
 
 
 def test_wap_audits_staged_files_not_plan(spark, tmp_path):
