@@ -550,11 +550,14 @@ def bench_streaming_mv(spark, sf_dir: str, micro_batches: int = 10) -> dict:
     continuously updated snapshot (streaming/materialize_stream.py) —
     measures changes/s through the per-epoch fold-and-write loop, the cost
     a standing MV pays per change at steady state, and the wall of one
-    served count, which merges the epochs at read time."""
+    served count, which merges the visible epochs at read time: once over
+    the drained epochs, then after the store's compaction folds them into
+    one base (the janitor step of ``run_ingest_cycles``)."""
     import tempfile
 
     from realtime_spark.sources.testdata import versioned_changes_from_orders
     from realtime_spark.streaming.materialize_stream import (
+        SNAPSHOT,
         run_materialize_stream,
         serve_snapshot,
     )
@@ -579,9 +582,15 @@ def bench_streaming_mv(spark, sf_dir: str, micro_batches: int = 10) -> dict:
                                "would silently misreport throughput")
         wall = time.perf_counter() - t0
         t1 = time.perf_counter()
-        snap = serve_snapshot(spark, store)
-        rows = snap.count() if snap is not None else 0
+        rows = serve_snapshot(spark, store).count()
         serve_wall = time.perf_counter() - t1
+        t2 = time.perf_counter()
+        SNAPSHOT.compact(spark, store)
+        compact_wall = time.perf_counter() - t2
+        t3 = time.perf_counter()
+        rows_after = serve_snapshot(spark, store).count()
+        serve_wall_compacted = time.perf_counter() - t3
+        assert rows_after == rows  # compaction must not change the view
     return {
         "mv_changes_per_sec": round(n_changes / wall, 1),
         "changes": n_changes,
@@ -589,6 +598,8 @@ def bench_streaming_mv(spark, sf_dir: str, micro_batches: int = 10) -> dict:
         "micro_batches": micro_batches,
         "wall_sec": round(wall, 3),
         "serve_wall_sec": round(serve_wall, 3),
+        "compact_wall_sec": round(compact_wall, 3),
+        "serve_wall_compacted_sec": round(serve_wall_compacted, 3),
     }
 
 

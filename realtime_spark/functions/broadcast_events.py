@@ -186,7 +186,7 @@ def _build_broadcast(socket: BroadcastSocket, payload: Any) -> SentMessage:
     )
 
 
-def sent_messages_df(spark, sent: list[SentMessage], tenant_id: str = "t1"):
+def sent_messages_df(spark, sent: list[SentMessage]):
     """Bridge the admitted sends into operators/dispatch.fastlane_pairs's
     message frame: (msg_id, tenant_id, topic, event, is_user_broadcast,
     payload_encoding, message_uid, sender_socket)."""
@@ -200,7 +200,7 @@ def sent_messages_df(spark, sent: list[SentMessage], tenant_id: str = "t1"):
         rows.append(
             (
                 i,
-                tenant_id,
+                "t1",
                 m.topic,
                 m.event,
                 m.is_user_broadcast,

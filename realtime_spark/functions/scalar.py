@@ -22,14 +22,10 @@ def payload_size_ok(payload_json: Column, max_kb: int = 3000) -> Column:
     return F.octet_length(payload_json) <= F.lit(max_kb * 1000)
 
 
-def tenant_topic(tenant: Column, topic: Column, public: bool = True) -> Column:
-    """F10: tenant-scoped pubsub topic — `{external_id}:{topic}` for public
-    channels, `{external_id}-private:{topic}` for private ones
-    (reference: lib/realtime/tenants.ex:504-513; the private marker is a
-    suffix on the TENANT segment, not on the sub-topic)."""
-    if public:
-        return F.concat(tenant, F.lit(":"), topic)
-    return F.concat(tenant, F.lit("-private:"), topic)
+def tenant_topic(tenant: Column, topic: Column) -> Column:
+    """F10: tenant-scoped pubsub topic of a public channel,
+    `{external_id}:{topic}` (reference: lib/realtime/tenants.ex:504-513)."""
+    return F.concat(tenant, F.lit(":"), topic)
 
 
 # pg epoch: 2000-01-01T00:00:00Z, in microseconds since the unix epoch

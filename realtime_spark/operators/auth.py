@@ -103,7 +103,6 @@ def clean_token(token: str) -> str:
 def authorize_conn(
     token,
     jwt_secret: str | None = None,
-    jwks: Mapping | None = None,
     now_epoch: int | None = None,
 ) -> tuple[str, dict | None, str | None]:
     """``authorize_conn/3`` (channels_authorization.ex:19-37): clean the
@@ -127,7 +126,7 @@ def authorize_conn(
     # expiry is reported separately from signature failure, so decode the
     # claims once the signature itself verifies (exp check deferred)
     claims = verify_jwt_jwks(
-        cleaned, jwt_secret, jwks, now_epoch=None, require_claims=False
+        cleaned, jwt_secret, now_epoch=None, require_claims=False
     )
     if claims is None:
         return ("error", None, "invalid_token")
@@ -605,7 +604,6 @@ def token_refresh_decisions(
     policies: DataFrame,
     secret: str,
     now_epoch: int,
-    extension: str = "broadcast",
 ) -> DataFrame:
     """Access-token refresh semantics over a stream of per-connection
     refresh events (realtime_channel.ex:523-600 `handle_in("access_token")`)
@@ -628,7 +626,7 @@ def token_refresh_decisions(
         "_claims", verified_claims_col(F.col("refresh_token"), secret, now_epoch)
     ).withColumn("new_role", F.get_json_object("_claims", "$.role"))
     p = F.broadcast(
-        policies.filter(F.col("extension") == extension).select(
+        policies.filter(F.col("extension") == "broadcast").select(
             F.col("topic").alias("p_topic"),
             F.col("claims_role").alias("p_role"),
             F.col("can_read").alias("p_read"),
@@ -763,7 +761,6 @@ def apply_rls_exists_policy(
     sets: DataFrame,
     lookup: DataFrame,
     keys: Sequence[tuple[str, str]],
-    schema_name: str = "public",
     table_name: str | None = None,
     claims_role: str = "authenticated",
 ) -> DataFrame:
@@ -791,7 +788,7 @@ def apply_rls_exists_policy(
         # semi-join that passes every protected row — fail CLOSED instead
         raise ValueError("apply_rls_exists_policy requires at least one key pair")
     protected = (
-        (F.col("c.schema_name") == F.lit(schema_name))
+        (F.col("c.schema_name") == F.lit("public"))
         & (F.col("s.claims_role") == F.lit(claims_role))
     )
     if table_name is not None:

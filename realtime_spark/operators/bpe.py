@@ -45,13 +45,15 @@ END_MARK = "</w>"  # end-of-word symbol, per the original BPE formulation
 
 TOKEN_RE = "[^a-z0-9]+"
 
+TEXT = "text"
 
-def word_freqs(df: DataFrame, text_col: str = "text") -> DataFrame:
+
+def word_freqs(df: DataFrame) -> DataFrame:
     """(word, freq) over the lowercased alnum token stream — the one
     corpus-wide pass; everything after iterates on word TYPES."""
     toks = df.select(
         F.explode(
-            F.filter(F.split(F.lower(F.col(text_col)), TOKEN_RE), lambda t: t != "")
+            F.filter(F.split(F.lower(F.col(TEXT)), TOKEN_RE), lambda t: t != "")
         ).alias("word")
     )
     return toks.groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
@@ -115,9 +117,7 @@ def merge_pair_expr(syms: Column, left: str, right: str) -> Column:
 
 def train_bpe(
     df: DataFrame,
-    text_col: str = "text",
     num_merges: int = 16,
-    checkpoint_every: int = 4,
     driver_max_types: int = 262_144,
 ) -> list[tuple[int, str, str, int]]:
     """Learn `num_merges` BPE merges; returns
@@ -142,7 +142,7 @@ def train_bpe(
     web-scale vocabularies exceed the threshold and take the distributed
     loop unchanged.
     """
-    wf = word_freqs(df, text_col)
+    wf = word_freqs(df)
     # one pass, not count()+collect() (r10 ADVICE): collect at most
     # threshold+1 rows — fewer means we hold the complete type table and
     # take the fast path; one more means large-vocabulary, fall through to
@@ -196,7 +196,7 @@ def train_bpe(
         left, right, cnt = top[0]["left"], top[0]["right"], int(top[0]["cnt"])
         merges.append((rank, left, right, cnt))
         cur = cur.withColumn("syms", merge_pair_expr(F.col("syms"), left, right))
-        if rank % checkpoint_every == 0:
+        if rank % 4 == 0:
             # truncate the per-round fold lineage (plan trees, not data)
             cur = cur.localCheckpoint(eager=False)
     return merges
@@ -226,8 +226,6 @@ def _segment_word(word: str, rank_of: dict[tuple[str, str], int]) -> list[str]:
 def segment_with_merges(
     df: DataFrame,
     merges: Sequence[tuple[int, str, str, int]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Tokenize each document with a learned merge table:
     (id, bpe_tokens array<string>, n_bpe_tokens).
@@ -239,7 +237,7 @@ def segment_with_merges(
     rank_of = {(l, r): k for (k, l, r, _) in merges}
     out_schema = T.StructType(
         [
-            df.schema[id_col],
+            df.schema["doc_id"],
             T.StructField("bpe_tokens", T.ArrayType(T.StringType())),
             T.StructField("n_bpe_tokens", T.IntegerType()),
         ]
@@ -252,7 +250,7 @@ def segment_with_merges(
         memo: dict[str, list[str]] = {}
         for pdf in batches:
             toks_col, n_col = [], []
-            for text in pdf[text_col].astype(str):
+            for text in pdf[TEXT].astype(str):
                 out: list[str] = []
                 for w in tok_re.split(text.lower()):
                     if not w:
@@ -266,13 +264,13 @@ def segment_with_merges(
                 n_col.append(len(out))
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
+                    "doc_id": pdf["doc_id"],
                     "bpe_tokens": toks_col,
                     "n_bpe_tokens": n_col,
                 }
             )
 
-    return df.select(id_col, text_col).mapInPandas(run, schema=out_schema)
+    return df.select("doc_id", TEXT).mapInPandas(run, schema=out_schema)
 
 
 def with_bpe_token_count(

@@ -81,11 +81,7 @@ def _turn_cols(user_types: tuple[str, ...]) -> list[Column]:
     ]
 
 
-def chat_turns(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-    user_types: tuple[str, ...] = USER_EVENT_TYPES,
-) -> DataFrame:
+def chat_turns(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     """Thread assembly: one row per turn with its conversation key
     (user_id, session_id), 1-based turn index, role, and token cost.
 
@@ -94,7 +90,7 @@ def chat_turns(
     s = sessionize(events, ["user_id"], "ts", gap_seconds)
     w = Window.partitionBy("user_id", "session_id").orderBy("ts", "event_id")
     return s.select(
-        F.col("session_id"), *_turn_cols(user_types)
+        F.col("session_id"), *_turn_cols(USER_EVENT_TYPES)
     ).withColumn("turn_idx", F.row_number().over(w))
 
 
@@ -364,7 +360,6 @@ def streaming_chat_threads(
     events: DataFrame,
     gap_seconds: int = 1800,
     watermark: str = "2 minutes",
-    user_types: tuple[str, ...] = USER_EVENT_TYPES,
     render: bool = False,
     bos: str = "<|im_start|>",
     eos: str = "<|im_end|>",
@@ -400,7 +395,7 @@ def streaming_chat_threads(
     order-dependent stats already use — the streaming path emits the
     finished SFT sample, not just its stats, at zero extra shuffle/state
     beyond the turn text riding in the collected struct."""
-    t = events.select(*_turn_cols(user_types))
+    t = events.select(*_turn_cols(USER_EVENT_TYPES))
     agg = (
         t.withWatermark("ts", watermark)
         .groupBy(
@@ -464,12 +459,7 @@ def streaming_chat_threads(
     return agg.select(*cols)
 
 
-def chat_turns_bpe(
-    events: DataFrame,
-    merges,
-    gap_seconds: int = 1800,
-    user_types: tuple[str, ...] = USER_EVENT_TYPES,
-) -> DataFrame:
+def chat_turns_bpe(events: DataFrame, merges, gap_seconds: int = 1800) -> DataFrame:
     """chat_turns with the REAL tokenizer cost (r9 verdict ask #5):
     per-turn n_tokens is the BPE segment count of the turn text under a
     learned merge table (operators/bpe.py), replacing the payload-derived
@@ -488,7 +478,7 @@ def chat_turns_bpe(
     from realtime_spark.operators.bpe import with_bpe_token_count
 
     role = F.when(
-        F.col("event_type").isin(*user_types), F.lit("user")
+        F.col("event_type").isin(*USER_EVENT_TYPES), F.lit("user")
     ).otherwise(F.lit("assistant"))
     base = events.select(
         F.col("user_id"),
@@ -556,7 +546,6 @@ def streaming_chat_threads_bounded(
     events: DataFrame,
     gap_seconds: int = 1800,
     watermark: str = "2 minutes",
-    user_types: tuple[str, ...] = USER_EVENT_TYPES,
     max_turns: int = 512,
 ) -> DataFrame:
     """Bounded-state streaming lift of chat_turns -> thread_stats:
@@ -685,7 +674,7 @@ def streaming_chat_threads_bounded(
         if rows:
             yield pd.DataFrame(rows, columns=_OUT_COLS)
 
-    t = events.select(*_turn_cols(user_types)).select(
+    t = events.select(*_turn_cols(USER_EVENT_TYPES)).select(
         "user_id", "ts", "event_id", "role", "n_tokens"
     )
     return (

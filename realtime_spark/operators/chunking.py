@@ -48,6 +48,9 @@ _GEAR = [
 
 _MASK64 = (1 << 64) - 1
 
+# chunk-size bounds (bytes) and the boundary mask width
+MIN_SIZE, AVG_BITS, MAX_SIZE = 64, 8, 1024
+
 CHUNK_SCHEMA = StructType(
     [
         StructField("doc", LongType()),
@@ -59,20 +62,18 @@ CHUNK_SCHEMA = StructType(
 )
 
 
-def chunk_boundaries(
-    payload: bytes, min_size: int = 64, avg_bits: int = 8, max_size: int = 1024
-) -> list[int]:
+def chunk_boundaries(payload: bytes) -> list[int]:
     """Content-defined chunk end offsets (exclusive) for one payload.
-    avg_bits=8 -> expected chunk ~256 bytes (boundary when the low 8 bits
+    AVG_BITS=8 -> expected chunk ~256 bytes (boundary when the low 8 bits
     of the rolling hash are zero)."""
-    mask = (1 << avg_bits) - 1
+    mask = (1 << AVG_BITS) - 1
     ends = []
     h = 0
     start = 0
     for i, b in enumerate(payload):
         h = ((h << 1) + _GEAR[b]) & _MASK64
         size = i + 1 - start
-        if (size >= min_size and (h & mask) == 0) or size >= max_size:
+        if (size >= MIN_SIZE and (h & mask) == 0) or size >= MAX_SIZE:
             ends.append(i + 1)
             start = i + 1
             h = 0
@@ -81,11 +82,11 @@ def chunk_boundaries(
     return ends
 
 
-def chunk_payload(payload: bytes, **kw) -> list[tuple[int, int, str]]:
+def chunk_payload(payload: bytes) -> list[tuple[int, int, str]]:
     """[(offset, length, md5hex)] for one payload."""
     out = []
     start = 0
-    for end in chunk_boundaries(payload, **kw):
+    for end in chunk_boundaries(payload):
         out.append(
             (start, end - start, hashlib.md5(payload[start:end]).hexdigest())
         )
@@ -93,14 +94,7 @@ def chunk_payload(payload: bytes, **kw) -> list[tuple[int, int, str]]:
     return out
 
 
-def cdc_chunks(
-    df: DataFrame,
-    id_col: str = "doc",
-    payload_col: str = "payload",
-    min_size: int = 64,
-    avg_bits: int = 8,
-    max_size: int = 1024,
-) -> DataFrame:
+def cdc_chunks(df: DataFrame) -> DataFrame:
     """(doc, chunk_idx, offset, length, digest) per content-defined chunk.
     Doc ids must be integral (the fixed CHUNK_SCHEMA carries them as
     bigint); hash string ids to int64 upstream first."""
@@ -110,13 +104,9 @@ def cdc_chunks(
             if not len(b):
                 continue
             rows = []
-            for doc, p in zip(b[id_col], b[payload_col]):
+            for doc, p in zip(b["doc"], b["payload"]):
                 raw = p if isinstance(p, bytes) else bytes(p)
-                for idx, (off, ln, dg) in enumerate(
-                    chunk_payload(
-                        raw, min_size=min_size, avg_bits=avg_bits, max_size=max_size
-                    )
-                ):
+                for idx, (off, ln, dg) in enumerate(chunk_payload(raw)):
                     rows.append(
                         {
                             "doc": int(doc),
@@ -132,7 +122,7 @@ def cdc_chunks(
                 # empty payloads must emit nothing, not crash the task
                 yield pd.DataFrame(rows)
 
-    return df.select(id_col, payload_col).mapInPandas(run, CHUNK_SCHEMA)
+    return df.select("doc", "payload").mapInPandas(run, CHUNK_SCHEMA)
 
 
 def chunk_dedup_stats(chunks: DataFrame) -> DataFrame:

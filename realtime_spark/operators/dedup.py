@@ -8,7 +8,7 @@ Spark and DuckDB, so every stage can be verified against SQL).
 Scale notes (100 TB design):
   - exact dedup: one hash-shuffle on the digest, map-side partial agg first.
   - shingle explode: the shuffle key is the shingle string; frequent shingles
-    skew — cap per-shingle fan-out (`max_shingle_freq`) the way production
+    skew — cap per-shingle fan-out (`MAX_SHINGLE_FREQ`) the way production
     near-dup pipelines drop stop-shingles.
   - MinHash: signatures are computed per-row (no shuffle), the LSH band join
     shuffles only (band_key, doc_id) pairs — tiny compared to the corpus; the
@@ -20,6 +20,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+# shingles in more docs than this are stop-shingles: dropped before pairing
+MAX_SHINGLE_FREQ = 1000
 
 # ---------------------------------------------------------------------------
 # text normalization + shingling (shared by jaccard/minhash/simhash)
@@ -109,7 +112,6 @@ def jaccard_pairs(
     text_col: str,
     k: int = 3,
     threshold: float = 0.5,
-    max_shingle_freq: int = 1000,
 ) -> DataFrame:
     """Near-duplicate pairs by word-k-shingle Jaccard similarity.
 
@@ -117,7 +119,7 @@ def jaccard_pairs(
     intersections -> |A∪B| = |A|+|B|-|A∩B|. The join key is a bigint (md5
     prefix), not the shingle string: narrower shuffle rows and cheap key
     hashing; the oracle mirrors the same digest so collisions (if any) agree.
-    Shingles occurring in more than `max_shingle_freq` docs are dropped
+    Shingles occurring in more than `MAX_SHINGLE_FREQ` docs are dropped
     from BOTH the intersection and the size terms (stop-shingle skew
     guard; mixing an unfiltered |A| with a filtered |A∩B| would
     systematically underestimate Jaccard as soon as the guard fires). Exact Jaccard is inherently quadratic in
@@ -140,7 +142,7 @@ def jaccard_pairs(
     # source, which re-tokenizes the corpus instead of reusing the persist.)
     sh = sh.persist()
     freq_ok = sh.groupBy("sx").agg(F.count(F.lit(1)).alias("freq")).filter(
-        F.col("freq") <= max_shingle_freq
+        F.col("freq") <= MAX_SHINGLE_FREQ
     )
     sh_f = sh.join(freq_ok.select("sx"), "sx", "left_semi")
     sizes = sh_f.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
@@ -493,13 +495,7 @@ def simhash_buckets(
 # ---------------------------------------------------------------------------
 
 
-def duplicate_clusters(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 50,
-    driver_max_edges: int = 2_000_000,
-) -> DataFrame:
+def duplicate_clusters(pairs: DataFrame) -> DataFrame:
     """Group near-duplicate pairs into clusters: connected components by
     iterative min-label propagation. Output: (doc_id, cluster_id) for every
     doc appearing in a pair, cluster_id = smallest doc_id reachable — so the
@@ -527,14 +523,14 @@ def duplicate_clusters(
     # persist the (usually expensive) pair derivation once: the symmetric
     # edge union would otherwise evaluate the upstream LSH/scoring plan twice
     p = pairs.select(
-        F.col(a_col).cast("bigint").alias("src"),
-        F.col(b_col).cast("bigint").alias("dst"),
+        F.col("doc_a").cast("bigint").alias("src"),
+        F.col("doc_b").cast("bigint").alias("dst"),
     ).persist()
     bad = p.filter(F.col("src").isNull() | F.col("dst").isNull()).limit(1)
     if bad.count():
         p.unpersist()
         raise ValueError(
-            f"duplicate_clusters: non-integral id in ({a_col}, {b_col}) — "
+            "duplicate_clusters: non-integral id in (doc_a, doc_b) — "
             "cast/hash doc ids to bigint before clustering"
         )
     # small-graph fast path: below ~2M edges (≈32 MB of longs) the
@@ -545,7 +541,7 @@ def duplicate_clusters(
     # memory, and the distributed propagation below remains the path for
     # genuinely large dup graphs (billions of LSH pairs at 100 TB).
     n_edges = p.count()
-    if n_edges <= driver_max_edges:
+    if n_edges <= 2_000_000:
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -590,7 +586,7 @@ def duplicate_clusters(
     prev_sum = labels.agg(
         F.sum(F.col("label").cast("decimal(38,0)"))
     ).collect()[0][0]
-    for _ in range(max_iter):
+    for _ in range(50):
         # one round = neighbor messages UNION self labels -> min per node:
         # a single shuffle join + a single map-side-combined aggregation.
         # (The union replaces a separate left join back onto the old labels,
@@ -656,8 +652,6 @@ def dedup_incremental(
 def write_lsh_index(
     df: DataFrame,
     path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     num_hashes: int = 12,
     bands: int = 4,
     k: int = 3,
@@ -670,7 +664,7 @@ def write_lsh_index(
     by band lets a probe that only uses a band subset prune partitions, and
     keeps per-file key locality for row-group min/max skipping on `key`.
     """
-    banded = minhash_bands(df, id_col, text_col, num_hashes, bands, k)
+    banded = minhash_bands(df, "doc_id", "text", num_hashes, bands, k)
     # sort within partitions by key so parquet row-group statistics on `key`
     # are tight — an index probe join reads only matching row groups
     banded.repartition("band").sortWithinPartitions("key").write.mode(
@@ -678,20 +672,10 @@ def write_lsh_index(
     ).partitionBy("band").parquet(path)
 
 
-def append_to_lsh_index(
-    df: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 12,
-    bands: int = 4,
-    k: int = 3,
-) -> None:
+def append_to_lsh_index(df: DataFrame, path: str) -> None:
     """Sign an accepted batch and append its band rows to the standing index
     (dynamic partition append — only touched band partitions gain files)."""
-    write_lsh_index(
-        df, path, id_col, text_col, num_hashes, bands, k, mode="append"
-    )
+    write_lsh_index(df, path, mode="append")
 
 
 def lsh_candidates_against_index(
@@ -740,7 +724,6 @@ def shingle_novelty(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 3,
-    round_digits: int = 4,
 ) -> DataFrame:
     """Per-document novelty: the fraction of its distinct word k-shingles
     never seen in any LOWER-id document — the incremental-corpus signal
@@ -774,7 +757,7 @@ def shingle_novelty(
             F.when(F.col("first_doc") == F.col("doc"), 1).otherwise(0)
         ).alias("n_novel"),
     )
-    scale = float(10**round_digits)
+    scale = float(10**4)
     nov = F.col("n_novel").cast("double") / F.col("n_shingles").cast("double")
     return counts.select(
         "doc",

@@ -39,9 +39,7 @@ from pyspark.sql import functions as F
 # ---------------------------------------------------------------------------
 
 
-def _join_tenants(
-    messages: DataFrame, tenants: DataFrame, max_payload_kb_col: str = "max_payload_kb"
-) -> DataFrame:
+def _join_tenants(messages: DataFrame, tenants: DataFrame) -> DataFrame:
     """Broadcast-join the tenant dim onto a message stream (shared by the
     batch and single HTTP paths so their tenant semantics cannot fork)."""
     t = F.broadcast(
@@ -50,7 +48,7 @@ def _join_tenants(
             "suspended",
             "max_eps",
             "current_eps",
-            F.col(max_payload_kb_col).alias("t_max_kb"),
+            F.col("max_payload_kb").alias("t_max_kb"),
         )
     )
     return messages.join(t, messages["tenant_id"] == F.col("t_tid"), "left").drop(
@@ -78,7 +76,6 @@ def batch_broadcast_outcomes(
     messages: DataFrame,
     tenants: DataFrame,
     policies: DataFrame,
-    max_payload_kb_col: str = "max_payload_kb",
 ) -> DataFrame:
     """Classify every message of a per-tenant broadcast batch.
 
@@ -110,7 +107,7 @@ def batch_broadcast_outcomes(
     batch aggregate (size, any-invalid) is a per-tenant groupBy folded back
     in via a second broadcast join — message rows never shuffle.
     """
-    m = _join_tenants(messages, tenants, max_payload_kb_col)
+    m = _join_tenants(messages, tenants)
 
     valid = (
         F.col("topic").isNotNull()

@@ -21,28 +21,24 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+USER, TS = "user_id", "ts"
 
-def funnel_steps(
-    events: DataFrame,
-    steps: Sequence[str],
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+
+def funnel_steps(events: DataFrame, steps: Sequence[str]) -> DataFrame:
     """Per-user funnel progression. Output: (user, ts_1..ts_n, stage) where
     ts_i is the first qualifying timestamp of step i (NULL if never reached)
     and stage = number of steps completed."""
     if not steps:
         raise ValueError("funnel_steps: steps must be non-empty")
-    user = F.col(user_col).alias("user")
+    user = F.col(USER).alias("user")
     # a NULL ts can neither order against other steps nor count as a
     # completion time: drop such events up front (the SQL oracles filter
     # identically)
-    events = events.filter(F.col(ts_col).isNotNull())
+    events = events.filter(F.col(TS).isNotNull())
     cur: DataFrame | None = None
     for i, step in enumerate(steps, start=1):
-        step_events = events.filter(F.col(type_col) == step).select(
-            user, F.col(ts_col).alias("_ts")
+        step_events = events.filter(F.col("event_type") == step).select(
+            user, F.col(TS).alias("_ts")
         )
         if cur is None:
             reached = step_events.groupBy("user").agg(F.min("_ts").alias(f"ts_{i}"))
@@ -62,24 +58,14 @@ def funnel_steps(
     return cur.withColumn("stage", stage.cast("int"))
 
 
-def funnel_counts(
-    events: DataFrame,
-    steps: Sequence[str],
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def funnel_counts(events: DataFrame, steps: Sequence[str]) -> DataFrame:
     """Users per completed stage (stage 0 rows never enter: only users who
     did step 1 appear in the funnel)."""
-    f = funnel_steps(events, steps, user_col, type_col, ts_col)
+    f = funnel_steps(events, steps)
     return f.groupBy("stage").agg(F.count(F.lit(1)).alias("n_users"))
 
 
-def retention_cohorts(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def retention_cohorts(events: DataFrame) -> DataFrame:
     """Cohort retention: users grouped by first-active day, counted on each
     later active day as (cohort_day, day_offset, n_users).
 
@@ -90,7 +76,7 @@ def retention_cohorts(
     the join input is |users x active-days|, not |events|.
     """
     days = events.select(
-        F.col(user_col).alias("user"), F.to_date(ts_col).alias("day")
+        F.col(USER).alias("user"), F.to_date(TS).alias("day")
     ).distinct()
     first = days.groupBy("user").agg(F.min("day").alias("cohort_day"))
     ret = days.join(first, "user").select(

@@ -25,15 +25,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MICRO = 1_000_000
+DAMPING_PCT = 85
 
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int = 8,
-    damping_pct: int = 85,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def pagerank(edges: DataFrame, iterations: int = 8) -> DataFrame:
     """Damped PageRank in exact integer micro-units.
 
     rank_0(v) = MICRO;
@@ -44,8 +39,8 @@ def pagerank(
     Output: (node, rank_micro).
     """
     e = edges.select(
-        F.col(src_col).cast("bigint").alias("src"),
-        F.col(dst_col).cast("bigint").alias("dst"),
+        F.col("src").cast("bigint").alias("src"),
+        F.col("dst").cast("bigint").alias("dst"),
     ).persist()
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -55,7 +50,7 @@ def pagerank(
     )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     ed = e.join(deg, "src")  # (src, dst, deg): deg is static across iters
-    base = MICRO * (100 - damping_pct) // 100
+    base = MICRO * (100 - DAMPING_PCT) // 100
     ranks = nodes.withColumn("rank_micro", F.lit(MICRO).cast("bigint"))
     for _ in range(iterations):
         contribs = (
@@ -74,7 +69,7 @@ def pagerank(
                 (
                     F.lit(base)
                     + F.expr(
-                        f"({damping_pct} * coalesce(s, 0L)) div 100"
+                        f"({DAMPING_PCT} * coalesce(s, 0L)) div 100"
                     )
                 ).alias("rank_micro"),
             )
@@ -91,12 +86,7 @@ def pagerank(
     return out
 
 
-def triangle_stats(
-    edges: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    round_digits: int = 6,
-) -> DataFrame:
+def triangle_stats(edges: DataFrame) -> DataFrame:
     """Per-node triangle count, degree, and local clustering coefficient
     over an undirected edge list (standard graph-quality probe for
     duplicate-cluster graphs: coefficient ~1 = clique-like exact-dup
@@ -114,8 +104,8 @@ def triangle_stats(
     Output: (node, degree, triangles, clustering).
     """
     e = edges.select(
-        F.least(F.col(a_col), F.col(b_col)).cast("bigint").alias("a"),
-        F.greatest(F.col(a_col), F.col(b_col)).cast("bigint").alias("b"),
+        F.least(F.col("doc_a"), F.col("doc_b")).cast("bigint").alias("a"),
+        F.greatest(F.col("doc_a"), F.col("doc_b")).cast("bigint").alias("b"),
     ).filter(
         # self-loops would fabricate (x,x,y) "triangles" through the
         # ordered three-join and double-count degree
@@ -147,7 +137,7 @@ def triangle_stats(
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("degree"))
     )
-    scale = float(10**round_digits)
+    scale = float(10**6)
     coeff = F.when(
         F.col("degree") >= 2,
         F.floor(

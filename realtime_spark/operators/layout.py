@@ -111,13 +111,12 @@ def write_zordered(
     path: str,
     cols: Sequence[str],
     n_files: int = 16,
-    bits: int = _DEFAULT_BITS,
 ) -> None:
     """Cluster and write: range-partition on the Z-key (one shuffle; range
     bounds from a sample, so files get ~equal rows even on skewed data),
     sort each partition by z, one file per partition. Parquet footers then
     carry tight min/max for EVERY clustered column in every file."""
-    z = zorder_keys(df, cols, bits)
+    z = zorder_keys(df, cols)
     z.repartitionByRange(n_files, "z").sortWithinPartitions("z").write.mode(
         "overwrite"
     ).parquet(path)

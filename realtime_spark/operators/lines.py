@@ -58,13 +58,11 @@ def chunk_lines_expr(text: Column, width: int = LINE_TOKENS) -> Column:
     )
 
 
-def explode_lines(
-    df: DataFrame, id_col: str, lines_col: str = "lines"
-) -> DataFrame:
+def explode_lines(df: DataFrame, id_col: str) -> DataFrame:
     """(doc, line_idx, line) — positional explode, order preserved."""
     return df.select(
         F.col(id_col).alias("doc"),
-        F.posexplode(F.col(lines_col)).alias("line_idx", "line"),
+        F.posexplode(F.col("lines")).alias("line_idx", "line"),
     )
 
 

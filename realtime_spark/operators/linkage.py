@@ -245,9 +245,6 @@ def em_fs_weights(
     patterns: DataFrame,
     n_fields: int,
     iterations: int = 5,
-    m0: int = 900_000,
-    u0: int = 100_000,
-    lambda0: int = 500_000,
 ) -> list[dict]:
     """Fellegi-Sunter parameter estimation by EM over agreement-pattern
     counts (Winkler 1988), in EXACT integer micro-units so every iteration
@@ -265,9 +262,9 @@ def em_fs_weights(
     entry's m/u feed score_pairs as log-likelihood-ratio weights."""
     rows = {r["pattern"]: r["n"] for r in patterns.collect()}
     M = MICRO
-    m = [m0] * n_fields
-    u = [u0] * n_fields
-    lam = lambda0
+    m = [900_000] * n_fields
+    u = [100_000] * n_fields
+    lam = 500_000
     states = []
     for _ in range(iterations):
         r_p: dict[int, int] = {}

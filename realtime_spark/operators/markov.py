@@ -31,32 +31,25 @@ from pyspark.sql import functions as F
 MICRO = 1_000_000
 
 
-def transitions(
-    df: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    tiebreak_col: str = "event_id",
-    round_digits: int = 6,
-) -> DataFrame:
+def transitions(df: DataFrame, user_col: str = "user_id") -> DataFrame:
     """Empirical transition matrix of consecutive events per user:
     (from_type, to_type, cnt, p) where p = cnt / out-count of from_type,
-    quantized. Ordering ties break on `tiebreak_col` for engine stability.
+    quantized. Ordering ties break on `event_id` for engine stability.
     """
     w = Window.partitionBy(user_col).orderBy(
-        F.col(ts_col).asc(), F.col(tiebreak_col).asc()
+        F.col("ts").asc(), F.col("event_id").asc()
     )
     pairs = (
         df.select(
-            F.col(type_col).alias("from_type"),
-            F.lead(type_col, 1).over(w).alias("to_type"),
+            F.col("event_type").alias("from_type"),
+            F.lead("event_type", 1).over(w).alias("to_type"),
         )
         .filter(F.col("to_type").isNotNull())
         .groupBy("from_type", "to_type")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     w_from = Window.partitionBy("from_type")
-    scale = float(10**round_digits)
+    scale = float(10**6)
     p = F.col("cnt").cast("double") / F.sum("cnt").over(w_from).cast("double")
     return pairs.select(
         "from_type",

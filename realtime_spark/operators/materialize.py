@@ -31,6 +31,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+SEQ, TS = "seq", "commit_timestamp"
+
 
 def pk_text_expr(record: Column, old_record: Column, pk: Column) -> Column:
     """Canonical primary-key string: pk values (from the record present on
@@ -41,16 +43,11 @@ def pk_text_expr(record: Column, old_record: Column, pk: Column) -> Column:
     )
 
 
-def materialize_latest(
-    changes: DataFrame,
-    seq_col: str = "seq",
-    ts_col: str = "commit_timestamp",
-    keep_tombstones: bool = False,
-) -> DataFrame:
+def materialize_latest(changes: DataFrame, keep_tombstones: bool = False) -> DataFrame:
     """Fold a change feed into the latest per-key state.
 
     Input: change frame with (schema_name, table_name, action, record map,
-    old_record map, pk array, `ts_col`, `seq_col`). Output: one row per
+    old_record map, pk array, commit_timestamp, seq). Output: one row per
     surviving key: (schema_name, table_name, pk_text, record,
     last_action, last_ts, last_seq, n_versions).
 
@@ -62,12 +59,12 @@ def materialize_latest(
     keyed = changes.withColumn(
         "pk_text", pk_text_expr(F.col("record"), F.col("old_record"), F.col("pk"))
     )
-    version = F.struct(F.col(ts_col), F.col(seq_col))
+    version = F.struct(F.col(TS), F.col(SEQ))
     payload = F.struct(
         F.col("action").alias("action"),
         F.col("record").alias("record"),
-        F.col(ts_col).alias("ts"),
-        F.col(seq_col).alias("seq"),
+        F.col(TS).alias("ts"),
+        F.col(SEQ).alias("seq"),
     )
     latest = keyed.groupBy("schema_name", "table_name", "pk_text").agg(
         F.max_by(payload, version).alias("last"),
@@ -87,9 +84,7 @@ def materialize_latest(
     )
 
 
-def apply_truncates(
-    changes: DataFrame, seq_col: str = "seq", ts_col: str = "commit_timestamp"
-) -> DataFrame:
+def apply_truncates(changes: DataFrame) -> DataFrame:
     """Apply TRUNCATE semantics to a change feed before materialization.
 
     The reference decodes WAL Truncate messages into `TruncatedRelation`
@@ -104,7 +99,7 @@ def apply_truncates(
     keep only data changes whose (ts, seq) version sorts after it. No
     window, no per-key state: one broadcast hash join over the feed.
     """
-    version = F.struct(F.col(ts_col).alias("ts"), F.col(seq_col).alias("seq"))
+    version = F.struct(F.col(TS).alias("ts"), F.col(SEQ).alias("seq"))
     trunc = (
         changes.filter(F.col("action") == "TRUNCATE")
         .groupBy("schema_name", "table_name")
@@ -149,42 +144,23 @@ def merge_snapshots(*snapshots: DataFrame) -> DataFrame:
 
 
 def snapshot_asof(
-    changes: DataFrame,
-    asof_ts: str,
-    asof_seq: int | None = None,
-    seq_col: str = "seq",
-    ts_col: str = "commit_timestamp",
-    keep_tombstones: bool = False,
+    changes: DataFrame, asof_ts: str, keep_tombstones: bool = False
 ) -> DataFrame:
     """Time travel: the table state as of a commit point — the fold of every
-    change whose version (ts, seq) sorts at or before (`asof_ts`,
-    `asof_seq`). The reference replays history from the message store with a
-    `WHERE inserted_at > since` bound (lib/realtime/messages.ex:24-43); this
-    is the complementary bound, reconstructing state AT a point instead of
-    changes SINCE one.
+    change committed at or before `asof_ts`. The reference replays history
+    from the message store with a `WHERE inserted_at > since` bound
+    (lib/realtime/messages.ex:24-43); this is the complementary bound,
+    reconstructing state AT a point instead of changes SINCE one.
 
     Scale shape: the bound is a plain filter ahead of materialize_latest's
     single partial-aggregated shuffle, so on a ts-partitioned change log it
     becomes partition pruning — the scan never reads segments past the
     as-of point."""
-    bound = changes.filter(F.col(ts_col) <= F.lit(asof_ts).cast("timestamp")) if (
-        asof_seq is None
-    ) else changes.filter(
-        F.struct(F.col(ts_col), F.col(seq_col))
-        <= F.struct(
-            F.lit(asof_ts).cast("timestamp").alias(ts_col),
-            F.lit(asof_seq).alias(seq_col),
-        )
-    )
-    return materialize_latest(bound, seq_col, ts_col, keep_tombstones)
+    bound = changes.filter(F.col(TS) <= F.lit(asof_ts).cast("timestamp"))
+    return materialize_latest(bound, keep_tombstones)
 
 
-def compact_changes(
-    changes: DataFrame,
-    before: Column,
-    seq_col: str = "seq",
-    ts_col: str = "commit_timestamp",
-) -> DataFrame:
+def compact_changes(changes: DataFrame, before: Column) -> DataFrame:
     """Changefeed compaction: squash each key's window of changes to its net
     effect against the pre-window base state (the log-compaction rule of
     Kafka compacted topics / Debezium snapshot squashing).
@@ -208,12 +184,12 @@ def compact_changes(
     keyed = changes.withColumn(
         "pk_text", pk_text_expr(F.col("record"), F.col("old_record"), F.col("pk"))
     )
-    version = F.struct(F.col(ts_col), F.col(seq_col))
+    version = F.struct(F.col(TS), F.col(SEQ))
     payload = F.struct(
         F.col("action").alias("action"),
         F.col("record").alias("record"),
-        F.col(ts_col).alias("ts"),
-        F.col(seq_col).alias("seq"),
+        F.col(TS).alias("ts"),
+        F.col(SEQ).alias("seq"),
     )
     agg = keyed.groupBy("schema_name", "table_name", "pk_text").agg(
         # max_by skips rows whose ordering key is NULL, so each segment's
@@ -340,9 +316,6 @@ def vacant_prune(
     events: DataFrame,
     now_epoch_s: int,
     threshold_s: int = 600,
-    key_col: str = "tenant_id",
-    kind_col: str = "kind",
-    vacant_kind: str = "vacant",
 ) -> DataFrame:
     """MetricsCleaner's vacancy table as a fold over the telemetry event log.
 
@@ -367,17 +340,17 @@ def vacant_prune(
     """
     from realtime_spark.functions.timeutil import epoch_seconds
 
-    last = events.groupBy(key_col).agg(
+    last = events.groupBy("tenant_id").agg(
         F.max_by(
-            F.struct(F.col(kind_col).alias("k"), epoch_seconds("ts").alias("s")),
+            F.struct(F.col("kind").alias("k"), epoch_seconds("ts").alias("s")),
             F.struct(F.col("ts"), F.col("seq")),
         ).alias("_last")
     )
     cutoff = now_epoch_s - threshold_s
     return (
-        last.filter(F.col("_last.k") == vacant_kind)
+        last.filter(F.col("_last.k") == "vacant")
         .select(
-            key_col,
+            "tenant_id",
             F.col("_last.s").alias("vacant_since_sec"),
             (F.col("_last.s") < F.lit(cutoff)).alias("pruned"),
         )

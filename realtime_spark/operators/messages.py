@@ -29,6 +29,7 @@ MESSAGE_SCHEMA_DDL = (
     "event string, private boolean, inserted_at timestamp, updated_at timestamp"
 )
 RETENTION_HOURS = 72  # reference: lib/realtime/messages.ex:72-78
+EVENT, TOPIC, PRIVATE = "event", "topic", "private"
 
 
 def uuid_from_hash(col) -> "F.Column":
@@ -42,14 +43,7 @@ def uuid_from_hash(col) -> "F.Column":
     return uuid_from_bytes(F.unhex(F.md5(col.cast("string"))))
 
 
-def realtime_send(
-    df: DataFrame,
-    payload_col: str = "payload",
-    event_col: str = "event",
-    topic_col: str = "topic",
-    private_col: str = "private",
-    gen_id=None,
-) -> DataFrame:
+def realtime_send(df: DataFrame, gen_id=None) -> DataFrame:
     """``realtime.send(payload jsonb, event, topic, private)`` — the
     payload-id auto-gen shape (F11), migration
     20251103001201_broadcast_send_include_payload_id.ex:8-40:
@@ -74,28 +68,21 @@ def realtime_send(
     gen = F.uuid() if gen_id is None else gen_id
     staged = df.select(F.col("*"), gen.alias("_rs_gen_id"))
     g = F.col("_rs_gen_id")
-    p = F.col(payload_col)
+    p = F.col("payload")
     final_payload = F.when(
         F.map_contains_key(p, F.lit("id")), p
     ).otherwise(F.map_concat(p, F.create_map(F.lit("id"), g)))
     return staged.select(
         g.alias("id"),
         final_payload.alias("payload"),
-        F.col(event_col).alias("event"),
-        F.col(topic_col).alias("topic"),
-        F.col(private_col).alias("private"),
+        F.col(EVENT).alias("event"),
+        F.col(TOPIC).alias("topic"),
+        F.col(PRIVATE).alias("private"),
         F.lit("broadcast").alias("extension"),
     )
 
 
-def realtime_send_binary(
-    df: DataFrame,
-    payload_col: str = "binary_payload",
-    event_col: str = "event",
-    topic_col: str = "topic",
-    private_col: str = "private",
-    gen_id=None,
-) -> DataFrame:
+def realtime_send_binary(df: DataFrame, gen_id=None) -> DataFrame:
     """``realtime.send_binary(payload bytea, event, topic, private)`` —
     the S6 binary variant, migration
     20260603120000_add_send_binary_function.ex:9-31: the row id is a fresh
@@ -108,37 +95,35 @@ def realtime_send_binary(
     return df.select(
         gen.alias("id"),
         F.lit(None).cast("map<string,string>").alias("payload"),
-        F.col(payload_col).cast("binary").alias("binary_payload"),
-        F.col(event_col).alias("event"),
-        F.col(topic_col).alias("topic"),
-        F.col(private_col).alias("private"),
+        F.col("binary_payload").cast("binary").alias("binary_payload"),
+        F.col(EVENT).alias("event"),
+        F.col(TOPIC).alias("topic"),
+        F.col(PRIVATE).alias("private"),
         F.lit("broadcast").alias("extension"),
     )
 
 
-def write_messages(df: DataFrame, path: str, mode: str = "append") -> None:
-    df.write.mode(mode).partitionBy("day").parquet(path)
+def write_messages(df: DataFrame, path: str) -> None:
+    df.write.mode("append").partitionBy("day").parquet(path)
 
 
 def read_messages(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def retention_cutoff(now: datetime, hours: int = RETENTION_HOURS) -> datetime:
-    return now - timedelta(hours=hours)
+def retention_cutoff(now: datetime) -> datetime:
+    return now - timedelta(hours=RETENTION_HOURS)
 
 
-def apply_retention(messages: DataFrame, now: datetime, hours: int = RETENTION_HOURS) -> DataFrame:
+def apply_retention(messages: DataFrame, now: datetime) -> DataFrame:
     """S10: keep only rows in partitions newer than the cutoff. The predicate
     is on the partition column so the scan prunes instead of reading 72h+ of
     data (drop-partition equivalence)."""
-    cutoff = retention_cutoff(now, hours).date()
+    cutoff = retention_cutoff(now).date()
     return messages.filter(F.col("day") >= F.lit(cutoff))
 
 
-def drop_old_partitions(
-    path: str, now: datetime, hours: int = RETENTION_HOURS
-) -> list[str]:
+def drop_old_partitions(path: str, now: datetime) -> list[str]:
     """S10 physical form — the janitor's maintenance task: drop whole day
     partitions older than the cutoff by removing their directories, exactly
     like the reference's partition-name date compare + DROP TABLE
@@ -150,7 +135,7 @@ def drop_old_partitions(
     import shutil
     from datetime import date
 
-    cutoff = retention_cutoff(now, hours).date()
+    cutoff = retention_cutoff(now).date()
     dropped: list[str] = []
     for entry in sorted(os.listdir(path)):
         if not entry.startswith("day="):
@@ -209,22 +194,17 @@ def db_broadcast_from_changes(
     return out.filter(F.octet_length("payload") <= max_payload_kb * 1000)
 
 
-def compact_partitions(
-    spark: SparkSession,
-    path: str,
-    days: list[str] | None = None,
-    target_files_per_partition: int = 1,
-) -> dict[str, tuple[int, int]]:
+def compact_partitions(spark: SparkSession, path: str) -> dict[str, tuple[int, int]]:
     """Small-file compaction for the day-partitioned store: rewrite each day
-    partition into `target_files_per_partition` files.
+    partition into one file.
 
     A streaming writer appends one file per micro-batch per partition — at a
     100 ms trigger that's ~864k files/day/partition-column-value, which
     destroys scan planning long before data volume does. The janitor
     maintenance analog alongside retention (S10): compact closed (past) day
     partitions once, newest day stays append-hot. Each partition is
-    rewritten atomically via a temp dir + rename; `days=None` compacts all
-    but the lexicographically-last (hot) day. Returns
+    rewritten atomically via a temp dir + rename; every day but the
+    lexicographically-last (hot) one is compacted. Returns
     {day: (files_before, files_after)}.
     """
     import os
@@ -234,22 +214,18 @@ def compact_partitions(
         d for d in os.listdir(path)
         if d.startswith("day=") and os.path.isdir(os.path.join(path, d))
     )
-    if days is None:
-        targets = part_dirs[:-1]  # keep the hot (latest) day append-only
-    else:
-        want = {f"day={d}" for d in days}
-        targets = [d for d in part_dirs if d in want]
+    targets = part_dirs[:-1]  # keep the hot (latest) day append-only
     result: dict[str, tuple[int, int]] = {}
     for d in targets:
         pdir = os.path.join(path, d)
         before = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
-        if len(before) <= target_files_per_partition:
+        if len(before) <= 1:
             result[d[4:]] = (len(before), len(before))
             continue
         tmp = pdir + "._compact_tmp"
         (
             spark.read.parquet(pdir)
-            .repartition(target_files_per_partition)
+            .repartition(1)
             .write.mode("overwrite")
             .parquet(tmp)
         )

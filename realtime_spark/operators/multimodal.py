@@ -40,6 +40,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+ID, PAYLOAD = "media_id", "payload"
+
 # typed metadata carried beside every media payload
 MEDIA_META_SCHEMA = StructType(
     [
@@ -96,9 +98,7 @@ def decode_media(payload: bytes, fmt: str) -> Any:
     )
 
 
-def extract_features(
-    media: DataFrame, dim: int = 8, fake: bool = True, batch_hint: int = 256
-) -> DataFrame:
+def extract_features(media: DataFrame, dim: int = 8, fake: bool = True) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
     mapInPandas keeps partitioning (no shuffle) and never re-emits the binary
@@ -129,7 +129,7 @@ def extract_features(
 
 
 def sample_frames(
-    media: DataFrame, every_ms: int = 1000, max_frames: int = 16, fake: bool = True
+    media: DataFrame, every_ms: int = 1000, max_frames: int = 16
 ) -> DataFrame:
     """Video frame sampling: one output row per sampled frame timestamp.
 
@@ -143,8 +143,6 @@ def sample_frames(
         for pdf in batches:
             out: dict[str, list] = {"media_id": [], "frame_idx": [], "ts_ms": [], "frame_digest": []}
             for _, row in pdf.iterrows():
-                if not fake:
-                    decode_media(bytes(row["payload"]), "video")
                 dur = row["meta"]["duration_ms"] or 0
                 n = min(int(-(-dur // every_ms)), max_frames)  # ceil; 0 if no duration
                 base = hashlib.md5(bytes(row["payload"]) if row["payload"] is not None else b"").hexdigest()
@@ -333,8 +331,7 @@ SNIFF_SCHEMA = (
 )
 
 
-def sniff_media(media: DataFrame, id_col: str = "media_id",
-                payload_col: str = "payload") -> DataFrame:
+def sniff_media(media: DataFrame) -> DataFrame:
     """Arrow-batched real header sniffing over a media frame: one row per
     payload with parsed container facts and header_ok=false for unknown/
     corrupt magics (the quarantine split for a media-ingest pipeline).
@@ -349,11 +346,11 @@ def sniff_media(media: DataFrame, id_col: str = "media_id",
                 None
                 if p is None
                 else sniff_media_header(p if isinstance(p, bytes) else bytes(p))
-                for p in b[payload_col]
+                for p in b[PAYLOAD]
             ]  # NULL payload -> header_ok=false row (quarantine contract)
             yield pd.DataFrame(
                 {
-                    "media_id": b[id_col].to_numpy(),
+                    "media_id": b[ID].to_numpy(),
                     "format": [m["format"] if m else None for m in metas],
                     "width": pd.array(
                         [m["width"] if m else None for m in metas], dtype="Int32"
@@ -372,7 +369,7 @@ def sniff_media(media: DataFrame, id_col: str = "media_id",
                 }
             )
 
-    return media.select(id_col, payload_col).mapInPandas(run, SNIFF_SCHEMA)
+    return media.select(ID, PAYLOAD).mapInPandas(run, SNIFF_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -415,7 +412,7 @@ def _synth_pcm(media_id: int) -> bytes:
     return buf.getvalue()
 
 
-def synth_wav(df: DataFrame, id_col: str = "media_id") -> DataFrame:
+def synth_wav(df: DataFrame) -> DataFrame:
     """(media_id, payload): deterministic WAV container per id — the
     ingest-side encoder. Arrow-batched; payload never exceeds ~1 KB here,
     but the shape (id projection -> binary column) is the real one."""
@@ -424,7 +421,7 @@ def synth_wav(df: DataFrame, id_col: str = "media_id") -> DataFrame:
         for b in batches:
             if not len(b):
                 continue
-            ids = b[id_col].astype("int64")
+            ids = b[ID].astype("int64")
             yield pd.DataFrame(
                 {"media_id": ids, "payload": [_synth_pcm(int(i)) for i in ids]}
             )
@@ -432,12 +429,10 @@ def synth_wav(df: DataFrame, id_col: str = "media_id") -> DataFrame:
     schema = StructType(
         [StructField("media_id", LongType()), StructField("payload", BinaryType())]
     )
-    return df.select(id_col).mapInPandas(run, schema)
+    return df.select(ID).mapInPandas(run, schema)
 
 
-def wav_pcm_stats(
-    media: DataFrame, id_col: str = "media_id", payload_col: str = "payload"
-) -> DataFrame:
+def wav_pcm_stats(media: DataFrame) -> DataFrame:
     """Decode WAV payloads (stdlib `wave`) and emit exact-integer PCM
     statistics: sample count, rate, duration, amplitude sum, and squared
     deviation from the 8-bit midpoint (128) — the integer core of an RMS
@@ -457,7 +452,7 @@ def wav_pcm_stats(
             if not len(b):
                 continue
             rows = []
-            for mid, p in zip(b[id_col], b[payload_col]):
+            for mid, p in zip(b[ID], b[PAYLOAD]):
                 raw = p if isinstance(p, bytes) else bytes(p)
                 with wave.open(io.BytesIO(raw), "rb") as w:
                     if w.getsampwidth() != 1 or w.getnchannels() != 1:
@@ -485,7 +480,7 @@ def wav_pcm_stats(
                 )
             yield pd.DataFrame(rows)
 
-    return media.select(id_col, payload_col).mapInPandas(run, PCM_STATS_SCHEMA)
+    return media.select(ID, PAYLOAD).mapInPandas(run, PCM_STATS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -558,14 +553,14 @@ def decode_pgm(payload: bytes) -> dict:
     }
 
 
-def synth_pgm(df: DataFrame, id_col: str = "media_id") -> DataFrame:
+def synth_pgm(df: DataFrame) -> DataFrame:
     """(media_id, payload): deterministic PGM container per id."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             if not len(b):
                 continue
-            ids = b[id_col].astype("int64")
+            ids = b[ID].astype("int64")
             yield pd.DataFrame(
                 {"media_id": ids, "payload": [_synth_pgm(int(i)) for i in ids]}
             )
@@ -573,12 +568,10 @@ def synth_pgm(df: DataFrame, id_col: str = "media_id") -> DataFrame:
     schema = StructType(
         [StructField("media_id", LongType()), StructField("payload", BinaryType())]
     )
-    return df.select(id_col).mapInPandas(run, schema)
+    return df.select(ID).mapInPandas(run, schema)
 
 
-def pgm_pixel_stats(
-    media: DataFrame, id_col: str = "media_id", payload_col: str = "payload"
-) -> DataFrame:
+def pgm_pixel_stats(media: DataFrame) -> DataFrame:
     """Decode PGM payloads and emit exact-integer pixel statistics. Same
     scale contract as wav_pcm_stats: decode once per row inside
     mapInPandas, emit fixed-width rows, never re-emit the binary."""
@@ -588,13 +581,13 @@ def pgm_pixel_stats(
             if not len(b):
                 continue
             rows = []
-            for mid, p in zip(b[id_col], b[payload_col]):
+            for mid, p in zip(b[ID], b[PAYLOAD]):
                 d = decode_pgm(p if isinstance(p, bytes) else bytes(p))
                 d["media_id"] = int(mid)
                 rows.append(d)
             yield pd.DataFrame(rows)
 
-    return media.select(id_col, payload_col).mapInPandas(run, PGM_STATS_SCHEMA)
+    return media.select(ID, PAYLOAD).mapInPandas(run, PGM_STATS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -629,12 +622,12 @@ def _synth_zip(media_id: int) -> bytes:
     return buf.getvalue()
 
 
-def synth_zip(df: DataFrame, id_col: str = "media_id") -> DataFrame:
+def synth_zip(df: DataFrame) -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             if not len(b):
                 continue
-            ids = b[id_col].astype("int64")
+            ids = b[ID].astype("int64")
             yield pd.DataFrame(
                 {"media_id": ids, "payload": [_synth_zip(int(i)) for i in ids]}
             )
@@ -642,12 +635,10 @@ def synth_zip(df: DataFrame, id_col: str = "media_id") -> DataFrame:
     schema = StructType(
         [StructField("media_id", LongType()), StructField("payload", BinaryType())]
     )
-    return df.select(id_col).mapInPandas(run, schema)
+    return df.select(ID).mapInPandas(run, schema)
 
 
-def zip_members(
-    media: DataFrame, id_col: str = "media_id", payload_col: str = "payload"
-) -> DataFrame:
+def zip_members(media: DataFrame) -> DataFrame:
     """One row per archive member: name, uncompressed size, the container's
     own CRC32, and an md5 of the extracted content (the dedup key an
     archive-ingest pipeline carries forward). Central-directory metadata
@@ -662,7 +653,7 @@ def zip_members(
             if not len(b):
                 continue
             rows = []
-            for mid, p in zip(b[id_col], b[payload_col]):
+            for mid, p in zip(b[ID], b[PAYLOAD]):
                 raw = p if isinstance(p, bytes) else bytes(p)
                 with zipfile.ZipFile(io.BytesIO(raw)) as z:
                     for info in z.infolist():
@@ -679,7 +670,7 @@ def zip_members(
                         )
             yield pd.DataFrame(rows)
 
-    return media.select(id_col, payload_col).mapInPandas(run, ZIP_MEMBER_SCHEMA)
+    return media.select(ID, PAYLOAD).mapInPandas(run, ZIP_MEMBER_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -779,15 +770,13 @@ def parse_gif_structure(payload: bytes) -> dict:
     raise ValueError("missing trailer")
 
 
-def gif_structure(
-    media: DataFrame, id_col: str = "media_id", payload_col: str = "payload"
-) -> DataFrame:
+def gif_structure(media: DataFrame) -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             if not len(b):
                 continue
             rows = []
-            for mid, p in zip(b[id_col], b[payload_col]):
+            for mid, p in zip(b[ID], b[PAYLOAD]):
                 d = parse_gif_structure(
                     p if isinstance(p, bytes) else bytes(p)
                 )
@@ -795,15 +784,15 @@ def gif_structure(
                 rows.append(d)
             yield pd.DataFrame(rows)
 
-    return media.select(id_col, payload_col).mapInPandas(run, GIF_STATS_SCHEMA)
+    return media.select(ID, PAYLOAD).mapInPandas(run, GIF_STATS_SCHEMA)
 
 
-def synth_gif(df: DataFrame, id_col: str = "media_id") -> DataFrame:
+def synth_gif(df: DataFrame) -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             if not len(b):
                 continue
-            ids = b[id_col].astype("int64")
+            ids = b[ID].astype("int64")
             yield pd.DataFrame(
                 {"media_id": ids, "payload": [_synth_gif(int(i)) for i in ids]}
             )
@@ -811,4 +800,4 @@ def synth_gif(df: DataFrame, id_col: str = "media_id") -> DataFrame:
     schema = StructType(
         [StructField("media_id", LongType()), StructField("payload", BinaryType())]
     )
-    return df.select(id_col).mapInPandas(run, schema)
+    return df.select(ID).mapInPandas(run, schema)

@@ -31,8 +31,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+VEC = "embedding"
 
-def covariance(emb: DataFrame, vec_col: str = "embedding") -> tuple[np.ndarray, np.ndarray, int]:
+
+def covariance(emb: DataFrame) -> tuple[np.ndarray, np.ndarray, int]:
     """(mean[d], cov[d,d], n) — biased (population, 1/n) covariance.
 
     Partials collapse relationally as tagged (t, i, v) rows emitted straight
@@ -52,7 +54,7 @@ def covariance(emb: DataFrame, vec_col: str = "embedding") -> tuple[np.ndarray, 
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            xb = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            xb = np.array(pdf[VEC].tolist(), dtype=np.float64)
             d_ = xb.shape[1]
             sv = xb.sum(axis=0)
             xtxv = (xb.T @ xb).ravel()
@@ -65,7 +67,7 @@ def covariance(emb: DataFrame, vec_col: str = "embedding") -> tuple[np.ndarray, 
             )
 
     rows = (
-        emb.select(vec_col)
+        emb.select(VEC)
         .mapInPandas(tagged, schema=schema)
         .groupBy("t", "i")
         .agg(F.sum("v").alias("v"))
@@ -82,13 +84,11 @@ def covariance(emb: DataFrame, vec_col: str = "embedding") -> tuple[np.ndarray, 
     return mean, cov, int(n)
 
 
-def pca_fit(
-    emb: DataFrame, k: int, vec_col: str = "embedding"
-) -> dict:
+def pca_fit(emb: DataFrame, k: int) -> dict:
     """Top-k principal axes of the embedding corpus.
 
     Returns {mean[d], components[k,d], eigvals[k], explained[k], n}."""
-    mean, cov, n = covariance(emb, vec_col)
+    mean, cov, n = covariance(emb)
     vals, vecs = np.linalg.eigh(cov)  # ascending
     order = np.argsort(vals)[::-1][:k]
     comps = vecs[:, order].T  # k x d
@@ -109,22 +109,15 @@ def pca_fit(
     }
 
 
-def pca_project(
-    emb: DataFrame,
-    model: dict,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    whiten: bool = False,
-    eps: float = 1e-12,
-) -> DataFrame:
+def pca_project(emb: DataFrame, model: dict, whiten: bool = False) -> DataFrame:
     """(id, pc array<double>[k]): center, rotate, optionally whiten —
     a broadcast-sized matrix applied in an Arrow-batched matmul."""
     mean = model["mean"]
     comps = model["components"]
-    scale = 1.0 / np.sqrt(np.maximum(model["eigvals"], eps)) if whiten else None
+    scale = 1.0 / np.sqrt(np.maximum(model["eigvals"], 1e-12)) if whiten else None
     schema = T.StructType(
         [
-            emb.schema[id_col],
+            emb.schema["vec_id"],
             T.StructField("pc", T.ArrayType(T.DoubleType())),
         ]
     )
@@ -133,10 +126,10 @@ def pca_project(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.array(pdf[vec_col].tolist(), dtype=np.float64) - mean
+            x = np.array(pdf[VEC].tolist(), dtype=np.float64) - mean
             p = x @ comps.T
             if scale is not None:
                 p = p * scale
-            yield pd.DataFrame({id_col: pdf[id_col], "pc": p.tolist()})
+            yield pd.DataFrame({"vec_id": pdf["vec_id"], "pc": p.tolist()})
 
-    return emb.select(id_col, vec_col).mapInPandas(run, schema=schema)
+    return emb.select("vec_id", VEC).mapInPandas(run, schema=schema)

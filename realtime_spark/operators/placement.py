@@ -79,20 +79,18 @@ def expected_node(
     tenants: DataFrame,
     topology: DataFrame,
     default_node: str,
-    region_col: str = "region",
-    tenant_col: str = "tenant_id",
 ) -> DataFrame:
     """launch_node's deterministic answer per tenant: zero nodes in the
     platform region (or an untranslatable region) -> ``default_node``; one
     node -> it; else sorted_nodes[stable_hash(tenant_id) % count]
     (nodes.ex:117-128,150-153). Adds ``platform_region`` and
     ``expected_node``; broadcast join, tenant side stays map-only."""
-    t = tenants.withColumn("platform_region", platform_region(F.col(region_col)))
+    t = tenants.withColumn("platform_region", platform_region(F.col("region")))
     topo = F.broadcast(topology.withColumnRenamed("region", "platform_region"))
     j = t.join(topo, "platform_region", "left")
     h = F.conv(
         F.substring(
-            F.md5(F.concat(F.lit(PLACEMENT_SEED + ":"), F.col(tenant_col))), 1, 15
+            F.md5(F.concat(F.lit(PLACEMENT_SEED + ":"), F.col("tenant_id"))), 1, 15
         ),
         16,
         10,

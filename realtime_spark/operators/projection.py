@@ -64,13 +64,13 @@ def keep_keys(m: Column, keys: Column) -> Column:
     )
 
 
-def record_text(m: Column, null_token: str = "<null>") -> Column:
+def record_text(m: Column) -> Column:
     """Canonical text form of a record map for hashing/golden comparison:
     entries sorted by key, `k=v` joined with `|`."""
     return F.array_join(
         F.transform(
             F.array_sort(F.map_entries(m)),
-            lambda e: F.concat(e["key"], F.lit("="), F.coalesce(e["value"], F.lit(null_token))),
+            lambda e: F.concat(e["key"], F.lit("="), F.coalesce(e["value"], F.lit("<null>"))),
         ),
         "|",
     )

@@ -61,8 +61,6 @@ def wap_publish(
     df: DataFrame,
     base_dir: str,
     checks,
-    table: str = "dataset",
-    partition_by: list[str] | None = None,
 ) -> DataFrame:
     """Stage `df`, audit the STAGED files (what consumers would read, not
     the logical plan — catches writer bugs too), and promote on success.
@@ -84,13 +82,10 @@ def wap_publish(
     staging = os.path.join(base_dir, "staging")
     shutil.rmtree(staging, ignore_errors=True)
 
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
+    df.write.mode("overwrite").parquet(staging)
 
     staged = spark.read.parquet(staging)
-    audit = run_checks(staged, table, checks)
+    audit = run_checks(staged, "dataset", checks)
     rows = [r.asDict() for r in audit.collect()]
     failures = [r for r in rows if not r["ok"]]
     if failures:

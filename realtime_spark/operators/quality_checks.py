@@ -137,15 +137,11 @@ def referential_check(
     )
 
 
-def k_anonymity(
-    df: DataFrame,
-    quasi_cols: list[str],
-    k: int = 5,
-) -> DataFrame:
+def k_anonymity(df: DataFrame, quasi_cols: list[str]) -> DataFrame:
     """k-anonymity audit over quasi-identifier columns (Sweeney 2002): a
     released dataset is k-anonymous iff every quasi-identifier combination
     matches >= k rows. Returns per-combination group sizes for groups
-    BELOW k (the re-identification risks a release gate must suppress or
+    BELOW k = 5 (the re-identification risks a release gate must suppress or
     generalize), plus each group's size — empty result == k-anonymous.
 
     Scale shape: one map-side-combined groupBy on the quasi columns; the
@@ -155,7 +151,7 @@ def k_anonymity(
     return (
         df.groupBy(*quasi_cols)
         .agg(F.count(F.lit(1)).alias("group_size"))
-        .filter(F.col("group_size") < k)
+        .filter(F.col("group_size") < 5)
     )
 
 

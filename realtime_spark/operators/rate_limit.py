@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from realtime_spark.functions.timeutil import epoch_seconds
@@ -27,15 +27,12 @@ from realtime_spark.functions.timeutil import epoch_seconds
 WINDOW_SECONDS = 60  # reference: rate_counter.ex:26-27
 
 
-def second_buckets(
-    df: DataFrame, keys: Sequence[str], ts_col: str = "ts", weight: Column | None = None
-) -> DataFrame:
+def second_buckets(df: DataFrame, keys: Sequence[str], ts_col: str = "ts") -> DataFrame:
     """1-second bucket counts per key (the GenCounter tick stream, A7)."""
-    agg = F.count(F.lit(1)) if weight is None else F.sum(weight)
     return (
         df.withColumn("sec", epoch_seconds(ts_col))
         .groupBy(*keys, "sec")
-        .agg(agg.cast("long").alias("bucket_count"))
+        .agg(F.count(F.lit(1)).cast("long").alias("bucket_count"))
     )
 
 
@@ -44,7 +41,6 @@ def sliding_rate(
     keys: Sequence[str],
     ts_col: str = "ts",
     window_seconds: int = WINDOW_SECONDS,
-    weight: Column | None = None,
 ) -> DataFrame:
     """Trailing-window sum + per-second average at every active second.
 
@@ -52,7 +48,7 @@ def sliding_rate(
     the reference divides by bucket-list length x tick seconds, which equals 60
     once the ring buffer is warm; we match the warm-state semantics.
     """
-    buckets = second_buckets(df, keys, ts_col, weight)
+    buckets = second_buckets(df, keys, ts_col)
     w = (
         Window.partitionBy(*keys)
         .orderBy("sec")
@@ -149,7 +145,6 @@ def client_window_limit(
     client_keys: Sequence[str],
     max_calls: int = 5,
     window_seconds: int = 30,
-    ts_col: str = "ts",
     seq_col: str | None = None,
 ) -> DataFrame:
     """Per-client fixed-count sliding window: an event is rejected when the
@@ -173,7 +168,7 @@ def client_window_limit(
     than `max_calls` PRIOR events fall in its trailing window. One shuffle
     on the client key either way.
     """
-    base = df.withColumn("_sec", epoch_seconds(ts_col))
+    base = df.withColumn("_sec", epoch_seconds("ts"))
     if seq_col is None:
         w = (
             Window.partitionBy(*client_keys)

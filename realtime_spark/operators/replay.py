@@ -31,19 +31,17 @@ def replay_topk(
     messages: DataFrame,
     since: datetime | str,
     until: datetime | str | None = None,
-    topic: str | None = None,
     limit: int = HARD_LIMIT,
-    private_only: bool = True,
 ) -> DataFrame:
-    """Latest <= k broadcast messages per topic in [since, until), oldest-first.
+    """Latest <= k private broadcast messages per topic in [since, until),
+    oldest-first.
 
-    `topic=None` runs the scan for every topic at once (the scale path: one
-    windowed pass instead of per-topic point queries).
+    The scan runs for every topic at once (the scale path: one windowed
+    pass instead of per-topic point queries).
     """
     k = max(1, min(int(limit), HARD_LIMIT))
     df = messages.filter(F.col("extension") == "broadcast")
-    if private_only:
-        df = df.filter(F.col("private"))
+    df = df.filter(F.col("private"))
     df = df.filter(F.col("inserted_at") >= F.lit(since))
     if until is not None:
         df = df.filter(F.col("inserted_at") < F.lit(until))
@@ -55,8 +53,6 @@ def replay_topk(
         df = df.filter(F.col("day") >= F.to_date(F.lit(since)))
         if until is not None:
             df = df.filter(F.col("day") <= F.to_date(F.lit(until)))
-    if topic is not None:
-        df = df.filter(F.col("topic") == topic)
     w = Window.partitionBy("topic").orderBy(
         F.col("inserted_at").desc(), F.col("id").desc()
     )

@@ -76,7 +76,6 @@ def v2_frame(
     event: Column,
     metadata_json: Column,
     payload: Column,
-    payload_encoding_json: Column | bool = True,
 ) -> Column:
     """UserBroadcast binary push frame, byte-for-byte the reference layout
     (v2_serializer.ex:19-45):
@@ -93,17 +92,12 @@ def v2_frame(
     t = F.encode(topic, "UTF-8")
     e = F.encode(event, "UTF-8")
     m = F.encode(metadata_json, "UTF-8")
-    enc = (
-        payload_encoding_json
-        if isinstance(payload_encoding_json, Column)
-        else F.lit(bool(payload_encoding_json))
-    )
     return F.concat(
         _int1(F.lit(_OP_USER_BROADCAST)),
         _int1(F.octet_length(t)),
         _int1(F.octet_length(e)),
         _int1(F.octet_length(m)),
-        _int1(enc.cast("int")),
+        _int1(F.lit(True).cast("int")),  # user_payload_encoding: json
         t,
         e,
         m,
@@ -134,7 +128,7 @@ _OP_PUSH = 0
 _OP_USER_BROADCAST_PUSH = 3
 
 
-def v2_decode_push(frames: DataFrame, frame_col: str = "frame") -> DataFrame:
+def v2_decode_push(frames: DataFrame) -> DataFrame:
     """Decode inbound V2 binary frames — the serializer's client->server
     direction (v2_serializer.ex:158-212):
 
@@ -166,7 +160,7 @@ def v2_decode_push(frames: DataFrame, frame_col: str = "frame") -> DataFrame:
         return F.conv(F.hex(F.substr(f, F.lit(pos), F.lit(1))), 16, 10).cast("int")
 
     staged = frames.select(
-        F.col(frame_col).alias("_f"),
+        F.col("frame").alias("_f"),
         bval(1).alias("_op"),
         bval(2).alias("_s_jr"),
         bval(3).alias("_s_ref"),
@@ -230,14 +224,7 @@ def encode_frames(messages: DataFrame) -> DataFrame:
     )
 
 
-def fanout_subscribers(
-    msgs: DataFrame,
-    subs: DataFrame,
-    topic_col: str = "topic",
-    sender_col: str = "sender_id",
-    sub_col: str = "subscriber_id",
-    self_col: str = "self_broadcast",
-) -> DataFrame:
+def fanout_subscribers(msgs: DataFrame, subs: DataFrame) -> DataFrame:
     """Per-subscriber delivery pairs for a broadcast batch, honoring the
     self-broadcast flag: the sender's own connection is skipped unless the
     message was published with `self: true`.
@@ -252,10 +239,10 @@ def fanout_subscribers(
     message stream never shuffles. `is_self` marks echo deliveries (the
     reference's ack/echo path) for sink-side accounting.
     """
-    pairs = msgs.join(F.broadcast(subs), topic_col)
-    keep = F.col(self_col) | (F.col(sub_col) != F.col(sender_col))
+    pairs = msgs.join(F.broadcast(subs), "topic")
+    keep = F.col("self_broadcast") | (F.col("subscriber_id") != F.col("sender_id"))
     return pairs.filter(keep).withColumn(
-        "is_self", F.col(sub_col) == F.col(sender_col)
+        "is_self", F.col("subscriber_id") == F.col("sender_id")
     )
 
 

@@ -36,16 +36,14 @@ def hash_bucket(key: Column, buckets: int = _BUCKETS) -> Column:
     )
 
 
-def hash_sample(
-    df: DataFrame, key_col: str, fraction: float, buckets: int = _BUCKETS
-) -> DataFrame:
+def hash_sample(df: DataFrame, key_col: str, fraction: float) -> DataFrame:
     """Deterministic ~fraction sample keyed on `key_col`. Map-only: the
     predicate reaches the scan (partition/row-group pruning applies when the
     key correlates with layout)."""
     # round, don't truncate: 0.29 * 10000 is 2899.999... in binary floats
     # and int() would keep one bucket too few
     return df.filter(
-        hash_bucket(F.col(key_col), buckets) < int(round(fraction * buckets))
+        hash_bucket(F.col(key_col)) < int(round(fraction * _BUCKETS))
     )
 
 
@@ -55,17 +53,16 @@ def stratified_sample(
     fractions: Mapping[str, float],
     key_col: str,
     default_fraction: float = 0.0,
-    buckets: int = _BUCKETS,
 ) -> DataFrame:
     """Per-stratum deterministic sampling: each stratum keeps its own
     fraction (e.g. downsample boilerplate-heavy sources, keep rare ones).
     Map-only; the stratum threshold is a small CASE expression."""
-    thresh: Column = F.lit(int(round(default_fraction * buckets)))
+    thresh: Column = F.lit(int(round(default_fraction * _BUCKETS)))
     for stratum, frac in sorted(fractions.items()):
         thresh = F.when(
-            F.col(strata_col) == stratum, F.lit(int(round(frac * buckets)))
+            F.col(strata_col) == stratum, F.lit(int(round(frac * _BUCKETS)))
         ).otherwise(thresh)
-    return df.filter(hash_bucket(F.col(key_col), buckets) < thresh)
+    return df.filter(hash_bucket(F.col(key_col)) < thresh)
 
 
 def split_assign(
@@ -74,19 +71,18 @@ def split_assign(
     splits: Sequence[tuple[str, float]] = (
         ("train", 0.98), ("val", 0.01), ("test", 0.01),
     ),
-    buckets: int = _BUCKETS,
     out_col: str = "split",
 ) -> DataFrame:
     """Assign every row to a named split by cumulative hash-bucket ranges.
     Weights must sum to <= 1; any remainder falls into the last split.
     Deterministic per key: the same document always lands in the same split
     regardless of cluster size, partitioning, or run count."""
-    b = hash_bucket(F.col(key_col), buckets)
+    b = hash_bucket(F.col(key_col))
     expr: Column | None = None
     cum = 0.0
     for name, w in splits[:-1]:
         cum += w
-        cond = b < int(round(cum * buckets))
+        cond = b < int(round(cum * _BUCKETS))
         expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
     last = splits[-1][0]
     out = F.lit(last) if expr is None else expr.otherwise(F.lit(last))
@@ -100,7 +96,6 @@ def cluster_split(
     splits: Sequence[tuple[str, float]] = (
         ("train", 0.98), ("val", 0.01), ("test", 0.01),
     ),
-    buckets: int = _BUCKETS,
     out_col: str = "split",
 ) -> DataFrame:
     """LEAKAGE-FREE split: every member of a near-dup cluster lands in the
@@ -118,12 +113,12 @@ def cluster_split(
         F.col("doc_id").alias(key_col), F.col("cluster_id").alias("__rep")
     )
     joined = df.join(F.broadcast(c), key_col, "left")
-    b = hash_bucket(F.coalesce(F.col("__rep"), F.col(key_col)), buckets)
+    b = hash_bucket(F.coalesce(F.col("__rep"), F.col(key_col)))
     expr: Column | None = None
     cum = 0.0
     for name, w in splits[:-1]:
         cum += w
-        cond = b < int(round(cum * buckets))
+        cond = b < int(round(cum * _BUCKETS))
         expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
     last = splits[-1][0]
     out = F.lit(last) if expr is None else expr.otherwise(F.lit(last))
@@ -152,7 +147,6 @@ def temperature_mix(
     key_col: str,
     budget: int,
     alpha: float = 0.5,
-    round_digits: int = 9,
 ) -> DataFrame:
     """Temperature-scaled domain mixing: sample ~budget rows total with
     per-group take counts proportional to (group share)^alpha — the standard
@@ -233,7 +227,6 @@ def weighted_sample_per_group(
     key_col: str,
     weight: Column,
     k: int,
-    round_digits: int = 9,
 ) -> DataFrame:
     """Deterministic weighted sampling without replacement: keep the k rows
     per group with the smallest exponential clock
@@ -246,7 +239,7 @@ def weighted_sample_per_group(
     partitionings. P(row first) ∝ its weight; weights must be > 0.
 
     Map-only scoring + one top-k window on the group key (same shuffle
-    shape as sample_n_per_group). Priorities are rounded to `round_digits`
+    shape as sample_n_per_group). Priorities are rounded to 9 digits
     and tie-broken by key so rank order is engine-stable (ln is evaluated
     on identical IEEE doubles both sides). Output: df + (priority double);
     at most k rows per group."""
@@ -259,7 +252,7 @@ def weighted_sample_per_group(
     # integer add first
     u = (h + F.lit(1)) / F.lit(float(1 << 60))
     pr = -F.log(u) / weight.cast("double")
-    scale = float(10 ** round_digits)
+    scale = float(10 ** 9)
     prq = F.floor(pr * scale + 0.5) / scale
     w = Window.partitionBy(group_col).orderBy(
         F.col("priority").asc(), F.col(key_col).asc()

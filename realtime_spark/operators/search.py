@@ -69,6 +69,10 @@ def term_stats(post: DataFrame) -> DataFrame:
 # prune away the partition holding a query term and silently drop it
 INDEX_BUCKETS = 64
 
+# BM25 term-frequency saturation and length normalization; score rounding
+K1, B = 1.2, 0.75
+DIGITS = 4
+
 
 def _term_bucket_col(term: Column) -> Column:
     return F.crc32(term) % INDEX_BUCKETS
@@ -80,7 +84,7 @@ def _term_bucket_py(term: str) -> int:
     return zlib.crc32(term.encode()) % INDEX_BUCKETS
 
 
-def _bm25_rank(post, lengths, stats, k, k1, b, round_digits):
+def _bm25_rank(post, lengths, stats, k):
     """Shared BM25 scoring + top-k tail: the corpus-scan and index paths
     must stay score-identical (same formula, rounding, tie-break), so the
     formula lives exactly once."""
@@ -102,15 +106,15 @@ def _bm25_rank(post, lengths, stats, k, k1, b, round_digits):
         .withColumn(
             "contrib",
             F.col("idf")
-            * (F.col("tf") * (k1 + 1.0))
+            * (F.col("tf") * (K1 + 1.0))
             / (
                 F.col("tf")
-                + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
+                + K1 * (1.0 - B + B * F.col("dl") / F.col("avgdl"))
             ),
         )
     )
     scores = scored.groupBy("doc").agg(
-        F.round(F.sum("contrib"), round_digits).alias("score"),
+        F.round(F.sum("contrib"), DIGITS).alias("score"),
         F.count(F.lit(1)).alias("n_terms_matched"),
     )
     # orderBy+limit compiles to TakeOrderedAndProject: each task keeps its
@@ -129,14 +133,11 @@ def bm25_topk(
     text_col: str,
     query_terms: Sequence[str],
     k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
-    round_digits: int = 4,
 ) -> DataFrame:
     """Top-k documents for a bag-of-terms query under BM25.
 
     idf = ln(1 + (N - df_t + 0.5) / (df_t + 0.5))   (Robertson-Sparck Jones)
-    score(d) = sum_t idf_t * tf * (k1+1) / (tf + k1 * (1 - b + b * dl/avgdl))
+    score(d) = sum_t idf_t * tf * (K1+1) / (tf + K1 * (1 - B + B * dl/avgdl))
 
     Scores are rounded before ranking and ties broken by doc id, so the
     result is engine-stable (the DuckDB oracle replays the same formula).
@@ -148,7 +149,7 @@ def bm25_topk(
         F.avg("dl").alias("avgdl"),
     )
     qpost = postings(df, id_col, text_col, terms=terms)
-    return _bm25_rank(qpost, lengths, stats, k, k1, b, round_digits)
+    return _bm25_rank(qpost, lengths, stats, k)
 
 
 def build_vocab(
@@ -171,13 +172,7 @@ def build_vocab(
     return top.withColumn("rank", F.row_number().over(w))
 
 
-def oov_rate(
-    df: DataFrame,
-    vocab: DataFrame,
-    id_col: str,
-    text_col: str,
-    round_digits: int = 4,
-) -> DataFrame:
+def oov_rate(df: DataFrame, vocab: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document out-of-vocabulary rate against a (broadcast) vocab:
     (doc, n_tokens, n_oov, oov_rate). The vocab is a tokenizer-sized
     dimension (10k-100k terms) — broadcast hash join on the exploded token
@@ -206,7 +201,7 @@ def oov_rate(
         F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),
         F.coalesce("n_oov", F.lit(0)).cast("bigint").alias("n_oov"),
         quantize(
-            F.coalesce("n_oov", F.lit(0)) / F.col("n_tokens"), round_digits
+            F.coalesce("n_oov", F.lit(0)) / F.col("n_tokens"), DIGITS
         ).alias("oov_rate"),
     )
 
@@ -243,7 +238,6 @@ def tfidf_nearest_neighbor(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    round_digits: int = 4,
     max_df: int | None = None,
 ) -> DataFrame:
     """Each document's most-similar other document in TF-IDF space:
@@ -287,7 +281,7 @@ def tfidf_nearest_neighbor(
         .select(
             "doc",
             "neighbor",
-            quantize(F.col("dot") / (F.col("na") * F.col("nb")), round_digits).alias("cos"),
+            quantize(F.col("dot") / (F.col("na") * F.col("nb")), DIGITS).alias("cos"),
         )
     )
     rank = Window.partitionBy("doc").orderBy(F.desc("cos"), F.asc("neighbor"))
@@ -352,9 +346,7 @@ def phrase_hits(
 # ---------------------------------------------------------------------------
 
 
-def write_postings_index(
-    df: DataFrame, path: str, id_col: str, text_col: str, mode: str = "overwrite"
-) -> None:
+def write_postings_index(df: DataFrame, path: str, id_col: str, text_col: str) -> None:
     """Build and persist the full inverted index + document lengths:
 
       {path}/postings — (term, doc, tf) partitioned by `bucket` =
@@ -375,13 +367,13 @@ def write_postings_index(
     # leaving in-file term order to unguaranteed sort stability (and
     # paying two sorts)
     post.repartition("bucket").sortWithinPartitions("bucket", "term").write.mode(
-        mode
+        "overwrite"
     ).partitionBy("bucket").parquet(f"{path}/postings")
     lengths = doc_lengths(df, id_col, text_col)
-    lengths.write.mode(mode).parquet(f"{path}/doclen")
+    lengths.write.mode("overwrite").parquet(f"{path}/doclen")
     lengths.agg(
         F.count(F.lit(1)).alias("n_docs_total"), F.avg("dl").alias("avgdl")
-    ).write.mode(mode).parquet(f"{path}/stats")
+    ).write.mode("overwrite").parquet(f"{path}/stats")
 
 
 def bm25_topk_from_index(
@@ -389,9 +381,6 @@ def bm25_topk_from_index(
     path: str,
     query_terms: Sequence[str],
     k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
-    round_digits: int = 4,
 ) -> DataFrame:
     """BM25 top-k answered from the persisted index — identical scores to
     bm25_topk over the corpus (same formula, same rounding; oracle-checked)
@@ -409,4 +398,4 @@ def bm25_topk_from_index(
     )
     lengths = spark.read.parquet(f"{path}/doclen")
     stats = spark.read.parquet(f"{path}/stats")
-    return _bm25_rank(post, lengths, stats, k, k1, b, round_digits)
+    return _bm25_rank(post, lengths, stats, k)

@@ -61,7 +61,6 @@ def session_stats(
 def streaming_sessions(
     events: DataFrame,
     key_cols: list[str],
-    ts_col: str = "ts",
     gap_seconds: int = 1800,
     watermark: str = "2 minutes",
 ) -> DataFrame:
@@ -69,9 +68,9 @@ def streaming_sessions(
     the same session semantics over an unbounded stream (late events beyond
     the watermark are dropped rather than reopening closed sessions)."""
     return (
-        events.withWatermark(ts_col, watermark)
+        events.withWatermark("ts", watermark)
         .groupBy(
-            *key_cols, F.session_window(F.col(ts_col), f"{gap_seconds} seconds")
+            *key_cols, F.session_window(F.col("ts"), f"{gap_seconds} seconds")
         )
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(

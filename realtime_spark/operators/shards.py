@@ -33,8 +33,6 @@ def write_training_shards(
     path: str,
     key_col: str,
     n_shards: int,
-    max_records_per_file: int = 1_000_000,
-    mode: str = "overwrite",
 ) -> None:
     """Materialize the deterministic training permutation to disk: parquet
     partitioned by `shard`, rows sorted by `position` within each file."""
@@ -46,8 +44,8 @@ def write_training_shards(
         # ranges over the uniform 0..n_shards-1 ids map ~one shard per task
         ordered.repartitionByRange(n_shards, F.col("shard"))
         .sortWithinPartitions("shard", "position")
-        .write.mode(mode)
-        .option("maxRecordsPerFile", str(max_records_per_file))
+        .write.mode("overwrite")
+        .option("maxRecordsPerFile", "1000000")
         .partitionBy("shard")
         .parquet(path)
     )
@@ -78,20 +76,17 @@ def _permuted_tokens(
     df: DataFrame,
     key_col: str,
     n_shards: int,
-    tokens: F.Column | None,
 ) -> DataFrame:
     """Shared base projection of the token-layout operators: (key,
     n_tokens, shard, _ord) under the SAME permutation spec as
     `training_order` (sampling.hash_bucket on the key for both the shard
     and the order tie-break) — the single place that contract lives, so
     pack_token_windows and length_bucket_batches cannot drift apart.
-    `tokens` defaults to the whitespace count every pipeline reports."""
+    Tokens are the whitespace count every pipeline reports."""
     from realtime_spark.operators.sampling import hash_bucket
     from realtime_spark.operators.text import whitespace_token_count
 
-    n_tok = (
-        whitespace_token_count(F.col("text")) if tokens is None else tokens
-    ).cast("bigint")
+    n_tok = whitespace_token_count(F.col("text")).cast("bigint")
     key = F.col(key_col)
     return df.select(
         key,
@@ -106,7 +101,6 @@ def pack_token_windows(
     key_col: str,
     n_shards: int,
     seq_len: int,
-    tokens: F.Column | None = None,
 ) -> DataFrame:
     """Concatenate-and-chunk sequence packing LAYOUT: lay the corpus out as a
     token stream in the deterministic training order and cut it into
@@ -131,8 +125,7 @@ def pack_token_windows(
     shard id plus per-shard sorts; a corpus-global prefix sum (one giant
     ordered window) never appears. n_shards is chosen so one shard's rows
     fit an executor sort spill budget, exactly like write_training_shards.
-    `tokens` defaults to the whitespace token count every pipeline
-    reports; pass a BPE/token-counting column to pack on real tokens.
+    Tokens are the whitespace token count every pipeline reports.
 
     The permutation is re-derived here (same hash spec as
     `training_order`, positions identical) rather than layered on top of
@@ -143,7 +136,7 @@ def pack_token_windows(
     exchange + one sort (asserted by tests)."""
     from pyspark.sql import Window
 
-    base = _permuted_tokens(df, key_col, n_shards, tokens)
+    base = _permuted_tokens(df, key_col, n_shards)
     # both windows share (shard, (_ord, key)) — position numbers the FULL
     # permutation (matching training_order / the materialized shards), the
     # prefix sum runs over the surviving token stream
@@ -217,7 +210,6 @@ def length_bucket_batches(
     n_shards: int,
     batch_size: int,
     boundaries: list[int],
-    tokens: F.Column | None = None,
 ) -> DataFrame:
     """Length-bucketed batching: group documents of similar token length
     into fixed-size batches so per-batch padding (to the batch max) stays
@@ -243,7 +235,7 @@ def length_bucket_batches(
     bucket = F.lit(len(boundaries))
     for i, edge in reversed(list(enumerate(boundaries))):
         bucket = F.when(F.col("n_tokens") < edge, i).otherwise(bucket)
-    base = _permuted_tokens(df, key_col, n_shards, tokens).filter(
+    base = _permuted_tokens(df, key_col, n_shards).filter(
         F.col("n_tokens") > 0
     )
     w = Window.partitionBy("bucket", "shard").orderBy("_ord", key_col)

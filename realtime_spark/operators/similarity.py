@@ -37,6 +37,10 @@ from pyspark.sql.functions import pandas_udf
 # pointing at the bulk-join formulations instead of melting the driver.
 QUERY_COLLECT_MAX = 100_000
 
+ID, VEC = "vec_id", "embedding"
+# cosine rounding of every ranked or thresholded score
+DIGITS = 4
+
 
 def _collect_bounded(df: DataFrame, what: str) -> list:
     rows = df.limit(QUERY_COLLECT_MAX + 1).collect()
@@ -77,14 +81,7 @@ def cosine_expr(a: Column, b: Column) -> Column:
     return F.when(d != 0.0, dot_expr(a, b) / d)
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    round_digits: int = 4,
-) -> DataFrame:
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact cosine top-k neighbors for each query vector.
 
     `queries` (small) is broadcast against `corpus` (one scan); ranking uses
@@ -100,16 +97,16 @@ def brute_force_topk(
     """
     q = F.broadcast(
         queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+            F.col(ID).alias("query_id"), F.col(VEC).alias("q_vec")
         )
     )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
+    c = corpus.select(F.col(ID).alias("neighbor_id"), F.col(VEC).alias("c_vec"))
     scored = (
         c.join(q, F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine_expr(F.col("q_vec"), F.col("c_vec")), round_digits).alias("cos"),
+            F.round(cosine_expr(F.col("q_vec"), F.col("c_vec")), DIGITS).alias("cos"),
         )
     )
 
@@ -139,11 +136,7 @@ def brute_force_topk(
 
 
 def ivf_assign(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
+    corpus: DataFrame, centroids: DataFrame, id_col: str = ID, vec_col: str = VEC
 ) -> DataFrame:
     """Assign every vector to its nearest centroid by cosine (IVF build).
 
@@ -181,7 +174,7 @@ def ivf_assign(
     cids = np.array([r[0] for r in rows])
     cmat = np.array([list(r[1]) for r in rows], dtype=np.float64)  # k x d
     cid_sql = centroids.schema[id_col].dataType.simpleString()
-    scale = 10.0 ** round_digits
+    scale = 10.0 ** 6
 
     def _seq_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
         # (n x d) x (k x d) -> n x k, accumulating dims left-to-right
@@ -237,11 +230,8 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     nprobe: int = 1,
-    round_digits: int = 4,
 ) -> DataFrame:
     """ANN top-k via IVF: compare each query only against vectors whose
     nearest centroid is among the query's `nprobe` nearest centroids.
@@ -251,17 +241,17 @@ def ivf_topk(
     only the probed buckets shuffle. Output matches brute_force_topk's shape;
     recall < 1.0 by design (approximate).
     """
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
+    assigned = ivf_assign(corpus, centroids).select(
+        F.col(ID).alias("neighbor_id"),
+        F.col(VEC).alias("c_vec"),
         "centroid_id",
     )
     cents = F.broadcast(
         centroids.select(
-            F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cent_vec")
+            F.col(ID).alias("centroid_id"), F.col(VEC).alias("cent_vec")
         )
     )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
+    q = queries.select(F.col(ID).alias("query_id"), F.col(VEC).alias("q_vec"))
     q_scored = q.join(cents).select(
         "query_id",
         "q_vec",
@@ -280,7 +270,7 @@ def ivf_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine_expr(F.col("q_vec"), F.col("c_vec")), round_digits).alias("cos"),
+            F.round(cosine_expr(F.col("q_vec"), F.col("c_vec")), DIGITS).alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
@@ -294,8 +284,6 @@ def write_ivf_index(
     corpus: DataFrame,
     centroids: DataFrame,
     path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     mode: str = "overwrite",
 ) -> None:
     """Build and persist the IVF index: corpus vectors assigned to their
@@ -303,7 +291,7 @@ def write_ivf_index(
     one-time (or incremental) index build; every subsequent search reads only
     the probed centroid partitions — the on-disk analog of an inverted file.
     """
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col)
+    assigned = ivf_assign(corpus, centroids)
     assigned.write.mode(mode).partitionBy("centroid_id").parquet(path)
 
 
@@ -315,11 +303,8 @@ def ivf_topk_from_index(
     index: DataFrame,
     queries: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     nprobe: int = 1,
-    round_digits: int = 4,
 ) -> DataFrame:
     """ANN top-k over a persisted IVF index (see write_ivf_index).
 
@@ -331,10 +316,10 @@ def ivf_topk_from_index(
     """
     cents = F.broadcast(
         centroids.select(
-            F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cent_vec")
+            F.col(ID).alias("centroid_id"), F.col(VEC).alias("cent_vec")
         )
     )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
+    q = queries.select(F.col(ID).alias("query_id"), F.col(VEC).alias("q_vec"))
     q_scored = q.join(cents).select(
         "query_id",
         "q_vec",
@@ -352,8 +337,8 @@ def ivf_topk_from_index(
     )
     probed_ids = sorted({r["centroid_id"] for r in probe_rows})
     bucket_scan = index.filter(F.col("centroid_id").isin(probed_ids)).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
+        F.col(ID).alias("neighbor_id"),
+        F.col(VEC).alias("c_vec"),
         "centroid_id",
     )
     scored = (
@@ -362,7 +347,7 @@ def ivf_topk_from_index(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine_expr(F.col("q_vec"), F.col("c_vec")), round_digits).alias("cos"),
+            F.round(cosine_expr(F.col("q_vec"), F.col("c_vec")), DIGITS).alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
@@ -388,13 +373,7 @@ def srp_planes(num_planes: int, dim: int) -> list[list[float]]:
     return out
 
 
-def srp_buckets(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_planes: int = 16,
-    dim: int = 64,
-) -> DataFrame:
+def srp_buckets(df: DataFrame, num_planes: int = 16, dim: int = 64) -> DataFrame:
     """Hyperplane LSH (signed random projection) bucket per vector: bit p of
     the bucket is 1 iff dot(v, plane_p) >= 0. Cosine-similar vectors agree on
     most sign bits, so near-duplicates collide on the full bucket.
@@ -411,12 +390,12 @@ def srp_buckets(
         "plane_id int, plane array<double>",
     )
     dots = df.join(F.broadcast(planes)).select(
-        F.col(id_col).alias("doc"),
+        F.col(ID).alias("doc"),
         "plane_id",
-        (dot_expr(F.col(vec_col), F.col("plane")) >= 0).alias("bit"),
+        (dot_expr(F.col(VEC), F.col("plane")) >= 0).alias("bit"),
     )
     return (
-        dots.groupBy(F.col("doc").alias(id_col))
+        dots.groupBy(F.col("doc").alias(ID))
         .agg(
             F.sum(
                 F.when(F.col("bit"), F.expr("shiftleft(CAST(1 AS BIGINT), plane_id)"))
@@ -428,8 +407,6 @@ def srp_buckets(
 
 def srp_candidate_pairs(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     num_planes: int = 16,
     dim: int = 64,
 ) -> DataFrame:
@@ -438,10 +415,10 @@ def srp_candidate_pairs(
     1/65536 of random space), so the in-bucket pairing stays small; pairs
     are generated from a bucket groupBy, not a self-join, so the bucket scan
     runs once. Output: (doc_a, doc_b), doc_a < doc_b."""
-    b = srp_buckets(df, id_col, vec_col, num_planes, dim)
+    b = srp_buckets(df, num_planes, dim)
     buckets = (
         b.groupBy("srp_bucket")
-        .agg(F.sort_array(F.collect_set(F.col(id_col))).alias("docs"))
+        .agg(F.sort_array(F.collect_set(F.col(ID))).alias("docs"))
         .filter(F.size("docs") > 1)
     )
     n = F.size(F.col("docs"))
@@ -464,27 +441,21 @@ def srp_candidate_pairs(
     return pairs.select(F.col("p.doc_a"), F.col("p.doc_b"))
 
 
-def cosine_near_dup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-    round_digits: int = 4,
-) -> DataFrame:
+def cosine_near_dup_pairs(df: DataFrame, threshold: float = 0.9) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: all (a < b) with cos >= t.
 
     Quadratic by nature; at 100 TB this runs *after* IVF bucketing (join on
     centroid_id) so only same-bucket pairs are scored. Here the all-pairs
     variant is the oracle-checkable baseline. Output: (doc_a, doc_b, cos).
     """
-    a = df.select(F.col(id_col).alias("doc_a"), F.col(vec_col).alias("va"))
-    b = df.select(F.col(id_col).alias("doc_b"), F.col(vec_col).alias("vb"))
+    a = df.select(F.col(ID).alias("doc_a"), F.col(VEC).alias("va"))
+    b = df.select(F.col(ID).alias("doc_b"), F.col(VEC).alias("vb"))
     return (
         a.join(b, F.col("doc_a") < F.col("doc_b"))
         .select(
             "doc_a",
             "doc_b",
-            F.round(cosine_expr(F.col("va"), F.col("vb")), round_digits).alias("cos"),
+            F.round(cosine_expr(F.col("va"), F.col("vb")), DIGITS).alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
     )
@@ -546,8 +517,6 @@ def append_to_ivf_index(
     new_vectors: DataFrame,
     centroids: DataFrame,
     path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> None:
     """Incremental IVF maintenance: assign only the NEW vectors (one scan of
     the increment, centroids broadcast) and append them into the existing
@@ -555,17 +524,14 @@ def append_to_ivf_index(
     standing corpus. Buckets drift as data distribution shifts; periodically
     re-run kmeans_refine + write_ivf_index to re-balance (index rebuild is
     the compaction analog for the vector store)."""
-    write_ivf_index(new_vectors, centroids, path, id_col, vec_col, mode="append")
+    write_ivf_index(new_vectors, centroids, path, mode="append")
 
 
 def semantic_decontaminate(
     corpus: DataFrame,
     eval_df: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
-    round_digits: int = 4,
 ) -> DataFrame:
     """SEMANTIC benchmark decontamination: flag training vectors whose
     embedding is near-identical (cosine >= threshold) to ANY eval-set
@@ -581,11 +547,11 @@ def semantic_decontaminate(
     (id, centroid_id, max_eval_cos, contaminated); max_eval_cos is NULL
     when the vector's cluster holds no eval vectors (or only zero-norm
     cosines), which flags as NOT contaminated."""
-    asg_t = ivf_assign(corpus, centroids, id_col, vec_col).select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"), "centroid_id"
+    asg_t = ivf_assign(corpus, centroids).select(
+        F.col(ID).alias("vid"), F.col(VEC).alias("vec"), "centroid_id"
     )
-    asg_e = ivf_assign(eval_df, centroids, id_col, vec_col).select(
-        F.col("centroid_id"), F.col(vec_col).alias("evec")
+    asg_e = ivf_assign(eval_df, centroids).select(
+        F.col("centroid_id"), F.col(VEC).alias("evec")
     )
     best = (
         asg_t.join(asg_e, ["centroid_id"])
@@ -596,7 +562,7 @@ def semantic_decontaminate(
             (
                 F.max(
                     F.round(
-                        cosine_expr(F.col("vec"), F.col("evec")), round_digits
+                        cosine_expr(F.col("vec"), F.col("evec")), DIGITS
                     )
                 )
                 + F.lit(0.0)
@@ -607,7 +573,7 @@ def semantic_decontaminate(
         asg_t.select("vid", "centroid_id")
         .join(best, ["vid", "centroid_id"], "left")
         .select(
-            F.col("vid").alias(id_col),
+            F.col("vid").alias(ID),
             "centroid_id",
             "max_eval_cos",
             F.coalesce(
@@ -620,10 +586,7 @@ def semantic_decontaminate(
 def semantic_dedup(
     df: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
-    round_digits: int = 4,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023, arXiv:
     2303.09540): cluster the embedding space, then inside each cluster drop
@@ -637,8 +600,8 @@ def semantic_dedup(
     to a cluster: one semi-join decides droppers, no iterative clustering.
     Output: (vec_id, centroid_id, dropped) for every input vector.
     """
-    asg = ivf_assign(df, centroids, id_col, vec_col).select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"), "centroid_id"
+    asg = ivf_assign(df, centroids).select(
+        F.col(ID).alias("vid"), F.col(VEC).alias("vec"), "centroid_id"
     )
     a = asg.select(
         F.col("centroid_id"), F.col("vid").alias("keep_id"), F.col("vec").alias("va")
@@ -650,7 +613,7 @@ def semantic_dedup(
         a.join(b, ["centroid_id"])
         .filter(F.col("keep_id") < F.col("drop_id"))
         .filter(
-            F.round(cosine_expr(F.col("va"), F.col("vb")), round_digits)
+            F.round(cosine_expr(F.col("va"), F.col("vb")), DIGITS)
             >= threshold
         )
         .select("drop_id")
@@ -659,21 +622,13 @@ def semantic_dedup(
     return asg.join(
         droppers, asg["vid"] == droppers["drop_id"], "left"
     ).select(
-        F.col("vid").alias(id_col),
+        F.col("vid").alias(ID),
         "centroid_id",
         F.col("drop_id").isNotNull().alias("dropped"),
     )
 
 
-def hard_negatives(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    k: int = 5,
-    round_digits: int = 4,
-) -> DataFrame:
+def hard_negatives(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Hard-negative mining for contrastive training: for each query vector,
     the k most-similar corpus vectors with a DIFFERENT label — the negatives
     that sit closest to the decision boundary (the standard dense-retrieval
@@ -687,20 +642,20 @@ def hard_negatives(
     """
     q = F.broadcast(
         queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.col(label_col).alias("q_label"),
+            F.col(ID).alias("query_id"),
+            F.col(VEC).alias("q_vec"),
+            F.col("label").alias("q_label"),
         )
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.col(label_col).alias("c_label"),
+        F.col(ID).alias("neighbor_id"),
+        F.col(VEC).alias("c_vec"),
+        F.col("label").alias("c_label"),
     )
     scored = c.join(q, F.col("q_label") != F.col("c_label")).select(
         "query_id",
         "neighbor_id",
-        F.round(cosine_expr(F.col("q_vec"), F.col("c_vec")), round_digits).alias(
+        F.round(cosine_expr(F.col("q_vec"), F.col("c_vec")), DIGITS).alias(
             "cos"
         ),
     )
@@ -738,17 +693,12 @@ def hard_negatives(
 # ---------------------------------------------------------------------------
 
 
-def pq_codebook(
-    centroids: DataFrame,
-    m: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[tuple[int, np.ndarray]]]:
+def pq_codebook(centroids: DataFrame, m: int) -> list[list[tuple[int, np.ndarray]]]:
     """Codebook from a centroid frame: subspace j's entries are the
     centroids' j-th subvectors, as [(centroid_id, subvec)] sorted by id.
     Tiny by contract (k x d floats) — collected and broadcast into encode/
     score closures, exactly like ivf_assign's centroid matrix."""
-    rows = sorted(centroids.select(id_col, vec_col).collect(), key=lambda r: r[0])
+    rows = sorted(centroids.select(ID, VEC).collect(), key=lambda r: r[0])
     if not rows:
         raise ValueError("pq_codebook: centroid set is empty")
     d = len(rows[0][1])
@@ -801,8 +751,6 @@ def _adc_table(
 def pq_encode(
     corpus: DataFrame,
     codebook: list[list[tuple[int, np.ndarray]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Encode every vector to m codebook ids: code_j = argmin micro-L2² to
     subspace j's entries (ties -> smallest centroid id, which is the scan
@@ -837,7 +785,7 @@ def pq_encode(
     # codes column would otherwise evaluate the encoder twice per row
     _encode_nd = _encode.asNondeterministic()
     return corpus.select(
-        F.col(id_col).alias("vec_id"), _encode_nd(F.col(vec_col)).alias("codes")
+        F.col(ID).alias("vec_id"), _encode_nd(F.col(VEC)).alias("codes")
     )
 
 
@@ -846,8 +794,6 @@ def pq_adc_topk(
     queries: DataFrame,
     codebook: list[list[tuple[int, np.ndarray]]],
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Asymmetric-distance top-k: approximate dist(q, v) = Σ_j
     micro-L2²(q_sub_j, codebook[j][code_j]).
@@ -860,7 +806,7 @@ def pq_adc_topk(
     IVF bucketing so only probed buckets' codes enter the join.
     Output: (query_id, neighbor_id, adc_micro, rank)."""
     dtab = _adc_table(
-        _collect_bounded(queries.select(id_col, vec_col), "pq_adc_topk queries"),
+        _collect_bounded(queries.select(ID, VEC), "pq_adc_topk queries"),
         codebook,
     )
     spark = encoded.sparkSession
@@ -896,8 +842,6 @@ def ivf_pq_topk(
     queries: DataFrame,
     centroids: DataFrame,
     codebook: list[list[tuple[int, np.ndarray]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     nprobe: int = 1,
 ) -> DataFrame:
@@ -908,19 +852,19 @@ def ivf_pq_topk(
     ADC sum. Vectors never enter the search join — the probe stream carries
     (vec_id, centroid_id, codes), m*4 bytes of payload per vector.
     Output: (query_id, neighbor_id, adc_micro, rank)."""
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col).select(
-        F.col(id_col).alias("nid"), "centroid_id"
+    assigned = ivf_assign(corpus, centroids).select(
+        F.col(ID).alias("nid"), "centroid_id"
     )
-    codes = pq_encode(corpus, codebook, id_col, vec_col)
+    codes = pq_encode(corpus, codebook)
     bucketed = assigned.join(
         codes.withColumnRenamed("vec_id", "nid"), "nid"
     )
     cents = F.broadcast(
         centroids.select(
-            F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cent_vec")
+            F.col(ID).alias("centroid_id"), F.col(VEC).alias("cent_vec")
         )
     )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
+    q = queries.select(F.col(ID).alias("query_id"), F.col(VEC).alias("q_vec"))
     q_scored = q.join(cents).select(
         "query_id",
         "centroid_id",
@@ -934,7 +878,7 @@ def ivf_pq_topk(
     )
     # ADC distance table (q x m x k rows) — built driver-side like pq_adc_topk
     dtab_rows = _adc_table(
-        _collect_bounded(queries.select(id_col, vec_col), "ivf_pq_topk queries"),
+        _collect_bounded(queries.select(ID, VEC), "ivf_pq_topk queries"),
         codebook,
     )
     dt = F.broadcast(
@@ -971,9 +915,7 @@ def ivf_pq_topk(
 # ---------------------------------------------------------------------------
 
 
-def sq_encode(
-    corpus: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def sq_encode(corpus: DataFrame) -> DataFrame:
     """Quantize float vectors to per-dimension uint8 codes:
 
         code_i = floor((x_i - min_i) * 255 / (max_i - min_i) + 0.5)
@@ -991,7 +933,7 @@ def sq_encode(
     identical half-up in Spark and DuckDB, no cast-rounding ambiguity.
     Output: (vec_id, codes array<int>)."""
     stats = (
-        corpus.select(F.posexplode(F.col(vec_col)).alias("dim", "x"))
+        corpus.select(F.posexplode(F.col(VEC)).alias("dim", "x"))
         .groupBy("dim")
         .agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
         .groupBy()
@@ -1004,7 +946,7 @@ def sq_encode(
         )
     )
     enc = F.transform(
-        F.col(vec_col),
+        F.col(VEC),
         lambda x, i: F.when(
             F.element_at(F.col("_maxs"), i + 1) == F.element_at(F.col("_mins"), i + 1),
             F.lit(0),
@@ -1023,7 +965,7 @@ def sq_encode(
         .cast("int"),
     )
     return corpus.crossJoin(F.broadcast(stats)).select(
-        F.col(id_col).alias("vec_id"), enc.alias("codes")
+        F.col(ID).alias("vec_id"), enc.alias("codes")
     )
 
 
@@ -1106,7 +1048,6 @@ def hash_embed_topk(
     vecs: DataFrame,
     query_docs: Sequence[int],
     k: int = 10,
-    round_digits: int = 6,
 ) -> DataFrame:
     """Exact cosine top-k over sparse hashed embeddings for a set of query
     doc ids: (query_doc, rank, doc, cos). Dot products and squared norms
@@ -1143,7 +1084,7 @@ def hash_embed_topk(
             / F.sqrt(F.col("n2").cast("double") * F.col("qn2").cast("double")),
         )
     )
-    scale = float(10**round_digits)
+    scale = float(10**6)
     quant = F.floor(F.col("cos") * scale + F.lit(0.5)) / F.lit(scale)
     w = Window.partitionBy("qdoc").orderBy(
         quant.desc(), F.col("doc").asc()

@@ -69,15 +69,12 @@ def cms_build(
     key_col: str,
     depth: int = 4,
     width: int = 256,
-    weight: Column | None = None,
 ) -> DataFrame:
     """Build a count-min sketch over `key_col`: (i, bucket, cnt) with
-    i < depth, bucket < width, cnt = sum of weights hashing there."""
+    i < depth, bucket < width, cnt = rows hashing there."""
     cells = df.select(
         F.col(key_col).cast("string").alias("_k"),
-        (F.lit(1).cast("bigint") if weight is None else weight.cast("bigint")).alias(
-            "_w"
-        ),
+        F.lit(1).cast("bigint").alias("_w"),
     ).select(
         F.posexplode(
             F.transform(

@@ -30,9 +30,8 @@ def salted_join(
     other: DataFrame,
     on: Sequence[str],
     salt: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join where `skewed` has hot keys: each skewed row gets a
+    """Inner equi-join where `skewed` has hot keys: each skewed row gets a
     deterministic salt bucket, `other` is replicated `salt`x, and the join
     runs on (keys + salt bucket) — hot keys spread over `salt` reducers.
 
@@ -40,23 +39,11 @@ def salted_join(
     use only when `other` is much smaller than the skewed side's hot keys
     (but too big / too dynamic to broadcast outright).
 
-    Supported joins: inner / left / left_semi / left_anti. Right and full
-    outers are rejected — every `other` replica that misses at a given
-    salt bucket would emit its own null-extended row, multiplying
-    unmatched right rows by `salt`.
-
     The salt mixes a row hash with the partition id so full-duplicate hot
     rows (e.g. a pre-projected key-only frame, where a pure content hash
     would be constant per key) still spread; duplicates WITHIN a partition
     share a bucket, which the partitioner already bounds.
     """
-    allowed = {"inner", "left", "leftouter", "left_outer", "left_semi",
-               "leftsemi", "semi", "left_anti", "leftanti", "anti"}
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"salted_join does not support how={how!r}: right/full outers "
-            "would multiply unmatched other-side rows by salt"
-        )
     on = list(on)
     l = skewed.withColumn(
         "_salt",
@@ -69,7 +56,7 @@ def salted_join(
     r = other.withColumn(
         "_salt", F.explode(F.array(*[F.lit(i).cast("bigint") for i in range(salt)]))
     )
-    return l.join(r, on + ["_salt"], how).drop("_salt")
+    return l.join(r, on + ["_salt"], "inner").drop("_salt")
 
 
 def skew_stats(df: DataFrame, keys: Sequence[str]) -> DataFrame:

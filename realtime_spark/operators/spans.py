@@ -63,7 +63,7 @@ def span_digests(
 
 
 def span_dedup_stats(
-    df: DataFrame, id_col: str, text_col: str, w: int = 10, round_digits: int = 4
+    df: DataFrame, id_col: str, text_col: str, w: int = 10
 ) -> DataFrame:
     """Per-document duplicated-span accounting: (doc_id, n_spans,
     n_dup_spans, dup_frac). Docs shorter than w tokens produce no row (they
@@ -86,7 +86,5 @@ def span_dedup_stats(
         F.col("doc").alias(id_col),
         "n_spans",
         "n_dup_spans",
-        quantize(F.col("n_dup_spans") / F.col("n_spans"), round_digits).alias(
-            "dup_frac"
-        ),
+        quantize(F.col("n_dup_spans") / F.col("n_spans"), 4).alias("dup_frac"),
     )

@@ -36,6 +36,7 @@ from realtime_spark.functions.timeutil import epoch_seconds
 
 # epoch of 2024-01-01 00:00:00 UTC — offsets keep x*y products within bigint
 BASE_EPOCH = 1_704_067_200
+TS, VALUE = "ts", "value"
 
 
 def cents(x: Column) -> Column:
@@ -44,13 +45,7 @@ def cents(x: Column) -> Column:
     return F.floor(x * 100 + F.lit(0.5)).cast("bigint")
 
 
-def ols_trend(
-    df: DataFrame,
-    keys: Sequence[str],
-    ts_col: str = "ts",
-    value_col: str = "value",
-    round_digits: int = 6,
-) -> DataFrame:
+def ols_trend(df: DataFrame, keys: Sequence[str], round_digits: int = 6) -> DataFrame:
     """Per-key least-squares trend of value over time.
 
     slope/intercept from the closed-form normal equations over exact
@@ -58,8 +53,8 @@ def ols_trend(
     Sums are decimal(38,0) so n*Sxy never overflows. Output slope is
     cents-per-second and intercept cents at BASE_EPOCH, both quantized.
     """
-    x = (epoch_seconds(ts_col) - F.lit(BASE_EPOCH)).cast("bigint")
-    y = cents(F.col(value_col))
+    x = (epoch_seconds(TS) - F.lit(BASE_EPOCH)).cast("bigint")
+    y = cents(F.col(VALUE))
     d38 = "decimal(38,0)"
     # restrict EVERY statistic to rows where both x and y exist: count(1)
     # with null-skipping sums would mix populations and the normal
@@ -94,7 +89,6 @@ def ols_trend(
 def cusum_hours(
     df: DataFrame,
     keys: Sequence[str],
-    ts_col: str = "ts",
     threshold_hours: int = 3,
 ) -> DataFrame:
     """One-sided CUSUM over hourly event counts per key, exact integers.
@@ -108,7 +102,7 @@ def cusum_hours(
     excess over the key's mean reaches `threshold_hours` mean-hours.
     Output: per (key, hour) -> cnt, cusum_scaled, flagged.
     """
-    hour = F.floor((epoch_seconds(ts_col) - F.lit(BASE_EPOCH)) / 3600).cast(
+    hour = F.floor((epoch_seconds(TS) - F.lit(BASE_EPOCH)) / 3600).cast(
         "bigint"
     )
     hourly = df.select(*keys, hour.alias("hour")).groupBy(*keys, "hour").agg(
@@ -158,7 +152,6 @@ def histogram_quantiles(
     nbins: int,
     qs: Sequence[float],
     keys: Sequence[str] = (),
-    round_digits: int = 4,
 ) -> DataFrame:
     """Approximate quantiles from a fixed equi-width histogram.
 
@@ -176,7 +169,7 @@ def histogram_quantiles(
     ).filter(F.col("bin").isNotNull()).groupBy(*keys, "bin").agg(
         F.count(F.lit(1)).alias("c")
     )
-    return quantiles_from_bins(counts, keys, lo, width, qs, round_digits)
+    return quantiles_from_bins(counts, keys, lo, width, qs)
 
 
 def value_bin(value_col: str, lo: float, width: float, nbins: int) -> Column:
@@ -199,7 +192,6 @@ def quantiles_from_bins(
     lo: float,
     width: float,
     qs: Sequence[float],
-    round_digits: int = 4,
 ) -> DataFrame:
     """Quantile interpolation over an already-aggregated (keys, bin, c)
     frame — bin counts sum-merge associatively, so a streaming fold of
@@ -232,7 +224,7 @@ def quantiles_from_bins(
         "c"
     ).cast("double")
     est = F.lit(lo) + (F.col("bin").cast("double") + frac) * F.lit(width)
-    scale = float(10**round_digits)
+    scale = float(10**4)
     return hit.select(
         *keys,
         "q",
@@ -261,12 +253,7 @@ def _median2(df: DataFrame, keys: Sequence[str], val_col: str, out: str) -> Data
     return ranked.groupBy(*keys).agg(F.sum(pick).cast("bigint").alias(out))
 
 
-def robust_flags(
-    df: DataFrame,
-    keys: Sequence[str],
-    ts_col: str = "ts",
-    k: int = 3,
-) -> DataFrame:
+def robust_flags(df: DataFrame, keys: Sequence[str], k: int = 3) -> DataFrame:
     """Median/MAD (median absolute deviation) outlier detection over hourly
     event counts — the robust alternative to mean/stddev z-scores (a real
     spike inflates the mean AND the stddev, masking itself; the median and
@@ -282,7 +269,7 @@ def robust_flags(
     Scale shape: raw events collapse to hourly counts first (map-side
     combine); both medians are windows over the small per-key hourly frame.
     """
-    hour = F.floor((epoch_seconds(ts_col) - F.lit(BASE_EPOCH)) / 3600).cast(
+    hour = F.floor((epoch_seconds(TS) - F.lit(BASE_EPOCH)) / 3600).cast(
         "bigint"
     )
     hourly = df.select(*keys, hour.alias("hour")).groupBy(*keys, "hour").agg(
@@ -307,18 +294,13 @@ def robust_flags(
     )
 
 
-def ols_state(
-    df: DataFrame,
-    keys: Sequence[str],
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def ols_state(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Mergeable OLS sufficient statistics per key: (n, sx, sy, sxy, sxx)
     as exact decimal(38,0) sums — the incremental-maintenance form of
     ols_trend. A day's increment merges into the standing state with
     merge_ols_states; no revisit of historical rows, ever."""
-    x = (epoch_seconds(ts_col) - F.lit(BASE_EPOCH)).cast("bigint")
-    y = cents(F.col(value_col))
+    x = (epoch_seconds(TS) - F.lit(BASE_EPOCH)).cast("bigint")
+    y = cents(F.col(VALUE))
     d38 = "decimal(38,0)"
     # same both-non-null population rule as ols_trend (see its comment)
     return df.select(*keys, x.alias("x"), y.alias("y")).filter(

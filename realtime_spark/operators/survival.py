@@ -30,8 +30,6 @@ MICRO = 1_000_000
 
 def user_lifetimes(
     df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     churn_horizon_s: int = 7 * 86400,
     duration_unit_s: int = 86400,
 ) -> DataFrame:
@@ -39,16 +37,16 @@ def user_lifetimes(
     churn event flag — a user whose last activity is more than
     `churn_horizon_s` before the corpus end has churned; later activity
     means right-censored (still alive at observation end)."""
-    spans = df.groupBy(user_col).agg(
-        F.min(epoch_seconds(ts_col)).alias("first_s"),
-        F.max(epoch_seconds(ts_col)).alias("last_s"),
+    spans = df.groupBy("user_id").agg(
+        F.min(epoch_seconds("ts")).alias("first_s"),
+        F.max(epoch_seconds("ts")).alias("last_s"),
     )
     # corpus end from the ALREADY-aggregated spans (max of per-user maxes
     # is the global max): re-scanning the raw event log for one scalar
     # would double the only raw pass
     end = spans.agg(F.max("last_s").alias("end_s"))
     return spans.crossJoin(F.broadcast(end)).select(
-        user_col,
+        "user_id",
         F.floor((F.col("last_s") - F.col("first_s")) / duration_unit_s)
         .cast("bigint")
         .alias("duration"),
@@ -79,8 +77,6 @@ def km_life_table(lifetimes: DataFrame) -> DataFrame:
 
 def kaplan_meier(
     df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     churn_horizon_s: int = 7 * 86400,
     duration_unit_s: int = 86400,
 ) -> DataFrame:
@@ -90,7 +86,7 @@ def kaplan_meier(
     driver-side over the window-bounded life table (a scalar-sized
     collect); every arithmetic step is integer-exact."""
     table = km_life_table(
-        user_lifetimes(df, user_col, ts_col, churn_horizon_s, duration_unit_s)
+        user_lifetimes(df, churn_horizon_s, duration_unit_s)
     )
     rows = sorted(table.collect(), key=lambda r: r["duration"])
     out = []

@@ -48,15 +48,19 @@ def whitespace_token_count(text: Column) -> Column:
 # pre-segment before merges.
 BPE_REGEX = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
 
+# score rounding shared by each expression form and its staged projection,
+# which must stay bit-identical
+LANG_DIGITS, QUALITY_DIGITS = 6, 4
+
 
 def bpe_token_count(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(BPE_REGEX), F.lit(0)))
 
 
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    """Fraction of word tokens that are stopwords of `lang`."""
+def stopword_ratio(text: Column) -> Column:
+    """Fraction of word tokens that are English stopwords."""
     toks = words_expr(text)
-    stops = F.array(*[F.lit(s) for s in STOPWORDS[lang]])
+    stops = F.array(*[F.lit(s) for s in STOPWORDS["en"]])
     hits = F.size(F.filter(toks, lambda t: F.array_contains(stops, t)))
     return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(F.lit(0.0))
 
@@ -67,7 +71,7 @@ def _contains_fn(arr: Column):
     return lambda t: F.array_contains(arr, t)
 
 
-def detect_lang(text: Column, round_digits: int = 6) -> Column:
+def detect_lang(text: Column) -> Column:
     """argmax language by stopword ratio; ties break lexicographically;
     all-zero scores -> 'und' (undetermined), like real lang-ID fallbacks."""
     toks = words_expr(text)
@@ -76,7 +80,7 @@ def detect_lang(text: Column, round_digits: int = 6) -> Column:
     for lang, stops in sorted(STOPWORDS.items()):
         arr = F.array(*[F.lit(s) for s in stops])
         hits = F.size(F.filter(toks, _contains_fn(arr)))
-        score = F.round(F.when(n > 0, hits / n).otherwise(F.lit(0.0)), round_digits)
+        score = F.round(F.when(n > 0, hits / n).otherwise(F.lit(0.0)), LANG_DIGITS)
         scored.append(F.struct(score.alias("score"), F.lit(lang).alias("lang")))
     # struct compare orders by (score, lang); among max-score entries pick the
     # lexicographically smallest lang for a deterministic tie-break
@@ -91,9 +95,6 @@ def lang_quality_cols(
     text_col: str = "text",
     lang_out: str = "detected_lang",
     q_out: str = "quality",
-    stop_lang: str = "en",
-    lang_round_digits: int = 6,
-    q_round_digits: int = 4,
 ) -> DataFrame:
     """Staged lang-ID + quality-score projection: `detect_lang` and
     `quality_score` compute bit-identical values, but as Column expressions
@@ -120,10 +121,10 @@ def lang_quality_cols(
         arr = F.array(*[F.lit(s) for s in stops])
         hits = F.size(F.filter(toks, _contains_fn(arr)))
         score = F.round(
-            F.when(n > 0, hits / n).otherwise(F.lit(0.0)), lang_round_digits
+            F.when(n > 0, hits / n).otherwise(F.lit(0.0)), LANG_DIGITS
         )
         scored.append(F.struct(score.alias("score"), F.lit(lang).alias("lang")))
-    stops_en = F.array(*[F.lit(s) for s in STOPWORDS[stop_lang]])
+    stops_en = F.array(*[F.lit(s) for s in STOPWORDS["en"]])
     en_hits = F.size(F.filter(toks, _contains_fn(stops_en)))
     stop_ratio = F.when(n > 0, en_hits / n).otherwise(F.lit(0.0))
     total_len = F.aggregate(
@@ -143,7 +144,7 @@ def lang_quality_cols(
         + 0.2 * stop_score
         + 0.2 * wl_score
     )
-    scale = float(10**q_round_digits)
+    scale = float(10**QUALITY_DIGITS)
     out = out.withColumn("__rs_lq_scores", F.array(*scored)).withColumn(
         q_out, F.floor(raw * scale + F.lit(0.5)) / F.lit(scale)
     )
@@ -168,7 +169,6 @@ def with_detected_lang(
     df: DataFrame,
     text_col: str = "text",
     lang_out: str = "detected_lang",
-    round_digits: int = 6,
 ) -> DataFrame:
     """Staged projection form of `detect_lang` (bit-identical values): the
     expression form re-evaluates `words_expr` per reference — interpreted
@@ -189,7 +189,7 @@ def with_detected_lang(
         arr = F.array(*[F.lit(s) for s in stops])
         hits = F.size(F.filter(toks, _contains_fn(arr)))
         score = F.round(
-            F.when(n > 0, hits / n).otherwise(F.lit(0.0)), round_digits
+            F.when(n > 0, hits / n).otherwise(F.lit(0.0)), LANG_DIGITS
         )
         scored.append(F.struct(score.alias("score"), F.lit(lang).alias("lang")))
     out = out.withColumn("__rs_dl_scores", F.array(*scored))
@@ -211,8 +211,6 @@ def with_quality_score(
     df: DataFrame,
     text_col: str = "text",
     q_out: str = "quality",
-    stop_lang: str = "en",
-    round_digits: int = 4,
 ) -> DataFrame:
     """Staged projection form of `quality_score` (bit-identical values) —
     the quality half of `lang_quality_cols`: the expression form
@@ -223,7 +221,7 @@ def with_quality_score(
     toks = F.col("__rs_q_toks")
     n = F.size(toks)
     out = df.withColumn("__rs_q_toks", words_expr(text))
-    stops_en = F.array(*[F.lit(s) for s in STOPWORDS[stop_lang]])
+    stops_en = F.array(*[F.lit(s) for s in STOPWORDS["en"]])
     en_hits = F.size(F.filter(toks, _contains_fn(stops_en)))
     stop_ratio = F.when(n > 0, en_hits / n).otherwise(F.lit(0.0))
     total_len = F.aggregate(
@@ -243,7 +241,7 @@ def with_quality_score(
         + 0.2 * stop_score
         + 0.2 * wl_score
     )
-    scale = float(10**round_digits)
+    scale = float(10**QUALITY_DIGITS)
     out = out.withColumn(q_out, F.floor(raw * scale + F.lit(0.5)) / F.lit(scale))
     return out.drop("__rs_q_toks")
 
@@ -278,7 +276,7 @@ def quantize(x: Column, digits: int = 4) -> Column:
     return F.floor(x * scale + F.lit(0.5)) / F.lit(scale)
 
 
-def char_entropy(df, id_col: str, text_col: str, round_digits: int = 4):
+def char_entropy(df, id_col: str, text_col: str):
     """Shannon entropy of the per-document character distribution (bits):
     (id, n_chars_counted, entropy). Low entropy flags repetitive/gibberish
     text (a CCNet-style quality signal) orthogonal to the stopword/punct
@@ -287,7 +285,7 @@ def char_entropy(df, id_col: str, text_col: str, round_digits: int = 4):
     Shape: explode to (doc, char) -> map-side-combined counts -> per-doc
     fold H = log2(N) - (1/N) * sum(cnt * log2(cnt)). Shuffles carry only
     (doc, char, cnt) aggregates. The cross-term sum commutes to ~1e-15;
-    results are quantized to round_digits, which both engines reproduce.
+    results are quantized to 4 digits, which both engines reproduce.
     """
     chars = df.select(
         F.col(id_col),
@@ -303,13 +301,11 @@ def char_entropy(df, id_col: str, text_col: str, round_digits: int = 4):
     return per_doc.select(
         F.col(id_col),
         F.col("n").alias("n_chars_counted"),
-        quantize(F.log2("n") - F.col("s") / F.col("n"), round_digits).alias(
-            "entropy"
-        ),
+        quantize(F.log2("n") - F.col("s") / F.col("n")).alias("entropy"),
     )
 
 
-def compression_ratio(df, id_col: str, text_col: str, round_digits: int = 4):
+def compression_ratio(df, id_col: str, text_col: str):
     """Per-document zlib compression ratio (compressed/raw bytes): a
     classic corpus-quality signal — ratios near 0 flag pathological
     repetition, near/above 1 flag high-entropy noise (base64 blobs,
@@ -324,7 +320,7 @@ def compression_ratio(df, id_col: str, text_col: str, round_digits: int = 4):
     """
     import zlib
 
-    scale = 10.0 ** round_digits
+    scale = 10.0 ** 4
 
     @pandas_udf("struct<n_raw:bigint,n_compressed:bigint,ratio:double>")
     def _ratio(texts: pd.Series) -> pd.DataFrame:
@@ -348,7 +344,7 @@ def compression_ratio(df, id_col: str, text_col: str, round_digits: int = 4):
     )
 
 
-def quality_score(text: Column, lang: str = "en", round_digits: int = 4) -> Column:
+def quality_score(text: Column) -> Column:
     """Composite document-quality heuristic in [0, 1].
 
     score = 0.3*len_score + 0.3*(1 - punct_ratio) + 0.2*stopword_score
@@ -361,7 +357,7 @@ def quality_score(text: Column, lang: str = "en", round_digits: int = 4) -> Colu
     n = F.size(toks)
     len_score = F.least(n.cast("double"), F.lit(100.0)) / 100.0
     p_ratio = punct_ratio(text)
-    stop_score = F.least(stopword_ratio(text, lang) * 5.0, F.lit(1.0))
+    stop_score = F.least(stopword_ratio(text) * 5.0, F.lit(1.0))
     wl = mean_word_len(text)
     wl_score = F.greatest(
         F.lit(0.0), F.least(F.lit(1.0), 1.0 - F.abs(wl - 5.0) / 10.0)
@@ -370,7 +366,7 @@ def quality_score(text: Column, lang: str = "en", round_digits: int = 4) -> Colu
     # double's exact binary expansion while DuckDB rounds via scaled float —
     # they disagree when the score lands exactly on a .5 boundary (e.g.
     # 0.59925). floor of identical IEEE arithmetic is engine-agnostic.
-    scale = float(10**round_digits)
+    scale = float(10**QUALITY_DIGITS)
     raw = 0.3 * len_score + 0.3 * (1.0 - p_ratio) + 0.2 * stop_score + 0.2 * wl_score
     return F.floor(raw * scale + F.lit(0.5)) / F.lit(scale)
 
@@ -381,10 +377,10 @@ def content_fingerprint(text: Column) -> Column:
     return F.md5(F.array_join(words_expr(text), " "))
 
 
-def rolling_fingerprint(text: Column, k: int = 8) -> Column:
+def rolling_fingerprint(text: Column) -> Column:
     """Winnowing-style rolling fingerprint: minimum hash over all character
-    k-gram digests of the normalized text. Local edits perturb only nearby
-    k-grams, so near-identical documents usually share the min digest.
+    8-gram digests of the normalized text. Local edits perturb only nearby
+    8-grams, so near-identical documents usually share the min digest.
 
     NOTE: the lambda references `text`-derived `norm` per gram; interpreted
     HOFs have no CSE, so this expression re-normalizes per gram — O(n^2) per
@@ -393,8 +389,8 @@ def rolling_fingerprint(text: Column, k: int = 8) -> Column:
     norm = F.array_join(words_expr(text), " ")
     n = F.length(norm)
     grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-        lambda i: F.md5(F.substring(norm, i, k)),
+        F.sequence(F.lit(1), F.greatest(n - 7, F.lit(1))),
+        lambda i: F.md5(F.substring(norm, i, 8)),
     )
     return F.array_min(grams)
 
@@ -608,7 +604,6 @@ def corpus_percentiles(
     group_cols: list[str],
     value_col: str,
     ps: tuple[float, ...] = (0.5, 0.9, 0.99),
-    digits: int = 4,
 ) -> DataFrame:
     """Per-group exact percentiles (linear interpolation) of a numeric
     column — corpus length/quality distribution profiling.
@@ -627,7 +622,7 @@ def corpus_percentiles(
     out = df.groupBy(*group_cols).agg(*aggs)
     for i, p in enumerate(ps):
         name = f"p{str(p)[2:].ljust(2, '0')}_{value_col}"
-        out = out.withColumn(name, quantize(F.col("_pct")[i], digits))
+        out = out.withColumn(name, quantize(F.col("_pct")[i]))
     return out.drop("_pct")
 
 
@@ -670,7 +665,7 @@ def pii_counts(text: Column) -> Column:
     return F.map_from_entries(F.array(*entries))
 
 
-def repetition_ratio(text: Column, round_digits: int = 4) -> Column:
+def repetition_ratio(text: Column) -> Column:
     """1 - distinct_tokens/tokens: near-1 means heavily repeated content
     (boilerplate, keyword stuffing) — a standard corpus-quality gate next to
     quality_score. Empty docs -> 0. Tokenization matches dedup.tokens_expr
@@ -682,7 +677,7 @@ def repetition_ratio(text: Column, round_digits: int = 4) -> Column:
     ratio = F.when(
         n > 0, 1.0 - F.size(F.array_distinct(toks)) / n
     ).otherwise(F.lit(0.0))
-    return quantize(ratio, round_digits)
+    return quantize(ratio)
 
 
 def unicode_normalize_cols(text: Column) -> Column:
@@ -727,9 +722,7 @@ def unicode_normalize_cols(text: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def quality_feature_cols(
-    df: DataFrame, text_col: str = "text", prefix: str = "qf_"
-) -> DataFrame:
+def quality_feature_cols(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Integer feature extraction for a linear document-quality classifier
     (the fastText-filter-grade shape used by CCNet/GPT-3-style curation,
     with hand-set instead of learned weights): word count, stopword hits,
@@ -743,17 +736,17 @@ def quality_feature_cols(
     stops = F.array(*[F.lit(s) for s in STOPWORDS["en"]])
     out = out.withColumns(
         {
-            f"{prefix}words": F.size(toks).cast("bigint"),
-            f"{prefix}stop": F.size(F.filter(toks, _contains_fn(stops))).cast(
+            "qf_words": F.size(toks).cast("bigint"),
+            "qf_stop": F.size(F.filter(toks, _contains_fn(stops))).cast(
                 "bigint"
             ),
-            f"{prefix}long": F.size(
+            "qf_long": F.size(
                 F.filter(toks, lambda t: F.length(t) > 7)
             ).cast("bigint"),
-            f"{prefix}punct": F.length(
+            "qf_punct": F.length(
                 F.regexp_replace(text, "[A-Za-z0-9\\s]", "")
             ).cast("bigint"),
-            f"{prefix}digits": F.length(
+            "qf_digits": F.length(
                 F.regexp_replace(text, "[^0-9]", "")
             ).cast("bigint"),
         }
@@ -774,7 +767,7 @@ QUALITY_LOGIT_WEIGHTS = {
 }
 
 
-def quality_logit_micro(prefix: str = "qf_") -> Column:
+def quality_logit_micro() -> Column:
     """logit_micro = bias + Σ w_i * f_i over the quality_feature_cols
     outputs — one exact bigint per row; classify with logit_micro > 0.
     Inference is a pure projection: at 100 TB the classifier adds zero
@@ -782,11 +775,11 @@ def quality_logit_micro(prefix: str = "qf_") -> Column:
     w = QUALITY_LOGIT_WEIGHTS
     return (
         F.lit(w["bias"])
-        + F.col(f"{prefix}words") * w["words"]
-        + F.col(f"{prefix}stop") * w["stop"]
-        + F.col(f"{prefix}long") * w["long"]
-        + F.col(f"{prefix}punct") * w["punct"]
-        + F.col(f"{prefix}digits") * w["digits"]
+        + F.col("qf_words") * w["words"]
+        + F.col("qf_stop") * w["stop"]
+        + F.col("qf_long") * w["long"]
+        + F.col("qf_punct") * w["punct"]
+        + F.col("qf_digits") * w["digits"]
     ).cast("bigint")
 
 

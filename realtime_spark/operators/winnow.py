@@ -109,18 +109,17 @@ def winnow_pairs(
     k: int = 3,
     w: int = 4,
     threshold: float = 0.5,
-    max_fp_freq: int = 1000,
 ) -> DataFrame:
     """Candidate near-dup pairs by winnowed-fingerprint Jaccard overlap.
     Output: (doc_a, doc_b, n_shared, overlap) with doc_a < doc_b and
     overlap = |∩| / |∪| >= threshold. Fingerprints hotter than
-    `max_fp_freq` docs are dropped (boilerplate-span skew guard)."""
+    1000 docs are dropped (boilerplate-span skew guard)."""
     fps = winnow_fingerprints(df, id_col, text_col, k, w).persist()
     sizes = fps.groupBy("doc").agg(F.count(F.lit(1)).alias("n_fp"))
     freq_ok = (
         fps.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .filter(F.col("freq") <= max_fp_freq)
+        .filter(F.col("freq") <= 1000)
     )
     f = fps.join(freq_ok.select("fp"), "fp", "left_semi")
     a = f.alias("a")

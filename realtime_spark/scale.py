@@ -36,10 +36,10 @@ def _replicate(df: DataFrame, key: str, n: int, string_key: bool = False) -> Dat
     return rep.withColumn(key, shifted).drop("rep")
 
 
-def _time(df: DataFrame, reps: int = 2) -> tuple[float, int]:
+def _time(df: DataFrame) -> tuple[float, int]:
     """Warm best-of-N wall for a full count of `df`."""
     best, n = None, 0
-    for _ in range(reps + 1):  # first run warms (plan compile, page cache)
+    for _ in range(3):  # first run warms (plan compile, page cache)
         t0 = time.perf_counter()
         n = df.count()
         dt = time.perf_counter() - t0

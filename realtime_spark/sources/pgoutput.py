@@ -512,13 +512,7 @@ def fold_slot_frames(
     return rows, begin
 
 
-def decode_pgoutput(
-    frames: DataFrame,
-    slot_col: str = "slot",
-    seq_col: str = "seq",
-    frame_col: str = "frame",
-    wire: bool = False,
-) -> DataFrame:
+def decode_pgoutput(frames: DataFrame, wire: bool = False) -> DataFrame:
     """Batch decode: (slot, seq, frame binary) -> normalized change frame.
 
     applyInPandas per slot; frames sorted by seq inside the group (WAL order
@@ -533,18 +527,18 @@ def decode_pgoutput(
     def apply_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         if not len(pdf):
             return pd.DataFrame(columns=_OUT_COLS)
-        pdf = pdf.sort_values(seq_col, kind="mergesort")
-        pairs = zip(pdf[seq_col], pdf[frame_col])
+        pdf = pdf.sort_values("seq", kind="mergesort")
+        pairs = zip(pdf["seq"], pdf["frame"])
         if wire:
             pairs = unwrap_wire_frames(pairs)
         rows, _ = fold_slot_frames(
-            pdf[slot_col].iat[0], pairs, relations={},
+            pdf["slot"].iat[0], pairs, relations={},
         )
         return pd.DataFrame(rows, columns=_OUT_COLS)
 
     return (
-        frames.select(slot_col, seq_col, frame_col)
-        .groupBy(slot_col)
+        frames.select("slot", "seq", "frame")
+        .groupBy("slot")
         .applyInPandas(apply_fn, PGOUTPUT_CHANGE_DDL)
     )
 
@@ -604,11 +598,10 @@ def pgoutput_decode_stateful(frames: DataFrame, wire: bool = False) -> DataFrame
 # ---------------------------------------------------------------------------
 
 FRAMES_DDL = "slot string, seq bigint, frame binary"
+N_SLOTS = 32
 
 
-def pgoutput_frames_from_orders(
-    spark, sf_dir: str, n_slots: int = 32
-) -> DataFrame:
+def pgoutput_frames_from_orders(spark, sf_dir: str) -> DataFrame:
     """Encode the same logical WAL as testdata.changes_from_orders into real
     pgoutput byte frames: per slot one Relation header, then one transaction
     per order row — Begin(xid=o_orderkey, ts=o_orderdate) / Insert|Update|
@@ -626,7 +619,7 @@ def pgoutput_frames_from_orders(
     ).otherwise(F.col("o_orderpriority"))
     cols = list(ORDERS_PG_TYPES)
     base = o.select(
-        (F.col("o_orderkey") % n_slots).cast("int").alias("slot_n"),
+        (F.col("o_orderkey") % N_SLOTS).cast("int").alias("slot_n"),
         F.col("o_orderkey").alias("okey"),
         (
             F.unix_micros(F.col("o_orderdate").cast("timestamp"))
@@ -684,9 +677,7 @@ MESSAGES_REL_COLS = [
 ]
 
 
-def pgoutput_frames_from_messages(
-    spark, sf_dir: str, n_slots: int = 32
-) -> DataFrame:
+def pgoutput_frames_from_messages(spark, sf_dir: str) -> DataFrame:
     """A `realtime.messages`-shaped INSERT stream as real pgoutput frames —
     the exact feed the reference's replication connection consumes for
     broadcast-from-database (replication_connection.ex:384-470). Derived
@@ -713,7 +704,7 @@ def pgoutput_frames_from_messages(
 
     e = load_table(spark, sf_dir, "events")
     base = e.select(
-        (F.col("event_id") % n_slots).cast("int").alias("slot_n"),
+        (F.col("event_id") % N_SLOTS).cast("int").alias("slot_n"),
         F.col("event_id").alias("eid"),
         F.col("event_id").cast("string").alias("v_id"),
         F.when(F.col("event_id") % 97 != 0, F.col("event_type")).alias("v_topic"),

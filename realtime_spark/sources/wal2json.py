@@ -50,8 +50,8 @@ def _cols_to_map(cols: Column) -> Column:
 def parse_wal2json(raw: DataFrame, json_col: str = "value") -> DataFrame:
     """raw DataFrame with a JSON-string column -> normalized change events.
 
-    Works identically on batch and streaming DataFrames (used by the
-    foreachBatch lift in streaming/pipeline.py).
+    Parses a batch frame, as inside a `foreachBatch` body: on a streaming
+    frame Spark rejects the `monotonically_increasing_id` change ids below.
     """
     w = F.from_json(F.col(json_col), WAL2JSON_SCHEMA_DDL)
     parsed = raw.withColumn("w", w)
@@ -86,9 +86,7 @@ def parse_wal2json(raw: DataFrame, json_col: str = "value") -> DataFrame:
     return out
 
 
-def parse_wal2json_quarantine(
-    raw: DataFrame, json_col: str = "value"
-) -> tuple[DataFrame, DataFrame]:
+def parse_wal2json_quarantine(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Dead-letter split: (events, quarantined).
 
     `from_json` maps malformed JSON to a NULL struct, which would otherwise
@@ -103,19 +101,17 @@ def parse_wal2json_quarantine(
     Rows are classified in one pass; the good branch re-parses, which
     Catalyst keeps cheap (the filter prunes before the wide projection).
     """
-    w = F.from_json(F.col(json_col), WAL2JSON_SCHEMA_DDL)
+    w = F.from_json(F.col("value"), WAL2JSON_SCHEMA_DDL)
     known = F.col("_w.action").isin(*_ACTION_MAP.keys())
     flagged = raw.withColumn("_w", w)
     # from_json in PERMISSIVE mode yields an all-NULL struct for unparseable
     # input (not a NULL struct), so "no action field" IS the malformed signal
     unparsed = F.col("_w").isNull() | F.col("_w.action").isNull()
     bad = flagged.filter(unparsed | ~known).select(
-        F.col(json_col).alias("raw_payload"),
+        F.col("value").alias("raw_payload"),
         F.when(unparsed, F.lit("malformed json"))
         .otherwise(F.concat(F.lit("unknown action: "), F.col("_w.action")))
         .alias("reason"),
     )
-    good = parse_wal2json(
-        flagged.filter(~unparsed & known).drop("_w"), json_col
-    )
+    good = parse_wal2json(flagged.filter(~unparsed & known).drop("_w"))
     return good, bad

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 
 from realtime_spark.operators.cdc import match_changes
 
+JITTER_MS = (50, 100)  # the reference's Enum.random(50..100)
+
 
 class AdaptiveCadence:
     """The backoff policy alone — pure, testable, engine-free."""
@@ -38,12 +40,10 @@ class AdaptiveCadence:
         self,
         poll_interval_ms: int = 100,
         idle_multiplier: int = 5,
-        jitter_ms: tuple[int, int] = (50, 100),
         seed: int = 1,
     ):
         self.poll_interval_ms = poll_interval_ms
         self.idle_multiplier = idle_multiplier
-        self.jitter_ms = jitter_ms
         # Park-Miller needs a state in [1, 2^31-2]: a zero (seed=0 or a
         # multiple of the modulus) would be a fixed point and collapse the
         # jitter to a constant — the synchronized-poll herd it exists to
@@ -53,7 +53,7 @@ class AdaptiveCadence:
     def _jitter(self) -> int:
         # Park-Miller LCG: deterministic stand-in for Enum.random(50..100)
         self._state = (self._state * 48271) % 0x7FFFFFFF
-        lo, hi = self.jitter_ms
+        lo, hi = JITTER_MS
         return lo + self._state % (hi - lo + 1)
 
     def next_delay_ms(self, processed_count: int, slot_changes_count: int) -> int:

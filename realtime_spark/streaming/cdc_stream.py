@@ -11,7 +11,8 @@ semantics:
   - maxFilesPerTrigger / maxOffsetsPerTrigger ≈ max_changes batch clamp (W4)
   - the rate-limit shed gate (P16) drops a whole micro-batch when the tenant's
     sliding rate is triggered, counting it instead of delivering
-    (reference: replication_poller.ex:404-414)
+    (reference: replication_poller.ex:404-414); it runs in the adaptive
+    poll loop (`adaptive.run_cdc_poll_loop`), not in this fixed-trigger lift
   - at-least-once sink delivery + id dedup replaces the reference's
     at-most-once socket push (ST2; documented deviation)
 
@@ -40,14 +41,11 @@ def run_cdc_stream(
     sink: Callable[[DataFrame, int], Any],
     checkpoint_dir: str,
     trigger_ms: int = 100,
-    shed_gate: Callable[[DataFrame], bool] | None = None,
-    query_name: str = "cdc",
 ):
     """Lift the CDC match pipeline onto a streaming change source.
 
     `sink(batch_df, epoch_id)` receives the matched+aggregated output of each
-    micro-batch. `shed_gate(batch_df)` returning True drops the batch whole
-    (P16) — the callable inspects tenant rate state however it likes.
+    micro-batch.
 
     `subs` may be a static dim DataFrame or a callable `epoch_id -> DataFrame`
     re-resolved at every micro-batch — the analog of the reference re-reading
@@ -60,22 +58,15 @@ def run_cdc_stream(
     """
 
     def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # pin the batch once so the shed gate, the A10 observation, and the
-        # match pipeline all read the checkpointed frame instead of
-        # re-scanning the source per action (same pattern as adaptive.py)
+        # pin the batch once so the A10 observation and the match pipeline
+        # both read the checkpointed frame instead of re-scanning the source
+        # per action (same pattern as adaptive.py)
         batch_df = batch_df.localCheckpoint()
-        if shed_gate is not None and shed_gate(batch_df):
-            # the A10 observation only records when a job runs over the
-            # observed plan: a shed batch must still COUNT (backlog, not
-            # idle), exactly like the reference's slot_changes sentinel
-            # that reports even when nothing is delivered
-            batch_df.count()
-            return
         dim = subs(epoch_id) if callable(subs) else subs
         sink(match_changes(batch_df, dim), epoch_id)
 
     # A10 slot-backlog observability: the raw per-batch change count BEFORE
-    # matching/shedding, as a real streaming observation — surfaces in
+    # matching, as a real streaming observation — surfaces in
     # query.recentProgress[..]["observedMetrics"]["a10"]["slot_changes"],
     # the analog of list_changes' slot_changes_count sentinel row
     # (reference: migrations/20260326120000_list_changes_with_slot_count.ex:58-62)
@@ -84,7 +75,7 @@ def run_cdc_stream(
     )
     return (
         observed.writeStream.foreachBatch(on_batch)
-        .queryName(query_name)
+        .queryName("cdc")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(processingTime=f"{trigger_ms} milliseconds")
         .start()

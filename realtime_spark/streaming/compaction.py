@@ -56,10 +56,13 @@ at thousands of epochs file-listing cost, per-epoch stat-fold cost, and
 small-file counts all grow linearly — the same run-forever hazard the
 reference solves for its message store with partition GC
 (/root/reference/lib/realtime/messages.ex:72-102 drops whole day
-partitions). This module is the ingest-store analog: fold every committed
+partitions). This module is the store analog: fold every committed
 epoch into one compacted base partition, without ever corrupting a reader
 (``StoreSpec.compact`` folds every output of a store, each through its own
-layout).
+layout). ``run_ingest_cycles`` is the run-forever loop for all five
+stores: it drains the stream, then runs compaction as a threshold
+janitor. The count monitors and the view merge every visible epoch at
+read time, so without it their reads slow down with every micro-batch.
 
 Each store keeps its flat hive layout (``<store>/ingest_epoch=<tag>/``);
 compaction adds one small JSON *manifest* (``<store>/_compaction.json`` —
@@ -616,14 +619,15 @@ def run_ingest_cycles(
     max_epochs: int = 32,
     max_files: int | None = None,
 ) -> list[dict]:
-    """The run-forever ingest loop with compaction as a scheduled janitor,
-    mirroring how the reference schedules its message-partition GC as a
-    periodic job outside the write path
-    (/root/reference/lib/realtime/messages.ex:72-102): each cycle runs ONE
-    availableNow drain of the ingest stream (``start_stream`` re-opens the
-    source and returns the started StreamingQuery — an availableNow query
-    terminates, and the checkpoint carries the offsets), then, with the
-    stream provably stopped (the compaction contract), compacts every
+    """The run-forever loop of any of the five stores (``spec`` names the
+    store: the three ingest stores, ``COUNTS`` or ``SNAPSHOT``) with
+    compaction as a scheduled janitor, mirroring how the reference
+    schedules its message-partition GC as a periodic job outside the write
+    path (reference: lib/realtime/messages.ex:72-102): each cycle runs
+    ONE availableNow drain of the store's stream (``start_stream`` re-opens
+    the source and returns the started StreamingQuery — an availableNow
+    query terminates, and the checkpoint carries the offsets), then, with
+    the stream provably stopped (the compaction contract), compacts every
     output of ``spec`` when the threshold trips. Returns per-cycle
     telemetry: [{cycle, compacted, epochs_before, files_before,
     files_after}]."""

@@ -16,9 +16,7 @@ Spark semantics used here (all built-in, no custom state):
     (right.ts between left.ts and left.ts + horizon). Spark derives state
     cleanup bounds from that range; an unbounded condition would grow state
     forever and is rejected for append output
-  - inner joins emit as soon as both sides arrive; outer joins emit the
-    null-padded row only after the watermark passes the join horizon
-    (correct lateness semantics, not best-effort)
+  - the inner join emits as soon as both sides arrive
 
 Scale notes (100 TB/day firehose): state is partitioned by the join key —
 the same hash partitioning a batch shuffle join would use, but bounded in
@@ -39,14 +37,11 @@ def interval_join(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     horizon: str = "10 seconds",
-    watermark: str = "30 seconds",
-    how: str = "inner",
 ) -> DataFrame:
     """Event-time interval join: pair each left row with the right rows of
-    the same `key` whose timestamp lands in [left_ts, left_ts + horizon].
+    the same `key` whose `ts` lands in [left ts, left ts + horizon]; both
+    sides are watermarked 30 seconds behind their `ts` when streaming.
 
     Works identically on streaming inputs (watermarked, state-bounded) and
     batch inputs (the same plan without state), so the batch run is the
@@ -54,18 +49,18 @@ def interval_join(
     right ts as `r_ts`, plus all non-key/non-ts payload columns of both
     sides (left's under their names, right's suffixed `_r` on collision).
     """
-    lw = left.withWatermark(left_ts, watermark) if left.isStreaming else left
-    rw = right.withWatermark(right_ts, watermark) if right.isStreaming else right
+    lw = left.withWatermark("ts", "30 seconds") if left.isStreaming else left
+    rw = right.withWatermark("ts", "30 seconds") if right.isStreaming else right
     l = lw.select(
         F.col(key).alias("_k"),
-        F.col(left_ts).alias("l_ts"),
-        *[c for c in lw.columns if c not in (key, left_ts)],
+        F.col("ts").alias("l_ts"),
+        *[c for c in lw.columns if c not in (key, "ts")],
     )
-    rcols = [c for c in rw.columns if c not in (key, right_ts)]
+    rcols = [c for c in rw.columns if c not in (key, "ts")]
     taken = set(l.columns)
     r = rw.select(
         F.col(key).alias("_rk"),
-        F.col(right_ts).alias("r_ts"),
+        F.col("ts").alias("r_ts"),
         *[
             F.col(c).alias(c if c not in taken else f"{c}_r")
             for c in rcols
@@ -76,9 +71,8 @@ def interval_join(
         & (F.col("r_ts") >= F.col("l_ts"))
         & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {horizon}"))
     )
-    out = l.join(r, cond, how)
-    # coalesce the key: under full/right outer joins an unmatched right
-    # row has _k NULL and only _rk carries its key
+    out = l.join(r, cond, "inner")
+    # one key column: _k and _rk are equal on every inner-join row
     return out.select(
         F.coalesce(F.col("_k"), F.col("_rk")).alias(key),
         *[c for c in out.columns if c not in ("_k", "_rk")],
@@ -88,30 +82,25 @@ def interval_join(
 def delivery_latency(
     sends: DataFrame,
     delivers: DataFrame,
-    key: str = "topic",
-    send_ts: str = "ts",
-    deliver_ts: str = "ts",
-    id_col: str = "msg_id",
     horizon: str = "60 seconds",
-    watermark: str = "2 minutes",
 ) -> DataFrame:
     """Commit-to-dispatch latency per message: join the send stream to the
-    delivery stream on (key, msg_id) within `horizon`, emit per-message
+    delivery stream on (topic, msg_id) within `horizon`, emit per-message
     latency ms — the replication_connection.ex:442-448 telemetry as a
     relational operator. Unmatched sends age out of state at the watermark
     (the reference's equivalent: a message never dispatched just isn't
     measured)."""
-    s = (sends.withWatermark(send_ts, watermark) if sends.isStreaming else sends).select(
-        F.col(key).alias("_k"), F.col(id_col).alias("_id"), F.col(send_ts).alias("sent_at")
+    s = (sends.withWatermark("ts", "2 minutes") if sends.isStreaming else sends).select(
+        F.col("topic").alias("_k"), F.col("msg_id").alias("_id"), F.col("ts").alias("sent_at")
     )
     d = (
-        delivers.withWatermark(deliver_ts, watermark)
+        delivers.withWatermark("ts", "2 minutes")
         if delivers.isStreaming
         else delivers
     ).select(
-        F.col(key).alias("_dk"),
-        F.col(id_col).alias("_did"),
-        F.col(deliver_ts).alias("delivered_at"),
+        F.col("topic").alias("_dk"),
+        F.col("msg_id").alias("_did"),
+        F.col("ts").alias("delivered_at"),
     )
     cond = (
         (F.col("_k") == F.col("_dk"))
@@ -122,8 +111,8 @@ def delivery_latency(
     return (
         s.join(d, cond, "inner")
         .select(
-            F.col("_k").alias(key),
-            F.col("_id").alias(id_col),
+            F.col("_k").alias("topic"),
+            F.col("_id").alias("msg_id"),
             "sent_at",
             "delivered_at",
             (

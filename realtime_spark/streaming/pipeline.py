@@ -39,20 +39,13 @@ def _duration_seconds(spec: str) -> float:
     return float(n) * _UNIT_SECONDS[unit.rstrip("s").lower()]
 
 
-def streaming_rate(
-    events: DataFrame,
-    keys: Sequence[str],
-    ts_col: str = "ts",
-    window: str = WINDOW,
-    slide: str = SLIDE,
-    watermark: str = "2 minutes",
-) -> DataFrame:
+def streaming_rate(events: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Sliding event-time rate per key: one row per (key, window) with the
     trailing-window event count and per-second average."""
-    win_seconds = _duration_seconds(window)
+    win_seconds = _duration_seconds(WINDOW)
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(*keys, F.window(F.col(ts_col), window, slide).alias("win"))
+        events.withWatermark("ts", "2 minutes")
+        .groupBy(*keys, F.window(F.col("ts"), WINDOW, SLIDE).alias("win"))
         .agg(F.count(F.lit(1)).alias("window_sum"))
         .select(
             *keys,

@@ -147,9 +147,6 @@ def bm25_topk_from_live_index(
     root: str,
     query_terms: Sequence[str],
     k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
-    round_digits: int = 4,
 ) -> DataFrame:
     """BM25 top-k served off the growing store: query-term bucket partitions
     across every epoch, doc lengths across every epoch, and the global
@@ -169,4 +166,4 @@ def bm25_topk_from_live_index(
             F.sum("sum_dl").cast("double") / F.sum("n_docs").cast("double")
         ).alias("avgdl"),
     )
-    return _bm25_rank(post, lengths, stats, k, k1, b, round_digits)
+    return _bm25_rank(post, lengths, stats, k)

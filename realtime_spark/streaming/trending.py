@@ -35,12 +35,12 @@ from realtime_spark.operators.stats import BASE_EPOCH
 OUT_SCHEMA = (
     "key string, as_of_hour bigint, window_count bigint, n_hours_held int"
 )
+TS = "ts"
 
 
 def trending_counts_stream(
     events: DataFrame,
     key_col: str,
-    ts_col: str = "ts",
     window_hours: int = 24,
 ) -> DataFrame:
     """events (streaming or batch-testable) -> per touched key per batch:
@@ -49,7 +49,7 @@ def trending_counts_stream(
     hour, and expired buckets are REMOVED from state (n_hours_held pins
     the bound in tests)."""
 
-    hour = F.floor((epoch_seconds(ts_col) - F.lit(BASE_EPOCH)) / 3600).cast(
+    hour = F.floor((epoch_seconds(TS) - F.lit(BASE_EPOCH)) / 3600).cast(
         "bigint"
     )
     # a null ts (or key) cannot bucket — and a nullable hour column with
@@ -102,13 +102,12 @@ def trending_counts_stream(
 def trending_batch_reference(
     events: DataFrame,
     key_col: str,
-    ts_col: str = "ts",
     window_hours: int = 24,
 ) -> DataFrame:
     """Batch analog of the FINAL state: per key, the trailing-window count
     as of the key's max hour — what the last streamed emission per key
     must equal when the stream arrives in event-time order."""
-    hour = F.floor((epoch_seconds(ts_col) - F.lit(BASE_EPOCH)) / 3600).cast(
+    hour = F.floor((epoch_seconds(TS) - F.lit(BASE_EPOCH)) / 3600).cast(
         "bigint"
     )
     b = events.select(

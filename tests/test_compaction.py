@@ -586,6 +586,104 @@ def test_scheduled_compaction_poll_loop(spark, tmp_path):
     assert snap(loop_root)[0], "fixture must accept documents"
 
 
+def _hourly_monitor(spark):
+    from functools import partial
+
+    from realtime_spark.streaming.monitors import (
+        COUNTS,
+        process_hourly_batch,
+        read_counts,
+        run_hourly_count_stream,
+    )
+
+    events = load_table(spark, SF, "events")
+    batches = [events.filter(F.col("event_id") % 3 == i) for i in range(3)]
+    keys = ["event_type"]
+    return (
+        COUNTS,
+        batches,
+        partial(process_hourly_batch, keys=keys),
+        partial(run_hourly_count_stream, keys=keys),
+        read_counts,
+    )
+
+
+def _materialized_view(spark):
+    from realtime_spark.sources.testdata import versioned_changes_from_orders
+    from realtime_spark.streaming.materialize_stream import (
+        SNAPSHOT,
+        process_materialize_batch,
+        run_materialize_stream,
+        serve_snapshot,
+    )
+
+    changes = versioned_changes_from_orders(spark, SF)
+    batches = [changes.filter(F.col("seq") == s) for s in (1, 2)]
+    batches.append(changes.filter(F.col("seq") >= 3))
+    return (
+        SNAPSHOT,
+        batches,
+        process_materialize_batch,
+        run_materialize_stream,
+        serve_snapshot,
+    )
+
+
+@pytest.mark.parametrize(
+    "store", [_hourly_monitor, _materialized_view], ids=["counts", "snapshot"]
+)
+def test_scheduled_compaction_poll_loop_view_and_monitors(spark, tmp_path, store):
+    """run_ingest_cycles is the run-forever loop of the stores that merge
+    their epochs at read time too: three availableNow drains of the hourly
+    count monitor (COUNTS) or the materialized view (SNAPSHOT) with
+    max_epochs=2. The janitor fires on the second drain, so a read merges
+    one base and one epoch, not every epoch ever written, and
+    read_counts/serve_snapshot equal a never-compacted twin."""
+    from realtime_spark.streaming.compaction import (
+        run_ingest_cycles,
+        store_epoch_count,
+    )
+
+    spec, batches, process, run_stream, read = store(spark)
+    loop_root = str(tmp_path / "loop")
+    twin_root = str(tmp_path / "twin")
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(src)
+    for i, b in enumerate(batches):
+        process(b, i, twin_root)
+
+    arrivals = iter(batches)
+    schema = batches[0].schema
+
+    def start_stream():
+        next(arrivals).coalesce(1).write.parquet(f"{src}/f{len(os.listdir(src))}")
+        stream = (
+            spark.readStream.schema(schema)
+            .option("recursiveFileLookup", "true")
+            .parquet(src)
+        )
+        return run_stream(stream, loop_root, ckpt)
+
+    telemetry = run_ingest_cycles(
+        spark, loop_root, start_stream, spec, cycles=3, max_epochs=2
+    )
+    assert [t["compacted"] for t in telemetry] == [False, True, False]
+    (output,) = spec.names
+    assert store_epoch_count(f"{loop_root}/{output}") == 1  # only e2
+    assert _data_dirs(f"{loop_root}/{output}") == [
+        "ingest_epoch=c0",
+        "ingest_epoch=e2",
+    ]
+
+    def snap(root):
+        df = read(spark, root)
+        return df.schema, sorted(df.collect(), key=repr)
+
+    twin = snap(twin_root)
+    assert snap(loop_root) == twin and twin[1]
+
+
 def test_file_count_trigger_gated_on_new_epochs(spark, tmp_path):
     """r8 thrash guard: `store_file_count` includes the compacted base's
     own files, so once the base alone exceeds max_files an ungated trigger
