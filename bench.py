@@ -550,9 +550,9 @@ def bench_streaming_mv(spark, sf_dir: str, micro_batches: int = 10) -> dict:
     continuously updated snapshot (streaming/materialize_stream.py) —
     measures changes/s through the per-epoch fold-and-write loop, the cost
     a standing MV pays per change at steady state, and the wall of one
-    served count, which merges the visible epochs at read time: once over
-    the drained epochs, then after the store's compaction folds them into
-    one base (the janitor step of ``run_ingest_cycles``)."""
+    served count: once over the drained epochs, which it merges at read
+    time, then after the store's compaction folds them into one base (the
+    janitor step of ``run_ingest_cycles``), which it reads as it is."""
     import tempfile
 
     from realtime_spark.sources.testdata import versioned_changes_from_orders

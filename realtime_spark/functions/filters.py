@@ -23,7 +23,9 @@ Two evaluation layers:
   * :func:`filters_match_expr` — a generic JVM-side interpreter over a
     `filters` array column + a `record` map column, used when subscriptions
     live in a broadcast dim table (the filter set is data, not plan). Pure
-    higher-order-function expression: no UDF, stays in whole-stage codegen.
+    higher-order-function expression, no UDF: its `transform`, `filter` and
+    `exists` are CodegenFallback, evaluated interpreted inside the generated
+    stage.
 """
 
 from __future__ import annotations

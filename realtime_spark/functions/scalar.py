@@ -16,6 +16,22 @@ def iso_ms(ts: Column) -> Column:
     return F.date_format(ts, ISO_MS_FMT)
 
 
+def context_memo(memo: dict, sc, key, build):
+    """`build()`, kept in `memo` under `key` for the SparkContext `sc`.
+
+    A batch body's Column lists bind by name, so one built list serves
+    every micro-batch of a stream (foreachBatch wraps each in a new
+    SparkSession over the same context) and a batch only applies it, like
+    the reference's poller preparing its statement once per subscription
+    epoch (replication_poller.ex:240-292). Building a list costs one py4j
+    round trip per Column node. An entry built under another context, or
+    under one that has stopped since, is rebuilt."""
+    hit = memo.get(key)
+    if hit is None or hit[0] is not sc or sc._jsc is None:
+        hit = memo[key] = (sc, build())
+    return hit[1]
+
+
 def payload_size_ok(payload_json: Column, max_kb: int = 3000) -> Column:
     """F8: serialized payload must fit max_payload_size_in_kb (default 3000 KB)
     (reference: lib/realtime/tenants.ex:526-543, lib/realtime/api/tenant.ex:23)."""

@@ -42,6 +42,7 @@ from realtime_spark.functions.filters import (
     filters_to_rows,
     parse_filter_string,
 )
+from realtime_spark.functions.scalar import context_memo
 from realtime_spark.session import local_frame
 
 SUBSCRIPTION_SCHEMA_DDL = (
@@ -376,14 +377,11 @@ def _compiled_sets(changes: DataFrame, subs: DataFrame, rows) -> DataFrame:
     Over a plain change frame every compiled expression is a name-bound
     column reference, so it depends only on the frame's column names and is
     memoized on the dim, keyed by the subscription rows and the column
-    names: a foreachBatch body calling matched_pairs / match_changes on
-    every micro-batch builds the tree (one py4j round trip per Column node,
-    ~15k for 32 subscriptions) once per subscription set, like the
-    reference's poller preparing its statement once per subscription epoch
-    (replication_poller.ex:240-292). The memo holds only for the
-    SparkContext it was built under, and never once that context stopped.
-    A typed source is compiled afresh: its predicates read typed scan
-    columns of its own base frame.
+    names (`context_memo`): a foreachBatch body calling matched_pairs /
+    match_changes on every micro-batch builds the tree (~15k Column nodes
+    for 32 subscriptions) once per subscription set. A typed source is
+    compiled afresh: its predicates read typed scan columns of its own base
+    frame.
 
     The typed-source contract (`_rs_typed_source`, set by relational
     derivations like testdata.changes_from_orders) is (base_df,
@@ -398,15 +396,14 @@ def _compiled_sets(changes: DataFrame, subs: DataFrame, rows) -> DataFrame:
         typed_dtypes = dict(base.select([c.alias(n) for n, c in typed_cols.items()]).dtypes)
         match, cols = _compile(rows, dict(change_exprs), dict(typed_cols), typed_dtypes)
         return base.filter(match).select(*cols)
-    # keyed on the context, not the session: foreachBatch wraps every
-    # micro-batch in a new SparkSession over the same context
-    sc = changes.sparkSession.sparkContext
-    key = (repr(rows), tuple(changes.columns))
     memo = getattr(subs, "_rs_compiled", None)
-    if memo is None or memo[0] is not sc or sc._jsc is None or memo[1] != key:
-        memo = (sc, key, _compile(rows, {n: F.col(n) for n in changes.columns}))
-        subs._rs_compiled = memo
-    match, cols = memo[2]
+    if memo is None:
+        memo = subs._rs_compiled = {}
+    match, cols = context_memo(
+        memo, changes.sparkSession.sparkContext,
+        (repr(rows), tuple(changes.columns)),
+        lambda: _compile(rows, {n: F.col(n) for n in changes.columns}),
+    )
     return changes.filter(match).select(*cols)
 
 

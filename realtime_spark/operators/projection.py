@@ -21,10 +21,14 @@ Reference behaviors (SURVEY §2.2 P8-P13, §2.4 A2/A4/A5, §4 O5):
   - O5/A2: expensive work is grouped per (claims_role, selected_columns) and
     subscription ids are collected per group (A5).
 
-All pure map/array expressions — no UDFs, stays in codegen. The input is the
-match-set frame of cdc.matched_pairs (one row per change with its array of
-matched subscriptions, also after apply_rls_policies): the groups form within
-each change's row with no shuffle at all.
+All pure map/array expressions, no UDFs. The higher-order functions
+(`transform`, `filter`, `map_filter`, `exists`) are CodegenFallback
+expressions: they are evaluated interpreted inside the generated stage,
+with no Python worker. The input is the match-set frame of
+cdc.matched_pairs (one row per change with its array of matched
+subscriptions, also after apply_rls_policies): the groups form within each
+change's row with no shuffle at all, and the column privileges are a
+literal map looked up per group, with no join.
 """
 
 from __future__ import annotations
@@ -34,7 +38,7 @@ from typing import Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from realtime_spark.functions.scalar import iso_ms
+from realtime_spark.functions.scalar import context_memo, iso_ms
 from realtime_spark.session import local_frame
 
 MAX_RECORD_BYTES = 1_048_576  # reference: db_settings.ex:10
@@ -57,13 +61,6 @@ def toast_merge(record: Column, old_record: Column) -> Column:
     return F.map_concat(record, only_old)
 
 
-def keep_keys(m: Column, keys: Column) -> Column:
-    """Project a map to a key whitelist (NULL whitelist = keep all)."""
-    return F.when(keys.isNull(), m).otherwise(
-        F.map_filter(m, lambda k, v: F.array_contains(keys, k))
-    )
-
-
 def record_text(m: Column) -> Column:
     """Canonical text form of a record map for hashing/golden comparison:
     entries sorted by key, `k=v` joined with `|`."""
@@ -77,33 +74,99 @@ def record_text(m: Column) -> Column:
 
 
 def privileges_df(spark, grants: Mapping[tuple[str, str, str], Sequence[str]]) -> DataFrame:
-    """(role, schema, table) -> allowed column names, as a broadcastable dim
-    held in the JVM (its broadcast starts no Python worker)."""
+    """(role, schema, table) -> allowed column names, as a dim held in the
+    JVM. The frame carries its rows, so project_output reads the grants
+    without a Spark job."""
     rows = [
         {"claims_role": r, "schema_name": s, "table_name": t, "allowed_columns": list(cols)}
         for (r, s, t), cols in grants.items()
     ]
-    return local_frame(
+    df = local_frame(
         spark,
         rows,
         "claims_role string, schema_name string, table_name string, "
         "allowed_columns array<string>",
     )
+    df._rs_grant_rows = rows  # read by _grants without a job
+    return df
 
 
-_CHANGE_FIELDS = (
-    "change_id", "action", "schema_name", "table_name", "commit_timestamp",
-    "record", "old_record", "col_types", "col_names", "pk", "record_bytes",
-)
+def _grants(privileges: DataFrame) -> tuple:
+    """The grants of a privileges frame as a sorted tuple of ((role,
+    schema, table), allowed columns), read once per frame (privileges_df
+    carries its rows, any other frame is collected once) and kept on it.
+    Several rows for one key grant the union of their columns; a key with
+    a NULL part never equals a group's key and is dropped."""
+    memo = getattr(privileges, "_rs_grants", None)
+    if memo is None:
+        rows = getattr(privileges, "_rs_grant_rows", None)
+        if rows is None:
+            rows = [r.asDict() for r in privileges.collect()]
+        merged: dict[tuple[str, str, str], list[str]] = {}
+        for r in rows:
+            key = (r["claims_role"], r["schema_name"], r["table_name"])
+            if None not in key:
+                cols = merged.setdefault(key, [])
+                cols.extend(c for c in r["allowed_columns"] or () if c not in cols)
+        memo = tuple(sorted((k, tuple(v)) for k, v in merged.items()))
+        privileges._rs_grants = memo
+    return memo
 
 
-def _grouped_from_sets(sets: DataFrame) -> DataFrame:
-    """Match sets (change `c` + array `subs` of matched subscriptions, one
-    row per change) -> one row per (change, role, selection) group with its
-    sorted id set, with ZERO shuffle: the distinct (role, selected_columns)
-    groups and their id sets are computed within the row (the reference's
-    per-role / per-selection loop, migrations/20260626120000:413-417,541-545)."""
-    groups = F.array_distinct(
+def _grant_key(role: Column, schema: Column, table: Column) -> Column:
+    return F.named_struct(
+        F.lit("claims_role"), role, F.lit("schema_name"), schema,
+        F.lit("table_name"), table,
+    )
+
+
+def _allowed_columns(grants: tuple | None, role: Column) -> Column:
+    """The group's column whitelist: NULL when privileges are not checked;
+    else the grants of (role, the change's schema, table) looked up in a
+    literal map, failing CLOSED — a role with no grants row gets an EMPTY
+    whitelist (masked to nothing + Error 401 via pk_unreadable)."""
+    if grants is None:
+        return F.lit(None).cast("array<string>")
+    empty = F.array().cast("array<string>")
+    if not grants:
+        return empty
+    table = F.create_map(*[
+        x
+        for (r, s, t), cols in grants
+        for x in (
+            _grant_key(F.lit(r), F.lit(s), F.lit(t)),
+            F.array(*[F.lit(c) for c in cols]).cast("array<string>"),
+        )
+    ])
+    key = _grant_key(role, F.col("c.schema_name"), F.col("c.table_name"))
+    return F.coalesce(F.try_element_at(table, key), empty)
+
+
+def _projection_columns(
+    grants: tuple | None, max_record_bytes: int, rls_enabled: bool
+) -> tuple[Column, list[Column]]:
+    """(the array of a change's groups, the output select list over the
+    change `c` and one exploded group `g`).
+
+    One group per distinct (claims_role, selected_columns) of the matched
+    subscriptions, with its column whitelist and sorted id set, computed
+    within the row with ZERO shuffle (the reference's per-role /
+    per-selection loop, migrations/20260626120000:413-417,541-545)."""
+    def ids(g: Column) -> Column:
+        return F.sort_array(
+            F.array_distinct(
+                F.transform(
+                    F.filter(
+                        F.col("subs"),
+                        lambda s: s["claims_role"].eqNullSafe(g["claims_role"])
+                        & s["selected_columns"].eqNullSafe(g["selected_columns"]),
+                    ),
+                    lambda s: s["subscription_id"],
+                )
+            )
+        )
+
+    keys = F.array_distinct(
         F.transform(
             F.col("subs"),
             lambda s: F.struct(
@@ -112,104 +175,59 @@ def _grouped_from_sets(sets: DataFrame) -> DataFrame:
             ),
         )
     )
-    exploded = sets.select("c", "subs", F.explode(groups).alias("g"))
-    ids = F.sort_array(
-        F.array_distinct(
-            F.transform(
-                F.filter(
-                    F.col("subs"),
-                    lambda s: s["claims_role"].eqNullSafe(F.col("g.claims_role"))
-                    & s["selected_columns"].eqNullSafe(F.col("g.selected_columns")),
-                ),
-                lambda s: s["subscription_id"],
-            )
-        )
-    )
-    return exploded.select(
-        *[F.col(f"c.{f}").alias(f) for f in _CHANGE_FIELDS],
-        F.col("g.claims_role").alias("claims_role"),
-        F.col("g.selected_columns").alias("selected_columns"),
-        ids.alias("subscription_ids"),
+    pk = F.col("c.pk")
+    groups = F.transform(
+        keys,
+        lambda g: F.struct(
+            g["claims_role"].alias("claims_role"),
+            g["selected_columns"].alias("selected_columns"),
+            _allowed_columns(grants, g["claims_role"]).alias("allowed_columns"),
+            # selected ∪ pk (P9); NULL selection keeps everything
+            F.when(
+                g["selected_columns"].isNotNull(),
+                F.array_union(g["selected_columns"], F.coalesce(pk, F.array())),
+            ).alias("keep"),
+            ids(g).alias("subscription_ids"),
+        ),
     )
 
+    action = F.col("c.action")
+    allowed = F.col("g.allowed_columns")
+    keep = F.col("g.keep")
 
-def project_output(
-    sets: DataFrame,
-    privileges: DataFrame | None = None,
-    max_record_bytes: int = MAX_RECORD_BYTES,
-    rls_enabled: bool = False,
-) -> DataFrame:
-    """cdc.matched_pairs match sets -> final CDC output rows.
-
-    One output row per (change, claims_role, selected_columns) group with the
-    group's visible subscription ids — the reference's per-role/per-selection
-    loop hoisting (O5), formed within each change's row.
-    """
-    grouped = _grouped_from_sets(sets)
-
-    if privileges is not None:
-        # post-grouping broadcast join: allowed_columns depends only on the
-        # group keys, and there are at most as many groups as (change,
-        # subscription) pairs
-        grouped = grouped.join(
-            F.broadcast(privileges),
-            ["claims_role", "schema_name", "table_name"],
-            "left",
-        ).withColumn(
-            # fail CLOSED: a role with no grants row gets an EMPTY column
-            # whitelist (masked to nothing + Error 401 via pk_unreadable),
-            # not the NULL that means "privileges not checked"
-            "allowed_columns",
-            F.coalesce(F.col("allowed_columns"), F.array().cast("array<string>")),
-        )
-    else:
-        grouped = grouped.withColumn(
-            "allowed_columns", F.lit(None).cast("array<string>")
+    def visible(k: Column) -> Column:
+        # NULL whitelist = keep all; a NULL array_contains drops the key
+        return (keep.isNull() | F.array_contains(keep, k)) & (
+            allowed.isNull() | F.array_contains(allowed, k)
         )
 
-    action = F.col("action")
-    pk = F.col("pk")
-    allowed = F.col("allowed_columns")
-    selected = F.col("selected_columns")
+    oversize = F.coalesce(F.col("c.record_bytes") > F.lit(max_record_bytes), F.lit(False))
 
-    # selected ∪ pk (P9); NULL selection keeps everything
-    keep = F.when(selected.isNull(), F.lit(None).cast("array<string>")).otherwise(
-        F.array_union(selected, F.coalesce(pk, F.array()))
-    )
+    def shipped(m: Column, kept) -> Column:
+        """`m` masked to the keys `kept` admits, and clamped when the
+        change is oversize: only values of at most 64 bytes survive. NULL
+        values survive the clamp (octet_length(NULL) is NULL; pg's jsonb
+        null is a 4-byte value and is kept). One map_filter, so `m`
+        appears once in the tree."""
+        return F.map_filter(
+            m,
+            lambda k, v: kept(k)
+            & (~oversize | v.isNull() | (F.octet_length(v) <= _SALVAGE_VALUE_BYTES)),
+        )
 
     merged = F.when(
-        action == "UPDATE", toast_merge(F.col("record"), F.col("old_record"))
-    ).otherwise(F.col("record"))
-
-    def mask(m: Column) -> Column:
-        out = keep_keys(m, keep)
-        out = F.when(allowed.isNull(), out).otherwise(keep_keys(out, allowed))
-        return out
-
-    record_out = F.when(action != "DELETE", mask(merged))
+        action == "UPDATE", toast_merge(F.col("c.record"), F.col("c.old_record"))
+    ).otherwise(F.col("c.record"))
+    record_out = F.when(action != "DELETE", shipped(merged, visible))
     old_out = F.when(
         action == "DELETE",
-        # coalesce: a pk-less table under RLS must ship NOTHING of the old
-        # row (keep_keys' NULL-whitelist keep-all would leak every column
-        # alongside the Error 400)
-        keep_keys(F.col("old_record"), F.coalesce(pk, F.array()))
+        # a pk-less table under RLS ships NOTHING of the old row (a
+        # NULL-whitelist keep-all would leak every column alongside the
+        # Error 400)
+        shipped(F.col("c.old_record"), lambda k: F.array_contains(F.coalesce(pk, F.array()), k))
         if rls_enabled
-        else mask(F.col("old_record")),
-    ).when(action == "UPDATE", mask(F.col("old_record")))
-
-    oversize = F.coalesce(F.col("record_bytes") > F.lit(max_record_bytes), F.lit(False))
-
-    def clamp(m: Column) -> Column:
-        return F.when(
-            oversize,
-            # NULL values survive the salvage (octet_length(NULL) is NULL
-            # and map_filter drops non-true entries; pg's jsonb null is a
-            # 4-byte value and is kept)
-            F.map_filter(
-                m,
-                lambda k, v: v.isNull() | (F.octet_length(v) <= _SALVAGE_VALUE_BYTES),
-            ),
-        ).otherwise(m)
+        else shipped(F.col("c.old_record"), visible),
+    ).when(action == "UPDATE", shipped(F.col("c.old_record"), visible))
 
     no_pk = pk.isNull() | (F.size(pk) == 0)
     pk_unreadable = F.when(
@@ -229,33 +247,57 @@ def project_output(
     # column metadata (A4/W5): wire order, masked to visible columns
     visible_meta = F.filter(
         F.transform(
-            F.col("col_names"),
+            F.col("c.col_names"),
             lambda n: F.struct(
-                n.alias("name"), F.try_element_at(F.col("col_types"), n).alias("type")
+                n.alias("name"), F.try_element_at(F.col("c.col_types"), n).alias("type")
             ),
         ),
-        lambda s: (
-            F.when(keep.isNull(), F.lit(True)).otherwise(F.array_contains(keep, s["name"]))
-            & F.when(allowed.isNull(), F.lit(True)).otherwise(
-                F.array_contains(allowed, s["name"])
-            )
-        ),
+        lambda s: visible(s["name"]),
     )
 
-    return grouped.select(
-        "change_id",
-        "schema_name",
-        "table_name",
+    return groups, [
+        F.col("c.change_id").alias("change_id"),
+        F.col("c.schema_name").alias("schema_name"),
+        F.col("c.table_name").alias("table_name"),
         action.alias("type"),
-        iso_ms(F.col("commit_timestamp")).alias("commit_timestamp"),
+        iso_ms(F.col("c.commit_timestamp")).alias("commit_timestamp"),
         visible_meta.alias("columns"),
-        clamp(record_out).alias("record"),
-        clamp(old_out).alias("old_record"),
+        record_out.alias("record"),
+        old_out.alias("old_record"),
         F.when(F.size(errors) > 0, errors).alias("errors"),
-        "claims_role",
-        "selected_columns",
-        "subscription_ids",
+        F.col("g.claims_role").alias("claims_role"),
+        F.col("g.selected_columns").alias("selected_columns"),
+        F.col("g.subscription_ids").alias("subscription_ids"),
+    ]
+
+
+# (grants, max_record_bytes, rls_enabled) -> (SparkContext, _projection_columns)
+_PROJECTION_MEMO: dict = {}
+
+
+def project_output(
+    sets: DataFrame,
+    privileges: DataFrame | None = None,
+    max_record_bytes: int = MAX_RECORD_BYTES,
+    rls_enabled: bool = False,
+) -> DataFrame:
+    """cdc.matched_pairs match sets -> final CDC output rows.
+
+    One output row per (change, claims_role, selected_columns) group with the
+    group's visible subscription ids — the reference's per-role/per-selection
+    loop hoisting (O5), formed within each change's row. The Column lists
+    are built once per (grants of `privileges`, max_record_bytes,
+    rls_enabled) and SparkContext (`context_memo`); a call runs two
+    DataFrame ops, the explode of the groups and the output select, with no
+    join and no Spark job.
+    """
+    grants = None if privileges is None else _grants(privileges)
+    key = (grants, max_record_bytes, rls_enabled)
+    groups, cols = context_memo(
+        _PROJECTION_MEMO, sets.sparkSession.sparkContext, key,
+        lambda: _projection_columns(*key),
     )
+    return sets.select("c", F.explode(groups).alias("g")).select(*cols)
 
 
 def apply_replica_identity(changes: DataFrame, identities: DataFrame) -> DataFrame:

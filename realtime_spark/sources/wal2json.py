@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from realtime_spark.functions.scalar import context_memo
+
 # raw wal2json v2 JSON shape (FIXTURES.md §2)
 WAL2JSON_SCHEMA_DDL = (
     "action string, schema string, `table` string, timestamp string, "
@@ -47,21 +49,15 @@ def _cols_to_map(cols: Column) -> Column:
     )
 
 
-def parse_wal2json(raw: DataFrame, json_col: str = "value") -> DataFrame:
-    """raw DataFrame with a JSON-string column -> normalized change events.
-
-    Parses a batch frame, as inside a `foreachBatch` body: on a streaming
-    frame Spark rejects the `monotonically_increasing_id` change ids below.
-    """
-    w = F.from_json(F.col(json_col), WAL2JSON_SCHEMA_DDL)
-    parsed = raw.withColumn("w", w)
+def _parse_columns(json_col: str) -> tuple[Column, list[Column]]:
+    """The parsed struct `w` of `json_col` and the select list over it."""
     action_expr = F.coalesce(
         *[F.when(F.col("w.action") == k, F.lit(v)) for k, v in _ACTION_MAP.items()]
     )
     cols = F.col("w.columns")
     ident = F.col("w.identity")
     meta_src = F.coalesce(cols, ident)
-    out = parsed.select(
+    return F.from_json(F.col(json_col), WAL2JSON_SCHEMA_DDL), [
         # BATCH-SCOPED surrogate: unique within one parse call only — ids
         # restart per micro-batch and order by partition index, so they are
         # NOT a cross-batch identity or a WAL total order. Cross-batch
@@ -82,8 +78,25 @@ def parse_wal2json(raw: DataFrame, json_col: str = "value") -> DataFrame:
         F.transform(meta_src, lambda c: c["name"]).alias("col_names"),
         F.transform(F.col("w.pk"), lambda c: c["name"]).alias("pk"),
         F.octet_length(F.col(json_col)).alias("record_bytes"),
+    ]
+
+
+_PARSE_MEMO: dict = {}  # json_col -> (SparkContext, _parse_columns(json_col))
+
+
+def parse_wal2json(raw: DataFrame, json_col: str = "value") -> DataFrame:
+    """raw DataFrame with a JSON-string column -> normalized change events.
+
+    Parses a batch frame, as inside a `foreachBatch` body: on a streaming
+    frame Spark rejects the `monotonically_increasing_id` change ids below.
+    The Column lists are built once per `json_col` and SparkContext
+    (`context_memo`); a call only binds them by name.
+    """
+    w, cols = context_memo(
+        _PARSE_MEMO, raw.sparkSession.sparkContext, json_col,
+        lambda: _parse_columns(json_col),
     )
-    return out
+    return raw.withColumn("w", w).select(*cols)
 
 
 def parse_wal2json_quarantine(raw: DataFrame) -> tuple[DataFrame, DataFrame]:

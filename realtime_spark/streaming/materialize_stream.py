@@ -26,6 +26,8 @@ from realtime_spark.operators.materialize import materialize_latest, merge_snaps
 from realtime_spark.streaming.compaction import (
     Output,
     StoreSpec,
+    _visible_tags,
+    read_manifest,
     read_store,
     run_store_stream,
 )
@@ -33,15 +35,26 @@ from realtime_spark.streaming.compaction import (
 SNAPSHOT = StoreSpec(
     (Output("snapshot", partition="table_name", fold=merge_snapshots),)
 )
+# merge_snapshots' output columns, in its order
+_SNAPSHOT_COLUMNS = (
+    "schema_name", "table_name", "pk_text", "record", "last_action",
+    "last_ts", "last_seq", "n_versions",
+)
 
 
 def serve_snapshot(spark: SparkSession, store_dir: str) -> DataFrame | None:
     """The queryable view: the merged snapshot minus tombstones, or None
-    before the first epoch."""
+    before the first epoch. A store that is one compacted base already
+    holds one row per key, and is served without the merge."""
     store = f"{store_dir}/snapshot"
     if not os.path.isdir(store):
         return None
-    snap = merge_snapshots(read_store(spark, store).drop("ingest_epoch"))
+    manifest = read_manifest(store)
+    snap = read_store(spark, store).drop("ingest_epoch")
+    if manifest is not None and _visible_tags(store, manifest) == [manifest["base"]]:
+        snap = snap.select(*_SNAPSHOT_COLUMNS)
+    else:
+        snap = merge_snapshots(snap)
     return snap.filter("last_action <> 'DELETE'")
 
 

@@ -402,3 +402,48 @@ class TestSnapshotStoreVersioning:
         assert key(resolved) == key(materialize_latest(early))
         want = key(materialize_latest(changes))
         assert key(serve_snapshot(spark, store)) == want and want
+
+    def test_served_frame_equals_merge_before_and_after_compaction(self, spark, tmp_path):
+        """serve_snapshot equals the merge of the visible epochs minus
+        tombstones: over epochs, over a lone compacted base (served
+        without the merge) and over the base plus a later epoch."""
+        from realtime_spark.operators.materialize import merge_snapshots
+        from realtime_spark.sources.testdata import versioned_changes_from_orders
+        from realtime_spark.streaming.compaction import read_store
+        from realtime_spark.streaming.materialize_stream import (
+            SNAPSHOT,
+            process_materialize_batch,
+            serve_snapshot,
+        )
+        from tests.conftest import SF_DIR
+
+        root = str(tmp_path / "store")
+
+        def merged():
+            snap = read_store(spark, f"{root}/snapshot").drop("ingest_epoch")
+            return merge_snapshots(snap).filter("last_action <> 'DELETE'")
+
+        def rows(df):
+            return df.columns, sorted(
+                (r["table_name"], r["pk_text"], sorted(r["record"].items()),
+                 r["last_action"], r["last_ts"], r["last_seq"], r["n_versions"])
+                for r in df.collect()
+            )
+
+        def aggregates(df):
+            return "Aggregate" in df._jdf.queryExecution().executedPlan().toString()
+
+        changes = versioned_changes_from_orders(spark, SF_DIR)
+        for epoch, cond in enumerate(("seq <= 2", "seq = 3", "seq = 4")):
+            process_materialize_batch(changes.filter(cond), epoch, root)
+        want = rows(merged())
+        served = serve_snapshot(spark, root)
+        assert want[1] and rows(served) == want and aggregates(served)
+
+        SNAPSHOT.compact(spark, root)
+        served = serve_snapshot(spark, root)
+        assert rows(served) == want and not aggregates(served)
+
+        process_materialize_batch(changes.filter("seq = 4"), 3, root)
+        served = serve_snapshot(spark, root)
+        assert rows(served) == rows(merged()) and aggregates(served)
