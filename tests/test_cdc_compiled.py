@@ -331,16 +331,19 @@ def test_parse_and_projection_reuse_their_column_lists(spark, monkeypatch):
     assert built == ["parse", "projection", "projection", "parse", "projection"]
 
 
-def test_missing_grants_and_null_role_fail_closed(spark):
+@pytest.mark.parametrize("carried", [True, False], ids=["privileges_df", "collected"])
+def test_missing_grants_and_null_role_fail_closed(spark, carried):
     """A role with no grants row, and a NULL claims_role, get an empty
-    column whitelist: nothing of the row ships, and Error 401."""
+    column whitelist: nothing of the row ships, and Error 401. Also for a
+    privileges frame that does not carry its rows and is collected."""
     changes = changes_from_orders(spark, SF_DIR).select("*")
     subs = em.subscriptions_df(spark, [
         {"subscription_id": "sub-granted", "table": "orders", "claims_role": "anon"},
         {"subscription_id": "sub-nogrant", "table": "orders", "claims_role": "service"},
         {"subscription_id": "sub-nullrole", "table": "orders", "claims_role": None},
     ])
-    out = project_output(matched_pairs(changes, subs), privileges=_privileges(spark))
+    priv = _privileges(spark) if carried else _privileges(spark).select("*")
+    out = project_output(matched_pairs(changes, subs), privileges=priv)
     assert _no_join_or_broadcast(_plan_nodes(out))
     rows = out.collect()
     by_sub: dict[str, list] = {}
