@@ -33,6 +33,12 @@ from pyspark.sql import functions as F
 
 SEQ, TS = "seq", "commit_timestamp"
 
+# the columns of a snapshot, in merge_snapshots' order
+SNAPSHOT_COLUMNS = (
+    "schema_name", "table_name", "pk_text", "record", "last_action",
+    "last_ts", "last_seq", "n_versions",
+)
+
 
 def pk_text_expr(record: Column, old_record: Column, pk: Column) -> Column:
     """Canonical primary-key string: pk values (from the record present on
@@ -120,26 +126,14 @@ def merge_snapshots(*snapshots: DataFrame) -> DataFrame:
     filter `last_action != 'DELETE'` when serving. Same partial-aggregated
     max_by shape as the base fold."""
     u = reduce(DataFrame.unionByName, snapshots)
-    payload = F.struct(
-        F.col("record").alias("record"),
-        F.col("last_action").alias("action"),
-        F.col("last_ts").alias("ts"),
-        F.col("last_seq").alias("seq"),
-    )
+    last = ("record", "last_action", "last_ts", "last_seq")
     version = F.struct(F.col("last_ts"), F.col("last_seq"))
     m = u.groupBy("schema_name", "table_name", "pk_text").agg(
-        F.max_by(payload, version).alias("last"),
+        F.max_by(F.struct(*last), version).alias("last"),
         F.sum("n_versions").alias("n_versions"),
     )
     return m.select(
-        "schema_name",
-        "table_name",
-        "pk_text",
-        F.col("last.record").alias("record"),
-        F.col("last.action").alias("last_action"),
-        F.col("last.ts").alias("last_ts"),
-        F.col("last.seq").alias("last_seq"),
-        "n_versions",
+        *[F.col(f"last.{c}").alias(c) if c in last else c for c in SNAPSHOT_COLUMNS]
     )
 
 

@@ -271,8 +271,9 @@ def _projection_columns(
     ]
 
 
-# (grants, max_record_bytes, rls_enabled) -> (SparkContext, _projection_columns)
-_PROJECTION_MEMO: dict = {}
+# (max_record_bytes, rls_enabled) -> (SparkContext, _projection_columns)
+# without privileges; a privileges frame keeps its own (`_rs_projection`)
+_UNCHECKED_MEMO: dict = {}
 
 
 def project_output(
@@ -286,16 +287,21 @@ def project_output(
     One output row per (change, claims_role, selected_columns) group with the
     group's visible subscription ids — the reference's per-role/per-selection
     loop hoisting (O5), formed within each change's row. The Column lists
-    are built once per (grants of `privileges`, max_record_bytes,
-    rls_enabled) and SparkContext (`context_memo`); a call runs two
-    DataFrame ops, the explode of the groups and the output select, with no
-    join and no Spark job.
+    are built once per (max_record_bytes, rls_enabled) and SparkContext
+    (`context_memo`) and kept on the privileges frame, so they go with it;
+    a call runs two DataFrame ops, the explode of the groups and the output
+    select, with no join and no Spark job.
     """
-    grants = None if privileges is None else _grants(privileges)
-    key = (grants, max_record_bytes, rls_enabled)
+    if privileges is None:
+        grants, memo = None, _UNCHECKED_MEMO
+    else:
+        grants = _grants(privileges)
+        memo = getattr(privileges, "_rs_projection", None)
+        if memo is None:
+            memo = privileges._rs_projection = {}
     groups, cols = context_memo(
-        _PROJECTION_MEMO, sets.sparkSession.sparkContext, key,
-        lambda: _projection_columns(*key),
+        memo, sets.sparkSession.sparkContext, (max_record_bytes, rls_enabled),
+        lambda: _projection_columns(grants, max_record_bytes, rls_enabled),
     )
     return sets.select("c", F.explode(groups).alias("g")).select(*cols)
 

@@ -224,6 +224,13 @@ def _visible_tags(store: str, manifest: dict | None) -> list[str]:
     return keep
 
 
+def holds_only_base(store: str) -> bool:
+    """True when a store shows exactly its compacted base: no epoch was
+    written since the last compaction, so a read returns the fold alone."""
+    manifest = read_manifest(store)
+    return manifest is not None and _visible_tags(store, manifest) == [manifest["base"]]
+
+
 def gc_store(store: str) -> list[str]:
     """Remove stale staging directories and orphaned data directories that
     the manifest does not admit (crash leftovers). Safe to run any time the

@@ -22,23 +22,21 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from realtime_spark.operators.materialize import materialize_latest, merge_snapshots
+from realtime_spark.operators.materialize import (
+    SNAPSHOT_COLUMNS,
+    materialize_latest,
+    merge_snapshots,
+)
 from realtime_spark.streaming.compaction import (
     Output,
     StoreSpec,
-    _visible_tags,
-    read_manifest,
+    holds_only_base,
     read_store,
     run_store_stream,
 )
 
 SNAPSHOT = StoreSpec(
     (Output("snapshot", partition="table_name", fold=merge_snapshots),)
-)
-# merge_snapshots' output columns, in its order
-_SNAPSHOT_COLUMNS = (
-    "schema_name", "table_name", "pk_text", "record", "last_action",
-    "last_ts", "last_seq", "n_versions",
 )
 
 
@@ -49,12 +47,8 @@ def serve_snapshot(spark: SparkSession, store_dir: str) -> DataFrame | None:
     store = f"{store_dir}/snapshot"
     if not os.path.isdir(store):
         return None
-    manifest = read_manifest(store)
     snap = read_store(spark, store).drop("ingest_epoch")
-    if manifest is not None and _visible_tags(store, manifest) == [manifest["base"]]:
-        snap = snap.select(*_SNAPSHOT_COLUMNS)
-    else:
-        snap = merge_snapshots(snap)
+    snap = snap.select(*SNAPSHOT_COLUMNS) if holds_only_base(store) else merge_snapshots(snap)
     return snap.filter("last_action <> 'DELETE'")
 
 

@@ -297,7 +297,7 @@ def test_parse_and_projection_reuse_their_column_lists(spark, monkeypatch):
     built = []
     parse_columns, projection_columns = wal2json._parse_columns, projection._projection_columns
     monkeypatch.setattr(wal2json, "_PARSE_MEMO", {})
-    monkeypatch.setattr(projection, "_PROJECTION_MEMO", {})
+    monkeypatch.setattr(projection, "_UNCHECKED_MEMO", {})
     monkeypatch.setattr(
         wal2json, "_parse_columns", lambda *a: built.append("parse") or parse_columns(*a)
     )
@@ -319,16 +319,22 @@ def test_parse_and_projection_reuse_their_column_lists(spark, monkeypatch):
     ]
     assert len(first) == 4
 
-    # other options are another memo entry
-    project_output(matched_pairs(wal2json.parse_wal2json(_wal2json_batch(spark, 1)), subs))
+    # the lists live on the privileges frame: another frame builds its own
+    assert list(priv._rs_projection) == [(projection.MAX_RECORD_BYTES, True)]
+    project_output(matched_pairs(wal2json.parse_wal2json(_wal2json_batch(spark, 1)), subs),
+                   privileges=_privileges(spark), rls_enabled=True)
     assert built == ["parse", "projection", "projection"]
 
+    # other options are another memo entry
+    project_output(matched_pairs(wal2json.parse_wal2json(_wal2json_batch(spark, 1)), subs))
+    assert built == ["parse", "projection", "projection", "projection"]
+
     # entries built under a context that has since stopped are rebuilt
-    for memo in (wal2json._PARSE_MEMO, projection._PROJECTION_MEMO):
+    for memo in (wal2json._PARSE_MEMO, projection._UNCHECKED_MEMO, priv._rs_projection):
         for k, (_, v) in list(memo.items()):
             memo[k] = (_Context(), v)
     assert len(batch(2)) == 4
-    assert built == ["parse", "projection", "projection", "parse", "projection"]
+    assert built == ["parse", "projection", "projection", "projection", "parse", "projection"]
 
 
 @pytest.mark.parametrize("carried", [True, False], ids=["privileges_df", "collected"])
